@@ -2,12 +2,18 @@
 
 Re-expresses the v1 query language (tokenizer ``v1/src/main.rs:440-464``,
 recursive-descent parser ``:479-587``, aggregation parser ``:1209-1232``) as a
-~150-line translator that emits native ``pyspark.sql.Column`` expressions.
-Because the output is a plain Catalyst expression tree, everything downstream
-— predicate pushdown, row-group pruning, NOT-normalization (De Morgan),
-constant folding — is handled by the optimizer; the reference implements each
-of those by hand (``v1/src/main.rs:626-685`` pruning, ``:663-684`` NOT
-pushdown).
+~150-line translator. The parser emits ONE Spark SQL expression string per
+predicate (and per aggregation), wrapped in a single ``F.expr``: the text
+crosses the Python↔JVM boundary once per expression, where a ``Column``
+tree built from ``F.col`` / ``F.lit`` / operator calls crosses it about a
+dozen times per node (py4j calls plus call-site capture), which made
+parsing a measurable share of a short scan's latency. The analyzed plan is
+the same as that of the equivalent ``Column`` tree (``tests/test_grammar.py``
+checks it per literal kind and construct), so everything downstream —
+predicate pushdown, row-group pruning, NOT-normalization (De Morgan),
+constant folding — is still handled by the optimizer; the reference
+implements each of those by hand (``v1/src/main.rs:626-685`` pruning,
+``:663-684`` NOT pushdown).
 
 Grammar (same precedence as the reference: OR < AND < NOT < parens):
 
@@ -18,17 +24,25 @@ Grammar (same precedence as the reference: OR < AND < NOT < parens):
     comparison := IDENT op literal | literal op IDENT
     op       := '<' | '<=' | '==' | '=' | '!=' | '>=' | '>'
 
+Every binary node is parenthesized in the emitted text, so Spark's parser
+keeps the left-deep tree the grammar builds.
+
 Literal typing follows v1's inference order (``v1/src/main.rs:556-587``):
 ISO datetime ``%Y-%m-%d-%H:%M:%S`` → timestamp, ``true``/``false`` → boolean,
 contains ``.`` → float, all digits → int, otherwise (quoted or bare) → string.
+Each is written so Spark types it exactly as ``F.lit`` would: floats carry
+the ``D`` suffix (a bare ``1.5`` is DECIMAL in Spark SQL), ints stay plain
+integer literals (INT, or BIGINT past 32 bits), strings are single-quoted
+with ``'`` and backslash escaped, datetimes go through ``to_timestamp``.
 
 The five comparison ops of v1 (``Comparison`` enum ``v1/src/main.rs:418-438``)
 are extended with ``!=`` for engine completeness.
 
 Aggregations: ``OP(column)`` for OP in SUM/AVG/MIN/MAX/COUNT
-(``parse_aggregation`` ``v1/src/main.rs:1209-1232``). COUNT follows v1's
-non-null-count semantics (``.iter().flatten()`` at ``v1/src/main.rs:1517``)
-which is exactly Spark's ``F.count(col)``.
+(``parse_aggregation`` ``v1/src/main.rs:1209-1232``), emitted as
+``op(`column`) AS `alias```. COUNT follows v1's non-null-count semantics
+(``.iter().flatten()`` at ``v1/src/main.rs:1517``) which is exactly Spark's
+``count(col)``.
 """
 
 from __future__ import annotations
@@ -82,40 +96,49 @@ def _tokenize(s: str) -> list[_Token]:
     return tokens
 
 
-def _literal(tok: _Token) -> Column:
-    """Typed literal inference, v1 order: datetime → bool → float → int → str."""
+def _sql_string(text: str) -> str:
+    """Single-quoted Spark SQL string literal whose value is ``text``."""
+    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
+
+
+def _sql_ident(name: str) -> str:
+    """Column reference resolved like ``F.col(name)``: a dotted name is a
+    nested-field path, each part back-quoted."""
+    return ".".join("`" + part.replace("`", "``") + "`" for part in name.split("."))
+
+
+def _literal(tok: _Token) -> str:
+    """Typed literal inference, v1 order: datetime → bool → float → int → str,
+    written so Spark types it exactly as ``F.lit`` types the Python value."""
     if tok.kind == "string":
-        return F.lit(tok.text)
+        return _sql_string(tok.text)
     t = tok.text
     if _DATETIME_RE.match(t):
         # v1 parses "%Y-%m-%d-%H:%M:%S" into epoch-millis Int64
         # (v1/src/main.rs:589-595); we emit a proper timestamp literal so
         # Catalyst can still push the comparison down to Parquet.
-        return F.to_timestamp(F.lit(t), "yyyy-MM-dd-HH:mm:ss")
+        return f"to_timestamp({_sql_string(t)}, 'yyyy-MM-dd-HH:mm:ss')"
     low = t.lower()
     if low in ("true", "false"):
-        return F.lit(low == "true")
+        return low
     if _FLOAT_RE.match(t):
-        return F.lit(float(t))
+        # DOUBLE, like F.lit(float): an unsuffixed 1.5 is DECIMAL in SQL
+        return f"{t}D"
     if _INT_RE.match(t):
-        return F.lit(int(t))
-    return F.lit(t)
+        # INT, or BIGINT past 32 bits — the py4j typing of F.lit(int)
+        return str(int(t))
+    return _sql_string(t)
 
 
-_OPS = {
-    "<": lambda a, b: a < b,
-    "<=": lambda a, b: a <= b,
-    "==": lambda a, b: a == b,
-    "=": lambda a, b: a == b,
-    "!=": lambda a, b: a != b,
-    ">=": lambda a, b: a >= b,
-    ">": lambda a, b: a > b,
-}
-
-_KEYWORDS = {"and", "or", "not"}
+#: grammar comparator → Spark SQL comparator
+_OPS = {"<": "<", "<=": "<=", "==": "=", "=": "=", "!=": "!=", ">=": ">=", ">": ">"}
 
 
 class _Parser:
+    """Recursive descent over the tokens; every production returns Spark
+    SQL text, with each binary node parenthesized (Spark's parser would
+    otherwise rebalance a chain of four or more ANDs or ORs)."""
+
     def __init__(self, tokens: list[_Token]):
         self.tokens = tokens
         self.pos = 0
@@ -130,31 +153,31 @@ class _Parser:
         self.pos += 1
         return tok
 
-    def parse(self) -> Column:
-        col = self.or_expr()
+    def parse(self) -> str:
+        text = self.or_expr()
         if self.peek() is not None:
             raise ValueError(f"trailing tokens at {self.peek().text!r}")
-        return col
+        return text
 
-    def or_expr(self) -> Column:
+    def or_expr(self) -> str:
         left = self.and_expr()
         while (t := self.peek()) and t.kind == "word" and t.text.lower() == "or":
             self.next()
-            left = left | self.and_expr()
+            left = f"({left} OR {self.and_expr()})"
         return left
 
-    def and_expr(self) -> Column:
+    def and_expr(self) -> str:
         left = self.not_expr()
         while (t := self.peek()) and t.kind == "word" and t.text.lower() == "and":
             self.next()
-            left = left & self.not_expr()
+            left = f"({left} AND {self.not_expr()})"
         return left
 
-    def not_expr(self) -> Column:
+    def not_expr(self) -> str:
         t = self.peek()
         if t and t.kind == "word" and t.text.lower() == "not":
             self.next()
-            return ~self.not_expr()
+            return f"(NOT {self.not_expr()})"
         if t and t.kind == "lparen":
             self.next()
             inner = self.or_expr()
@@ -163,7 +186,7 @@ class _Parser:
             return inner
         return self.comparison()
 
-    def comparison(self) -> Column:
+    def comparison(self) -> str:
         left = self.next()
         op = self.peek()
         # extended predicates (beyond the reference's five comparators):
@@ -180,24 +203,26 @@ class _Parser:
                 if not (and_tok.kind == "word" and and_tok.text.lower() == "and"):
                     raise ValueError("expected AND in BETWEEN")
                 hi = _literal(self.next())
-                return F.col(left.text).between(lo, hi)
+                # written out as Column.between builds it: SQL BETWEEN
+                # analyzes to a different (runtime-replaceable) node
+                col = _sql_ident(left.text)
+                return f"({col} >= {lo} AND {col} <= {hi})"
             if kw == "like":
                 self.next()
                 pat = self.next()
-                return F.col(left.text).like(pat.text)
+                return f"({_sql_ident(left.text)} LIKE {_sql_string(pat.text)})"
         op = self.next()
         if op.kind != "op":
             raise ValueError(f"expected comparison operator, got {op.text!r}")
         right = self.next()
         left_is_col = left.kind == "word" and not _is_literal_word(left)
         if left_is_col:
-            return _OPS[op.text](F.col(left.text), _literal(right))
+            return f"({_sql_ident(left.text)} {_OPS[op.text]} {_literal(right)})"
         # literal OP column — flip to keep the column on the left
         flipped = {"<": ">", "<=": ">=", ">": "<", ">=": "<="}.get(op.text, op.text)
-        return _OPS[flipped](F.col(right.text), _literal(left))
+        return f"({_sql_ident(right.text)} {_OPS[flipped]} {_literal(left)})"
 
-
-    def _in_list(self, col_tok: _Token) -> Column:
+    def _in_list(self, col_tok: _Token) -> str:
         if self.next().kind != "lparen":
             raise ValueError("expected '(' after IN")
         values = []
@@ -213,7 +238,7 @@ class _Parser:
                 raise ValueError(f"unexpected token in IN list: {tok.text!r}")
         if not values:
             raise ValueError("empty IN list")
-        return F.col(col_tok.text).isin(*values)
+        return f"({_sql_ident(col_tok.text)} IN ({', '.join(values)}))"
 
 
 def _is_literal_word(tok: _Token) -> bool:
@@ -231,7 +256,7 @@ def parse_predicate(expr: str) -> Column:
 
     >>> df.filter(parse_predicate("memoryUsed > 151194126688"))
     """
-    return _Parser(_tokenize(expr)).parse()
+    return F.expr(_Parser(_tokenize(expr)).parse())
 
 
 def parse_predicate_by_index(expr: str, columns: list[str]) -> Column:
@@ -257,29 +282,24 @@ def parse_predicate_by_index(expr: str, columns: list[str]) -> Column:
                 raise ValueError(f"column index {idx} out of range")
             tok = _Token("word", columns[idx])
         out.append(tok)
-    return _Parser(out).parse()
+    return F.expr(_Parser(out).parse())
 
 
 _AGG_RE = re.compile(r"^\s*(SUM|AVG|MIN|MAX|COUNT)\s*\(\s*([A-Za-z0-9_]+)\s*\)\s*$", re.I)
 
-_AGG_FUNCS = {
-    "sum": F.sum,
-    "avg": F.avg,
-    "min": F.min,
-    "max": F.max,
-    "count": F.count,  # non-null count, matching v1 (v1/src/main.rs:1517)
-}
-
 
 def parse_aggregation(spec: str, alias: str | None = None) -> Column:
-    """``"SUM(memoryUsed)"`` → ``F.sum("memoryUsed")`` (v1 ``parse_aggregation``,
-    ``v1/src/main.rs:1209-1232``; name formatting ``get_name`` ``:1552-1554``)."""
+    """``"SUM(memoryUsed)"`` → ``F.expr("sum(`memoryUsed`) AS `sum_memoryUsed`")``
+    (v1 ``parse_aggregation``, ``v1/src/main.rs:1209-1232``; name formatting
+    ``get_name`` ``:1552-1554``). ``count`` is the non-null count, matching
+    v1 (``v1/src/main.rs:1517``)."""
     m = _AGG_RE.match(spec)
     if not m:
         raise ValueError(f"unsupported aggregation: {spec!r}")
     op, col = m.group(1).lower(), m.group(2)
-    out = _AGG_FUNCS[op](F.col(col))
-    return out.alias(alias if alias is not None else f"{op}_{col}")
+    name = alias if alias is not None else f"{op}_{col}"
+    # the alias is one name, never a path: back-quote it whole
+    return F.expr(f"{op}({_sql_ident(col)}) AS `{name.replace('`', '``')}`")
 
 
 def parse_aggregations(specs: list[str] | list[tuple[str, str]]) -> list[Column]:

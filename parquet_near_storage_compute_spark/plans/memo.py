@@ -16,10 +16,11 @@ identical deterministic work, measured at 3-4 s per query in BENCH_DETAIL
 - session: ``applicationId`` + the id() of the live SparkSession — a new
   or restarted session never sees another session's frames (their
   checkpoint RDDs die with the old context);
-- corpus identity: realpath of sf_dir plus an mtime_ns/size fingerprint
-  of the source table (file, or directory of part files) — a test that
-  overwrites its tmp corpus invalidates automatically, exactly like the
-  /tmp/pnsc_sources derived-copy cache;
+- corpus identity: realpath of sf_dir plus the mtime_ns/size fingerprint
+  of the source table (file, or directory of part files;
+  ``tables.listing_fingerprint``, shared with ``load_table``'s schema
+  cache) — a test that overwrites its tmp corpus invalidates
+  automatically, exactly like the /tmp/pnsc_sources derived-copy cache;
 - label: the subframe family (component labels, BPE doc counts, ...).
 
 Entries are LRU-bounded (a handful of frames per family at most — tests
@@ -41,7 +42,7 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
-from parquet_near_storage_compute_spark.tables import table_path
+from parquet_near_storage_compute_spark.tables import listing_fingerprint
 
 #: Frames kept alive per PlanMemo (LRU). Sized for one corpus × every
 #: label a module registers (similarity carries 6) plus a couple of test
@@ -49,30 +50,6 @@ from parquet_near_storage_compute_spark.tables import table_path
 #: large enough that one bench/driver pass never evicts a frame a later
 #: composite still needs.
 _CAP = 16
-
-
-def _fingerprint(
-    sf_dir: str, tables: tuple[str, ...], extra_paths: tuple[str, ...] = ()
-) -> tuple:
-    """(table, mtime_ns, size) per source — directories of part files
-    fold in each child so an in-place rewrite is always visible."""
-    parts: list[tuple] = []
-    paths = [(t, table_path(sf_dir, t)) for t in tables] + [
-        (p, p) for p in extra_paths
-    ]
-    for t, p in paths:
-        try:
-            st = os.stat(p)
-        except OSError:
-            parts.append((t, "missing"))
-            continue
-        if os.path.isdir(p):
-            for name in sorted(os.listdir(p)):
-                cst = os.stat(os.path.join(p, name))
-                parts.append((t, name, cst.st_mtime_ns, cst.st_size))
-        else:
-            parts.append((t, st.st_mtime_ns, st.st_size))
-    return tuple(parts)
 
 
 class PlanMemo:
@@ -99,7 +76,7 @@ class PlanMemo:
             spark.sparkContext.applicationId,
             id(spark),
             os.path.realpath(sf_dir),
-            _fingerprint(sf_dir, self._tables, self._extra_paths),
+            listing_fingerprint(sf_dir, self._tables, self._extra_paths),
             label,
         )
         hit = self._store.get(key)

@@ -10,17 +10,21 @@ what Spark's vectorized reader will fetch for a scan with the given
 projection + pushed predicate (modulo read-coalescing padding, which the
 reference's ``merge_chunks`` also has).
 
-Why not ONLY runtime counters: Spark 4's Parquet reader on ``file://``
-bypasses the Hadoop FileSystem statistics for data pages (only footer I/O
-is counted), so physical-byte counters under-report locally. On a cluster
-the same numbers surface as ``inputMetrics.bytesRead``; the planned-bytes
-curve is the portable observable. The cluster-grade counter nevertheless
-exists here too — ``runtime_input_bytes`` sums ``inputMetrics.bytesRead``
-across stages from the app status store (what a ``SparkListener`` on
-``onTaskEnd`` accumulates, v1's measured-bytes observable,
-``v1/src/main.rs:166-192``) — and ``tests/test_runtime_bytes.py`` proves it
-counts full physical bytes on the non-bypassed path (CSV) and footer I/O on
-the local parquet path.
+Why not ONLY runtime counters: on ``file://``, Spark 4's Parquet reader
+reports an ``inputMetrics.bytesRead`` that does not follow column pruning.
+Measured on an 8-file range-sorted lineitem layout, it
+matched the footer bytes only when every row group was pruned (109 KB);
+past that it read 1.60 MB for both a 1- and an 8-column projection of one
+threshold (modelled 0.92 and 2.94 MB) and 5.49 MB for both at a looser one
+(modelled 3.03 and 10.35 MB), and 3.09 / 4.54 MB with vectored IO off. So
+the local counter is neither footer-only nor the paper's bytes-moved
+metric; the planned-bytes curve is the portable observable. The counter
+nevertheless exists here too — ``runtime_input_bytes`` sums
+``inputMetrics.bytesRead`` across stages from the app status store (what a
+``SparkListener`` on ``onTaskEnd`` accumulates, v1's measured-bytes
+observable, ``v1/src/main.rs:166-192``) — and ``tests/test_runtime_bytes.py``
+checks that it counts full physical bytes on CSV and stays between the
+footer and the file size on the local parquet path.
 
 Metric set (``v1/src/main.rs:158-192``): M1 bytes read · M2 total time ·
 M3 total throughput · M4 logical throughput · M5 selectivity % · M6
@@ -29,26 +33,55 @@ relative metrics · M7 warm-up exclusion (bench.py excludes warm-up runs).
 
 from __future__ import annotations
 
+import functools
 import os
 import struct
 import time
 from dataclasses import dataclass
+from typing import NamedTuple
 
 import pyarrow.parquet as pq
 
 from pyspark.sql import DataFrame, SparkSession
 
 
-def footer_bytes(path: str) -> int:
-    """Footer length: trailing 8 bytes are [metadata_len:u32][PAR1]
-    (the reference's footer fetch, ``v1/src/main.rs:325-385``)."""
+class _Footer(NamedTuple):
+    nbytes: int  # footer length: metadata plus [metadata_len:u32][PAR1]
+    meta: pq.FileMetaData
+    col_idx: dict[str, int]  # leaf column name -> column index
+
+
+#: Footers kept by ``_footer`` (LRU): every file of a few scan layouts.
+_FOOTER_CAP = 256
+
+
+@functools.lru_cache(maxsize=_FOOTER_CAP)
+def _read_footer(path: str, mtime_ns: int, size: int) -> _Footer:
+    """The footer of one version of a file. ``mtime_ns`` and ``size`` are
+    only part of the key: a rewritten file is a new version and misses."""
     with open(path, "rb") as fh:
         fh.seek(-8, os.SEEK_END)
         tail = fh.read(8)
     if tail[4:] != b"PAR1":
         raise ValueError(f"{path}: not a parquet file")
     (meta_len,) = struct.unpack("<I", tail[:4])
-    return meta_len + 8
+    meta = pq.read_metadata(path)
+    names = [meta.schema.column(i).name for i in range(meta.num_columns)]
+    return _Footer(meta_len + 8, meta, {n: i for i, n in enumerate(names)})
+
+
+def _footer(path: str) -> _Footer:
+    """Footer of ``path``, parsed once per (path, mtime_ns, size): the
+    storage side reads a footer once, and the planned-bytes accounting of
+    every later scan of the same file reuses it."""
+    st = os.stat(path)
+    return _read_footer(path, st.st_mtime_ns, st.st_size)
+
+
+def footer_bytes(path: str) -> int:
+    """Footer length: trailing 8 bytes are [metadata_len:u32][PAR1]
+    (the reference's footer fetch, ``v1/src/main.rs:325-385``)."""
+    return _footer(path).nbytes
 
 
 #: Compact-stats prefix width (F8): the reference's shipped stats keep only
@@ -113,12 +146,8 @@ def planned_scan_bytes(
     A row group survives unless its min/max statistics prove no row can match
     (``keep_row_group``, ``v1/src/main.rs:626-685``).
     """
-    meta = pq.ParquetFile(path).metadata
-    names = [meta.schema.column(i).name for i in range(meta.num_columns)]
-    col_idx = {n: i for i, n in enumerate(names)}
-    wanted = set(columns) if columns is not None else set(names)
-
-    total = footer_bytes(path)
+    total, meta, col_idx = _footer(path)
+    wanted = set(columns) if columns is not None else set(col_idx)
     for rg in range(meta.num_row_groups):
         group = meta.row_group(rg)
         keep = True
@@ -152,9 +181,11 @@ def runtime_input_bytes(spark: SparkSession) -> int:
 
     Take a snapshot before and after an action and diff; pair with
     ``wait_for_metrics`` because stage metrics land on the async listener
-    bus. Local caveat (documented in the module docstring): the parquet
-    vectorized reader on ``file://`` reports footer I/O only; CSV/JSON/text
-    report full physical bytes; on a cluster all paths report fully.
+    bus. Local caveat (measured in the module docstring): the parquet
+    reader on ``file://`` reports footer I/O only when every row group is
+    pruned; past that it reports byte ranges that do not follow column
+    pruning, so it is not the planned-bytes figure. CSV/JSON/text report
+    full physical bytes.
 
     Two scope limits (ADVICE r2): (1) the store retains only
     ``spark.ui.retainedStages`` stages (default 1000) — in a long-lived

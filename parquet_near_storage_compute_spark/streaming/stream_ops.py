@@ -618,12 +618,14 @@ def minhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingles,
         words,
     )
-    from parquet_near_storage_compute_spark.plans.memo import _fingerprint
-    from parquet_near_storage_compute_spark.tables import ensure_engine_confs
+    from parquet_near_storage_compute_spark.tables import (
+        ensure_engine_confs,
+        listing_fingerprint,
+    )
 
     ensure_engine_confs(spark)
     key = hashlib.md5(
-        repr(_fingerprint(sf_dir, ("documents",))).encode()
+        repr(listing_fingerprint(sf_dir, ("documents",))).encode()
     ).hexdigest()[:12]
     src_dir = os.path.join(_SCRATCH, f"minhash_ingest_src_{key}")
     if not os.path.exists(os.path.join(src_dir, "_READY")):

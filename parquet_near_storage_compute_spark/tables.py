@@ -9,6 +9,12 @@ natively and reads footers at planning time (SURVEY.md §2.1 S1-S3, S7-S8).
 
 from __future__ import annotations
 
+import glob
+import os
+import threading
+from collections import OrderedDict
+from urllib.parse import urlsplit
+
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
@@ -60,12 +66,104 @@ def ensure_engine_confs(spark: SparkSession) -> None:
             spark.conf.set(k, v)
 
 
+def listing_fingerprint(
+    sf_dir: str, tables: tuple[str, ...], extra_paths: tuple[str, ...] = ()
+) -> tuple:
+    """(table, mtime_ns, size) per source — a directory of part files
+    folds in every file under it, by relative name, so an in-place
+    rewrite, an added part and a removed part are all visible. A source
+    that does not exist locally shows as ``(table, "missing")``."""
+    parts: list[tuple] = []
+    paths = [(t, table_path(sf_dir, t)) for t in tables] + [
+        (p, p) for p in extra_paths
+    ]
+    for t, p in paths:
+        try:
+            st = os.stat(p)
+        except OSError:
+            parts.append((t, "missing"))
+            continue
+        if os.path.isdir(p):
+            for root, dirs, files in os.walk(p):
+                dirs.sort()
+                for name in sorted(files):
+                    full = os.path.join(root, name)
+                    cst = os.stat(full)
+                    parts.append(
+                        (t, os.path.relpath(full, p), cst.st_mtime_ns, cst.st_size)
+                    )
+        else:
+            parts.append((t, st.st_mtime_ns, st.st_size))
+    return tuple(parts)
+
+
+#: Session confs that change the schema Spark infers from the same footers
+#: (part of the schema-cache key).
+_SCHEMA_CONFS = (
+    "spark.sql.parquet.binaryAsString",
+    "spark.sql.parquet.int96AsTimestamp",
+    "spark.sql.parquet.inferTimestampNTZ.enabled",
+    "spark.sql.parquet.mergeSchema",
+    "spark.sql.legacy.parquet.nanosAsLong",
+)
+#: Inferred table schemas kept (LRU): every table of a few corpora.
+_SCHEMA_CAP = 64
+_schemas: OrderedDict[tuple, T.StructType] = OrderedDict()
+_schemas_lock = threading.Lock()
+
+
+def _schema_key(spark: SparkSession, sf_dir: str, name: str) -> tuple | None:
+    """Cache key of one table's inferred schema, or None when the table is
+    not a plain local path (remote scheme, glob, or missing), whose
+    listing cannot be fingerprinted here."""
+    url = urlsplit(sf_dir)
+    if url.scheme not in ("", "file") or glob.has_magic(sf_dir):
+        return None
+    local = url.path if url.scheme else sf_dir
+    listing = listing_fingerprint(local, (name,))
+    if (name, "missing") in listing:
+        return None
+    jconf = spark.conf._jconf
+    return (
+        spark.sparkContext.applicationId,
+        id(spark),
+        os.path.realpath(table_path(local, name)),
+        listing,
+        tuple(jconf.get(k) for k in _SCHEMA_CONFS),
+    )
+
+
 def load_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    """Footer-driven scan of one table (schema inferred, S1/S2 automatic)."""
+    """Footer-driven scan of one table (S1/S2 automatic).
+
+    The schema is inferred from the Parquet footers once — inference runs
+    a Spark job — and cached: later loads hand it to the reader, which
+    then plans the scan without any job. The cache key is the session
+    (``applicationId`` and the ``SparkSession`` object), the table path,
+    its file listing (name, ``mtime_ns`` and size of every part file, see
+    ``listing_fingerprint``) and the session confs that shape the
+    inferred schema (``_SCHEMA_CONFS``), so a rewritten, added or removed
+    part file, another session or a changed conf re-infers. Tables under a
+    remote scheme or a glob bypass the cache."""
     ensure_engine_confs(spark)
-    df = spark.read.parquet(table_path(sf_dir, name))
+    path = table_path(sf_dir, name)
+    key = _schema_key(spark, sf_dir, name)
+    with _schemas_lock:
+        schema = _schemas.get(key) if key is not None else None
+        if schema is not None:
+            _schemas.move_to_end(key)
+    if schema is not None:
+        df = spark.read.schema(schema).parquet(path)
+    else:
+        df = spark.read.parquet(path)
+        schema = df.schema
+        if key is not None:
+            with _schemas_lock:
+                _schemas[key] = schema
+                while len(_schemas) > _SCHEMA_CAP:
+                    _schemas.popitem(last=False)
     for col in _NANOS_TS_COLS.get(name, ()):
-        if isinstance(df.schema[col].dataType, T.LongType):
+        if isinstance(schema[col].dataType, T.LongType):
             # integer `div`, not `/`: epoch-nanos (~1.7e18) exceeds double's
             # 53-bit mantissa, so float division would corrupt microseconds
             df = df.withColumn(col, F.expr(f"timestamp_micros(`{col}` div 1000)"))

@@ -98,9 +98,10 @@ _ORACLE_MEMO: dict[tuple, tuple[list[str], list[tuple]]] = {}
 
 def _con_fingerprint(con: duckdb.DuckDBPyConnection, sql: str) -> tuple:
     """Definitions + file stats of the views the SQL references (by name,
-    word-boundary). Keying on referenced views only lets two connections
-    with different UNREFERENCED view sets share an entry — the result
-    depends only on the referenced data."""
+    word-boundary), plus file stats of the paths quoted in the SQL text.
+    Keying on referenced views only lets two connections with different
+    UNREFERENCED view sets share an entry — the result depends only on
+    the referenced data."""
     import os as _os
     import re as _re
 
@@ -112,15 +113,18 @@ def _con_fingerprint(con: duckdb.DuckDBPyConnection, sql: str) -> tuple:
         ).fetchall()
         if _re.search(rf"\b{_re.escape(v[0])}\b", sql)
     )
+    # quoted paths: every one in a referenced view, and those written in
+    # the SQL itself (e.g. read_parquet('...')) — a literal with a '/'
+    paths = [p for _, vsql in views for p in _re.findall(r"'([^']+)'", vsql or "")]
+    paths += _re.findall(r"'([^']*/[^']*)'", sql)
     stats = []
-    for _, vsql in views:
-        for p in _re.findall(r"'([^']+)'", vsql or ""):
-            base = p.split("*")[0].rstrip("/")
-            try:
-                st = _os.stat(base)
-                stats.append((p, st.st_mtime_ns, st.st_size))
-            except OSError:
-                stats.append((p, -1, -1))
+    for p in paths:
+        base = p.split("*")[0].rstrip("/")
+        try:
+            st = _os.stat(base)
+            stats.append((p, st.st_mtime_ns, st.st_size))
+        except OSError:
+            stats.append((p, -1, -1))
     return (views, tuple(stats))
 
 

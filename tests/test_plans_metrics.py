@@ -243,3 +243,34 @@ def test_wide92_fixture_matches_reference_projection_axis():
     ]
     assert series == sorted(series) and len(set(series)) == len(series)
     assert series[-1] > 0.95 * size
+
+
+
+def test_footer_memo_follows_rewrites(tmp_path):
+    """Footers are parsed once per file version: a repeat call reuses the
+    parsed metadata, and a file rewritten in place is read again."""
+    import os
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_near_storage_compute_spark.plans import metrics
+
+    def fresh(path: str) -> int:
+        with open(path, "rb") as fh:
+            fh.seek(-8, os.SEEK_END)
+            footer = int.from_bytes(fh.read(4), "little") + 8
+        md = pq.ParquetFile(path).metadata
+        return footer + sum(
+            md.row_group(rg).column(i).total_compressed_size
+            for rg in range(md.num_row_groups)
+            for i in range(md.num_columns)
+        )
+
+    path = str(tmp_path / "t.parquet")
+    pq.write_table(pa.table({"a": list(range(100))}), path)
+    assert planned_scan_bytes(path) == fresh(path)
+    assert metrics._footer(path) is metrics._footer(path)
+    pq.write_table(pa.table({"a": list(range(1000)), "b": [1.0] * 1000}), path)
+    assert planned_scan_bytes(path) == fresh(path)
+    assert planned_scan_bytes(path, ["a"]) < planned_scan_bytes(path)
