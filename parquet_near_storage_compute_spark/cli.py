@@ -96,8 +96,8 @@ def main(argv: list[str] | None = None) -> int:
         dest="cpus",
         type=int,
         default=None,
-        help="parallel task count (v1 -t/--tasks): local[N] + N shuffle "
-        "partitions",
+        help="parallel task count (v1 -t/--tasks): local[N], whose N task "
+        "slots also set the shuffle width",
     )
     ap.add_argument(
         "--read-size-mib",
@@ -164,8 +164,6 @@ def main(argv: list[str] | None = None) -> int:
     from parquet_near_storage_compute_spark.session import get_spark
 
     conf = {}
-    if args.cpus:
-        conf["spark.sql.shuffle.partitions"] = str(args.cpus)
     if args.read_size_mib:
         conf["spark.sql.files.maxPartitionBytes"] = str(
             args.read_size_mib * 1024 * 1024

@@ -53,6 +53,13 @@ from dataclasses import dataclass
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from parquet_near_storage_compute_spark.functions.sql import (
+    sql_double,
+    sql_ident,
+    sql_name,
+    sql_string,
+)
+
 _TOKEN_RE = re.compile(
     r"""\s*(?:
         (?P<lparen>\() |
@@ -96,38 +103,27 @@ def _tokenize(s: str) -> list[_Token]:
     return tokens
 
 
-def _sql_string(text: str) -> str:
-    """Single-quoted Spark SQL string literal whose value is ``text``."""
-    return "'" + text.replace("\\", "\\\\").replace("'", "\\'") + "'"
-
-
-def _sql_ident(name: str) -> str:
-    """Column reference resolved like ``F.col(name)``: a dotted name is a
-    nested-field path, each part back-quoted."""
-    return ".".join("`" + part.replace("`", "``") + "`" for part in name.split("."))
-
-
 def _literal(tok: _Token) -> str:
     """Typed literal inference, v1 order: datetime → bool → float → int → str,
     written so Spark types it exactly as ``F.lit`` types the Python value."""
     if tok.kind == "string":
-        return _sql_string(tok.text)
+        return sql_string(tok.text)
     t = tok.text
     if _DATETIME_RE.match(t):
         # v1 parses "%Y-%m-%d-%H:%M:%S" into epoch-millis Int64
         # (v1/src/main.rs:589-595); we emit a proper timestamp literal so
         # Catalyst can still push the comparison down to Parquet.
-        return f"to_timestamp({_sql_string(t)}, 'yyyy-MM-dd-HH:mm:ss')"
+        return f"to_timestamp({sql_string(t)}, 'yyyy-MM-dd-HH:mm:ss')"
     low = t.lower()
     if low in ("true", "false"):
         return low
     if _FLOAT_RE.match(t):
         # DOUBLE, like F.lit(float): an unsuffixed 1.5 is DECIMAL in SQL
-        return f"{t}D"
+        return sql_double(t)
     if _INT_RE.match(t):
         # INT, or BIGINT past 32 bits — the py4j typing of F.lit(int)
         return str(int(t))
-    return _sql_string(t)
+    return sql_string(t)
 
 
 #: grammar comparator → Spark SQL comparator
@@ -205,22 +201,22 @@ class _Parser:
                 hi = _literal(self.next())
                 # written out as Column.between builds it: SQL BETWEEN
                 # analyzes to a different (runtime-replaceable) node
-                col = _sql_ident(left.text)
+                col = sql_ident(left.text)
                 return f"({col} >= {lo} AND {col} <= {hi})"
             if kw == "like":
                 self.next()
                 pat = self.next()
-                return f"({_sql_ident(left.text)} LIKE {_sql_string(pat.text)})"
+                return f"({sql_ident(left.text)} LIKE {sql_string(pat.text)})"
         op = self.next()
         if op.kind != "op":
             raise ValueError(f"expected comparison operator, got {op.text!r}")
         right = self.next()
         left_is_col = left.kind == "word" and not _is_literal_word(left)
         if left_is_col:
-            return f"({_sql_ident(left.text)} {_OPS[op.text]} {_literal(right)})"
+            return f"({sql_ident(left.text)} {_OPS[op.text]} {_literal(right)})"
         # literal OP column — flip to keep the column on the left
         flipped = {"<": ">", "<=": ">=", ">": "<", ">=": "<="}.get(op.text, op.text)
-        return f"({_sql_ident(right.text)} {_OPS[flipped]} {_literal(left)})"
+        return f"({sql_ident(right.text)} {_OPS[flipped]} {_literal(left)})"
 
     def _in_list(self, col_tok: _Token) -> str:
         if self.next().kind != "lparen":
@@ -238,7 +234,7 @@ class _Parser:
                 raise ValueError(f"unexpected token in IN list: {tok.text!r}")
         if not values:
             raise ValueError("empty IN list")
-        return f"({_sql_ident(col_tok.text)} IN ({', '.join(values)}))"
+        return f"({sql_ident(col_tok.text)} IN ({', '.join(values)}))"
 
 
 def _is_literal_word(tok: _Token) -> bool:
@@ -298,8 +294,7 @@ def parse_aggregation(spec: str, alias: str | None = None) -> Column:
         raise ValueError(f"unsupported aggregation: {spec!r}")
     op, col = m.group(1).lower(), m.group(2)
     name = alias if alias is not None else f"{op}_{col}"
-    # the alias is one name, never a path: back-quote it whole
-    return F.expr(f"{op}({_sql_ident(col)}) AS `{name.replace('`', '``')}`")
+    return F.expr(f"{op}({sql_ident(col)}) AS {sql_name(name)}")
 
 
 def parse_aggregations(specs: list[str] | list[tuple[str, str]]) -> list[Column]:

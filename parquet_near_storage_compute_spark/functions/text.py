@@ -4,6 +4,12 @@ Everything here is built from native higher-order functions
 (``transform``/``filter``/``aggregate`` — JVM-side, codegen'd, zero Python in
 the hot path) so the dedup/text operators scale per-row with no UDF overhead.
 
+Each helper takes and returns Spark SQL text (``functions/sql.py``): its
+operands are column names or SQL expressions, and the caller wraps each
+output column in one ``F.expr`` / ``selectExpr``. The text analyzes to the
+plan the equivalent ``Column`` tree gave (``tests/test_sql_helpers.py``);
+it crosses the Python↔JVM boundary once instead of several times per node.
+
 Cross-engine determinism: all hashing is ``md5(seed || token)`` — bitwise
 identical in Spark and DuckDB — which is what makes MinHash/SimHash
 fingerprints oracle-comparable.
@@ -11,37 +17,37 @@ fingerprints oracle-comparable.
 
 from __future__ import annotations
 
-from pyspark.sql import Column
-from pyspark.sql import functions as F
+from pyspark.sql import DataFrame
+
+from parquet_near_storage_compute_spark.functions.sql import sql_string
+
+#: The typed empty array the shingle helpers return for too-short input.
+_EMPTY_STRINGS = "CAST(array() AS ARRAY<STRING>)"
 
 
-def words(text: Column | str) -> Column:
+def words(text: str) -> str:
     """Whitespace tokenization (single-space; matches DuckDB string_split)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.split(c, " ")
+    return f"split({text}, ' ')"
 
 
-def shingles(ws: Column, n: int = 3) -> Column:
+def shingles(ws: str, n: int = 3) -> str:
     """Word n-gram shingles as an array; empty when the doc has < n words.
 
     Spark: ``transform(sequence(0, size-n), i -> concat_ws(' ', slice(ws,i+1,n)))``
     mirrors DuckDB ``list_transform(range(len-n+1), i -> array_to_string(ws[i+1:i+n], ' '))``.
     """
-    return F.when(
-        F.size(ws) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.size(ws) - n),
-            lambda i: F.concat_ws(" ", F.slice(ws, i + 1, n)),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    return (
+        f"CASE WHEN size({ws}) >= {n} THEN transform(sequence(0, size({ws}) - {n}), "
+        f"_i -> concat_ws(' ', slice({ws}, _i + 1, {n}))) ELSE {_EMPTY_STRINGS} END"
+    )
 
 
-def seeded_hash(seed: int, token: Column) -> Column:
+def seeded_hash(seed: int, token: str) -> str:
     """Deterministic per-seed hash: md5('<seed>:' || token), hex string.
 
     String-min over these behaves as an independent-ish permutation per seed
     (the standard k-mins MinHash construction)."""
-    return F.md5(F.concat(F.lit(f"{seed}:"), token))
+    return f"md5(concat({sql_string(f'{seed}:')}, {token}))"
 
 
 #: Hex chars per MinHash slice: 8 hex = 32 bits per hash function.
@@ -50,7 +56,12 @@ MINHASH_SLICE = 8
 _SLICES_PER_MD5 = 4
 
 
-def minhash_slice(j: int, token: Column) -> Column:
+def _slice_offset(j: int) -> int:
+    """1-based start of MinHash function j's slice within its digest."""
+    return (j % _SLICES_PER_MD5) * MINHASH_SLICE + 1
+
+
+def minhash_slice(j: int, token: str) -> str:
     """MinHash function j: an 8-hex-char slice of md5('<j//4>:' || token).
 
     One md5 yields four independent 32-bit slices, so k functions cost
@@ -59,18 +70,16 @@ def minhash_slice(j: int, token: Column) -> Column:
     → 1.09s for the sf0.1 LSH pipeline). String-min over fixed-width hex ≡
     numeric min over the 32-bit values, so this is still the standard
     k-mins construction."""
-    group, offset = j // _SLICES_PER_MD5, (j % _SLICES_PER_MD5) * MINHASH_SLICE + 1
-    return F.substring(seeded_hash(group, token), offset, MINHASH_SLICE)
+    digest = seeded_hash(j // _SLICES_PER_MD5, token)
+    return f"substring({digest}, {_slice_offset(j)}, {MINHASH_SLICE})"
 
 
-def minhash_aggs(token_col: str, k: int) -> list[Column]:
+def minhash_aggs(token_col: str, k: int) -> list[str]:
     """k MinHash aggregate expressions over an exploded token column."""
-    return [
-        F.min(minhash_slice(j, F.col(token_col))).alias(f"mh{j}") for j in range(k)
-    ]
+    return [f"min({minhash_slice(j, token_col)}) AS mh{j}" for j in range(k)]
 
 
-def attach_minhash(df, sset_col: str, k: int):
+def attach_minhash(df: DataFrame, sset_col: str, k: int) -> DataFrame:
     """Attach the k MinHash columns ``mh0..mh{k-1}`` as a NARROW map over a
     distinct-token ARRAY column — no explode, no aggregate, no exchange.
 
@@ -89,7 +98,7 @@ def attach_minhash(df, sset_col: str, k: int):
     cheaper than the interpreted projection).  Plan shape is not the
     whole story; measure (guide §1).
 
-    Value equivalence to the aggregate form is exact: ``F.min`` and
+    Value equivalence to the aggregate form is exact: ``min`` and
     ``array_min`` both take the UTF8 lexicographic minimum of the identical
     ``minhash_slice`` strings and both ignore nulls (md5 of a non-null
     token is never null).  Callers must pre-filter empty arrays
@@ -100,56 +109,35 @@ def attach_minhash(df, sset_col: str, k: int):
     and shared by its four 8-hex-char slice minima (the
     ``minhash_slice`` layout), so the digest count per token is unchanged
     (⌈k/4⌉)."""
-    # single-argument closures: F.transform sniffs the lambda's arity, so a
-    # default-argument binding (lambda s, g=g: ...) would be treated as the
-    # two-arg (element, index) form and receive the index as g
-    def _digest(g: int):
-        return lambda s: F.md5(F.concat(F.lit(f"{g}:"), s))
-
-    def _slice(off: int):
-        return lambda x: F.substring(x, off, MINHASH_SLICE)
-
     groups = (k + _SLICES_PER_MD5 - 1) // _SLICES_PER_MD5
-    out = df
-    for g in range(groups):
-        out = out.withColumn(
-            f"_mhd{g}", F.transform(F.col(sset_col), _digest(g))
-        )
-    for j in range(k):
-        g = j // _SLICES_PER_MD5
-        off = (j % _SLICES_PER_MD5) * MINHASH_SLICE + 1
-        out = out.withColumn(
-            f"mh{j}",
-            F.array_min(F.transform(F.col(f"_mhd{g}"), _slice(off))),
-        )
-    return out.drop(*[f"_mhd{g}" for g in range(groups)])
-
-
-def band_hash(minhash_cols: list[str], band: int, rows_per_band: int) -> Column:
-    """LSH banding: hash the band's minhash slice into one bucket key."""
-    parts = [
-        F.col(minhash_cols[band * rows_per_band + r]) for r in range(rows_per_band)
+    digests = [
+        f"transform({sset_col}, _s -> {seeded_hash(g, '_s')}) AS _mhd{g}"
+        for g in range(groups)
     ]
-    return F.md5(F.concat_ws("|", *parts))
+    slices = [
+        f"array_min(transform(_mhd{j // _SLICES_PER_MD5}, "
+        f"_x -> substring(_x, {_slice_offset(j)}, {MINHASH_SLICE}))) AS mh{j}"
+        for j in range(k)
+    ]
+    return (
+        df.selectExpr("*", *digests)
+        .selectExpr("*", *slices)
+        .drop(*[f"_mhd{g}" for g in range(groups)])
+    )
 
 
-def simhash_bit_value(bit: int, token: Column) -> Column:
-    """±1 contribution of a token to SimHash bit ``bit``: parity of the first
-    hex char of md5('<bit>:' || token). Matches DuckDB
-    ``ascii(substr(md5(...),1,1)) % 2``."""
-    parity = F.ascii(F.substring(seeded_hash(bit, token), 1, 1)) % 2
-    return parity * 2 - 1
+def band_hash(minhash_cols: list[str], band: int, rows_per_band: int) -> str:
+    """LSH banding: hash the band's minhash slice into one bucket key."""
+    parts = minhash_cols[band * rows_per_band : (band + 1) * rows_per_band]
+    return f"md5(concat_ws('|', {', '.join(parts)}))"
 
 
-def char_ngrams(text: Column, n: int = 8) -> Column:
+def char_ngrams(text: str, n: int = 8) -> str:
     """Character n-grams (for winnowing-style fingerprints)."""
-    return F.when(
-        F.length(text) >= n,
-        F.transform(
-            F.sequence(F.lit(0), F.length(text) - n),
-            lambda i: F.substring(text, i + 1, n),
-        ),
-    ).otherwise(F.array().cast("array<string>"))
+    return (
+        f"CASE WHEN length({text}) >= {n} THEN transform(sequence(0, length({text}) - {n}), "
+        f"_i -> substring({text}, _i + 1, {n})) ELSE {_EMPTY_STRINGS} END"
+    )
 
 
 #: Tiny public stopword sets used by the language-ID heuristic and quality
@@ -164,7 +152,7 @@ MARKERS = {
 }
 
 
-def count_in(ws: Column, vocab: tuple[str, ...]) -> Column:
+def count_in(ws: str, vocab: tuple[str, ...]) -> str:
     """Occurrences of vocabulary words in a token array (JVM-side filter)."""
-    vocab_arr = F.array(*[F.lit(w) for w in vocab])
-    return F.size(F.filter(ws, lambda w: F.array_contains(vocab_arr, w)))
+    vocab_arr = f"array({', '.join(sql_string(w) for w in vocab)})"
+    return f"size(filter({ws}, _w -> array_contains({vocab_arr}, _w)))"

@@ -77,12 +77,8 @@ LSH_MERGE_SALT = 4
 def exact_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact dedup: canonical doc per content hash (keep min doc_id)."""
     docs = load_table(spark, sf_dir, "documents")
-    return (
-        docs.groupBy(F.md5(F.col("text")).alias("content_hash"))
-        .agg(
-            F.min("doc_id").alias("keep_doc_id"),
-            F.count(F.lit(1)).alias("n_copies"),
-        )
+    return docs.groupBy(F.expr("md5(text) AS content_hash")).agg(
+        F.expr("min(doc_id) AS keep_doc_id"), F.expr("count(1) AS n_copies")
     )
 
 
@@ -110,9 +106,8 @@ def _shingle_sets(docs: DataFrame) -> DataFrame:
     fresh plans): filter-below best 3.60 s vs filter-above-cache best
     1.11 s, every pair in favor — and the filter drops zero rows on
     this corpus, so the extra cached rows are free."""
-    return fan_out(docs).select(
-        "doc_id",
-        F.array_distinct(shingles(words("text"), 3)).alias("sset"),
+    return fan_out(docs).selectExpr(
+        "doc_id", f"array_distinct({shingles(words('text'), 3)}) AS sset"
     )
 
 
@@ -133,11 +128,12 @@ def _minhash_signatures(docs: DataFrame) -> DataFrame:
     is cheaper than the extra exchange it saves.  The attach form remains
     right where its output is PERSISTED for several consumers
     (`_shingle_features`), where build cost is paid once."""
-    sh = fan_out(docs).select(
-        "doc_id",
-        F.explode(F.array_distinct(shingles(words("text"), 3))).alias("s"),
+    sh = fan_out(docs).selectExpr(
+        "doc_id", f"explode(array_distinct({shingles(words('text'), 3)})) AS s"
     )
-    return sh.groupBy("doc_id").agg(*minhash_aggs("s", MINHASH_K))
+    return sh.groupBy("doc_id").agg(
+        *[F.expr(agg) for agg in minhash_aggs("s", MINHASH_K)]
+    )
 
 
 def _bands(sig: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
@@ -145,11 +141,9 @@ def _bands(sig: DataFrame, extra: tuple[str, ...] = ()) -> DataFrame:
     band array (a per-band unionAll would re-run the shingle+minhash
     pipeline per band). ``extra`` carries blocking keys alongside."""
     mh_cols = [f"mh{j}" for j in range(MINHASH_K)]
-    band_arr = F.array(
-        *[band_hash(mh_cols, b, LSH_ROWS) for b in range(LSH_BANDS)]
-    )
-    return sig.select(
-        "doc_id", *extra, F.posexplode(band_arr).alias("band", "bh")
+    band_arr = ", ".join(band_hash(mh_cols, b, LSH_ROWS) for b in range(LSH_BANDS))
+    return sig.selectExpr(
+        "doc_id", *extra, f"posexplode(array({band_arr})) AS (band, bh)"
     )
 
 
@@ -179,18 +173,16 @@ def _banded_buckets(bands: DataFrame, keys: list[str]) -> DataFrame:
     Output: (keys…, n_docs exact, min_id exact, ds = sorted member ids,
     exact and complete iff n_docs ≤ CAP)."""
     part = bands.groupBy(
-        *keys, F.pmod(F.hash("doc_id"), F.lit(LSH_MERGE_SALT)).alias("_salt")
+        *keys, F.expr(f"pmod(hash(doc_id), {LSH_MERGE_SALT}) AS _salt")
     ).agg(
-        F.count(F.lit(1)).alias("_n_part"),
-        F.min("doc_id").alias("_min_part"),
-        F.slice(F.collect_list("doc_id"), 1, LSH_BUCKET_CAP + 1).alias(
-            "_ds_part"
-        ),
+        F.expr("count(1) AS _n_part"),
+        F.expr("min(doc_id) AS _min_part"),
+        F.expr(f"slice(collect_list(doc_id), 1, {LSH_BUCKET_CAP + 1}) AS _ds_part"),
     )
     return part.groupBy(*keys).agg(
-        F.sum("_n_part").alias("n_docs"),
-        F.min("_min_part").alias("min_id"),
-        F.sort_array(F.flatten(F.collect_list("_ds_part"))).alias("ds"),
+        F.expr("sum(_n_part) AS n_docs"),
+        F.expr("min(_min_part) AS min_id"),
+        F.expr("sort_array(flatten(collect_list(_ds_part))) AS ds"),
     )
 
 
@@ -201,16 +193,10 @@ def _bucket_pairs(buckets: DataFrame) -> DataFrame:
     never the right answer for a mega-bucket); they are visible through
     ``lsh_overflow`` instead. Pairwise work stays O(Σ min(bucket, cap)²) —
     the whole point of LSH, now with a hard per-task ceiling."""
-    kept = buckets.filter(
-        (F.col("n_docs") > 1) & (F.col("n_docs") <= LSH_BUCKET_CAP)
-    )
-    pairs = kept.select(
-        F.explode(
-            F.expr(
-                "filter(flatten(transform(ds, x -> transform(ds, "
-                "y -> struct(x AS doc_a, y AS doc_b)))), p -> p.doc_a < p.doc_b)"
-            )
-        ).alias("p")
+    kept = buckets.where(f"(n_docs > 1) AND (n_docs <= {LSH_BUCKET_CAP})")
+    pairs = kept.selectExpr(
+        "explode(filter(flatten(transform(ds, _x -> transform(ds, "
+        "_y -> struct(_x AS doc_a, _y AS doc_b)))), _p -> _p.doc_a < _p.doc_b)) AS p"
     )
     return pairs.select("p.doc_a", "p.doc_b").distinct()
 
@@ -873,7 +859,7 @@ def blocked_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
             "doc_id",
             "lang",
             "source",
-            F.array_distinct(words("text")).alias("wset"),
+            F.expr(f"array_distinct({words('text')}) AS wset"),
         )
         .filter(F.size("wset") > 0)
     )
@@ -909,7 +895,7 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     cluster). GroupBy-only — no pairwise join anywhere."""
     docs = load_table(spark, sf_dir, "documents")
     toks = fan_out(docs).select(
-        "doc_id", F.explode(F.array_distinct(words("text"))).alias("tok")
+        "doc_id", F.expr(f"explode(array_distinct({words('text')})) AS tok")
     )
     # ONE md5 per (doc, token): bit b's vote is the parity of hex char b+1
     # of md5(tok) — md5's hex chars are independent enough for simhash, and
@@ -953,8 +939,8 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # precompute norms per vector (O(n)) instead of inside every pair (O(n²))
     v = fan_out(emb).select(
         "vec_id",
-        as_double("embedding").alias("v"),
-    ).withColumn("nrm", norm(F.col("v")))
+        F.expr(f"{as_double('embedding')} AS v"),
+    ).withColumn("nrm", F.expr(norm("v")))
     a = v.select(
         F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
     )
@@ -962,7 +948,7 @@ def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
     )
     pairs = a.join(b, F.col("vec_a") < F.col("vec_b"))
-    cos = dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    cos = F.expr(dot("va", "vb")) / (F.col("na") * F.col("nb"))
     return (
         pairs.select("vec_a", "vec_b", cos.alias("cos_sim"))
         .filter(F.col("cos_sim") >= 0.4)
@@ -983,9 +969,9 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     emb = load_table(spark, sf_dir, "embeddings")
     v = (
         fan_out(emb)
-        .select("vec_id", as_double("embedding").alias("v"))
-        .withColumn("nrm", norm(F.col("v")))
-        .withColumn("bucket", lsh_bucket(F.col("v"), _PLANES))
+        .select("vec_id", F.expr(f"{as_double('embedding')} AS v"))
+        .withColumn("nrm", F.expr(norm("v")))
+        .withColumn("bucket", F.expr(lsh_bucket("v", _PLANES)))
     )
     a = v.select(
         F.col("vec_id").alias("vec_a"), F.col("v").alias("va"),
@@ -996,7 +982,7 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("nrm").alias("nb"), F.col("bucket").alias("bb"),
     )
     pairs = a.join(b, (F.col("ba") == F.col("bb")) & (F.col("vec_a") < F.col("vec_b")))
-    cos = dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+    cos = F.expr(dot("va", "vb")) / (F.col("na") * F.col("nb"))
     return (
         pairs.select("vec_a", "vec_b", cos.alias("cos_sim"))
         .filter(F.col("cos_sim") >= 0.4)

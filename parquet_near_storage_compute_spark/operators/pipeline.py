@@ -53,7 +53,7 @@ def training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
 
     # 1. quality gate (narrow map)
-    ws = words("text")
+    ws = F.expr(words("text"))
     quality = fan_out(
         docs.filter((F.length("text") >= 100) & (F.size(ws) >= 20))
     ).persist()
@@ -69,7 +69,7 @@ def training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 3. near-dup removal: LSH candidates → Jaccard ≥ 0.5 → drop doc_b
     cand = _lsh_candidates(_minhash_signatures(exact_deduped))
     sets = exact_deduped.select(
-        "doc_id", F.array_distinct(shingles(words("text"), 3)).alias("sset")
+        "doc_id", F.expr(f"array_distinct({shingles(words('text'), 3)}) AS sset")
     )
     a = sets.select(F.col("doc_id").alias("doc_a"), F.col("sset").alias("set_a"))
     b = sets.select(F.col("doc_id").alias("doc_b"), F.col("sset").alias("set_b"))
@@ -87,7 +87,7 @@ def training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     # 4. accounting per (lang, source)
     return kept.groupBy("lang", "source").agg(
         F.count(F.lit(1)).alias("n_docs"),
-        F.sum(F.size(words("text")).cast("long")).alias("total_tokens"),
+        F.expr(f"sum(CAST(size({words('text')}) AS BIGINT)) AS total_tokens"),
         F.sum(F.length("text").cast("long")).alias("total_chars"),
     )
 

@@ -21,7 +21,7 @@ def array_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate/filter/sort — the ArrayType surface the reference's
     scalar-only type system lacks (SURVEY §1.3)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    v = as_double("embedding")
+    v = F.expr(as_double("embedding"))
     return emb.select(
         "vec_id",
         F.size(v).alias("dim"),
@@ -86,8 +86,8 @@ def kmeans_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window
 
     emb = load_table(spark, sf_dir, "embeddings")
-    v = fan_out(emb).select("vec_id", as_double("embedding").alias("v"))
-    v = v.withColumn("nrm", norm(F.col("v")))
+    v = fan_out(emb).select("vec_id", F.expr(f"{as_double('embedding')} AS v"))
+    v = v.withColumn("nrm", F.expr(norm("v")))
 
     # deterministic init: k lowest vec_ids, cell index = rank by vec_id
     cents = (
@@ -107,8 +107,8 @@ def kmeans_lite(spark: SparkSession, sf_dir: str) -> DataFrame:
             "v",
             "cell",
             (
-                dot(F.col("v"), F.col("centroid"))
-                / (F.col("nrm") * norm(F.col("centroid")))
+                F.expr(dot("v", "centroid"))
+                / (F.col("nrm") * F.expr(norm("centroid")))
             ).alias("sim"),
         )
         # best cell per vector: max cosine, ties to the lowest cell —

@@ -73,9 +73,11 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     """vec_id, double vector, precomputed norm (norms are O(n) once here
     instead of O(n·q) inside the scoring join)."""
     emb = load_table(spark, sf_dir, "embeddings")
-    return fan_out(emb).select(
-        "vec_id", as_double("embedding").alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
+    return (
+        fan_out(emb)
+        .selectExpr("vec_id", f"{as_double('embedding')} AS v")
+        .selectExpr("*", f"{norm('v')} AS nrm")
+    )
 
 
 @_memoized("topk_bruteforce")
@@ -99,7 +101,7 @@ def topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "cand_id",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias(
+            (F.expr(dot("qv", "cv")) / (F.col("qn") * F.col("cn"))).alias(
                 "cos_sim"
             ),
         )
@@ -115,35 +117,22 @@ def topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
 def topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via sign-LSH blocking: candidates share the query's bucket; top-k
     by exact cosine within the bucket (recall < 1, cost « brute force)."""
-    v = _vectors(spark, sf_dir).withColumn("bucket", lsh_bucket(F.col("v"), _PLANES))
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-        F.col("bucket").alias("qb"),
+    v = _vectors(spark, sf_dir).selectExpr("*", f"{lsh_bucket('v', _PLANES)} AS bucket")
+    q = v.where(f"vec_id < {N_QUERIES}").selectExpr(
+        "vec_id AS query_id", "v AS qv", "nrm AS qn", "bucket AS qb"
     )
-    c = v.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
-        F.col("bucket").alias("cb"),
-    )
+    c = v.selectExpr("vec_id AS cand_id", "v AS cv", "nrm AS cn", "bucket AS cb")
     scored = (
-        F.broadcast(q)
-        .join(c, (F.col("qb") == F.col("cb")) & (F.col("query_id") != F.col("cand_id")))
-        .select(
-            "query_id",
-            "cand_id",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias(
-                "cos_sim"
-            ),
-        )
+        q.hint("broadcast")
+        .join(c, F.expr("(qb = cb) AND (query_id != cand_id)"))
+        .selectExpr("query_id", "cand_id", f"({dot('qv', 'cv')} / (qn * cn)) AS cos_sim")
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "cand_id")
     return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "cand_id", "cos_sim", F.col("rk").cast("int").alias("rk"))
+        scored.selectExpr(
+            "*", "row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, cand_id) AS rk"
+        )
+        .where(f"rk <= {TOP_K}")
+        .selectExpr("query_id", "cand_id", "cos_sim", "CAST(rk AS INT) AS rk")
     )
 
 
@@ -308,7 +297,7 @@ def topk_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
 def _label_centroids(emb: DataFrame) -> DataFrame:
     """label → element-wise mean vector (the IVF coarse codebook; here the
     labels seed the cells — production would k-means iterate the same op)."""
-    v = emb.select("vec_id", "label", F.posexplode(as_double("embedding")))
+    v = emb.select("vec_id", "label", F.posexplode(F.expr(as_double("embedding"))))
     return (
         v.groupBy("label", "pos")
         .agg(F.avg("col").alias("c"))
@@ -342,17 +331,14 @@ def _ranked_cells(emb: DataFrame, max_rank: int = 1) -> DataFrame:
     cents = _label_centroids(emb)
     cbk = cents.agg(F.collect_list(F.struct("cell", "centroid")).alias("cbk"))
     v = fan_out(emb).select(
-        "vec_id", as_double("embedding").alias("v")
-    ).withColumn("nrm", norm(F.col("v")))
+        "vec_id", F.expr(f"{as_double('embedding')} AS v")
+    ).withColumn("nrm", F.expr(norm("v")))
 
-    def _score(c):
-        return F.struct(
-            (
-                dot(F.col("v"), c["centroid"])
-                / (F.col("nrm") * norm(c["centroid"]))
-            ).alias("cc"),
-            c["cell"].alias("cell"),
-        )
+    # one codebook entry's (cosine, cell)
+    score = (
+        f"_c -> struct(({dot('v', '_c.centroid')} / (nrm * {norm('_c.centroid')})) AS cc, "
+        "_c.cell AS cell)"
+    )
 
     def _cmp(left, right):
         lc, rc = left["cc"], right["cc"]
@@ -375,7 +361,7 @@ def _ranked_cells(emb: DataFrame, max_rank: int = 1) -> DataFrame:
     ranked = v.crossJoin(F.broadcast(cbk)).withColumn(
         "rc",
         F.slice(
-            F.array_sort(F.transform("cbk", _score), _cmp), 1, max_rank
+            F.array_sort(F.expr(f"transform(cbk, {score})"), _cmp), 1, max_rank
         ),
     )
     return ranked.select(
@@ -418,7 +404,7 @@ def topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "cand_id",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias("cos_sim"),
+            (F.expr(dot("qv", "cv")) / (F.col("qn") * F.col("cn"))).alias("cos_sim"),
         )
     )
     w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "cand_id")
@@ -510,7 +496,7 @@ def bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     KNN_PILOT pilot set (r6), so this histogram is also the capping
     observable: compare it against the cap to see where and how hard the
     bound binds."""
-    v = _vectors(spark, sf_dir).withColumn("bucket", lsh_bucket(F.col("v"), _PLANES))
+    v = _vectors(spark, sf_dir).withColumn("bucket", F.expr(lsh_bucket("v", _PLANES)))
     return v.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_vectors"))
 
 
@@ -518,7 +504,7 @@ def label_centroid_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid (element-wise mean), then each vector's cosine to
     its own centroid, averaged per label — IVF-style coarse structure."""
     emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select("vec_id", "label", F.posexplode(as_double("embedding")))
+    v = emb.select("vec_id", "label", F.posexplode(F.expr(as_double("embedding"))))
     cent = (
         v.groupBy("label", "pos")
         .agg(F.avg("col").alias("c"))
@@ -528,11 +514,11 @@ def label_centroid_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
             "label", F.transform("pc", lambda x: x.getField("c")).alias("centroid")
         )
     )
-    vv = emb.select("vec_id", "label", as_double("embedding").alias("v"))
+    vv = emb.select("vec_id", "label", F.expr(f"{as_double('embedding')} AS v"))
     joined = vv.join(F.broadcast(cent), "label")
     return (
         joined.select(
-            "label", cosine(F.col("v"), F.col("centroid")).alias("cos_to_centroid")
+            "label", F.expr(f"{cosine('v', 'centroid')} AS cos_to_centroid")
         )
         .groupBy("label")
         .agg(
@@ -671,7 +657,7 @@ def _member_level_knn(v: DataFrame, max_bucket: int | None = None) -> DataFrame:
         "src_id",
         "salt",
         "nbr_id",
-        (dot(F.col("sv"), F.col("nv")) / (F.col("sn") * F.col("nn"))).alias(
+        (F.expr(dot("sv", "nv")) / (F.col("sn") * F.col("nn"))).alias(
             "cos_sim"
         ),
     )
@@ -732,7 +718,7 @@ def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (measured: edge recall 100% at 10×, vs 15% for the superseded
     member-level pilot-cap design)."""
     v = _vectors(spark, sf_dir).withColumn(
-        "bucket", lsh_bucket(F.col("v"), _PLANES)
+        "bucket", F.expr(lsh_bucket("v", _PLANES))
     )
     # cheap duplicate probe (AQE-style eager statistic): count distinct
     # VALUES vs members (exact distinct on the vector itself — no hash,
@@ -792,7 +778,7 @@ def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         "ga",
         "salt",
         "gb",
-        (dot(F.col("av"), F.col("bv")) / (F.col("an") * F.col("bn"))).alias(
+        (F.expr(dot("av", "bv")) / (F.col("an") * F.col("bn"))).alias(
             "cos_sim"
         ),
     )
@@ -802,7 +788,7 @@ def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("rep_id").alias("ga"),
         F.lit(0).alias("salt"),
         F.col("rep_id").alias("gb"),
-        (dot(F.col("v"), F.col("v")) / (F.col("nrm") * F.col("nrm"))).alias(
+        (F.expr(dot("v", "v")) / (F.col("nrm") * F.col("nrm"))).alias(
             "cos_sim"
         ),
     )
@@ -861,7 +847,7 @@ def range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     that would be a range-partitioned global sort over the full Θ(pairs)
     frame for presentation only (VERDICT r6)."""
     v = _vectors(spark, sf_dir).withColumn(
-        "bucket", lsh_bucket(F.col("v"), _PLANES)
+        "bucket", F.expr(lsh_bucket("v", _PLANES))
     )
     a = v.select(
         F.col("vec_id").alias("vec_a"),
@@ -888,7 +874,7 @@ def range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_a",
             "vec_b",
-            (dot(F.col("av"), F.col("bv")) / (F.col("an") * F.col("bn"))).alias(
+            (F.expr(dot("av", "bv")) / (F.col("an") * F.col("bn"))).alias(
                 "cos_sim"
             ),
         )
@@ -935,7 +921,7 @@ def embedding_dedup_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "vec_id",
             F.col("label").cast("int").alias("label"),
-            as_double("embedding").alias("v"),
+            F.expr(f"{as_double('embedding')} AS v"),
         )
         .withColumn("gsig", F.md5(F.col("v").cast("string")))
         .persist()
@@ -947,8 +933,8 @@ def embedding_dedup_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
         mem.join(groups, "gsig")
         .filter(F.col("vec_id") == F.col("rep_id"))
         .select("gsig", "rep_id", "m", "v")
-        .withColumn("nrm", norm(F.col("v")))
-        .withColumn("bucket", lsh_bucket(F.col("v"), _PLANES))
+        .withColumn("nrm", F.expr(norm("v")))
+        .withColumn("bucket", F.expr(lsh_bucket("v", _PLANES)))
     )
     a = reps.select(
         F.col("rep_id").alias("ra"),
@@ -972,7 +958,7 @@ def embedding_dedup_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
             & (F.col("ra") != F.col("rb")),
         )
         .filter(
-            (dot(F.col("av"), F.col("bv")) / (F.col("an") * F.col("bn")))
+            (F.expr(dot("av", "bv")) / (F.col("an") * F.col("bn")))
             >= COS_RANGE_THRESHOLD
         )
         .groupBy("ra")
@@ -1111,7 +1097,7 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.col("na") > 0)
         & (F.col("nb") > 0)
         & (
-            dot(F.col("va"), F.col("vb")) / (F.col("na") * F.col("nb"))
+            F.expr(dot("va", "vb")) / (F.col("na") * F.col("nb"))
             >= SEMDEDUP_EPS
         )
     )
@@ -1402,7 +1388,7 @@ def _pq_book(
 
     def build() -> list[tuple[int, int, list[int]]]:
         emb = load_table(spark, sf_dir, "embeddings")
-        v = fan_out(emb).select("vec_id", as_double("embedding").alias("v"))
+        v = fan_out(emb).select("vec_id", F.expr(f"{as_double('embedding')} AS v"))
         # Bounded deterministic training set (VERDICT r8 #3): the
         # PQ_TRAIN_N smallest md5('pq:' || vec_id) draws — the
         # train_uniform_sample k-min device, a pure function of the keys
@@ -1533,7 +1519,7 @@ def topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     at scale it IS the materialized PQ code table (the 32×-smaller scan
     target) a deployment writes."""
     emb = load_table(spark, sf_dir, "embeddings")
-    v = fan_out(emb).select("vec_id", as_double("embedding").alias("v"))
+    v = fan_out(emb).select("vec_id", F.expr(f"{as_double('embedding')} AS v"))
     codes = _pq_recon(v, _pq_book(spark, sf_dir)).persist()
     q = (
         v.filter(F.col("vec_id") < N_QUERIES)
@@ -1705,7 +1691,7 @@ def topk_ivf_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "query_id",
             "cand_id",
-            (dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))).alias(
+            (F.expr(dot("qv", "cv")) / (F.col("qn") * F.col("cn"))).alias(
                 "cos_sim"
             ),
         )
@@ -1756,13 +1742,13 @@ def topk_prefix_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     # AND the stage-2 exact re-rank fetch
     v = (
         fan_out(emb)
-        .select("vec_id", as_double("embedding").alias("v"))
-        .withColumn("nrm", norm(F.col("v")))
+        .select("vec_id", F.expr(f"{as_double('embedding')} AS v"))
+        .withColumn("nrm", F.expr(norm("v")))
         .persist()
     )
     pv = v.select(
         "vec_id", F.slice("v", 1, PREFIX_DIMS).alias("p")
-    ).withColumn("pn", norm(F.col("p")))
+    ).withColumn("pn", F.expr(norm("p")))
     q1 = pv.filter(F.col("vec_id") < N_QUERIES).select(
         F.col("vec_id").alias("query_id"),
         F.col("p").alias("qp"),
@@ -1783,7 +1769,7 @@ def topk_prefix_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cand_id",
             F.when((F.col("qpn") == 0) | (F.col("pn") == 0), F.lit(-2.0))
             .otherwise(
-                dot(F.col("qp"), F.col("p")) / (F.col("qpn") * F.col("pn"))
+                F.expr(dot("qp", "p")) / (F.col("qpn") * F.col("pn"))
             )
             .alias("cos_prefix"),
         )
@@ -1816,7 +1802,7 @@ def topk_prefix_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
             "cand_id",
             F.when((F.col("qn") == 0) | (F.col("cn") == 0), F.lit(-2.0))
             .otherwise(
-                dot(F.col("qv"), F.col("cv")) / (F.col("qn") * F.col("cn"))
+                F.expr(dot("qv", "cv")) / (F.col("qn") * F.col("cn"))
             )
             .alias("cos_sim"),
         )

@@ -29,21 +29,15 @@ def quality_scores(spark: SparkSession, sf_dir: str) -> DataFrame:
     punctuation count — the standard pre-training quality-filter columns."""
     docs = load_table(spark, sf_dir, "documents")
     ws = words("text")
-    n_words = F.size(ws)
-    total_wlen = F.aggregate(
-        ws, F.lit(0), lambda acc, w: acc + F.length(w)
-    )
-    return docs.select(
+    n_words = f"size({ws})"
+    total_wlen = f"aggregate({ws}, 0, (_acc, _w) -> _acc + length(_w))"
+    return docs.selectExpr(
         "doc_id",
-        F.length("text").alias("n_chars_actual"),
-        n_words.cast("long").alias("n_words"),
-        (total_wlen.cast("double") / n_words).alias("avg_word_len"),
-        (count_in(ws, STOPWORDS_EN).cast("double") / n_words).alias(
-            "stopword_ratio"
-        ),
-        F.size(F.filter(ws, lambda w: F.length(w) > 6)).cast("long").alias(
-            "n_long_words"
-        ),
+        "length(text) AS n_chars_actual",
+        f"CAST({n_words} AS BIGINT) AS n_words",
+        f"(CAST({total_wlen} AS DOUBLE) / {n_words}) AS avg_word_len",
+        f"(CAST({count_in(ws, STOPWORDS_EN)} AS DOUBLE) / {n_words}) AS stopword_ratio",
+        f"CAST(size(filter({ws}, _w -> length(_w) > 6)) AS BIGINT) AS n_long_words",
     )
 
 
@@ -52,8 +46,8 @@ def quality_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     of quality_scores), with per-source pass rates."""
     docs = load_table(spark, sf_dir, "documents")
     ws = words("text")
-    n_words = F.size(ws)
-    stop_ratio = count_in(ws, STOPWORDS_EN).cast("double") / n_words
+    n_words = F.expr(f"size({ws})")
+    stop_ratio = F.expr(count_in(ws, STOPWORDS_EN)).cast("double") / n_words
     passed = (
         (F.length("text") >= 100) & (n_words >= 20) & (stop_ratio >= 0.0)
     )
@@ -73,7 +67,7 @@ def language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     against the dataset's ``lang`` column as a confusion summary."""
     docs = load_table(spark, sf_dir, "documents")
     ws = words("text")
-    scores = {lang: count_in(ws, vocab) for lang, vocab in MARKERS.items()}
+    scores = {lang: F.expr(count_in(ws, vocab)) for lang, vocab in MARKERS.items()}
     pred = (
         F.when(
             (scores["de"] > scores["es"])
@@ -99,7 +93,7 @@ def token_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Token counting, two tokenizers: whitespace and a BPE-ish regex
     ([a-z0-9]+ runs); per-source totals (pre-training size accounting)."""
     docs = load_table(spark, sf_dir, "documents")
-    ws_count = F.size(words("text")).cast("long")
+    ws_count = F.expr(f"CAST(size({words('text')}) AS BIGINT)")
     re_count = F.size(
         F.regexp_extract_all(F.col("text"), F.lit("[a-z0-9]+"), F.lit(0))
     ).cast("long")
@@ -123,7 +117,7 @@ def fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     character 8-grams, concatenated. Content-defined, order-robust — a
     compact near-dup key (groupable like simhash)."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    grams = char_ngrams(F.col("text"), FP_NGRAM)
+    grams = F.expr(char_ngrams("text", FP_NGRAM))
     hashes = F.transform(grams, lambda g: F.md5(g))
     fp = F.array_join(F.slice(F.array_sort(hashes), 1, FP_KEEP), "")
     return docs.select("doc_id", fp.alias("fingerprint"))
@@ -143,7 +137,7 @@ def ngram_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     top-k never materializes more than k rows per partition."""
     docs = load_table(spark, sf_dir, "documents")
     g = fan_out(docs).select(
-        F.explode(shingles(words("text"), NGRAM_STATS_N)).alias("gm")
+        F.expr(f"explode({shingles(words('text'), NGRAM_STATS_N)}) AS gm")
     )
     return (
         g.groupBy("gm")
@@ -172,7 +166,7 @@ def repetition_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     At 100 TB this is a narrow map over the scan — the same
     embarrassingly-parallel shape as quality_scores."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    ws = words("text")
+    ws = F.expr(words("text"))
     dws = F.array_distinct(ws)
     n_words = F.size(ws)
     top = F.array_max(
@@ -272,7 +266,7 @@ def tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
     winner; the tfidf double is output-only.
     """
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    pairs = docs.select("doc_id", F.explode(words("text")).alias("term"))
+    pairs = docs.select("doc_id", F.expr(f"explode({words('text')}) AS term"))
     tf = pairs.groupBy("doc_id", "term").agg(F.count(F.lit(1)).alias("tf"))
     dfreq = tf.groupBy("term").agg(F.count(F.lit(1)).alias("df"))
     n = docs.agg(F.count(F.lit(1)).alias("n_docs"))
@@ -316,7 +310,7 @@ def dedup_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts frame has one row per distinct segment, so no fan-out skew),
     one doc-keyed aggregate. Nothing quadratic; boilerplate-heavy
     corpora concentrate JOIN keys, not join outputs."""
-    ws = words("text")
+    ws = F.expr(words("text"))
     n_segs = F.ceil(F.size(ws) / F.lit(SEG_WORDS)).cast("int")
     seg_array = F.when(
         F.size(ws) > 0,
@@ -371,7 +365,7 @@ def dedup_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     no occurrence-stream join, nothing quadratic; per-doc state is
     bounded by the doc's own kept segments."""
     docs = fan_out(load_table(spark, sf_dir, "documents"))
-    ws = words("text")
+    ws = F.expr(words("text"))
     n_segs = F.ceil(F.size(ws) / F.lit(SEG_WORDS)).cast("int")
     seg_structs = F.when(
         F.size(ws) > 0,
@@ -484,7 +478,7 @@ def quality_margins(docs: DataFrame) -> DataFrame:
     equivalent and engine-exact.  Docs with < QC_NGRAM words survive via
     explode_outer with margin 0."""
     base = fan_out(docs).select(
-        "doc_id", shingles(words("text"), QC_NGRAM).alias("gs")
+        "doc_id", F.expr(f"{shingles(words('text'), QC_NGRAM)} AS gs")
     )
     feats = base.select("doc_id", F.explode_outer("gs").alias("g"))
     f_id = _hash32(F.lit("qf"), F.col("g")) % QC_DIM
@@ -566,7 +560,7 @@ def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
     and the keep gate compares integers, so the decision cannot flip
     across engines or partitionings."""
     docs = load_table(spark, sf_dir, "documents")
-    base = fan_out(docs).select("doc_id", words("text").alias("ws")).persist()
+    base = fan_out(docs).select("doc_id", F.expr(f"{words('text')} AS ws")).persist()
     vsz = base.select(F.explode("ws").alias("w")).agg(
         F.countDistinct("w").alias("vsz")
     )
@@ -667,7 +661,7 @@ def duplicate_window_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs = load_table(spark, sf_dir, "documents")
     wins = fan_out(docs).select(
         "doc_id",
-        F.explode(shingles(words("text"), TEXT_DUP_WINDOW)).alias("gm"),
+        F.expr(f"explode({shingles(words('text'), TEXT_DUP_WINDOW)}) AS gm"),
     ).select("doc_id", F.md5("gm").alias("h"))
     per_doc_h = (
         wins.groupBy("doc_id", "h").agg(F.count(F.lit(1)).alias("m")).persist()
@@ -750,10 +744,10 @@ def dedup_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     # cache each consumer re-scans the corpus and re-splits every
     # document (2× I/O + 2× tokenization at 100 TB for one narrow
     # (doc_id, words) projection, the _contamination_report precedent).
-    base = fan_out(docs).select("doc_id", words("text").alias("ws")).persist()
+    base = fan_out(docs).select("doc_id", F.expr(f"{words('text')} AS ws")).persist()
     wins = base.select(
         "doc_id",
-        F.posexplode(shingles(F.col("ws"), TEXT_DUP_WINDOW)).alias("i", "gm"),
+        F.expr(f"posexplode({shingles('ws', TEXT_DUP_WINDOW)}) AS (i, gm)"),
     ).select("doc_id", (F.col("i") + 1).alias("p"), F.md5("gm").alias("h"))
     per_doc_h = wins.groupBy("doc_id", "h").agg(F.count(F.lit(1)).alias("m"))
     occ = per_doc_h.groupBy("h").agg(F.sum("m").alias("occ"))
@@ -829,7 +823,7 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     # document (the lm_perplexity / duplicate_window_fraction discipline).
     sh = fan_out(docs).select(
         "doc_id",
-        F.explode(F.array_distinct(shingles(words("text"), 3))).alias("s"),
+        F.expr(f"explode(array_distinct({shingles(words('text'), 3)})) AS s"),
     ).persist()
     gcnt = sh.groupBy("s").agg(F.count(F.lit(1)).alias("n_docs_with"))
     per_doc = (

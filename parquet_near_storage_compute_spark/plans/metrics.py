@@ -19,10 +19,11 @@ threshold (modelled 0.92 and 2.94 MB) and 5.49 MB for both at a looser one
 (modelled 3.03 and 10.35 MB), and 3.09 / 4.54 MB with vectored IO off. So
 the local counter is neither footer-only nor the paper's bytes-moved
 metric; the planned-bytes curve is the portable observable. The counter
-nevertheless exists here too — ``runtime_input_bytes`` sums
-``inputMetrics.bytesRead`` across stages from the app status store (what a
-``SparkListener`` on ``onTaskEnd`` accumulates, v1's measured-bytes
-observable, ``v1/src/main.rs:166-192``) — and ``tests/test_runtime_bytes.py``
+nevertheless exists here too — ``measure_runtime_bytes`` sums
+``inputMetrics.bytesRead`` over one action's stages from the app status
+store (what a ``SparkListener`` on ``onTaskEnd`` accumulates, v1's
+measured-bytes observable, ``v1/src/main.rs:166-192``) — and
+``tests/test_runtime_bytes.py``
 checks that it counts full physical bytes on CSV and stays between the
 footer and the file size on the local parquet path.
 
@@ -174,67 +175,6 @@ def planned_scan_bytes(
     return total
 
 
-def runtime_input_bytes(spark: SparkSession) -> int:
-    """Total ``inputMetrics.bytesRead`` accumulated across all stages so far
-    — the runtime counterpart of ``planned_scan_bytes`` (a SparkListener's
-    ``onTaskEnd`` view, read from the same app-status store the UI uses).
-
-    Take a snapshot before and after an action and diff; pair with
-    ``wait_for_metrics`` because stage metrics land on the async listener
-    bus. Local caveat (measured in the module docstring): the parquet
-    reader on ``file://`` reports footer I/O only when every row group is
-    pruned; past that it reports byte ranges that do not follow column
-    pruning, so it is not the planned-bytes figure. CSV/JSON/text report
-    full physical bytes.
-
-    Two scope limits (ADVICE r2): (1) the store retains only
-    ``spark.ui.retainedStages`` stages (default 1000) — in a long-lived
-    session evicted stages leave the total, so a before/after diff can
-    shrink; ``measure_runtime_bytes`` clamps at 0 and is intended for
-    short-lived measurement sessions (a monotonic per-app counter needs a
-    JVM-side SparkListener, which py4j can't register without the callback
-    server). (2) the Scala ``$default$`` accessors for ``stageList``'s
-    optional args are version-pinned to Spark 4's signature.
-    """
-    sc = spark.sparkContext
-    store = sc._jsc.sc().statusStore()
-    # AppStatusStore.stageList(statuses, details, withSummaries, quantiles,
-    # taskStatus) — empty lists mean "no filter"; fetch Scala default args
-    # via their synthesized accessors so only the first arg is pinned.
-    stages = store.stageList(
-        sc._jvm.java.util.ArrayList(),
-        getattr(store, "stageList$default$2")(),
-        getattr(store, "stageList$default$3")(),
-        getattr(store, "stageList$default$4")(),
-        getattr(store, "stageList$default$5")(),
-    )
-    total = 0
-    it = stages.iterator()
-    while it.hasNext():
-        total += it.next().inputBytes()
-    return total
-
-
-def wait_for_metrics(spark: SparkSession, timeout_s: float = 5.0) -> None:
-    """Wait until the async status-listener bus has drained: no active
-    jobs per the status tracker, then two consecutive stable readings of
-    the input-bytes total (a single stable pair can be a transient while
-    task-end events are still in flight — ADVICE r2)."""
-    sc = spark.sparkContext
-    deadline = time.perf_counter() + timeout_s
-    while time.perf_counter() < deadline and sc.statusTracker().getActiveJobsIds():
-        time.sleep(0.1)
-    stable = 0
-    prev = runtime_input_bytes(spark)
-    while time.perf_counter() < deadline:
-        time.sleep(0.2)
-        cur = runtime_input_bytes(spark)
-        stable = stable + 1 if cur == prev else 0
-        if stable >= 2:
-            return
-        prev = cur
-
-
 def _stages_input_bytes(spark: SparkSession, stage_ids: set[int]) -> int:
     """Sum ``inputMetrics.bytesRead`` over exactly the given stages (all
     attempts). Bounded py4j traffic: O(len(stage_ids)), independent of how
@@ -275,7 +215,12 @@ def measure_runtime_bytes(spark: SparkSession, action) -> int:
 
     Attribution still requires the session to be otherwise idle only in
     the weak sense that concurrent jobs must not share the group id —
-    unrelated concurrent work no longer pollutes the counter."""
+    unrelated concurrent work no longer pollutes the counter.
+
+    The status store is fed by the async listener bus, which may still
+    hold the action's job-start and task-end events when it returns, so
+    the bus is drained before the job and stage ids are read (once): a
+    read before the drain could miss a job's stages for good."""
     import uuid
 
     sc = spark.sparkContext
@@ -285,27 +230,14 @@ def measure_runtime_bytes(spark: SparkSession, action) -> int:
         action()
     finally:
         sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
     tracker = sc.statusTracker()
     stage_ids: set[int] = set()
     for jid in tracker.getJobIdsForGroup(group):
         info = tracker.getJobInfo(jid)
         if info is not None:
             stage_ids.update(info.stageIds)
-    # the async listener bus delivers task-end events after the action
-    # returns: wait for two consecutive stable readings of the bounded sum
-    deadline = time.perf_counter() + 5.0
-    while time.perf_counter() < deadline and tracker.getActiveJobsIds():
-        time.sleep(0.1)
-    stable = 0
-    prev = _stages_input_bytes(spark, stage_ids)
-    while time.perf_counter() < deadline:
-        time.sleep(0.2)
-        cur = _stages_input_bytes(spark, stage_ids)
-        stable = stable + 1 if cur == prev else 0
-        if stable >= 2:
-            break
-        prev = cur
-    return prev
+    return _stages_input_bytes(spark, stage_ids)
 
 
 @dataclass

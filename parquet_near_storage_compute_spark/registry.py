@@ -58,8 +58,9 @@ Round 13's window (VERDICT r12 #8, an optimization round — no new
 contracts): the 5 contracts whose r13 plan restructures invalidate their
 green rows lead (`train_bpe_merges` / `events_pagerank` /
 `sim_mmr_select` — the one-partition literal-frame rework;
-`text_dedup_trim` / `train_decontaminate_trim` — the flag-union RANGE
-window replacing the (doc_id, p) join; results proven EQUAL at
+`text_dedup_trim` / `train_decontaminate_trim` — only the redundant
+`distinct` on the flagged window starts was dropped, the (doc_id, p)
+equi-join and the ROWS rolling-max frame remain; results proven EQUAL at
 sf0.001+sf0.01 this round, but the old rows verified different plans —
 see MODIFIED_IN_R13), then ALL 11 leftover r8-row contracts and the
 oldest 34 of the 47 r9-row contracts, each cohort in its round-file key

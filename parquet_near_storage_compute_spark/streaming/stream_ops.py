@@ -662,7 +662,7 @@ def minhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         sig = _minhash_signatures(batch)
         sets = batch.select(
             "doc_id",
-            F.array_distinct(shingles(words("text"), 3)).alias("sset"),
+            F.expr(f"array_distinct({shingles(words('text'), 3)}) AS sset"),
         )
         cur = sets.join(sig, "doc_id", "left")  # shingle-less: null mh*
         prev = (

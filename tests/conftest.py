@@ -52,7 +52,6 @@ def spark():
         app_name="pnsc-tests",
         master="local[8]",
         conf={
-            "spark.sql.shuffle.partitions": "8",
             "spark.driver.memory": "4g",
             # the runtime-bytes tests diff the status store's stage
             # counters; the default 1000-stage retention evicts history

@@ -133,7 +133,7 @@ def test_contamination_only_flags_train_docs(spark, sf_dir):
     assert all(r.doc_id % EVAL_MOD != 0 for r in out)
     docs = load_table(spark, sf_dir, "documents").select(
         "doc_id",
-        F.size(F.array_distinct(shingles(words("text"), CONTAM_NGRAM))).alias(
+        F.size(F.array_distinct(F.expr(shingles(words("text"), CONTAM_NGRAM)))).alias(
             "n_grams"
         ),
     )

@@ -45,7 +45,7 @@ def hot_dir(spark, sf_dir, tmp_path_factory):
 
 def test_nbr_candidates_bounded(spark, hot_dir):
     v = S._vectors(spark, hot_dir).withColumn(
-        "bucket", S.lsh_bucket(F.col("v"), S._PLANES)
+        "bucket", F.expr(S.lsh_bucket("v", S._PLANES))
     )
     sizes = {r.bucket: r.n for r in v.groupBy("bucket").agg(F.count("*").alias("n")).collect()}
     assert max(sizes.values()) > S.KNN_BUCKET_CAP  # the fixture is adversarial
@@ -68,7 +68,7 @@ def test_pilots_are_the_k_smallest_vec_ids(spark, hot_dir):
     vec_ids of the over-cap bucket (determinism is what makes the oracle
     able to mirror the selection)."""
     v = S._vectors(spark, hot_dir).withColumn(
-        "bucket", S.lsh_bucket(F.col("v"), S._PLANES)
+        "bucket", F.expr(S.lsh_bucket("v", S._PLANES))
     )
     over = [
         r.bucket
@@ -106,7 +106,7 @@ def test_uncapped_path_planless(spark, sf_dir):
     """At contract scale no bucket exceeds the cap, so _nbr_candidates must
     return its input unchanged — the r5 plan, byte for byte."""
     v = S._vectors(spark, sf_dir).withColumn(
-        "bucket", S.lsh_bucket(F.col("v"), S._PLANES)
+        "bucket", F.expr(S.lsh_bucket("v", S._PLANES))
     )
     assert S._nbr_candidates(v) is v
 
@@ -134,12 +134,12 @@ def test_collapsed_decisions_pairwork_is_duplication_invariant(spark, hot_dir, s
     representatives as the base corpus has distinct values."""
     emb = S.load_table(spark, hot_dir, "embeddings")
     mem = emb.select(
-        "vec_id", S.as_double("embedding").alias("v")
+        "vec_id", F.expr(f"{S.as_double('embedding')} AS v")
     ).withColumn("gsig", F.md5(F.col("v").cast("string")))
     n_reps = mem.select("gsig").distinct().count()
     n_base_distinct = (
         S.load_table(spark, sf_dir, "embeddings")
-        .select(F.md5(S.as_double("embedding").cast("string")))
+        .select(F.md5(F.expr(S.as_double("embedding")).cast("string")))
         .distinct()
         .count()
     )
@@ -205,7 +205,7 @@ def test_overcap_fixture_is_adversarial(spark, overcap_dup_dir):
     DISTINCT values in one bucket, and the duplicate group's rep rank
     outside the pilot set."""
     v = S._vectors(spark, overcap_dup_dir).withColumn(
-        "bucket", S.lsh_bucket(F.col("v"), S._PLANES)
+        "bucket", F.expr(S.lsh_bucket("v", S._PLANES))
     )
     g = v.groupBy("v", "bucket").agg(
         F.min("vec_id").alias("rep_id"), F.count("*").alias("m")

@@ -1,7 +1,8 @@
 """``tables.load_table``'s footer-schema cache: a repeated load of an
 unchanged table plans without any Spark job, and every change that can
-alter the inferred schema — a part file rewritten, added or removed,
-another session, a schema-shaping conf — infers it again."""
+alter the inferred schema — a part file rewritten (all parts or one of
+several), added or removed, another session, a schema-shaping conf —
+infers it again."""
 
 from __future__ import annotations
 
@@ -74,6 +75,32 @@ def test_in_place_rewrite_with_drifted_schema_invalidates(spark, corpus):
     assert jobs >= 1
     assert "extra" in df.columns
     assert df.filter("extra = 'x'").count() == 100
+
+
+@pytest.mark.parametrize("part", [0, 2])
+def test_drift_in_one_part_of_several_invalidates(spark, tmp_path, part):
+    """Drift written into ONE part of three (first or last in listing
+    order) changes only that file's footer; the cache must miss, infer
+    what an uncached read infers, and with ``mergeSchema`` on surface the
+    new column."""
+    corpus = str(tmp_path)
+    for p in range(3):
+        _write_part(corpus, "items", p, _items(50 * p))
+    load_table(spark, corpus, "items")
+    drifted = _items(50 * part).append_column("extra", pa.array(["x"] * 50))
+    _write_part(corpus, "items", part, drifted)
+    df, jobs = _load_counting_jobs(spark, corpus, "items")
+    assert jobs >= 1
+    assert df.schema == spark.read.parquet(table_path(corpus, "items")).schema
+    key = "spark.sql.parquet.mergeSchema"
+    before = spark.conf.get(key)
+    spark.conf.set(key, "true")
+    try:
+        merged, jobs = _load_counting_jobs(spark, corpus, "items")
+        assert jobs >= 1
+        assert merged.filter("extra = 'x'").count() == 50
+    finally:
+        spark.conf.set(key, before)
 
 
 def test_added_or_removed_part_invalidates(spark, corpus):

@@ -116,7 +116,7 @@ def test_novelty_totals_match_global_gram_frequencies(spark, sf_dir):
     docs = load_table(spark, sf_dir, "documents")
     sh = docs.select(
         "doc_id",
-        F.explode(F.array_distinct(shingles(words("text"), 3))).alias("s"),
+        F.expr(f"explode(array_distinct({shingles(words('text'), 3)})) AS s"),
     )
     n_doc_gram = sh.count()
     n_singleton = (

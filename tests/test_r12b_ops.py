@@ -140,7 +140,7 @@ def test_dedup_scrub_total_kept_equals_distinct_segments(spark, sf_dir):
     from parquet_near_storage_compute_spark.functions.text import words
 
     docs = load_table(spark, sf_dir, "documents")
-    ws = words("text")
+    ws = F.expr(words("text"))
     n_segs = F.ceil(F.size(ws) / F.lit(SEG_WORDS)).cast("int")
     segs = docs.select(
         F.explode(

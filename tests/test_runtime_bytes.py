@@ -15,6 +15,7 @@ from __future__ import annotations
 
 import os
 import shutil
+import time
 
 import pytest
 
@@ -90,3 +91,28 @@ def test_parquet_runtime_counter_invariants(spark, sf_dir):
             by_rung[rung],
         )
     assert by_rung["best_case"] <= by_rung["worst"]
+
+
+def test_counter_reads_after_one_drain_without_sleeping(spark, csv_copy, monkeypatch):
+    """The action's stages are read once, after the listener bus has
+    drained: no sleep-poll for the counters to settle, and still every
+    byte of the CSV read (a read before the drain could miss the job's
+    stages and return a stable under-count)."""
+
+    def _no_sleep(seconds):
+        raise AssertionError(f"measure_runtime_bytes slept {seconds} s")
+
+    schema = "l_orderkey bigint, l_quantity double, l_extendedprice double"
+    monkeypatch.setattr(time, "sleep", _no_sleep)
+    read = measure_runtime_bytes(
+        spark,
+        lambda: spark.read.schema(schema)
+        .option("header", True)
+        .csv(csv_copy)
+        .write.format("noop")
+        .mode("overwrite")
+        .save(),
+    )
+    monkeypatch.undo()
+    size = _dir_size(csv_copy)
+    assert 0.9 * size <= read <= 1.5 * size, (read, size)

@@ -373,7 +373,7 @@ def test_pq_three_engine_agreement(spark, sf_dir):
     from pyspark.sql import functions as F
 
     emb = load_table(spark, sf_dir, "embeddings")
-    v = fan_out(emb).select("vec_id", as_double("embedding").alias("v"))
+    v = fan_out(emb).select("vec_id", F.expr(f"{as_double('embedding')} AS v"))
     got = {
         r.vec_id: list(r.r)
         for r in S._pq_recon(v, S._pq_book(spark, sf_dir)).collect()

@@ -150,7 +150,7 @@ def main() -> None:
     from parquet_near_storage_compute_spark.registry import all_queries
     from parquet_near_storage_compute_spark.session import get_spark
 
-    spark = get_spark(master="local[4]", conf={"spark.sql.shuffle.partitions": "4"})
+    spark = get_spark(master="local[4]")
     spark.sparkContext.setLogLevel("ERROR")
     qs = all_queries()
     sf = "/root/testdata/sf0.001"

@@ -393,7 +393,7 @@ def run(
         "doc_id",
         (F.col("doc_id") % T.EVAL_MOD == 0).alias("is_eval"),
         F.explode(
-            F.array_distinct(shingles(words("text"), T.CONTAM_NGRAM))
+            F.array_distinct(F.expr(shingles(words("text"), T.CONTAM_NGRAM)))
         ).alias("gm"),
     )
     ev = grams.filter("is_eval").select("gm", F.col("doc_id").alias("eval_doc"))
@@ -440,7 +440,7 @@ def _lm_bpe_section(spark, sf_dir: str, big: str, out: dict) -> None:
 
     def _stats(d: str) -> dict:
         docs = load_table(spark, d, "documents")
-        ws = fan_out(docs).select("doc_id", words("text").alias("ws"))
+        ws = fan_out(docs).select("doc_id", F.expr(f"{words('text')} AS ws"))
         bg = (
             ws.select(
                 "doc_id",
@@ -560,7 +560,7 @@ def _ivf_dupwin_section(spark, big: str, out: dict) -> None:
         .select(
             "doc_id",
             F.explode(
-                shingles(words("text"), TX.TEXT_DUP_WINDOW)
+                F.expr(shingles(words("text"), TX.TEXT_DUP_WINDOW))
             ).alias("gm"),
         )
         .select("doc_id", F.md5("gm").alias("h"))
@@ -685,7 +685,7 @@ def _curation_section(
 
     sh = fan_out(docs).select(
         "doc_id",
-        F.explode(F.array_distinct(shingles(words("text"), 3))).alias("s"),
+        F.expr(f"explode(array_distinct({shingles(words('text'), 3)})) AS s"),
     )
     n_doc_gram = sh.count()
     n_gram = sh.select("s").distinct().count()
@@ -886,7 +886,7 @@ def _knn_section(spark, S, big: str, out: dict) -> dict:
     # group counts, rep-level pair volume (vs the member-level b**2
     # counterfactual), and the bounded expansion width.
     v = S._vectors(spark, big).withColumn(
-        "bucket", S.lsh_bucket(F.col("v"), S._PLANES)
+        "bucket", F.expr(S.lsh_bucket("v", S._PLANES))
     )
     hist = v.groupBy("bucket").count()
     max_bucket = hist.agg(F.max("count")).collect()[0][0]
@@ -929,7 +929,7 @@ def _knn_section(spark, S, big: str, out: dict) -> dict:
 
     emb = load_table(spark, big, "embeddings")
     vv = fan_out(emb).select(
-        "vec_id", as_double("embedding").alias("v")
+        "vec_id", F.expr(f"{as_double('embedding')} AS v")
     )
     gg = vv.groupBy("v").agg(F.count(F.lit(1)).alias("m"))
     gstats = gg.agg(
@@ -1009,7 +1009,7 @@ def run_text_rung(spark, sf_dir: str, n_reps: int) -> dict:
         fan_out(docs)
         .select(
             "doc_id",
-            F.explode(shingles(words("text"), TX.TEXT_DUP_WINDOW)).alias("gm"),
+            F.expr(f"explode({shingles(words('text'), TX.TEXT_DUP_WINDOW)}) AS gm"),
         )
         .select("doc_id", F.md5("gm").alias("h"))
     )
