@@ -92,24 +92,6 @@ WIDE92_FIXTURE = _os.path.join(
 )
 
 
-#: Selectivity ladder on wide92.memoryUsed (VERDICT r9 #7): the same
-#: named coverage points as LADDER, derived from the committed fixture's
-#: distribution (heavy-tailed with a ~35% zero mass — snowset-like), so
-#: the thesis's bytes-vs-selectivity curve is also measured on the
-#: reference-width 92-column schema (bench.py → BENCH_DETAIL
-#: ``ladder_wide92``). "p65" replaces LADDER's "p75": the zero mass makes
-#: ``> 0`` the natural all-nonzero rung (~64.7% of rows).
-WIDE92_LADDER: dict[str, int] = {
-    "best_case": 275_573_325,  # ~0 rows survive (the max)
-    "real": 22_130_371,  # ~0.1%
-    "p10": 64_736,  # ~10%
-    "p25": 7_440,  # ~25%
-    "p50": 336,  # ~50% — the flagship threshold
-    "p65": 0,  # all nonzero rows (~64.7%)
-    "worst": -1,  # all rows
-}
-
-
 def wide92_flagship(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The v1 flagship at REFERENCE WIDTH (r9, VERDICT r8 #7): filter +
     five streaming aggregates on ``memoryUsed`` — v1's actual fact column
@@ -252,10 +234,10 @@ def footer_only_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 #: Registered ladder rungs: "real" (the thesis workload threshold) and
-#: "worst" (full scan). The other five rungs are measured by bench.py's
-#: ladder observables and differential-tested in tests/ — registering all
-#: seven burned driver correctness-window slots on near-duplicates
-#: (VERDICT r1).
+#: "worst" (full scan). All seven rungs are oracle-checked at four
+#: projection widths by perfbench's ``scan_ladder`` workload and
+#: differential-tested in tests/test_scan_agg_trimmed.py — registering all
+#: seven would only add near-duplicate contracts (VERDICT r1).
 _CONTRACT_RUNGS = ("real", "worst")
 
 #: Same trim for the grammar variants: boolean + extended (IN/BETWEEN/LIKE)

@@ -29,7 +29,8 @@ footer and the file size on the local parquet path.
 
 Metric set (``v1/src/main.rs:158-192``): M1 bytes read · M2 total time ·
 M3 total throughput · M4 logical throughput · M5 selectivity % · M6
-relative metrics · M7 warm-up exclusion (bench.py excludes warm-up runs).
+relative metrics · M7 warm-up exclusion (perfbench warms its op deck
+before timing; tools/opt_measure.py reports its warm run apart).
 """
 
 from __future__ import annotations
@@ -135,41 +136,60 @@ def string_stat_prefixes(path: str) -> dict[str, dict[str, str]]:
     }
 
 
+def _may_match(stats, op: str, lit) -> bool:
+    """May a row group with these column statistics hold a row where
+    ``column <op> lit``? Missing statistics, missing bounds and unknown ops
+    admit: pruning must never drop a group it cannot prove empty
+    (``keep_row_group``, ``v1/src/main.rs:626-685``)."""
+    if stats is None or not stats.has_min_max:
+        return True
+    lo, hi = stats.min, stats.max
+    if lo is None or hi is None:
+        return True
+    # prune iff the predicate is false for the whole [lo, hi] range
+    if op == ">":
+        return hi > lit
+    if op == ">=":
+        return hi >= lit
+    if op == "<":
+        return lo < lit
+    if op == "<=":
+        return lo <= lit
+    if op == "==":
+        return lo <= lit <= hi
+    return True
+
+
+def admitted_row_groups(
+    path: str, predicate: list[tuple[str, str, object]] | None = None
+) -> list[int]:
+    """Indices of the row groups of ``path`` whose min/max statistics admit
+    every (column, op, literal) of the conjunction ``predicate`` — the
+    reference's comparison set (``Comparison``, ``v1/src/main.rs:418-438``).
+    Footer only, through the cached ``_footer``. A predicate column the
+    file lacks raises ``KeyError`` once the file has a row group."""
+    _, meta, col_idx = _footer(path)
+    predicate = predicate or []
+    kept = []
+    for rg in range(meta.num_row_groups):
+        group = meta.row_group(rg)
+        stats = [group.column(col_idx[col]).statistics for col, _, _ in predicate]
+        if all(_may_match(st, op, lit) for st, (_, op, lit) in zip(stats, predicate)):
+            kept.append(rg)
+    return kept
+
+
 def planned_scan_bytes(
     path: str,
     columns: list[str] | None = None,
     predicate: list[tuple[str, str, float]] | None = None,
 ) -> int:
-    """Bytes a selective scan must move: footer + surviving column chunks.
-
-    ``predicate`` is a conjunction of (column, op, literal) — the same
-    comparison set as the reference (``Comparison``, ``v1/src/main.rs:418-438``).
-    A row group survives unless its min/max statistics prove no row can match
-    (``keep_row_group``, ``v1/src/main.rs:626-685``).
-    """
+    """Bytes a selective scan must move: footer + the ``columns`` chunks of
+    the row groups ``admitted_row_groups`` keeps for ``predicate``."""
     total, meta, col_idx = _footer(path)
     wanted = set(columns) if columns is not None else set(col_idx)
-    for rg in range(meta.num_row_groups):
+    for rg in admitted_row_groups(path, predicate):
         group = meta.row_group(rg)
-        keep = True
-        for col, op, lit in predicate or []:
-            stats = group.column(col_idx[col]).statistics
-            if stats is None or not stats.has_min_max:
-                continue  # no stats → cannot prune (same as the reference)
-            lo, hi = stats.min, stats.max
-            # prune iff the predicate is false for the whole [lo, hi] range
-            if op == ">" and not hi > lit:
-                keep = False
-            elif op == ">=" and not hi >= lit:
-                keep = False
-            elif op == "<" and not lo < lit:
-                keep = False
-            elif op == "<=" and not lo <= lit:
-                keep = False
-            elif op == "==" and not (lo <= lit <= hi):
-                keep = False
-        if not keep:
-            continue
         for name in wanted:
             total += group.column(col_idx[name]).total_compressed_size
     return total

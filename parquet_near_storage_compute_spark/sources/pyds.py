@@ -46,6 +46,11 @@ from pyspark.sql.datasource import (
     WriterCommitMessage,
 )
 
+from parquet_near_storage_compute_spark.plans.metrics import (
+    _footer,
+    admitted_row_groups,
+)
+
 #: Columns served by the source (a projection is part of the layout job:
 #: the sized copy carries only what the scan needs — late projection is
 #: then free because the file itself is narrow).
@@ -58,33 +63,6 @@ _SCHEMA_DDL = "event_id bigint, event_type string, value double"
 ROW_GROUP_ROWS = 250
 
 _TMP_DIR = "/tmp/pnsc_sources"
-
-
-def _stats_admit(filt, stats) -> bool:
-    """Conservative row-group test: may this group contain a passing row?
-
-    ``stats`` is a ``(min, max)`` tuple from the parquet footer. Unknown
-    filter shapes and missing stats always admit (pruning must never drop
-    a group it cannot prove empty — the reference applies the same rule,
-    ``v2/src/main.rs:378-392``).
-    """
-    if stats is None:
-        return True
-    lo, hi = stats
-    if lo is None or hi is None:
-        return True
-    v = filt.value
-    if isinstance(filt, GreaterThan):
-        return hi > v
-    if isinstance(filt, GreaterThanOrEqual):
-        return hi >= v
-    if isinstance(filt, LessThan):
-        return lo < v
-    if isinstance(filt, LessThanOrEqual):
-        return lo <= v
-    if isinstance(filt, EqualTo):
-        return lo <= v <= hi
-    return True
 
 
 def list_part_files(path: str) -> list[str]:
@@ -106,31 +84,30 @@ def list_part_files(path: str) -> list[str]:
     return sorted(glob.glob(os.path.join(path, "*.parquet")))
 
 
+#: Pushed filter class -> the comparison op of ``plans.metrics``' rule.
+_FILTER_OPS = {
+    GreaterThan: ">",
+    GreaterThanOrEqual: ">=",
+    LessThan: "<",
+    LessThanOrEqual: "<=",
+    EqualTo: "==",
+}
+
+
 def plan_row_groups(path: str, filters) -> list[int]:
     """Footer-only planning: the row-group indices whose statistics admit
     every pushed filter. Reads ZERO data pages — exactly the byte budget
-    of the reference's metadata pass (S3/S5)."""
-    import pyarrow.parquet as pq
-
-    md = pq.ParquetFile(path).metadata
-    names = {md.schema.column(i).name: i for i in range(md.num_columns)}
-    kept = []
-    for rg in range(md.num_row_groups):
-        group = md.row_group(rg)
-        admit = True
-        for f in filters:
-            attr = f.attribute[0] if len(f.attribute) == 1 else None
-            if attr is None or attr not in names:
-                continue
-            col = group.column(names[attr])
-            st = col.statistics
-            stats = (st.min, st.max) if st and st.has_min_max else None
-            if not _stats_admit(f, stats):
-                admit = False
-                break
-        if admit:
-            kept.append(rg)
-    return kept
+    of the reference's metadata pass (S3/S5). Filters of another shape, on
+    a nested attribute, or on a column the file lacks prune nothing."""
+    names = _footer(path).col_idx
+    predicate = [
+        (f.attribute[0], _FILTER_OPS[type(f)], f.value)
+        for f in filters
+        if type(f) in _FILTER_OPS
+        and len(f.attribute) == 1
+        and f.attribute[0] in names
+    ]
+    return admitted_row_groups(path, predicate)
 
 
 class _RowGroupPartition(InputPartition):
@@ -140,13 +117,7 @@ class _RowGroupPartition(InputPartition):
 
 
 class RowGroupReader(DataSourceReader):
-    _PUSHABLE = (
-        GreaterThan,
-        GreaterThanOrEqual,
-        LessThan,
-        LessThanOrEqual,
-        EqualTo,
-    )
+    _PUSHABLE = tuple(_FILTER_OPS)
 
     def __init__(self, options):
         self.path = options.get("path")

@@ -1,23 +1,19 @@
-"""Disk-path and resource-trace observables (VERDICT r9 #5/#8): the
-microbench must produce positive, internally consistent throughputs and
-the sampler must produce a plausible series — they feed BENCH_DETAIL's
-``disk_path`` and ``resource_trace`` entries every round."""
+"""Disk-path observable (VERDICT r9 #5): the microbench must produce
+positive, internally consistent throughputs (BENCH_DETAIL's recorded
+``disk_path`` entry)."""
 
 from __future__ import annotations
 
-import time
-
-from tools.disk_microbench import bench_read, bench_write, run
-from tools.resource_trace import ResourceTrace
+from tools import disk_microbench
 
 
 def test_disk_write_then_read():
-    buffered, durable = bench_write(tasks=2, duration=0.3)
+    buffered, durable = disk_microbench.bench_write(tasks=2, duration=0.3)
     assert buffered > 0
     assert durable > 0
     # fsync is folded into the durable window, so it can only slow it
     assert durable <= buffered * 1.01
-    rbuf, rdirect = bench_read(tasks=2, duration=0.3)
+    rbuf, rdirect = disk_microbench.bench_read(tasks=2, duration=0.3)
     assert rbuf > 0
     # O_DIRECT is either unsupported here (None) or a real positive number
     # strictly below the warm page-cache ceiling
@@ -25,24 +21,10 @@ def test_disk_write_then_read():
 
 
 def test_disk_run_entry_shape():
-    out = run()
+    out = disk_microbench.run()
     for k in ("write_mib_s", "write_fsync_mib_s", "read_mib_s", "tasks",
               "block_kib", "scope"):
         assert k in out, k
     assert out["write_mib_s"] > 0 and out["read_mib_s"] > 0
     assert "methodology parity" in out["scope"]
 
-
-def test_resource_trace_samples():
-    with ResourceTrace(0.2) as tr:
-        t0 = time.time()
-        while time.time() - t0 < 0.7:
-            sum(i * i for i in range(20000))
-    s = tr.summary()
-    assert s["n_samples"] >= 2
-    assert 0 <= s["cpu_pct_mean"] <= 100
-    assert s["ram_used_mb_max"] > 0
-    assert len(s["series"]) == s["n_samples"]
-    for row in s["series"]:
-        assert 0 <= row["cpu_pct"] <= 100
-        assert row["ram_available_mb"] >= 0

@@ -1,10 +1,10 @@
 """Loopback network-path observables (VERDICT r6 #7): both benches must
-produce positive, internally consistent throughput numbers — they feed
-BENCH_DETAIL's ``network_path`` entry every round."""
+produce positive, internally consistent throughput numbers (BENCH_DETAIL's
+recorded ``network_path`` entry)."""
 
 from __future__ import annotations
 
-from tools.net_microbench import bench_http, bench_tcp
+from tools import net_microbench
 
 
 def _check(res: dict) -> None:
@@ -19,8 +19,8 @@ def _check(res: dict) -> None:
 
 
 def test_loopback_tcp():
-    _check(bench_tcp(streams=2, duration=0.3))
+    _check(net_microbench.bench_tcp(streams=2, duration=0.3))
 
 
 def test_loopback_http():
-    _check(bench_http(streams=2, duration=0.3))
+    _check(net_microbench.bench_http(streams=2, duration=0.3))

@@ -69,7 +69,7 @@ def test_column_pruning_bytes():
 
 def test_measure_end_to_end(spark):
     """M1-M5 assembled for the flagship query (warm-up exclusion M7 lives in
-    bench.py)."""
+    perfbench's deck warm-up and tools/opt_measure.py's warm run)."""
     df = scan_filter_agg(spark, SF_01, LADDER["p50"])
     m = measure(
         spark,

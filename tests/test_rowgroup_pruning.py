@@ -12,15 +12,24 @@ import glob
 import os
 import shutil
 
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
+from pyspark.sql.datasource import (
+    EqualTo,
+    GreaterThan,
+    GreaterThanOrEqual,
+    LessThan,
+    LessThanOrEqual,
+)
 
 from parquet_near_storage_compute_spark.plans.metrics import (
     footer_bytes,
     planned_scan_bytes,
 )
 from parquet_near_storage_compute_spark.sources.io import write_parquet_sized
+from parquet_near_storage_compute_spark.sources.pyds import plan_row_groups
 from parquet_near_storage_compute_spark.tables import load_table
 
 TMP = os.path.join(os.path.dirname(os.path.dirname(os.path.abspath(__file__))), ".tmp")
@@ -71,3 +80,60 @@ def test_sorted_scan_correctness(spark, sorted_file):
     a = new.filter(f).agg(F.sum("l_quantity")).collect()[0][0]
     b = orig.filter(f).agg(F.sum("l_quantity")).collect()[0][0]
     assert abs(a - b) < 1e-6
+
+_OPS = {
+    ">": GreaterThan,
+    ">=": GreaterThanOrEqual,
+    "<": LessThan,
+    "<=": LessThanOrEqual,
+    "==": EqualTo,
+}
+
+
+@pytest.fixture(scope="module")
+def ten_groups(tmp_path_factory):
+    """Sorted ``k`` = 0..999 in 10 row groups of 100 rows, plus a payload."""
+    path = str(tmp_path_factory.mktemp("admission") / "sorted.parquet")
+    table = pa.table({
+        "k": pa.array(range(1000), pa.int64()),
+        "v": pa.array([i * 0.5 for i in range(1000)], pa.float64()),
+        "s": pa.array([f"row{i:04d}" for i in range(1000)]),
+    })
+    pq.write_table(table, path, row_group_size=100)
+    return path
+
+
+@pytest.mark.parametrize("op", sorted(_OPS))
+@pytest.mark.parametrize("lit", [-5, 0, 99, 100, 450, 999, 2000])
+def test_both_callers_keep_the_same_row_groups(ten_groups, op, lit):
+    """The v2 byte model and the Python data source's planner admit the
+    same row groups: planned bytes = footer + the kept groups' chunks."""
+    cols = ["k", "s"]
+    kept = plan_row_groups(ten_groups, [_OPS[op](("k",), lit)])
+    meta = pq.ParquetFile(ten_groups).metadata
+    chunks = sum(
+        meta.row_group(rg).column(i).total_compressed_size
+        for rg in kept
+        for i in (0, 2)
+    )
+    assert planned_scan_bytes(ten_groups, cols, [("k", op, lit)]) == (
+        footer_bytes(ten_groups) + chunks
+    )
+
+
+def test_admission_prunes_at_group_granularity(ten_groups):
+    assert plan_row_groups(ten_groups, [GreaterThan(("k",), 450)]) == list(range(4, 10))
+    assert plan_row_groups(ten_groups, [GreaterThan(("k",), 99)]) == list(range(1, 10))
+    assert plan_row_groups(ten_groups, [LessThanOrEqual(("k",), 100)]) == [0, 1]
+    assert plan_row_groups(ten_groups, [EqualTo(("k",), 2000)]) == []
+    both = [GreaterThanOrEqual(("k",), 300), LessThan(("k",), 500)]
+    assert plan_row_groups(ten_groups, both) == [3, 4]
+
+
+def test_missing_predicate_column_per_caller(ten_groups):
+    """The planner skips a filter on a column the file lacks; the byte
+    model has no such column to price and raises."""
+    kept = plan_row_groups(ten_groups, [GreaterThan(("nope",), 1)])
+    assert kept == list(range(10))
+    with pytest.raises(KeyError):
+        planned_scan_bytes(ten_groups, ["k"], [("nope", ">", 1)])

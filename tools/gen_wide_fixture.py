@@ -6,8 +6,9 @@ The reference's projection experiment sweeps column count over the
 our projection_width evidence previously topped out at the 11-column
 lineitem table. This fixture reproduces the reference's column-count AXIS
 — same column names and type mix (ids/timestamps/durations as int64,
-~40 prof* profile fractions as double) — so `bench.py` can record the
-planned-bytes-vs-width curve to the full 92 columns and `cli.py
+~40 prof* profile fractions as double) — so the planned-bytes-vs-width
+curve reaches the full 92 columns (tests/test_plans_metrics.py), the
+`v1_wide92_flagship` contract runs at reference width, and `cli.py
 --columns N` has a reference-width input.
 
 Deterministic (fixed seed), committed once; regenerate only if the shape

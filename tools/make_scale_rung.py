@@ -63,11 +63,7 @@ def main() -> None:
     from parquet_near_storage_compute_spark.tables import load_table
 
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
-    spark = get_spark(
-        app_name="pnsc-make-scale-rung",
-        master=f"local[{cpus}]",
-        conf={"spark.sql.shuffle.partitions": str(max(int(cpus), 8))},
-    )
+    spark = get_spark(app_name="pnsc-make-scale-rung", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
     os.makedirs(args.out, exist_ok=True)
 

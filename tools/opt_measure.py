@@ -1,17 +1,17 @@
-"""Isolated per-query measurement + plan capture for the optimization round.
+"""Per-query timer for registry contracts, with optional plan capture.
 
 Usage:
     python tools/opt_measure.py [--tag before] [--plans-dir plans/r12] \
-        [--n 5] [--no-plans] query [query ...]
+        [--n 5] [--no-plans] [--clear-cache] query [query ...]
 
-For each named registry query on the bench corpus ($SPARK_GRAFT_SF_DIR,
-default sf0.1) this builds the DataFrame (construction timed separately —
+For each named registry query on the corpus in $SPARK_GRAFT_SF_DIR
+(default sf0.1) this builds the DataFrame (construction timed separately —
 eager probes included), optionally writes ``.explain("formatted")`` to
-``<plans-dir>/<name>_<tag>.txt``, runs one untimed warm-up through the noop
-sink, then N timed noop runs (best + all samples reported). Same session
-shape as bench.py (get_spark on local[$SPARK_GRAFT_CPUS], shuffle
-partitions max(cpus, 8)) so numbers compare to BENCH_DETAIL. One JSON line
-per query on stdout.
+``<plans-dir>/<name>_<tag>.txt``, runs one warm run through the noop sink
+(reported as ``warm``, excluded from the samples: warm-up exclusion, M7),
+then N timed noop runs (best + all samples reported). The session is
+``get_spark`` on local[$SPARK_GRAFT_CPUS] (default 32), which sets the
+shuffle width to the task slots. One JSON line per query on stdout.
 """
 
 from __future__ import annotations
@@ -43,20 +43,17 @@ def main() -> None:
     from parquet_near_storage_compute_spark.registry import all_queries
     from parquet_near_storage_compute_spark.session import get_spark
 
-    spark = get_spark(
-        app_name="pnsc-opt-measure",
-        master=f"local[{cpus}]",
-        conf={"spark.sql.shuffle.partitions": str(max(int(cpus), 8))},
-    )
+    spark = get_spark(app_name="pnsc-opt-measure", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
-    # same session warm-up as bench.py: first construction isn't charged
-    # for JVM/py4j/catalog first-touch
+    # session warm-up: the first construction isn't charged for
+    # JVM/py4j/catalog first-touch
     spark.range(8).selectExpr("id % 2 AS k").groupBy("k").count().collect()
 
     queries = all_queries()
     repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     plans_dir = os.path.join(repo, args.plans_dir)
-    os.makedirs(plans_dir, exist_ok=True)
+    if not args.no_plans:
+        os.makedirs(plans_dir, exist_ok=True)
 
     for name in args.queries:
         if name not in queries:

@@ -15,8 +15,7 @@ join-order guard exist for.
 Measured queries: dedup_minhash_lsh, train_contamination_check,
 sim_knn_join (VERDICT r3 #8; post-salt join-key volumes since round 5).
 
-Run: PYTHONPATH=/root/repo python tools/scale_evidence.py
-     (or SPARK_GRAFT_SCALE_EVIDENCE=1 python bench.py)
+Run: python tools/scale_evidence.py
 Output: SCALE_EVIDENCE.json at the repo root + one stderr JSON line.
 """
 
@@ -1207,7 +1206,6 @@ def main() -> None:
         app_name="pnsc-scale-evidence",
         master=f"local[{cpus}]",
         conf={
-            "spark.sql.shuffle.partitions": str(max(int(cpus), 8)),
             # the 100× maintenance rung (VERDICT r6 #6) global-sorts a
             # ~60M-row replicated lineitem; the 1g default heap OOMs there
             "spark.driver.memory": "16g",

@@ -30,7 +30,7 @@ import urllib.request
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)  # runnable without PYTHONPATH, like dump_plans
 
-#: Same composition as bench.py's headline set (core22 + r6 additions).
+#: The round-era headline set (core22 + r6 additions).
 HEADLINE = [
     "v1_flagship",
     "v1_ladder_real",
@@ -160,7 +160,6 @@ def main() -> None:
         app_name="pnsc-shuffle-audit",
         master=f"local[{cpus}]",
         conf={
-            "spark.sql.shuffle.partitions": str(max(int(cpus), 8)),
             "spark.ui.enabled": "true",
             # keep every stage visible for the whole run
             "spark.ui.retainedStages": "20000",
