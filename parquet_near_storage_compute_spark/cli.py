@@ -53,6 +53,12 @@ def _parse_filter_for_pruning(expr: str) -> list[tuple[str, str, float]]:
     return out
 
 
+def _refuse(message: str) -> int:
+    """A bad column choice: one-line JSON error on stderr, exit code 2."""
+    print(json.dumps({"error": message}), file=sys.stderr)
+    return 2
+
+
 def main(argv: list[str] | None = None) -> int:
     ap = argparse.ArgumentParser(description=__doc__)
     ap.add_argument("--path", "-p", required=True, help="parquet file/dir/glob")
@@ -121,29 +127,21 @@ def main(argv: list[str] | None = None) -> int:
         # --columns (the v1 -cc axis) applies here too (r8, VERDICT r7
         # #4): the accounted scan set is the first N schema columns, read
         # footer-only — the v2 half of the projection-width experiment.
-        cols = [args.column] if args.column else None
-        if args.columns is not None:
-            import pyarrow.parquet as _pq
+        import pyarrow.parquet as _pq
 
-            meta = _pq.ParquetFile(args.path).metadata
-            names = [
-                meta.schema.column(i).name for i in range(meta.num_columns)
-            ]
+        meta = _pq.ParquetFile(args.path).metadata
+        names = [meta.schema.column(i).name for i in range(meta.num_columns)]
+        cols = [args.column] if args.column else None
+        unknown = sorted(
+            ({c for c, _, _ in pruning_pred} | set(cols or [])) - set(names)
+        )
+        if unknown:
+            return _refuse(f"columns not in the file: {unknown}")
+        if args.columns is not None:
             cols = names[: args.columns]
-            missing = sorted(
-                {c for c, _, _ in pruning_pred} - set(cols)
-            )
+            missing = sorted({c for c, _, _ in pruning_pred} - set(cols))
             if missing:
-                print(
-                    json.dumps(
-                        {
-                            "error": "columns outside --columns window: "
-                            f"{missing}"
-                        }
-                    ),
-                    file=sys.stderr,
-                )
-                return 2
+                return _refuse(f"columns outside --columns window: {missing}")
         planned = planned_scan_bytes(args.path, cols, pruning_pred)
         total = dataset_size([args.path])
         print(
@@ -204,14 +202,8 @@ def main(argv: list[str] | None = None) -> int:
     if scan_cols is not None:
         missing = sorted(touched - set(scan_cols))
         if missing:
-            print(
-                json.dumps(
-                    {"error": f"columns outside --columns window: {missing}"}
-                ),
-                file=sys.stderr,
-            )
             spark.stop()
-            return 2
+            return _refuse(f"columns outside --columns window: {missing}")
 
     result = df.filter(pred).agg(*aggs)
     seconds = run_to_completion(result)

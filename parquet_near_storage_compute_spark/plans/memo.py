@@ -19,8 +19,8 @@ identical deterministic work, measured at 3-4 s per query in BENCH_DETAIL
 - corpus identity: realpath of sf_dir plus the mtime_ns/size fingerprint
   of the source table (file, or directory of part files;
   ``tables.listing_fingerprint``, shared with ``load_table``'s schema
-  cache) — a test that overwrites its tmp corpus invalidates
-  automatically, exactly like the /tmp/pnsc_sources derived-copy cache;
+  cache and the derived-copy key ``tables.derived_copy_path``) — a test
+  that overwrites its tmp corpus invalidates automatically;
 - label: the subframe family (component labels, BPE doc counts, ...).
 
 Entries are LRU-bounded (a handful of frames per family at most — tests

@@ -12,11 +12,17 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, SparkSession
 
+from parquet_near_storage_compute_spark.tables import (
+    derived_copy,
+    derived_copy_path,
+    ensure_engine_confs,
+    load_table,
+    table_path,
+)
+
 
 def read_parquet(spark: SparkSession, path_or_glob: str) -> DataFrame:
     """Directory, single file, or glob — S1-S3/S7/S8 are automatic."""
-    from parquet_near_storage_compute_spark.tables import ensure_engine_confs
-
     ensure_engine_confs(spark)
     return spark.read.parquet(path_or_glob)
 
@@ -89,18 +95,10 @@ def glob_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Deterministic location for the hive-partitioned events copy; keyed by
-#: sf_dir so different scale factors never collide. Written once per
-#: process lifetime of the directory (the _SUCCESS marker gates rewrite).
-_PARTITIONED_DIR_PREFIX = "/tmp/pnsc_partitioned_events"
-_TMP_DIR = "/tmp/pnsc_sources"
-
-
 def partitioned_events_path(sf_dir: str) -> str:
-    import hashlib
-
-    key = hashlib.md5(sf_dir.encode()).hexdigest()[:8]
-    return f"{_PARTITIONED_DIR_PREFIX}_{key}"
+    """Location of the hive-partitioned events copy that
+    ``partitioned_scan`` builds (keyed on the events listing)."""
+    return derived_copy_path("partitioned_events", (table_path(sf_dir, "events"),))
 
 
 def partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -112,18 +110,17 @@ def partitioned_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     asserted by tests/test_partitioned_source.py). At 100 TB this is the
     dominant pruning axis: a date/type-partitioned table turns a full scan
     into a handful of directories before any footer is read."""
-    import os
-
     from pyspark.sql import functions as F
 
-    from parquet_near_storage_compute_spark.tables import load_table
-
-    path = partitioned_events_path(sf_dir)
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
+    def build(path: str) -> None:
         events = load_table(spark, sf_dir, "events").select(
             "event_id", "event_type", "value"
         )
         write_parquet_partitioned(events, path, ["event_type"])
+
+    path = derived_copy(
+        "partitioned_events", (table_path(sf_dir, "events"),), build
+    )
     df = read_parquet(spark, path).filter(
         F.col("event_type").isin("click", "purchase")
     )
@@ -143,8 +140,6 @@ _RT_MOD = 50
 
 def _roundtrip_subset(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import functions as F
-
-    from parquet_near_storage_compute_spark.tables import load_table
 
     return (
         load_table(spark, sf_dir, "events")
@@ -169,29 +164,20 @@ def _roundtrip_scan(
     itself (it cannot read ORC). Timestamps travel as formatted strings:
     the contract tests the source plumbing, not timezone serialization.
 
-    The /tmp cache key includes the source parquet's mtime+size, so a
-    corpus regenerated at the same path invalidates the cached subset
-    instead of silently serving stale rows against a live oracle.
+    The written subset is a derived copy keyed on the events listing
+    (``tables.derived_copy``), so a corpus regenerated at the same path
+    gets a new subset instead of stale rows against a live oracle.
     ``sum_value_cents`` sums floor(value·100) as integers: value·100 is
     the same IEEE double in both engines and floor is exact, so the
     aggregate is order-independent — no cross-engine float drift."""
-    import hashlib
-    import os
-
     from pyspark.sql import functions as F
 
-    from parquet_near_storage_compute_spark.tables import table_path
+    def build(path: str) -> None:
+        _roundtrip_subset(spark, sf_dir).coalesce(1).write.format(fmt).save(path)
 
-    src = table_path(sf_dir, "events")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    path = os.path.join(_TMP_DIR, f"roundtrip_{fmt}_{key}")
-    if not os.path.exists(os.path.join(path, "_SUCCESS")):
-        _roundtrip_subset(spark, sf_dir).coalesce(1).write.mode(
-            "overwrite"
-        ).format(fmt).save(path)
+    path = derived_copy(
+        f"roundtrip_{fmt}", (table_path(sf_dir, "events"),), build
+    )
     schema = "event_id bigint, ts_str string, event_type string, value double"
     df = spark.read.schema(schema).format(fmt).load(path)
     return (
@@ -364,41 +350,34 @@ def compaction_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates; equality with the parquet-view oracle proves the rewrite
     was lossless. tests/test_round5c_ops.py pins the file counts
     (fragments in, ≤2 out) and the shuffle-free plan. Integer-cents sums —
-    engine-exact. Cache keyed on source mtime+size like _roundtrip_scan.
+    engine-exact. The fragmented copy is keyed on the events listing and
+    the compacted copy on the fragmented one (``tables.derived_copy``).
     """
     import glob as _glob
-    import hashlib
     import math
     import os
 
     from pyspark.sql import functions as F
 
-    from parquet_near_storage_compute_spark.tables import load_table, table_path
-
-    src = table_path(sf_dir, "events")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    frag = os.path.join(_TMP_DIR, f"compact_frag_{key}")
-    compacted = os.path.join(_TMP_DIR, f"compact_out_{key}")
-    if not os.path.exists(os.path.join(frag, "_SUCCESS")):
+    def fragment(path: str) -> None:
         (
             load_table(spark, sf_dir, "events")
             .filter(F.col("event_id") % 5 == 0)
             .select("event_id", "user_id", "event_type", "value")
             .repartition(_COMPACT_FRAGMENTS)
-            .write.mode("overwrite")
-            .parquet(frag)
+            .write.parquet(path)
         )
-    if not os.path.exists(os.path.join(compacted, "_SUCCESS")):
+
+    frag = derived_copy("compact_frag", (table_path(sf_dir, "events"),), fragment)
+
+    def compact(path: str) -> None:
         in_bytes = sum(
             os.path.getsize(p) for p in _glob.glob(os.path.join(frag, "*.parquet"))
         )
         n_out = max(1, math.ceil(in_bytes / _COMPACT_TARGET_BYTES))
-        read_parquet(spark, frag).coalesce(n_out).write.mode(
-            "overwrite"
-        ).parquet(compacted)
+        read_parquet(spark, frag).coalesce(n_out).write.parquet(path)
+
+    compacted = derived_copy("compact_out", (frag,), compact)
     return (
         read_parquet(spark, compacted)
         .groupBy("event_type")
@@ -463,47 +442,41 @@ def zorder_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates. tests/test_round5c_ops.py measures planned bytes on both
     copies with the reference's stats-pruning model and asserts the
     z-layout prunes row groups for BOTH dimensions while the linear layout
-    prunes only its leading one. Cache keyed on source mtime+size;
+    prunes only its leading one. Both copies are keyed on the lineitem
+    listing and the row-group size (``tables.derived_copy``);
     integer-cents sums — engine-exact.
     """
-    import hashlib
-    import os
-
     from pyspark.sql import functions as F
 
-    from parquet_near_storage_compute_spark.tables import load_table, table_path
-
-    src = table_path(sf_dir, "lineitem")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}:{_Z_ROW_GROUP_BYTES}".encode()
-    ).hexdigest()[:12]
-    zpath = os.path.join(_TMP_DIR, f"zorder_{key}")
-    lpath = os.path.join(_TMP_DIR, f"linear_{key}")
+    src = (table_path(sf_dir, "lineitem"),)
     cols = ["l_orderkey", "l_partkey", "l_linenumber", "l_extendedprice"]
-    if not os.path.exists(os.path.join(zpath, "_SUCCESS")):
-        li = load_table(spark, sf_dir, "lineitem").select(*cols)
-        z = li.withColumn(
-            "zval",
-            F.expr(zorder_expr(f"(l_orderkey div {_Z_ORDERKEY_DIV})", "l_partkey")),
-        )
-        (
-            z.coalesce(1)
-            .sortWithinPartitions("zval", "l_orderkey", "l_linenumber")
-            .drop("zval")
-            .write.mode("overwrite")
-            .option("parquet.block.size", str(_Z_ROW_GROUP_BYTES))
-            .parquet(zpath)
-        )
-    if not os.path.exists(os.path.join(lpath, "_SUCCESS")):
-        li = load_table(spark, sf_dir, "lineitem").select(*cols)
-        (
-            li.coalesce(1)
-            .sortWithinPartitions("l_orderkey", "l_linenumber")
-            .write.mode("overwrite")
-            .option("parquet.block.size", str(_Z_ROW_GROUP_BYTES))
-            .parquet(lpath)
-        )
+
+    def sorted_copy(*keys: str):
+        # the linear sort ignores zval, and the optimizer prunes it there
+        def build(path: str) -> None:
+            li = load_table(spark, sf_dir, "lineitem").select(*cols)
+            z = li.withColumn(
+                "zval",
+                F.expr(zorder_expr(f"(l_orderkey div {_Z_ORDERKEY_DIV})", "l_partkey")),
+            )
+            (
+                z.coalesce(1)
+                .sortWithinPartitions(*keys)
+                .drop("zval")
+                .write.option("parquet.block.size", str(_Z_ROW_GROUP_BYTES))
+                .parquet(path)
+            )
+
+        return build
+
+    zpath = derived_copy(
+        f"zorder_{_Z_ROW_GROUP_BYTES}",
+        src,
+        sorted_copy("zval", "l_orderkey", "l_linenumber"),
+    )
+    derived_copy(
+        f"linear_{_Z_ROW_GROUP_BYTES}", src, sorted_copy("l_orderkey", "l_linenumber")
+    )
     return (
         read_parquet(spark, zpath)
         .filter(F.col("l_partkey") < _Z_PARTKEY_LIT)
@@ -537,27 +510,17 @@ def dpp_star_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     literal predicates; DPP extends the same I/O elimination to
     predicates that only exist after a join. Integer-cents sums.
     """
-    import hashlib
-    import os
-
     from pyspark.sql import functions as F
 
-    from parquet_near_storage_compute_spark.tables import load_table, table_path
-
-    src = table_path(sf_dir, "orders")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    fact_dir = os.path.join(_TMP_DIR, f"dpp_orders_{key}")
-    if not os.path.exists(os.path.join(fact_dir, "_SUCCESS")):
+    def build(path: str) -> None:
         (
             load_table(spark, sf_dir, "orders")
             .withColumn("cust_mod", F.col("o_custkey") % 10)
-            .write.mode("overwrite")
-            .partitionBy("cust_mod")
-            .parquet(fact_dir)
+            .write.partitionBy("cust_mod")
+            .parquet(path)
         )
+
+    fact_dir = derived_copy("dpp_orders", (table_path(sf_dir, "orders"),), build)
     fact = read_parquet(spark, fact_dir)
     dim = (
         spark.range(10)

@@ -28,7 +28,6 @@ inside Spark's planner.
 
 from __future__ import annotations
 
-import hashlib
 import os
 
 from pyspark.sql import DataFrame, SparkSession
@@ -50,6 +49,12 @@ from parquet_near_storage_compute_spark.plans.metrics import (
     _footer,
     admitted_row_groups,
 )
+from parquet_near_storage_compute_spark.tables import (
+    derived_copy,
+    derived_copy_path,
+    load_table,
+    table_path,
+)
 
 #: Columns served by the source (a projection is part of the layout job:
 #: the sized copy carries only what the scan needs — late projection is
@@ -61,8 +66,6 @@ _SCHEMA_DDL = "event_id bigint, event_type string, value double"
 #: corpora are tiny, and the contract exists to make group-level pruning
 #: observable (sf0.001 → 4 groups, sf0.01 → 40, sf0.1 → 400).
 ROW_GROUP_ROWS = 250
-
-_TMP_DIR = "/tmp/pnsc_sources"
 
 
 def list_part_files(path: str) -> list[str]:
@@ -383,28 +386,20 @@ class RowGroupParquetDataSource(DataSource):
 
 
 def sized_events_path(sf_dir: str) -> str:
-    """Sorted, row-group-sized events copy for the contract (cached; keyed
-    on the source parquet's mtime+size so corpus regeneration invalidates).
+    """Sorted, row-group-sized events copy for the contract, one parquet
+    file cached per events listing (``tables.derived_copy``).
     Sorting by ``event_id`` is the layout half of the design: tight per-group
     min/max on the sort key is what makes footer pruning selective — the
     same reason the reference's corpora are written key-ordered."""
-    from parquet_near_storage_compute_spark.tables import table_path
+    import pyarrow.parquet as pq
 
     src = table_path(sf_dir, "events")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(_TMP_DIR, f"pyds_rg_{key}.parquet")
-    if not os.path.exists(out):
-        import pyarrow.parquet as pq
 
-        os.makedirs(_TMP_DIR, exist_ok=True)
+    def build(path: str) -> None:
         tbl = pq.read_table(src, columns=_COLUMNS).sort_by("event_id")
-        tmp = out + ".tmp"
-        pq.write_table(tbl, tmp, row_group_size=ROW_GROUP_ROWS)
-        os.replace(tmp, out)
-    return out
+        pq.write_table(tbl, path, row_group_size=ROW_GROUP_ROWS)
+
+    return derived_copy(f"pyds_rg{ROW_GROUP_ROWS}", (src,), build)
 
 
 def python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -478,20 +473,11 @@ def python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     the full write→manifest→read loop is lossless. The write re-runs every
     call (overwrite mode) — also exercising the previous-generation
     cleanup."""
-    import hashlib
-
     from pyspark.sql import functions as F
-
-    from parquet_near_storage_compute_spark.tables import load_table, table_path
 
     spark.dataSource.register(RowGroupParquetDataSource)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
-    src = table_path(sf_dir, "events")
-    st = os.stat(src)
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    out = os.path.join(_TMP_DIR, f"pyds_sink_{key}")
+    out = derived_copy_path("pyds_sink", (table_path(sf_dir, "events"),))
     subset = (
         load_table(spark, sf_dir, "events")
         .filter(F.col("event_id") % _SINK_MOD == 0)

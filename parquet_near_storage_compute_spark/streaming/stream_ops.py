@@ -17,6 +17,7 @@ on the inferred dtype, so both generations of the driver testdata work.
 from __future__ import annotations
 
 import os
+import shutil
 import uuid
 from collections.abc import Callable, Iterator
 
@@ -27,19 +28,36 @@ from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from parquet_near_storage_compute_spark.tables import table_path
+from parquet_near_storage_compute_spark.tables import (
+    derived_copy,
+    ensure_engine_confs,
+    load_table,
+    scratch_root,
+    table_path,
+)
 
 _FMT = "yyyy-MM-dd HH:mm:ss"
 
-#: scratch area for checkpoints (inside the repo; gitignored)
-_SCRATCH = os.path.join(os.path.dirname(os.path.dirname(os.path.dirname(
-    os.path.abspath(__file__)))), ".tmp")
+
+def _run_dir(kind: str) -> str:
+    """A fresh per-run directory (checkpoint or state generations)."""
+    return os.path.join(scratch_root(), kind, uuid.uuid4().hex[:12])
+
+
+def _run_once(writer, ckpt: str) -> None:
+    """Start an AvailableNow query on ``ckpt``, wait for it, and remove the
+    checkpoint: every caller keeps its result elsewhere (memory sink or
+    state generations), and a later call never resumes from it."""
+    try:
+        writer.option("checkpointLocation", ckpt).trigger(
+            availableNow=True
+        ).start().awaitTermination()
+    finally:
+        shutil.rmtree(ckpt, ignore_errors=True)
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming scan of the events table with the ns→µs timestamp rebuild."""
-    from parquet_near_storage_compute_spark.tables import ensure_engine_confs
-
     ensure_engine_confs(spark)
     path = table_path(sf_dir, "events")
     schema = spark.read.parquet(path).schema
@@ -65,22 +83,17 @@ def _run_to_memory(df: DataFrame, mode: str) -> DataFrame:
     200-partition shuffle runs 200 near-empty state tasks; pin a moderate
     count for the query's scope and restore the caller's setting after."""
     spark = df.sparkSession
-    name = f"mem_{uuid.uuid4().hex[:12]}"
-    ckpt = os.path.join(_SCRATCH, "checkpoints", name)
+    ckpt = _run_dir("checkpoints")
+    name = f"mem_{os.path.basename(ckpt)}"
     key = "spark.sql.shuffle.partitions"
     prev = spark.conf.get(key)
     try:
         if int(prev) > 64:
             spark.conf.set(key, "32")
-        q = (
-            df.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(mode)
-            .option("checkpointLocation", ckpt)
-            .trigger(availableNow=True)
-            .start()
+        _run_once(
+            df.writeStream.format("memory").queryName(name).outputMode(mode),
+            ckpt,
         )
-        q.awaitTermination()
     finally:
         spark.conf.set(key, prev)
     return spark.table(name)
@@ -314,29 +327,16 @@ def upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     is one window shuffle of (state ∪ batch) on the merge key; partition
     the state by that key and only touched partitions rewrite.
     """
-    import hashlib
-
     from pyspark.sql import Window
 
-    from parquet_near_storage_compute_spark.tables import load_table
-
-    src_path = table_path(sf_dir, "events")
-    st = os.stat(src_path)
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    split_dir = os.path.join(_SCRATCH, f"upsert_src_{key}")
     cols = ["user_id", "event_id", "event_type", "value", "ts"]
-    if not os.path.exists(os.path.join(split_dir, "_SUCCESS")):
-        (
-            load_table(spark, sf_dir, "events")
-            .select(*cols)
-            .repartition(4)
-            .write.mode("overwrite")
-            .parquet(split_dir)
-        )
 
-    run_dir = os.path.join(_SCRATCH, "upsert_state", uuid.uuid4().hex[:12])
+    def split(path: str) -> None:
+        events = load_table(spark, sf_dir, "events").select(*cols)
+        events.repartition(4).write.parquet(path)
+
+    split_dir = derived_copy("upsert_src", (table_path(sf_dir, "events"),), split)
+    run_dir = _run_dir("upsert_state")
     state = {"path": None}
 
     def _merge(batch: DataFrame, batch_id: int) -> None:
@@ -371,14 +371,7 @@ def upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(split_dir)
     )
-    ckpt = os.path.join(_SCRATCH, "checkpoints", os.path.basename(run_dir))
-    q = (
-        stream.writeStream.foreachBatch(_merge)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_once(stream.writeStream.foreachBatch(_merge), _run_dir("checkpoints"))
     assert state["path"] is not None
     return spark.read.parquet(state["path"]).select(
         "user_id",
@@ -387,6 +380,18 @@ def upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.floor(F.col("value") * 100).alias("last_value_cents"),
         "n_versions",
     )
+
+
+def _write_batches(src_dir: str, tables: list) -> None:
+    """One parquet file per micro-batch. The mtimes are pinned: the file
+    stream processes oldest-first, so mtime order IS batch order."""
+    import pyarrow.parquet as pq
+
+    os.makedirs(src_dir)
+    for b, tbl in enumerate(tables):
+        path = os.path.join(src_dir, f"batch_{b}.parquet")
+        pq.write_table(tbl, path)
+        os.utime(path, (1_600_000_000 + b, 1_600_000_000 + b))
 
 
 #: Streaming perceptual ingest: pinned batch composition (id sets per
@@ -431,35 +436,26 @@ def phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-derived member-level from payload hex via the shared image-hash
     CTE chain) — a full-hash external check of a streaming pipeline.
     Output: (img_id, phash, batch_no) for every ACCEPTED asset."""
-    import hashlib
-
     import pyarrow as pa
     import pyarrow.parquet as pq
 
     from parquet_near_storage_compute_spark.operators import multimodal as M
-    from parquet_near_storage_compute_spark.tables import ensure_engine_confs
 
     ensure_engine_confs(spark)
-    st = os.stat(M.IMG_DEDUP_FIXTURE)
-    key = hashlib.md5(
-        f"{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    src_dir = os.path.join(_SCRATCH, f"phash_ingest_src_{key}")
-    if not os.path.exists(os.path.join(src_dir, "_READY")):
-        os.makedirs(src_dir, exist_ok=True)
+
+    def split(src_dir: str) -> None:
         tbl = pq.read_table(M.IMG_DEDUP_FIXTURE, columns=["img_id", "payload"])
         ids = tbl.column("img_id").to_pylist()
-        for b, batch_ids in enumerate(PHASH_INGEST_BATCHES):
-            path = os.path.join(src_dir, f"batch_{b}.parquet")
-            pq.write_table(
-                tbl.filter(pa.array([i in batch_ids for i in ids])), path
-            )
-            # pinned mtimes: the file stream processes oldest-first, so
-            # mtime order IS batch order
-            os.utime(path, (1_600_000_000 + b, 1_600_000_000 + b))
-        open(os.path.join(src_dir, "_READY"), "w").close()
+        _write_batches(
+            src_dir,
+            [
+                tbl.filter(pa.array([i in batch_ids for i in ids]))
+                for batch_ids in PHASH_INGEST_BATCHES
+            ],
+        )
 
-    run_dir = os.path.join(_SCRATCH, "phash_state", uuid.uuid4().hex[:12])
+    src_dir = derived_copy("phash_ingest_src", (M.IMG_DEDUP_FIXTURE,), split)
+    run_dir = _run_dir("phash_state")
     state: dict = {"path": None}
     ham = M.PHASH_HAMMING
 
@@ -539,14 +535,7 @@ def phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
-    ckpt = os.path.join(_SCRATCH, "checkpoints", os.path.basename(run_dir))
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_once(stream.writeStream.foreachBatch(_ingest), _run_dir("checkpoints"))
     assert state["path"] is not None
     return spark.read.parquet(state["path"]).select(
         "img_id", "phash", "batch_no"
@@ -608,7 +597,8 @@ def minhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     band+Jaccard pair table re-derived member-level from the text via
     the shared shingle/minhash SQL (bit-identical signatures). Output:
     (doc_id, batch_no) for every ACCEPTED document."""
-    import hashlib
+    import pyarrow as pa
+    import pyarrow.parquet as pq
 
     from parquet_near_storage_compute_spark.operators.dedup import (
         _bands,
@@ -618,34 +608,20 @@ def minhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         shingles,
         words,
     )
-    from parquet_near_storage_compute_spark.tables import (
-        ensure_engine_confs,
-        listing_fingerprint,
-    )
 
     ensure_engine_confs(spark)
-    key = hashlib.md5(
-        repr(listing_fingerprint(sf_dir, ("documents",))).encode()
-    ).hexdigest()[:12]
-    src_dir = os.path.join(_SCRATCH, f"minhash_ingest_src_{key}")
-    if not os.path.exists(os.path.join(src_dir, "_READY")):
-        import pyarrow as pa
-        import pyarrow.parquet as pq
+    docs = table_path(sf_dir, "documents")
 
-        os.makedirs(src_dir, exist_ok=True)
-        tbl = pq.read_table(
-            table_path(sf_dir, "documents"), columns=["doc_id", "text"]
-        )
+    def split(src_dir: str) -> None:
+        tbl = pq.read_table(docs, columns=["doc_id", "text"])
         bno = tbl.column("doc_id").to_numpy() % MINHASH_INGEST_BATCHES
-        for b in range(MINHASH_INGEST_BATCHES):
-            path = os.path.join(src_dir, f"batch_{b}.parquet")
-            pq.write_table(tbl.filter(pa.array(bno == b)), path)
-            # pinned mtimes: the file stream processes oldest-first, so
-            # mtime order IS batch order
-            os.utime(path, (1_600_000_000 + b, 1_600_000_000 + b))
-        open(os.path.join(src_dir, "_READY"), "w").close()
+        _write_batches(
+            src_dir,
+            [tbl.filter(pa.array(bno == b)) for b in range(MINHASH_INGEST_BATCHES)],
+        )
 
-    run_dir = os.path.join(_SCRATCH, "minhash_state", uuid.uuid4().hex[:12])
+    src_dir = derived_copy("minhash_ingest_src", (docs,), split)
+    run_dir = _run_dir("minhash_state")
     state: dict = {"path": None}
 
     def _near(a_sets: str, b_sets: str):
@@ -728,14 +704,7 @@ def minhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         .option("maxFilesPerTrigger", "1")
         .parquet(src_dir)
     )
-    ckpt = os.path.join(_SCRATCH, "checkpoints", os.path.basename(run_dir))
-    q = (
-        stream.writeStream.foreachBatch(_ingest)
-        .option("checkpointLocation", ckpt)
-        .trigger(availableNow=True)
-        .start()
-    )
-    q.awaitTermination()
+    _run_once(stream.writeStream.foreachBatch(_ingest), _run_dir("checkpoints"))
     assert state["path"] is not None
     return spark.read.parquet(state["path"]).select("doc_id", "batch_no")
 

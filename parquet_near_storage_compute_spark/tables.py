@@ -10,9 +10,14 @@ natively and reads footers at planning time (SURVEY.md §2.1 S1-S3, S7-S8).
 from __future__ import annotations
 
 import glob
+import hashlib
 import os
+import shutil
+import tempfile
 import threading
+import uuid
 from collections import OrderedDict
+from collections.abc import Callable
 from urllib.parse import urlsplit
 
 from pyspark.sql import DataFrame, SparkSession
@@ -95,6 +100,55 @@ def listing_fingerprint(
         else:
             parts.append((t, st.st_mtime_ns, st.st_size))
     return tuple(parts)
+
+
+def scratch_root() -> str:
+    """The one directory the engine writes its derived copies and per-run
+    streaming state to. Resolved per call under ``tempfile.gettempdir()``,
+    so it follows ``TMPDIR``; nothing is written into the checkout."""
+    return os.path.join(tempfile.gettempdir(), "pnsc_scratch")
+
+
+def derived_copy_path(tag: str, sources: tuple[str, ...]) -> str:
+    """Where the copy ``tag`` of ``sources`` lives. The name hashes the tag
+    (which carries the layout's parameters) with the realpath and file
+    listing of every source (``listing_fingerprint``), so a source that
+    is rewritten, or a directory that gains, loses or rewrites a part,
+    maps to a new path and the stale copy is never read again."""
+    real = tuple(os.path.realpath(s) for s in sources)
+    ident = repr((tag, listing_fingerprint("", (), real)))
+    digest = hashlib.sha1(ident.encode()).hexdigest()[:16]
+    return os.path.join(scratch_root(), f"{tag}_{digest}")
+
+
+def derived_copy(
+    tag: str, sources: tuple[str, ...], build: Callable[[str], None]
+) -> str:
+    """Path of the finished copy ``tag`` of ``sources``, built on first
+    use. ``build(path)`` writes the copy (a file or a directory) to a
+    unique temporary sibling and one ``os.rename`` publishes it, so a
+    published path is always complete and a failed build publishes
+    nothing. When another process publishes a directory first, the
+    rename fails and this process drops its own temporary; a file is
+    replaced by an identical one."""
+    path = derived_copy_path(tag, sources)
+    if os.path.exists(path):
+        return path
+    os.makedirs(os.path.dirname(path), exist_ok=True)
+    tmp = f"{path}.{uuid.uuid4().hex[:12]}.tmp"
+    try:
+        build(tmp)
+        try:
+            os.rename(tmp, path)
+        except OSError:
+            if not os.path.isdir(path):
+                raise
+    finally:
+        if os.path.isdir(tmp):
+            shutil.rmtree(tmp, ignore_errors=True)
+        elif os.path.exists(tmp):
+            os.remove(tmp)
+    return path
 
 
 #: Session confs that change the schema Spark infers from the same footers

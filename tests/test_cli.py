@@ -6,6 +6,8 @@ import json
 import subprocess
 import sys
 
+import pytest
+
 LI = "/root/testdata/sf0.001/lineitem.parquet"
 
 
@@ -58,18 +60,33 @@ def test_columns_projection_width():
     assert 0 < res6["bytes_read"] < res11["bytes_read"]
 
 
-def test_columns_window_too_narrow_errors():
+@pytest.mark.parametrize(
+    "args, message",
+    [
+        (("--workload", "p50", "--cpus", "4", "--columns", "3"),
+         "outside --columns window"),
+        (("--mode", "metadata", "--filter", "nope > 5"),
+         "columns not in the file: ['nope']"),
+        (("--mode", "metadata", "--column", "nope"),
+         "columns not in the file: ['nope']"),
+    ],
+    ids=["columns-window", "metadata-unknown-filter", "metadata-unknown-column"],
+)
+def test_columns_window_too_narrow_errors(args, message):
     """l_extendedprice is schema index 5 — a 3-column window cannot serve
-    the default query and must fail loudly, not silently widen the scan."""
+    the default query and must fail loudly, not silently widen the scan.
+    Metadata mode refuses a filter column or --column the file lacks the
+    same way, before any byte accounting."""
     out = subprocess.run(
         [sys.executable, "-m", "parquet_near_storage_compute_spark.cli",
-         "--path", LI, "--workload", "p50", "--cpus", "4", "--columns", "3"],
+         "--path", LI, *args],
         capture_output=True,
         text=True,
         timeout=300,
     )
     assert out.returncode == 2
-    assert "outside --columns window" in out.stderr
+    assert message in out.stderr
+    assert "Traceback" not in out.stderr
 
 
 def test_tasks_and_read_size_axes():

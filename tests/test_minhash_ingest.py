@@ -22,9 +22,8 @@ import os
 import duckdb
 
 from parquet_near_storage_compute_spark.streaming import stream_ops as SO
+from parquet_near_storage_compute_spark.tables import scratch_root
 from tests.oracle import compare
-
-_STATE_ROOT = os.path.join(SO._SCRATCH, "minhash_state")
 
 
 def test_contract_matches_sequential_oracle(spark, sf_dir):
@@ -109,11 +108,12 @@ def test_generation_dirs_publish_monotonically(spark, sf_dir):
     pointer moves (write-then-publish). After a run, every generation dir
     exists, row counts grow monotonically, and the final generation IS the
     returned frame."""
-    before = set(os.listdir(_STATE_ROOT)) if os.path.isdir(_STATE_ROOT) else set()
+    state_root = os.path.join(scratch_root(), "minhash_state")
+    before = set(os.listdir(state_root)) if os.path.isdir(state_root) else set()
     result = SO.minhash_ingest(spark, sf_dir)
-    runs = set(os.listdir(_STATE_ROOT)) - before
+    runs = set(os.listdir(state_root)) - before
     assert len(runs) == 1
-    run_dir = os.path.join(_STATE_ROOT, runs.pop())
+    run_dir = os.path.join(state_root, runs.pop())
     gens = sorted(os.listdir(run_dir))
     assert gens == [f"gen_{b}" for b in range(SO.MINHASH_INGEST_BATCHES)]
     counts = [

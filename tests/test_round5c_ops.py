@@ -426,8 +426,9 @@ def test_stream_upsert_runs_incrementally_and_matches_batch(spark, sf_dir):
     file (4 generation dirs — not one big batch) and (b) converge to the
     one-shot batch merge (relational_merge_upsert)."""
     from parquet_near_storage_compute_spark.streaming import stream_ops
+    from parquet_near_storage_compute_spark.tables import scratch_root
 
-    state_root = os.path.join(stream_ops._SCRATCH, "upsert_state")
+    state_root = os.path.join(scratch_root(), "upsert_state")
     before = set(os.listdir(state_root)) if os.path.isdir(state_root) else set()
     out = stream_ops.upsert_foreachbatch(spark, sf_dir)
     batch = merge_upsert(spark, sf_dir)
@@ -449,16 +450,7 @@ def test_stream_upsert_runs_incrementally_and_matches_batch(spark, sf_dir):
 # -------------------------------------------------------------- compaction
 def test_compaction_reduces_file_count(spark, sf_dir):
     src_io.compaction_sink(spark, sf_dir).collect()  # materialize both dirs
-    import hashlib
-
-    from parquet_near_storage_compute_spark.tables import table_path
-
-    st = os.stat(table_path(sf_dir, "events"))
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    frag = os.path.join(src_io._TMP_DIR, f"compact_frag_{key}")
-    compacted = os.path.join(src_io._TMP_DIR, f"compact_out_{key}")
+    frag, compacted = _compaction_dirs(sf_dir)
     n_frag = len(glob.glob(os.path.join(frag, "*.parquet")))
     n_out = len(glob.glob(os.path.join(compacted, "*.parquet")))
     assert n_frag == src_io._COMPACT_FRAGMENTS
@@ -470,18 +462,28 @@ def test_compaction_reduces_file_count(spark, sf_dir):
     assert n_out < n_frag
 
 
-def _clustered_files(spark, sf_dir):
-    import hashlib
+def _compaction_dirs(sf_dir):
+    """The fragmented and compacted copies `compaction_sink` builds."""
+    from parquet_near_storage_compute_spark.tables import (
+        derived_copy_path,
+        table_path,
+    )
 
-    from parquet_near_storage_compute_spark.tables import table_path
+    frag = derived_copy_path("compact_frag", (table_path(sf_dir, "events"),))
+    return frag, derived_copy_path("compact_out", (frag,))
+
+
+def _clustered_files(spark, sf_dir):
+    from parquet_near_storage_compute_spark.tables import (
+        derived_copy_path,
+        table_path,
+    )
 
     src_io.zorder_scan(spark, sf_dir).collect()  # materialize both layouts
-    st = os.stat(table_path(sf_dir, "lineitem"))
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}:{src_io._Z_ROW_GROUP_BYTES}".encode()
-    ).hexdigest()[:12]
-    zfile = glob.glob(os.path.join(src_io._TMP_DIR, f"zorder_{key}", "*.parquet"))
-    lfile = glob.glob(os.path.join(src_io._TMP_DIR, f"linear_{key}", "*.parquet"))
+    src = (table_path(sf_dir, "lineitem"),)
+    rg = src_io._Z_ROW_GROUP_BYTES
+    zfile = glob.glob(os.path.join(derived_copy_path(f"zorder_{rg}", src), "*.parquet"))
+    lfile = glob.glob(os.path.join(derived_copy_path(f"linear_{rg}", src), "*.parquet"))
     assert len(zfile) == 1 and len(lfile) == 1
     return zfile[0], lfile[0]
 
@@ -540,16 +542,9 @@ def test_zorder_expr_is_morton_code(spark):
 
 def test_compaction_is_lossless(spark, sf_dir):
     """Row-level equality between the fragmented and compacted copies."""
-    import hashlib
-
-    from parquet_near_storage_compute_spark.tables import table_path
-
     src_io.compaction_sink(spark, sf_dir).collect()
-    st = os.stat(table_path(sf_dir, "events"))
-    key = hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{st.st_size}".encode()
-    ).hexdigest()[:12]
-    frag = spark.read.parquet(os.path.join(src_io._TMP_DIR, f"compact_frag_{key}"))
-    comp = spark.read.parquet(os.path.join(src_io._TMP_DIR, f"compact_out_{key}"))
+    frag_dir, comp_dir = _compaction_dirs(sf_dir)
+    frag = spark.read.parquet(frag_dir)
+    comp = spark.read.parquet(comp_dir)
     assert frag.count() == comp.count()
     assert frag.exceptAll(comp).count() == 0

@@ -36,7 +36,7 @@ import time
 REPO = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
 sys.path.insert(0, REPO)
 
-ID_STRIDE = 20_000_000  # multiple of EVAL_MOD (the scale_evidence law)
+ID_STRIDE = 20_000_000  # multiple of EVAL_MOD (the SCALE_EVIDENCE.json law)
 
 #: fact table -> columns to stride per replica (unique keys only; FKs and
 #: value columns stay verbatim so per-dimension fan-out scales linearly)
