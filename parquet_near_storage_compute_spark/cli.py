@@ -13,6 +13,13 @@ Here:
       --mode metadata                   # v2: planned-bytes accounting only
       --filter "l_extendedprice > 53000" --aggs "SUM(l_quantity),..."
 
+Both modes share one scan plan: ``--path`` (a file, a directory of
+``*.parquet`` files, or a glob) resolved to its Parquet files, the columns
+the query touches (the predicate's and the aggregations', or the
+``--columns`` window) and the predicate's prunable comparisons, all from
+the grammar's one parse. They differ only in whether Spark runs, so the
+planned bytes of an invocation are the same in either mode.
+
 The workload ladder maps the reference's named selectivity levels
 (``v1/src/main.rs:83-97``) onto the fact column's thresholds.
 """
@@ -20,37 +27,37 @@ The workload ladder maps the reference's named selectivity levels
 from __future__ import annotations
 
 import argparse
+import glob
 import json
+import os
 import sys
 
 from parquet_near_storage_compute_spark.functions.grammar import (
-    parse_aggregations,
-    parse_predicate,
+    plan_aggregation,
+    plan_predicate,
 )
 from parquet_near_storage_compute_spark.operators.scan_agg import AGG_SPECS, LADDER
 from parquet_near_storage_compute_spark.plans.metrics import (
-    ScanMetrics,
+    _footer,
     dataset_size,
     footer_bytes,
+    measure,
     planned_scan_bytes,
-    run_to_completion,
     string_stat_prefixes,
 )
 
 
-def _parse_filter_for_pruning(expr: str) -> list[tuple[str, str, float]]:
-    """Extract simple top-level AND'ed comparisons for metadata pruning
-    (the v2 grammar is exactly this shape, ``v2/src/main.rs:737``)."""
-    import re
-
-    out = []
-    for part in re.split(r"(?i)\s+and\s+", expr):
-        m = re.match(
-            r"^\s*([A-Za-z0-9_]+)\s*(<=|>=|==|<|>)\s*(-?[0-9.]+)\s*$", part
-        )
-        if m:
-            out.append((m.group(1), m.group(2), float(m.group(3))))
-    return out
+def _parquet_files(path: str) -> list[str]:
+    """``--path`` as Parquet files: the file itself, the ``*.parquet``
+    files under a directory, or the same for each match of a glob."""
+    files = []
+    for match in [path] if os.path.exists(path) else sorted(glob.glob(path)):
+        if os.path.isdir(match):
+            pattern = os.path.join(glob.escape(match), "**", "*.parquet")
+            files += sorted(glob.glob(pattern, recursive=True))
+        elif os.path.isfile(match):
+            files.append(match)
+    return files
 
 
 def _refuse(message: str) -> int:
@@ -115,111 +122,66 @@ def main(argv: list[str] | None = None) -> int:
     )
     args = ap.parse_args(argv)
 
-    filter_expr = args.filter
-    if filter_expr is None:
-        threshold = LADDER[args.workload or "p50"]
-        filter_expr = f"{args.column} > {threshold}"
+    default_filter = f"{args.column} > {LADDER[args.workload or 'p50']}"
+    pred = plan_predicate(args.filter if args.filter is not None else default_filter)
+    specs = (
+        [(a.strip(), None) for a in args.aggs.split(",")]
+        if args.aggs
+        else [(s.replace("l_extendedprice", args.column), a) for s, a in AGG_SPECS]
+    )
+    aggs = [plan_aggregation(spec, alias) for spec, alias in specs]
 
-    pruning_pred = _parse_filter_for_pruning(filter_expr)
+    # the scan plan: files, accounted columns, prunable comparisons
+    files = _parquet_files(args.path)
+    if not files:
+        return _refuse(f"no parquet files at {args.path}")
+    names = list(_footer(files[0]).col_idx)
+    touched = pred.columns | {a.column for a in aggs}
+    # the touched columns (early projection, v1/src/main.rs:240-254), or
+    # EXACTLY the -cc window, which a query may not reach outside of: a
+    # silent widening would bend the bytes-vs-N curve
+    cols = names[: args.columns] if args.columns is not None else sorted(touched)
+    common = set(names).intersection(*(_footer(f).col_idx for f in files[1:]))
+    unknown = sorted((touched | set(cols)) - common)
+    if unknown:
+        return _refuse(f"columns not in the file: {unknown}")
+    outside = sorted(touched - set(cols))
+    if outside:
+        return _refuse(f"columns outside --columns window: {outside}")
 
     if args.mode == "metadata":
-        # v2: no execution at all — footer + surviving chunk accounting.
-        # --columns (the v1 -cc axis) applies here too (r8, VERDICT r7
-        # #4): the accounted scan set is the first N schema columns, read
-        # footer-only — the v2 half of the projection-width experiment.
-        import pyarrow.parquet as _pq
-
-        meta = _pq.ParquetFile(args.path).metadata
-        names = [meta.schema.column(i).name for i in range(meta.num_columns)]
-        cols = [args.column] if args.column else None
-        unknown = sorted(
-            ({c for c, _, _ in pruning_pred} | set(cols or [])) - set(names)
-        )
-        if unknown:
-            return _refuse(f"columns not in the file: {unknown}")
-        if args.columns is not None:
-            cols = names[: args.columns]
-            missing = sorted({c for c, _, _ in pruning_pred} - set(cols))
-            if missing:
-                return _refuse(f"columns outside --columns window: {missing}")
-        planned = planned_scan_bytes(args.path, cols, pruning_pred)
-        total = dataset_size([args.path])
-        print(
-            json.dumps(
-                {
-                    "mode": "metadata",
-                    "planned_bytes": planned,
-                    "footer_bytes": footer_bytes(args.path),
-                    "dataset_bytes": total,
-                    "selectivity_pct": round(100.0 * planned / total, 4),
-                    # F8: string stats through the 8-byte UTF-8 prefix rule
-                    "string_stat_prefixes": string_stat_prefixes(args.path),
-                }
-            )
-        )
+        # v2: no execution at all — footer + surviving chunk accounting
+        planned = sum(planned_scan_bytes(f, cols, pred.prunable) for f in files)
+        total = dataset_size(files)
+        out = {
+            "mode": "metadata",
+            "planned_bytes": planned,
+            "footer_bytes": sum(footer_bytes(f) for f in files),
+            "dataset_bytes": total,
+            "selectivity_pct": round(100.0 * planned / total, 4),
+            # F8: string stats through the 8-byte UTF-8 prefix rule
+            "string_stat_prefixes": string_stat_prefixes(*files),
+        }
+        print(json.dumps(out))
         return 0
+
+    from pyspark.sql import functions as F
 
     from parquet_near_storage_compute_spark.session import get_spark
 
-    conf = {}
-    if args.read_size_mib:
-        conf["spark.sql.files.maxPartitionBytes"] = str(
-            args.read_size_mib * 1024 * 1024
-        )
+    mib = args.read_size_mib
     spark = get_spark(
         app_name="pnsc-cli",
         master=f"local[{args.cpus}]" if args.cpus else None,
-        conf=conf or None,
+        conf={"spark.sql.files.maxPartitionBytes": str(mib << 20)} if mib else None,
     )
     spark.sparkContext.setLogLevel("ERROR")
-    df = spark.read.parquet(args.path)
-    scan_cols: list[str] | None = None
+    df = spark.read.parquet(*files)
     if args.columns is not None:
-        # v1 parity: the scan set is EXACTLY the first N schema columns —
-        # the projection-width experiment axis. Like the reference, a query
-        # touching a column outside the window is an error, not a silent
-        # widening (which would bend the bytes-vs-N curve).
-        scan_cols = df.columns[: args.columns]
-        df = df.select(*scan_cols)
-    pred = parse_predicate(filter_expr)
-    if args.aggs:
-        aggs = parse_aggregations([a.strip() for a in args.aggs.split(",")])
-    else:
-        aggs = parse_aggregations(
-            [(spec.replace("l_extendedprice", args.column), alias)
-             for spec, alias in AGG_SPECS]
-        )
-    # byte accounting over the columns the query actually touches (early
-    # projection, v1/src/main.rs:240-254): filter ∪ aggregate columns
-    import re as _re
-
-    touched = {c for c, _, _ in pruning_pred}
-    for spec in args.aggs.split(",") if args.aggs else [s for s, _ in AGG_SPECS]:
-        m = _re.search(r"\(\s*([A-Za-z0-9_]+)\s*\)", spec)
-        if m:
-            touched.add(m.group(1).replace("l_extendedprice", args.column))
-    available = set(df.columns)
-    if scan_cols is not None:
-        missing = sorted(touched - set(scan_cols))
-        if missing:
-            spark.stop()
-            return _refuse(f"columns outside --columns window: {missing}")
-
-    result = df.filter(pred).agg(*aggs)
-    seconds = run_to_completion(result)
+        df = df.select(*cols)
+    result = df.filter(F.expr(pred.sql)).agg(*(F.expr(a.sql) for a in aggs))
+    m = measure(spark, result, files, cols, pred.prunable)
     rows = [r.asDict() for r in result.collect()]
-    if scan_cols is not None:
-        planned = planned_scan_bytes(args.path, scan_cols, pruning_pred)
-    else:
-        planned = planned_scan_bytes(
-            args.path, sorted(touched & available) or None, pruning_pred
-        )
-    m = ScanMetrics(
-        bytes_read=planned,
-        seconds=seconds,
-        rows=len(rows),
-        dataset_bytes=dataset_size([args.path]),
-    )
     print(json.dumps({"mode": "query", "result": rows, **m.as_dict()}))
     spark.stop()
     return 0

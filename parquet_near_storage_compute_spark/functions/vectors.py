@@ -36,8 +36,9 @@ def dot(a: str, b: str) -> str:
     isolated best-of-5 at sf0.1: sim_topk_lsh 0.34→1.97 s, sim_knn_join
     0.75→2.82, sim_dedup_decisions 1.24→5.06, dedup_semantic_clusters
     0.88→1.88, sim_topk_prefix_rerank 0.27→0.46, sim_topk_bruteforce
-    0.44→0.63, with construction 2–3× worse (plans:
-    plans/r13/*_unrolled_rejected.txt). The 64-term tree emits per-term
+    0.44→0.63, with construction 2–3× worse: the unrolled physical plans
+    spelled the 64-term chain inline in every Filter and Project using it
+    (3× the plan text on sim_topk_lsh). The 64-term tree emits per-term
     null-check branches and re-evaluates getItem per element (literal
     plane arrays re-materialize per access in lsh_bucket), blowing past
     JIT method limits, while this HOF fold runs one tight primitive loop.

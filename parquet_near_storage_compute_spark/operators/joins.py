@@ -290,19 +290,22 @@ def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from parquet_near_storage_compute_spark.tables import (
         ensure_engine_confs,
+        listing_fingerprint,
         table_path,
     )
 
     ensure_engine_confs(spark)
-    # table names carry a corpus fingerprint (a different sf_dir or a
-    # regenerated corpus can never serve stale buckets — the round-trip
-    # source cache's guard) AND the pid (two processes sharing this
-    # repo's warehouse dir must not overwrite each other's buckets
-    # mid-read; the in-memory catalog is per-process anyway)
-    st = os.stat(table_path(sf_dir, "orders"))
-    tag = hashlib.md5(
-        f"{sf_dir}:{st.st_mtime_ns}:{os.getpid()}".encode()
-    ).hexdigest()[:8]
+    # table names carry the realpath and file listing of both sources (the
+    # rule of tables.derived_copy_path: a rewritten orders or customer
+    # file names new tables, so stale buckets are never served) AND the
+    # pid (two processes sharing this repo's warehouse dir must not
+    # overwrite each other's buckets mid-read; the in-memory catalog is
+    # per-process anyway)
+    sources = tuple(
+        os.path.realpath(table_path(sf_dir, t)) for t in ("orders", "customer")
+    )
+    ident = repr((os.getpid(), listing_fingerprint("", (), sources)))
+    tag = hashlib.md5(ident.encode()).hexdigest()[:8]
     pairs = [
         (f"pnsc_orders_b_{tag}", "orders", "o_custkey"),
         (f"pnsc_customer_b_{tag}", "customer", "c_custkey"),

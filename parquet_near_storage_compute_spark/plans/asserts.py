@@ -18,14 +18,6 @@ def executed_plan(df: DataFrame) -> str:
     return df._jdf.queryExecution().executedPlan().toString()
 
 
-def formatted_plan(df: DataFrame) -> str:
-    jqe = df._jdf.queryExecution()
-    jvm = df.sparkSession.sparkContext._jvm
-    return jvm.org.apache.spark.sql.api.python.PythonSQLUtils.explainString(
-        jqe, "formatted"
-    )
-
-
 def pushed_filters(df: DataFrame) -> str:
     """The PushedFilters clause(s) of the scan nodes."""
     plan = executed_plan(df)

@@ -105,14 +105,14 @@ def utf8_stat_prefix(raw: bytes, n: int = STAT_PREFIX_BYTES) -> str:
         return prefix.decode("utf-8", errors="replace")
 
 
-def string_stat_prefixes(path: str) -> dict[str, dict[str, str]]:
-    """Per string/binary column: file-level min/max rendered through the
-    F8 prefix rule — the human-readable form of the compact stats the
-    reference ships to the compute node. Metadata-only (no data pages)."""
-    md = pq.ParquetFile(path).metadata
+def string_stat_prefixes(*paths: str) -> dict[str, dict[str, str]]:
+    """Per string/binary column: the min/max over every row group of
+    ``paths`` rendered through the F8 prefix rule — the human-readable
+    form of the compact stats the reference ships to the compute node.
+    Metadata-only (no data pages)."""
     out: dict[str, dict[str, str]] = {}
-    for rg in range(md.num_row_groups):
-        grp = md.row_group(rg)
+    metas = [_footer(p).meta for p in paths]
+    for grp in (md.row_group(rg) for md in metas for rg in range(md.num_row_groups)):
         for i in range(grp.num_columns):
             col = grp.column(i)
             if col.physical_type != "BYTE_ARRAY" or col.statistics is None:
@@ -138,8 +138,9 @@ def string_stat_prefixes(path: str) -> dict[str, dict[str, str]]:
 
 def _may_match(stats, op: str, lit) -> bool:
     """May a row group with these column statistics hold a row where
-    ``column <op> lit``? Missing statistics, missing bounds and unknown ops
-    admit: pruning must never drop a group it cannot prove empty
+    ``column <op> lit``? Missing statistics, missing bounds, unknown ops and
+    a literal that cannot be ordered against the bounds (a string against
+    numbers) admit: pruning must never drop a group it cannot prove empty
     (``keep_row_group``, ``v1/src/main.rs:626-685``)."""
     if stats is None or not stats.has_min_max:
         return True
@@ -147,16 +148,19 @@ def _may_match(stats, op: str, lit) -> bool:
     if lo is None or hi is None:
         return True
     # prune iff the predicate is false for the whole [lo, hi] range
-    if op == ">":
-        return hi > lit
-    if op == ">=":
-        return hi >= lit
-    if op == "<":
-        return lo < lit
-    if op == "<=":
-        return lo <= lit
-    if op == "==":
-        return lo <= lit <= hi
+    try:
+        if op == ">":
+            return hi > lit
+        if op == ">=":
+            return hi >= lit
+        if op == "<":
+            return lo < lit
+        if op == "<=":
+            return lo <= lit
+        if op == "==":
+            return lo <= lit <= hi
+    except TypeError:
+        pass
     return True
 
 
@@ -221,21 +225,13 @@ def _stages_input_bytes(spark: SparkSession, stage_ids: set[int]) -> int:
 def measure_runtime_bytes(spark: SparkSession, action) -> int:
     """Run ``action()`` and return the physical bytes its stages read.
 
-    r13: attribution is per JOB GROUP — the action runs under a unique
-    group id, its job ids come back from the status tracker, and only
-    THOSE jobs' stages are read from the status store. The previous
-    whole-store diff iterated every retained stage through one py4j call
-    each, so its cost grew with session age (83 s for one measurement
-    after ~30 k suite stages with retainedStages=100000) and shrank when
-    eviction dropped history mid-measurement. Bounded attribution is
-    O(action stages) at any session age and immune to eviction of OTHER
-    stages (a stage evicted mid-measurement would need 100 k stages run
-    by the action itself). Skipped stages (reused exchanges) carry no
-    metrics entry and correctly contribute 0 new bytes.
-
-    Attribution still requires the session to be otherwise idle only in
-    the weak sense that concurrent jobs must not share the group id —
-    unrelated concurrent work no longer pollutes the counter.
+    Attribution is per JOB GROUP: the action runs under a unique group id,
+    its job ids come back from the status tracker, and only THOSE jobs'
+    stages are read from the status store. That is O(action stages) at
+    any session age (a whole-store diff costs one py4j call per retained
+    stage), immune to eviction of other stages, and unpolluted by
+    concurrent work under other group ids. Skipped stages (reused
+    exchanges) carry no metrics entry and correctly contribute 0 bytes.
 
     The status store is fed by the async listener bus, which may still
     hold the action's job-start and task-end events when it returns, so
@@ -296,14 +292,8 @@ class ScanMetrics:
 
 
 def dataset_size(paths: list[str]) -> int:
-    total = 0
-    for p in paths:
-        if os.path.isdir(p):
-            for root, _, files in os.walk(p):
-                total += sum(os.path.getsize(os.path.join(root, f)) for f in files)
-        elif os.path.exists(p):
-            total += os.path.getsize(p)
-    return total
+    """Bytes of the files ``paths`` on disk."""
+    return sum(os.path.getsize(p) for p in paths)
 
 
 def run_to_completion(df: DataFrame) -> float:
@@ -320,30 +310,19 @@ def measure(
     input_paths: list[str],
     columns: list[str] | None = None,
     predicate: list[tuple[str, str, float]] | None = None,
-    count_rows: bool = True,
 ) -> ScanMetrics:
     """Execute ``df`` and assemble the M1-M5 metric set: wall-time from the
-    real execution, bytes from the v2-style metadata accounting. The row
-    count rides along as an observed metric — no second job."""
-    rows = -1
-    if count_rows:
-        from pyspark.sql import Observation
-        from pyspark.sql import functions as F
+    real execution, bytes from the v2-style metadata accounting over the
+    Parquet files ``input_paths``. The row count rides along as an
+    observed metric — no second job."""
+    from pyspark.sql import Observation
+    from pyspark.sql import functions as F
 
-        obs = Observation()
-        df = df.observe(obs, F.count(F.lit(1)).alias("rows"))
-        seconds = run_to_completion(df)
-        rows = obs.get["rows"]
-    else:
-        seconds = run_to_completion(df)
-    planned = sum(
-        planned_scan_bytes(p, columns, predicate)
-        for p in input_paths
-        if os.path.isfile(p)
-    )
+    obs = Observation()
+    seconds = run_to_completion(df.observe(obs, F.count(F.lit(1)).alias("rows")))
     return ScanMetrics(
-        bytes_read=planned,
+        bytes_read=sum(planned_scan_bytes(p, columns, predicate) for p in input_paths),
         seconds=seconds,
-        rows=rows,
+        rows=obs.get["rows"],
         dataset_bytes=dataset_size(input_paths),
     )

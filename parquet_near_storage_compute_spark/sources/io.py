@@ -1,5 +1,5 @@
 """Sources & sinks (SURVEY.md §2.1): glob parquet sources (S8), CSV sink
-with header (S9), and the partitioned/bucketed parquet layouts a 100 TB
+with header (S9), and the partitioned and sized parquet layouts a 100 TB
 deployment actually uses.
 
 The reference's "table = directory of numbered parquet files" model
@@ -25,11 +25,6 @@ def read_parquet(spark: SparkSession, path_or_glob: str) -> DataFrame:
     """Directory, single file, or glob — S1-S3/S7/S8 are automatic."""
     ensure_engine_confs(spark)
     return spark.read.parquet(path_or_glob)
-
-
-def read_parquet_many(spark: SparkSession, paths: list[str]) -> DataFrame:
-    """Multi-path scan (the reference's numbered-file loop, one job)."""
-    return spark.read.parquet(*paths)
 
 
 def write_csv(df: DataFrame, path: str, single_file: bool = False) -> None:
@@ -635,18 +630,4 @@ def write_parquet_sized(
         .option("parquet.block.size", str(row_group_bytes))
         .option("compression", codec)
         .parquet(path)
-    )
-
-
-def write_parquet_bucketed(
-    df: DataFrame, table_name: str, bucket_col: str, n_buckets: int, path: str
-) -> None:
-    """Bucketed layout: pre-shuffled by join key so co-bucketed joins skip
-    the exchange entirely (the 100 TB join strategy for fact×fact)."""
-    (
-        df.write.mode("overwrite")
-        .option("path", path)
-        .bucketBy(n_buckets, bucket_col)
-        .sortBy(bucket_col)
-        .saveAsTable(table_name)
     )

@@ -28,3 +28,33 @@ def test_join_subtree_is_exchange_free(spark, sf_dir):
     # and the result itself is correct end to end
     rows = {r["c_mktsegment"]: r["n_orders"] for r in df.collect()}
     assert sum(rows.values()) > 0
+
+
+def test_rewritten_customer_rebuilds_buckets(spark, sf_dir, tmp_path):
+    """The bucketed tables are keyed on both sources' file listings: after
+    `customer.parquet` is rewritten with new `c_mktsegment` values, the
+    contract answers from the new rows, not from the old buckets."""
+    import shutil
+
+    import pyarrow as pa
+    import pyarrow.parquet as pq
+
+    from parquet_near_storage_compute_spark.tables import table_path
+
+    corpus = str(tmp_path)
+    for t in ("orders", "customer"):
+        shutil.copy(table_path(sf_dir, t), table_path(corpus, t))
+
+    def counts() -> dict:
+        df = bucketed_colocated_join(spark, corpus)
+        return {r["c_mktsegment"]: r["n_orders"] for r in df.collect()}
+
+    before = counts()
+    assert len(before) > 1
+    cust = pq.read_table(table_path(corpus, "customer"))
+    segment = cust.schema.get_field_index("c_mktsegment")
+    cust = cust.set_column(
+        segment, "c_mktsegment", pa.array(["REWRITTEN"] * cust.num_rows)
+    )
+    pq.write_table(cust, table_path(corpus, "customer"))
+    assert counts() == {"REWRITTEN": sum(before.values())}

@@ -2,11 +2,16 @@
 
 from __future__ import annotations
 
+import glob
 import json
+import os
 import subprocess
 import sys
 
+import pyarrow.parquet as pq
 import pytest
+
+from parquet_near_storage_compute_spark.plans.metrics import planned_scan_bytes
 
 LI = "/root/testdata/sf0.001/lineitem.parquet"
 
@@ -69,14 +74,19 @@ def test_columns_projection_width():
          "columns not in the file: ['nope']"),
         (("--mode", "metadata", "--column", "nope"),
          "columns not in the file: ['nope']"),
+        (("--mode", "metadata", "--aggs", "SUM(nope)"),
+         "columns not in the file: ['nope']"),
+        (("--filter", "53000 < nope", "--cpus", "2"),
+         "columns not in the file: ['nope']"),
     ],
-    ids=["columns-window", "metadata-unknown-filter", "metadata-unknown-column"],
+    ids=["columns-window", "metadata-unknown-filter", "metadata-unknown-column",
+         "metadata-unknown-agg", "query-unknown-filter"],
 )
 def test_columns_window_too_narrow_errors(args, message):
     """l_extendedprice is schema index 5 — a 3-column window cannot serve
     the default query and must fail loudly, not silently widen the scan.
-    Metadata mode refuses a filter column or --column the file lacks the
-    same way, before any byte accounting."""
+    Either mode refuses a filter, aggregation or --column column the file
+    lacks the same way, before any byte accounting or Spark session."""
     out = subprocess.run(
         [sys.executable, "-m", "parquet_near_storage_compute_spark.cli",
          "--path", LI, *args],
@@ -87,6 +97,75 @@ def test_columns_window_too_narrow_errors(args, message):
     assert out.returncode == 2
     assert message in out.stderr
     assert "Traceback" not in out.stderr
+
+
+@pytest.fixture(scope="module")
+def sorted_li(tmp_path_factory) -> str:
+    """sf0.001 lineitem sorted by l_extendedprice in 10 row groups, as one
+    file and as a directory of two 5-group parts."""
+    table = pq.read_table(LI).sort_by("l_extendedprice")
+    root = tmp_path_factory.mktemp("cli")
+    pq.write_table(table, root / "sorted.parquet", row_group_size=600)
+    (root / "parts").mkdir()
+    half = table.num_rows // 2
+    for i, part in enumerate((table.slice(0, half), table.slice(half))):
+        pq.write_table(part, root / "parts" / f"part-{i}.parquet", row_group_size=600)
+    return str(root)
+
+
+@pytest.mark.parametrize(
+    "reference, spelling",
+    [
+        ("l_extendedprice > 53000", "53000 < l_extendedprice"),
+        ("l_extendedprice > 53000", "(l_extendedprice > 53000)"),
+        ("l_extendedprice > 53000", "l_extendedprice BETWEEN 53000 AND 200000"),
+        ("l_extendedprice == 2000.0", "l_extendedprice = 2000.0"),
+    ],
+    ids=["flipped", "parenthesized", "between", "single-equals"],
+)
+def test_equivalent_spellings_plan_equal_bytes(sorted_li, reference, spelling):
+    """Metadata mode prunes on every spelling the grammar accepts for the
+    same comparison, so each plans the same bytes, below the full scan."""
+    path = os.path.join(sorted_li, "sorted.parquet")
+    planned = [
+        _run("--path", path, "--mode", "metadata", "--filter", f)["planned_bytes"]
+        for f in (reference, spelling, "l_extendedprice > 0")
+    ]
+    assert planned[0] == planned[1] < planned[2]
+
+
+@pytest.mark.parametrize(
+    "target, args",
+    [
+        ("sorted.parquet", ("--workload", "p50")),
+        ("sorted.parquet", ("--filter", "l_quantity > 25.0", "--aggs", "SUM(l_tax)")),
+        ("sorted.parquet", ("--filter", "53000 < l_extendedprice",
+                            "--aggs", "SUM(l_quantity)")),
+        ("parts", ("--filter", "l_extendedprice > 53000", "--aggs", "SUM(l_tax)")),
+        ("parts/*.parquet", ("--workload", "p75", "--columns", "7")),
+    ],
+    ids=["file-default", "file-aggs", "file-flipped", "directory", "glob-window"],
+)
+def test_both_modes_plan_the_same_bytes(sorted_li, target, args):
+    """One invocation plans the same bytes in metadata and query mode: the
+    columns the filter and aggregations touch (or the --columns window)
+    over every file the path resolves to."""
+    path = os.path.join(sorted_li, target)
+    meta = _run("--path", path, "--mode", "metadata", *args)
+    query = _run("--path", path, "--cpus", "2", *args)
+    assert meta["planned_bytes"] == query["bytes_read"]
+    assert meta["dataset_bytes"] == query["dataset_bytes"]
+    assert query["result"][0]
+    if target == "parts":
+        files = sorted(glob.glob(os.path.join(path, "*.parquet")))
+        assert len(files) == 2
+        assert meta["planned_bytes"] == sum(
+            planned_scan_bytes(
+                f, ["l_extendedprice", "l_tax"], [("l_extendedprice", ">", 53000)]
+            )
+            for f in files
+        )
+        assert meta["dataset_bytes"] == sum(os.path.getsize(f) for f in files)
 
 
 def test_tasks_and_read_size_axes():

@@ -9,9 +9,9 @@ tasks for the 6-row merge table).
 
 The round's other measured finding needs no test hook: the unrolled
 fixed-dim dot was REJECTED on measurement (1.4–4× slower than the HOF
-fold on every consumer despite bit-identical output); the negative A/B
-is pinned in functions/vectors.py's `dot` docstring and
-plans/r13/*_unrolled_rejected.txt.
+fold on every consumer despite bit-identical output, its plans spelling
+the 64-term chain inline in every Filter and Project that used it); the
+negative A/B is pinned in functions/vectors.py's `dot` docstring.
 """
 
 from __future__ import annotations

@@ -24,6 +24,7 @@ from pyspark.sql.datasource import (
     LessThanOrEqual,
 )
 
+from parquet_near_storage_compute_spark.functions.grammar import plan_predicate
 from parquet_near_storage_compute_spark.plans.metrics import (
     footer_bytes,
     planned_scan_bytes,
@@ -126,6 +127,8 @@ def test_admission_prunes_at_group_granularity(ten_groups):
     assert plan_row_groups(ten_groups, [GreaterThan(("k",), 99)]) == list(range(1, 10))
     assert plan_row_groups(ten_groups, [LessThanOrEqual(("k",), 100)]) == [0, 1]
     assert plan_row_groups(ten_groups, [EqualTo(("k",), 2000)]) == []
+    # a literal that cannot be ordered against the statistics admits
+    assert plan_row_groups(ten_groups, [GreaterThan(("k",), "x")]) == list(range(10))
     both = [GreaterThanOrEqual(("k",), 300), LessThan(("k",), 500)]
     assert plan_row_groups(ten_groups, both) == [3, 4]
 
@@ -137,3 +140,26 @@ def test_missing_predicate_column_per_caller(ten_groups):
     assert kept == list(range(10))
     with pytest.raises(KeyError):
         planned_scan_bytes(ten_groups, ["k"], [("nope", ">", 1)])
+
+
+@pytest.mark.parametrize(
+    "expr, prunable, columns",
+    [
+        ("450 < k", [("k", ">", 450)], {"k"}),
+        ("(k >= 1) AND ((k <= 5.5))", [("k", ">=", 1), ("k", "<=", 5.5)], {"k"}),
+        ("k > 450 AND (v < 10.5 OR s == 'x')", [("k", ">", 450)], {"k", "v", "s"}),
+        ("NOT k > 450", [], {"k"}),
+        ("k BETWEEN 1 AND 2001-01-01-00:00:00", [("k", ">=", 1)], {"k"}),
+        ("k == true AND s = 'row1'", [("s", "==", "row1")], {"k", "s"}),
+        ("k != 3 AND k IN (1, 2) AND s LIKE 'r%'", [], {"k", "s"}),
+        ("a.b > 1 AND k < 2.5", [("k", "<", 2.5)], {"a.b", "k"}),
+    ],
+)
+def test_grammar_prunable_comparisons(expr, prunable, columns):
+    """The byte model prunes on the comparisons of the predicate's top-level
+    AND only (any parenthesis depth, never under OR or NOT), with int,
+    float or string literals on top-level columns; every named column is
+    reported."""
+    plan = plan_predicate(expr)
+    assert list(plan.prunable) == prunable
+    assert plan.columns == columns

@@ -1,17 +1,19 @@
 """Per-query timer for registry contracts, with optional plan capture.
 
 Usage:
-    python tools/opt_measure.py [--tag before] [--plans-dir plans/r12] \
+    python tools/opt_measure.py [--tag before] [--plans-dir DIR] \
         [--n 5] [--no-plans] [--clear-cache] query [query ...]
 
 For each named registry query on the corpus in $SPARK_GRAFT_SF_DIR
 (default sf0.1) this builds the DataFrame (construction timed separately —
 eager probes included), optionally writes ``.explain("formatted")`` to
-``<plans-dir>/<name>_<tag>.txt``, runs one warm run through the noop sink
-(reported as ``warm``, excluded from the samples: warm-up exclusion, M7),
-then N timed noop runs (best + all samples reported). The session is
-``get_spark`` on local[$SPARK_GRAFT_CPUS] (default 32), which sets the
-shuffle width to the task slots. One JSON line per query on stdout.
+``<plans-dir>/<name>_<tag>.txt`` (by default under
+``tables.scratch_root()``, never the checkout), runs one warm run through
+the noop sink (reported as ``warm``, excluded from the samples: warm-up
+exclusion, M7), then N timed noop runs (best + all samples reported).
+The session is ``get_spark`` on local[$SPARK_GRAFT_CPUS] (default 32),
+which sets the shuffle width to the task slots. One JSON line per query
+on stdout.
 """
 
 from __future__ import annotations
@@ -29,7 +31,7 @@ def main() -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("queries", nargs="+")
     ap.add_argument("--tag", default="before")
-    ap.add_argument("--plans-dir", default="plans/r12")
+    ap.add_argument("--plans-dir", default=None)
     ap.add_argument("--n", type=int, default=5)
     ap.add_argument("--no-plans", action="store_true")
     ap.add_argument("--clear-cache", action="store_true",
@@ -42,6 +44,7 @@ def main() -> None:
 
     from parquet_near_storage_compute_spark.registry import all_queries
     from parquet_near_storage_compute_spark.session import get_spark
+    from parquet_near_storage_compute_spark.tables import scratch_root
 
     spark = get_spark(app_name="pnsc-opt-measure", master=f"local[{cpus}]")
     spark.sparkContext.setLogLevel("ERROR")
@@ -50,8 +53,7 @@ def main() -> None:
     spark.range(8).selectExpr("id % 2 AS k").groupBy("k").count().collect()
 
     queries = all_queries()
-    repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    plans_dir = os.path.join(repo, args.plans_dir)
+    plans_dir = args.plans_dir or os.path.join(scratch_root(), "opt_measure_plans")
     if not args.no_plans:
         os.makedirs(plans_dir, exist_ok=True)
 
