@@ -20,6 +20,11 @@ from parquet_near_storage_compute_spark.tables import (
     register_views,
     table_path,
 )
+from parquet_near_storage_compute_spark.workers import install_zipimport_stamps
+
+# Here, not in a session: a Python worker imports the package when it
+# unpickles engine code, and that is what installs the stamps there.
+install_zipimport_stamps()
 
 __all__ = ["get_spark", "TABLES", "load_table", "register_views", "table_path"]
 

@@ -61,7 +61,8 @@ def _parquet_files(path: str) -> list[str]:
 
 
 def _refuse(message: str) -> int:
-    """A bad column choice: one-line JSON error on stderr, exit code 2."""
+    """A malformed query or a bad column choice: one-line JSON error on
+    stderr, exit code 2."""
     print(json.dumps({"error": message}), file=sys.stderr)
     return 2
 
@@ -123,13 +124,16 @@ def main(argv: list[str] | None = None) -> int:
     args = ap.parse_args(argv)
 
     default_filter = f"{args.column} > {LADDER[args.workload or 'p50']}"
-    pred = plan_predicate(args.filter if args.filter is not None else default_filter)
     specs = (
         [(a.strip(), None) for a in args.aggs.split(",")]
         if args.aggs
         else [(s.replace("l_extendedprice", args.column), a) for s, a in AGG_SPECS]
     )
-    aggs = [plan_aggregation(spec, alias) for spec, alias in specs]
+    try:
+        pred = plan_predicate(args.filter if args.filter is not None else default_filter)
+        aggs = [plan_aggregation(spec, alias) for spec, alias in specs]
+    except ValueError as exc:  # the grammar's parse errors
+        return _refuse(str(exc))
 
     # the scan plan: files, accounted columns, prunable comparisons
     files = _parquet_files(args.path)

@@ -221,10 +221,13 @@ def projection_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def footer_only_agg(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Aggregate pushdown (spark.sql.parquet.aggregatePushDown): bare
-    MIN/MAX/COUNT(*) answered from row-group statistics in the footer —
-    zero data pages moved, the purest near-storage query. Plan shows
-    ``PushedAggregation``."""
+    """Bare MIN/MAX/COUNT(*), the aggregates Parquet footer statistics
+    can answer with zero data pages moved. Under the engine's session
+    Parquet is a V1 source and Spark reads the column's pages. The plan
+    shows ``PushedAggregation: [MIN(l_extendedprice), MAX(l_extendedprice),
+    COUNT(*)]`` only with Parquet off ``spark.sql.sources.useV1SourceList``
+    and ``spark.sql.parquet.aggregatePushdown=true``
+    (``tests/test_plans_metrics.py``)."""
     df = load_table(spark, sf_dir, "lineitem")
     return df.agg(
         F.min("l_extendedprice").alias("min_price"),

@@ -14,6 +14,8 @@ import re
 
 from pyspark.sql import SparkSession
 
+from parquet_near_storage_compute_spark.workers import ship_package_path
+
 #: Default configs. Rationale per key:
 #: - AQE on: runtime coalescing of shuffle partitions + skew-join splitting,
 #:   which replaces the reference's static 16-way partitioning.
@@ -22,10 +24,12 @@ from pyspark.sql import SparkSession
 #:   div-by-zero → NULL, matching the reference's NULLIF guards.
 #: - timeZone UTC: the oracle (DuckDB) treats parquet timestamps as naive;
 #:   pinning UTC makes datetime literals deterministic.
-#: - filterPushdown / aggregatePushDown: the near-storage behaviors the
-#:   reference implements by hand (row-group pruning ``v1/src/main.rs:626-685``,
-#:   selective chunk reads ``v2/src/main.rs:400-503``) are delegated to the
-#:   Parquet data source.
+#: - filterPushdown: the near-storage behaviors the reference implements by
+#:   hand (row-group pruning ``v1/src/main.rs:626-685``, selective chunk
+#:   reads ``v2/src/main.rs:400-503``) are delegated to the Parquet data
+#:   source. Aggregate pushdown (``spark.sql.parquet.aggregatePushdown``)
+#:   stays off: it is a DataSource V2 feature, and Parquet is read through
+#:   V1 here, where the key pushes nothing.
 DEFAULT_CONF: dict[str, str] = {
     "spark.sql.adaptive.enabled": "true",
     "spark.sql.adaptive.coalescePartitions.enabled": "true",
@@ -33,7 +37,6 @@ DEFAULT_CONF: dict[str, str] = {
     "spark.sql.ansi.enabled": "false",
     "spark.sql.session.timeZone": "UTC",
     "spark.sql.parquet.filterPushdown": "true",
-    "spark.sql.parquet.aggregatePushDown": "true",
     "spark.sql.parquet.enableVectorizedReader": "true",
     "spark.sql.files.maxPartitionBytes": "134217728",
     "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
@@ -83,7 +86,8 @@ def get_spark(
 
     ``spark.sql.shuffle.partitions`` follows ``shuffle_partitions`` for the
     session's actual master (an existing session keeps its own) unless
-    ``conf`` sets it.
+    ``conf`` sets it. The session's Python workers get the package root on
+    their path (``workers.ship_package_path``).
     """
     builder = SparkSession.builder.appName(app_name)
     if master is None and "SPARK_GRAFT_MASTER" not in os.environ:
@@ -103,4 +107,5 @@ def get_spark(
         spark.conf.set(
             SHUFFLE_PARTITIONS, str(shuffle_partitions(sc.master, sc.defaultParallelism))
         )
+    ship_package_path(spark)
     return spark

@@ -24,6 +24,17 @@ walks the file listing (footers only — no data pages) and emits one
 partition per surviving (file, row_group) pair; executors stream just those
 byte ranges. That is the reference's near-storage architecture, hosted
 inside Spark's planner.
+
+Every planner call (``schema``, ``pushFilters`` with ``partitions``,
+``writer``, ``commit``) and every task is one call into a Python worker.
+With ``workers.install_zipimport_stamps`` a reused worker's call skips
+the zip-archive re-read that Spark's worker set-up would otherwise repeat:
+on 4 cores (Python 3.11, PySpark 4.1.2, ``local[4]``) a bare ``load()``,
+one ``schema()`` round trip, takes about 11 ms (75 ms without), a pruned
+read of 200 rows about 120 ms (250 ms) and a 3-row write about 160 ms
+(370 ms). The first call in a new worker still pays about 100 ms for that
+re-read. Register the source with ``register``, which also ships the
+package path to the workers.
 """
 
 from __future__ import annotations
@@ -55,6 +66,7 @@ from parquet_near_storage_compute_spark.tables import (
     load_table,
     table_path,
 )
+from parquet_near_storage_compute_spark.workers import ship_package_path
 
 #: Columns served by the source (a projection is part of the layout job:
 #: the sized copy carries only what the scan needs — late projection is
@@ -385,6 +397,14 @@ class RowGroupParquetDataSource(DataSource):
         return RowGroupWriter(self.options, overwrite)
 
 
+def register(spark: SparkSession) -> None:
+    """Register ``rowgroup_parquet`` on ``spark``, whoever built the
+    session: its planner and task workers get the package root on their
+    path."""
+    ship_package_path(spark)
+    spark.dataSource.register(RowGroupParquetDataSource)
+
+
 def sized_events_path(sf_dir: str) -> str:
     """Sorted, row-group-sized events copy for the contract, one parquet
     file cached per events listing (``tables.derived_copy``).
@@ -411,7 +431,7 @@ def python_datasource_scan(spark: SparkSession, sf_dir: str) -> DataFrame:
     admit everything, exactly as in the reference's worst-case ladder)."""
     from pyspark.sql import functions as F
 
-    spark.dataSource.register(RowGroupParquetDataSource)
+    register(spark)
     # Off by default in 4.1; runtime-settable. Without it Spark refuses a
     # reader that implements pushFilters rather than silently skipping it.
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
@@ -448,7 +468,7 @@ def python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
         _run_to_memory,
     )
 
-    spark.dataSource.register(RowGroupParquetDataSource)
+    register(spark)
     stream = (
         spark.readStream.format("rowgroup_parquet")
         .option("path", sized_events_path(sf_dir))
@@ -475,7 +495,7 @@ def python_datasource_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     cleanup."""
     from pyspark.sql import functions as F
 
-    spark.dataSource.register(RowGroupParquetDataSource)
+    register(spark)
     spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
     out = derived_copy_path("pyds_sink", (table_path(sf_dir, "events"),))
     subset = (

@@ -78,15 +78,21 @@ def test_columns_projection_width():
          "columns not in the file: ['nope']"),
         (("--filter", "53000 < nope", "--cpus", "2"),
          "columns not in the file: ['nope']"),
+        (("--mode", "metadata", "--filter", "l_quantity >"),
+         "unexpected end of predicate"),
+        (("--mode", "metadata", "--aggs", "MEDIAN(l_tax)"),
+         "unsupported aggregation"),
     ],
     ids=["columns-window", "metadata-unknown-filter", "metadata-unknown-column",
-         "metadata-unknown-agg", "query-unknown-filter"],
+         "metadata-unknown-agg", "query-unknown-filter", "metadata-bad-filter",
+         "metadata-bad-agg"],
 )
 def test_columns_window_too_narrow_errors(args, message):
     """l_extendedprice is schema index 5 — a 3-column window cannot serve
     the default query and must fail loudly, not silently widen the scan.
     Either mode refuses a filter, aggregation or --column column the file
-    lacks the same way, before any byte accounting or Spark session."""
+    lacks the same way, before any byte accounting or Spark session, and
+    so does a filter or aggregation the grammar cannot parse."""
     out = subprocess.run(
         [sys.executable, "-m", "parquet_near_storage_compute_spark.cli",
          "--path", LI, *args],

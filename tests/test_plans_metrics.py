@@ -95,27 +95,31 @@ def test_measure_end_to_end(spark):
 def test_aggregate_pushdown_plan(spark):
     """Bare MIN/MAX/COUNT answered from footer statistics
     (PushedAggregation) — no data pages read. Parquet aggregate pushdown is
-    a DataSource-v2 feature, so drop parquet from the V1 list for this
-    scope (results are identical either way — the registry oracle covers
-    that; this asserts the near-storage plan shape)."""
+    a DataSource-v2 feature, off by default, so drop parquet from the V1
+    list and turn it on for this scope (results are identical either way
+    — the registry oracle covers that; this asserts the near-storage plan
+    shape). A V2 scan prints ``PushedAggregation: []`` when nothing is
+    pushed, so the pushed list itself is asserted."""
     from parquet_near_storage_compute_spark.operators.scan_agg import (
         footer_only_agg,
     )
 
-    key = "spark.sql.sources.useV1SourceList"
-    prev = spark.conf.get(key)
+    v1 = "spark.sql.sources.useV1SourceList"
+    agg = "spark.sql.parquet.aggregatePushdown"
+    prev = {k: spark.conf.get(k) for k in (v1, agg)}
     try:
-        spark.conf.set(
-            key, ",".join(s for s in prev.split(",") if s != "parquet")
-        )
+        spark.conf.set(v1, ",".join(s for s in prev[v1].split(",") if s != "parquet"))
+        spark.conf.set(agg, "true")
         df = footer_only_agg(spark, SF_01)
         plan = df._jdf.queryExecution().executedPlan().toString()
-        assert "PushedAggregation" in plan, plan
+        pushed = "MIN(l_extendedprice), MAX(l_extendedprice), COUNT(*)"
+        assert f"PushedAggregation: [{pushed}]" in plan, plan
         # and it returns the same values through the DSv2 path
         row = df.collect()[0]
         assert row.n_rows > 0 and row.min_price < row.max_price
     finally:
-        spark.conf.set(key, prev)
+        for k, v in prev.items():
+            spark.conf.set(k, v)
 
 
 def test_index_grammar_matches_named(spark):

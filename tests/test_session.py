@@ -1,5 +1,6 @@
 """``get_spark``'s shuffle width: one partition per task slot on a local
-master, a fixed width elsewhere, and a caller's explicit conf wins."""
+master, a fixed width elsewhere, and a caller's explicit conf wins. Every
+SQL conf the engine sets is one Spark knows."""
 
 from __future__ import annotations
 
@@ -9,8 +10,10 @@ import sys
 
 import pytest
 
+from parquet_near_storage_compute_spark import tables
 from parquet_near_storage_compute_spark.session import (
     CLUSTER_SHUFFLE_PARTITIONS,
+    DEFAULT_CONF,
     shuffle_partitions,
 )
 
@@ -58,3 +61,14 @@ def test_get_spark_shuffle_width():
     )
     assert out.returncode == 0, out.stderr[-2000:]
     assert out.stdout.split() == ["3", "5", "3", "7"]
+
+
+def test_engine_sql_confs_are_registered(spark):
+    """Spark keeps an unknown ``spark.sql.*`` key as a plain string and
+    never reads it, so a misspelt key is silently dead."""
+    sql_conf = getattr(getattr(spark._jvm, "org.apache.spark.sql.internal.SQLConf$"), "MODULE$")
+    keys = {*DEFAULT_CONF, *tables._REQUIRED_CONFS, *tables._SCHEMA_CONFS}
+    unknown = sorted(
+        k for k in keys if k.startswith("spark.sql.") and not sql_conf.containsConfigKey(k)
+    )
+    assert unknown == []
