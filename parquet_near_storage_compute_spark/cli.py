@@ -169,8 +169,6 @@ def main(argv: list[str] | None = None) -> int:
         print(json.dumps(out))
         return 0
 
-    from pyspark.sql import functions as F
-
     from parquet_near_storage_compute_spark.session import get_spark
 
     mib = args.read_size_mib
@@ -180,15 +178,26 @@ def main(argv: list[str] | None = None) -> int:
         conf={"spark.sql.files.maxPartitionBytes": str(mib << 20)} if mib else None,
     )
     spark.sparkContext.setLogLevel("ERROR")
+    out = run_query(spark, files, cols, args.columns is not None, pred, aggs)
+    print(json.dumps(out))
+    spark.stop()
+    return 0
+
+
+def run_query(
+    spark, files: list[str], cols: list[str], window: bool, pred, aggs
+) -> dict:
+    """v1: run the query over ``files`` once and report its result with
+    the M1-M5 metrics; the timed collect is the result. ``window`` scans
+    exactly ``cols`` (the ``--columns`` projection)."""
+    from pyspark.sql import functions as F
+
     df = spark.read.parquet(*files)
-    if args.columns is not None:
+    if window:
         df = df.select(*cols)
     result = df.filter(F.expr(pred.sql)).agg(*(F.expr(a.sql) for a in aggs))
     m = measure(spark, result, files, cols, pred.prunable)
-    rows = [r.asDict() for r in result.collect()]
-    print(json.dumps({"mode": "query", "result": rows, **m.as_dict()}))
-    spark.stop()
-    return 0
+    return {"mode": "query", "result": [r.asDict() for r in m.result], **m.as_dict()}
 
 
 if __name__ == "__main__":

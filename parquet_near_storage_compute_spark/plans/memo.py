@@ -17,10 +17,11 @@ identical deterministic work, measured at 3-4 s per query in BENCH_DETAIL
   or restarted session never sees another session's frames (their
   checkpoint RDDs die with the old context);
 - corpus identity: realpath of sf_dir plus the mtime_ns/size fingerprint
-  of the source table (file, or directory of part files;
-  ``tables.listing_fingerprint``, shared with ``load_table``'s schema
-  cache and the derived-copy key ``tables.derived_copy_path``) — a test
-  that overwrites its tmp corpus invalidates automatically;
+  of the source tables (file, or directory of part files;
+  ``tables.corpus_identity``, shared with ``load_table``'s schema cache)
+  — a test that overwrites its tmp corpus invalidates automatically. A
+  corpus that cannot be fingerprinted (remote scheme, glob, missing
+  source) is never cached: every ``get`` builds;
 - label: the subframe family (component labels, BPE doc counts, ...).
 
 Entries are LRU-bounded (a handful of frames per family at most — tests
@@ -34,7 +35,6 @@ it got a fresh or a shared frame except through construction latency.
 
 from __future__ import annotations
 
-import os
 from collections import OrderedDict
 from collections.abc import Callable
 
@@ -42,7 +42,7 @@ from typing import Any
 
 from pyspark.sql import SparkSession
 
-from parquet_near_storage_compute_spark.tables import listing_fingerprint
+from parquet_near_storage_compute_spark.tables import corpus_identity
 
 #: Frames kept alive per PlanMemo (LRU). Sized for one corpus × every
 #: label a module registers (similarity carries 6) plus a couple of test
@@ -72,13 +72,10 @@ class PlanMemo:
         label: str,
         build: Callable[[], Any],
     ) -> Any:
-        key = (
-            spark.sparkContext.applicationId,
-            id(spark),
-            os.path.realpath(sf_dir),
-            listing_fingerprint(sf_dir, self._tables, self._extra_paths),
-            label,
-        )
+        ident = corpus_identity(sf_dir, self._tables, self._extra_paths)
+        if ident is None:
+            return build()
+        key = (spark.sparkContext.applicationId, id(spark), ident, label)
         hit = self._store.get(key)
         if hit is not None:
             self._store.move_to_end(key)

@@ -258,12 +258,16 @@ def measure_runtime_bytes(spark: SparkSession, action) -> int:
 
 @dataclass
 class ScanMetrics:
-    """The v1 metric set for one measured query."""
+    """The v1 metric set for one measured query, with its result."""
 
     bytes_read: int  # M1 (planned, v2-style)
     seconds: float  # M2
-    rows: int
+    result: list  # the collected rows
     dataset_bytes: int
+
+    @property
+    def rows(self) -> int:
+        return len(self.result)
 
     @property
     def logical_throughput_gbps(self) -> float:  # M4
@@ -296,14 +300,6 @@ def dataset_size(paths: list[str]) -> int:
     return sum(os.path.getsize(p) for p in paths)
 
 
-def run_to_completion(df: DataFrame) -> float:
-    """Wall-clock for materializing every projected column (noop sink — a
-    bare count() would let Catalyst prune all columns and skip the work)."""
-    t0 = time.perf_counter()
-    df.write.format("noop").mode("overwrite").save()
-    return time.perf_counter() - t0
-
-
 def measure(
     spark: SparkSession,
     df: DataFrame,
@@ -311,18 +307,16 @@ def measure(
     columns: list[str] | None = None,
     predicate: list[tuple[str, str, float]] | None = None,
 ) -> ScanMetrics:
-    """Execute ``df`` and assemble the M1-M5 metric set: wall-time from the
-    real execution, bytes from the v2-style metadata accounting over the
-    Parquet files ``input_paths``. The row count rides along as an
-    observed metric — no second job."""
-    from pyspark.sql import Observation
-    from pyspark.sql import functions as F
-
-    obs = Observation()
-    seconds = run_to_completion(df.observe(obs, F.count(F.lit(1)).alias("rows")))
+    """Collect ``df`` once and assemble the M1-M5 metric set: wall time
+    and rows of that one collect, which is also the returned ``result``,
+    and bytes from the v2-style metadata accounting over the Parquet
+    files ``input_paths``."""
+    t0 = time.perf_counter()
+    result = df.collect()
+    seconds = time.perf_counter() - t0
     return ScanMetrics(
         bytes_read=sum(planned_scan_bytes(p, columns, predicate) for p in input_paths),
         seconds=seconds,
-        rows=obs.get["rows"],
+        result=result,
         dataset_bytes=dataset_size(input_paths),
     )

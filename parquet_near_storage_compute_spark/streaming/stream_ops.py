@@ -44,6 +44,20 @@ def _run_dir(kind: str) -> str:
     return os.path.join(scratch_root(), kind, uuid.uuid4().hex[:12])
 
 
+def _publish_generation(
+    state: dict, run_dir: str, gen_id: int, df: DataFrame
+) -> None:
+    """Write ``df`` as generation ``gen_id`` under ``run_dir``, THEN point
+    ``state["path"]`` at it and remove the generation it supersedes: a
+    crashed write leaves the previous generation current, and a run keeps
+    one generation on disk."""
+    gen = os.path.join(run_dir, f"gen_{gen_id}")
+    df.write.mode("overwrite").parquet(gen)
+    previous, state["path"] = state["path"], gen
+    if previous is not None and previous != gen:
+        shutil.rmtree(previous, ignore_errors=True)
+
+
 def _run_once(writer, ckpt: str) -> None:
     """Start an AvailableNow query on ``ckpt``, wait for it, and remove the
     checkpoint: every caller keeps its result elsewhere (memory sink or
@@ -319,9 +333,10 @@ def upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     split across 4 files, streamed with ``maxFilesPerTrigger=1`` so the
     merge genuinely executes 4 times incrementally; each merge writes a
     NEW generation directory and only then moves the current-state pointer
-    (the same publish-after-write discipline as the Python-datasource
-    manifest sink — a crashed batch leaves the previous generation
-    intact). Version counts accumulate through the merges, so the final
+    and removes the superseded generation (``_publish_generation``: the
+    same publish-after-write discipline as the Python-datasource manifest
+    sink — a crashed batch leaves the previous generation intact).
+    Version counts accumulate through the merges, so the final
     state must be identical to the one-shot batch merge over all events —
     which is exactly what the DuckDB oracle computes. At 100 TB each merge
     is one window shuffle of (state ∪ batch) on the merge key; partition
@@ -361,9 +376,7 @@ def upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
                 F.col("nv").alias("n_versions"),
             )
         )
-        gen = os.path.join(run_dir, f"gen_{batch_id}")
-        new_state.write.mode("overwrite").parquet(gen)  # write, THEN publish
-        state["path"] = gen
+        _publish_generation(state, run_dir, batch_id, new_state)
 
     schema = spark.read.parquet(split_dir).schema
     stream = (
@@ -525,9 +538,7 @@ def phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         new_state = (
             accepted if prev is None else prev.unionByName(accepted)
         )
-        gen = os.path.join(run_dir, f"gen_{bid}")
-        new_state.write.mode("overwrite").parquet(gen)  # write, THEN publish
-        state["path"] = gen
+        _publish_generation(state, run_dir, bid, new_state)
 
     schema = spark.read.parquet(src_dir).schema
     stream = (
@@ -694,9 +705,7 @@ def minhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         new_state = (
             accepted if prev is None else prev.unionByName(accepted)
         )
-        gen = os.path.join(run_dir, f"gen_{bid}")
-        new_state.write.mode("overwrite").parquet(gen)  # write, THEN publish
-        state["path"] = gen
+        _publish_generation(state, run_dir, bid, new_state)
 
     schema = spark.read.parquet(src_dir).schema
     stream = (

@@ -102,6 +102,24 @@ def listing_fingerprint(
     return tuple(parts)
 
 
+def corpus_identity(
+    sf_dir: str, tables: tuple[str, ...], extra_paths: tuple[str, ...] = ()
+) -> tuple | None:
+    """What a cache over ``tables`` of ``sf_dir`` (and ``extra_paths``) is
+    keyed on: the corpus directory's realpath and ``listing_fingerprint``.
+    A ``file://`` URL is resolved to its local path. None when the sources
+    cannot be fingerprinted here — a remote scheme, a glob, or a source
+    that does not exist locally — and the caller must not cache."""
+    url = urlsplit(sf_dir)
+    if url.scheme not in ("", "file") or glob.has_magic(sf_dir):
+        return None
+    local = url.path if url.scheme else sf_dir
+    listing = listing_fingerprint(local, tables, extra_paths)
+    if any(entry[1:] == ("missing",) for entry in listing):
+        return None
+    return os.path.realpath(local), listing
+
+
 def scratch_root() -> str:
     """The one directory the engine writes its derived copies and per-run
     streaming state to. Resolved per call under ``tempfile.gettempdir()``,
@@ -167,22 +185,16 @@ _schemas_lock = threading.Lock()
 
 
 def _schema_key(spark: SparkSession, sf_dir: str, name: str) -> tuple | None:
-    """Cache key of one table's inferred schema, or None when the table is
-    not a plain local path (remote scheme, glob, or missing), whose
-    listing cannot be fingerprinted here."""
-    url = urlsplit(sf_dir)
-    if url.scheme not in ("", "file") or glob.has_magic(sf_dir):
-        return None
-    local = url.path if url.scheme else sf_dir
-    listing = listing_fingerprint(local, (name,))
-    if (name, "missing") in listing:
+    """Cache key of one table's inferred schema, or None when the table's
+    listing cannot be fingerprinted (``corpus_identity``)."""
+    ident = corpus_identity(sf_dir, (name,))
+    if ident is None:
         return None
     jconf = spark.conf._jconf
     return (
         spark.sparkContext.applicationId,
         id(spark),
-        os.path.realpath(table_path(local, name)),
-        listing,
+        ident,
         tuple(jconf.get(k) for k in _SCHEMA_CONFS),
     )
 

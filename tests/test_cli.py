@@ -216,3 +216,37 @@ def test_columns_reference_width_on_wide92():
     )
     assert out.returncode == 2
     assert "outside --columns window" in out.stderr
+
+
+def test_query_mode_scans_once(spark):
+    """One query-mode run reads its Parquet input in one stage: the timed
+    collect is the result it reports, not a second run of the query."""
+    from parquet_near_storage_compute_spark.cli import run_query
+    from parquet_near_storage_compute_spark.functions.grammar import (
+        plan_aggregation,
+        plan_predicate,
+    )
+    from parquet_near_storage_compute_spark.plans.metrics import (
+        _stages_input_bytes,
+    )
+
+    pred = plan_predicate("l_extendedprice > 53000")
+    aggs = [plan_aggregation("SUM(l_quantity)")]
+    cols = ["l_extendedprice", "l_quantity"]
+    sc = spark.sparkContext
+    sc.setJobGroup("cli-scans-once", "query mode stage count")
+    try:
+        out = run_query(spark, [LI], cols, False, pred, aggs)
+    finally:
+        sc._jsc.clearJobGroup()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    tracker = sc.statusTracker()
+    stages = {
+        sid
+        for jid in tracker.getJobIdsForGroup("cli-scans-once")
+        for sid in tracker.getJobInfo(jid).stageIds
+    }
+    scans = [sid for sid in stages if _stages_input_bytes(spark, {sid}) > 0]
+    assert len(scans) == 1, stages
+    assert out["rows"] == len(out["result"]) == 1
+    assert out["bytes_read"] == planned_scan_bytes(LI, cols, pred.prunable)

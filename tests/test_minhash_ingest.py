@@ -103,25 +103,32 @@ def test_planted_branches_and_oracle(spark, tmp_path):
     assert got.get(3) == 3
 
 
-def test_generation_dirs_publish_monotonically(spark, sf_dir):
+def test_generation_dirs_publish_monotonically(spark, sf_dir, monkeypatch):
     """The state protocol: each batch writes gen_<b> COMPLETELY before the
-    pointer moves (write-then-publish). After a run, every generation dir
-    exists, row counts grow monotonically, and the final generation IS the
-    returned frame."""
+    pointer moves (write-then-publish) and the superseded generation goes.
+    Every batch publishes, row counts grow monotonically, the final
+    generation IS the returned frame, and it is the only one left."""
+    published = []
+    publish = SO._publish_generation
+
+    def observed(state, run_dir, gen_id, df):
+        publish(state, run_dir, gen_id, df)
+        rows = spark.read.parquet(state["path"]).collect()
+        published.append((os.path.basename(state["path"]), rows))
+
+    monkeypatch.setattr(SO, "_publish_generation", observed)
     state_root = os.path.join(scratch_root(), "minhash_state")
     before = set(os.listdir(state_root)) if os.path.isdir(state_root) else set()
     result = SO.minhash_ingest(spark, sf_dir)
     runs = set(os.listdir(state_root)) - before
     assert len(runs) == 1
     run_dir = os.path.join(state_root, runs.pop())
-    gens = sorted(os.listdir(run_dir))
+    gens = [g for g, _ in published]
     assert gens == [f"gen_{b}" for b in range(SO.MINHASH_INGEST_BATCHES)]
-    counts = [
-        spark.read.parquet(os.path.join(run_dir, g)).count() for g in gens
-    ]
+    assert os.listdir(run_dir) == [gens[-1]]
+    counts = [len(rows) for _, rows in published]
     assert counts == sorted(counts)
     assert counts[-1] == result.count()
     # each generation holds only batches ≤ its own number
-    for b, g in enumerate(gens):
-        rows = spark.read.parquet(os.path.join(run_dir, g)).collect()
+    for b, (_, rows) in enumerate(published):
         assert all(r.batch_no <= b for r in rows)

@@ -78,7 +78,8 @@ def test_measure_end_to_end(spark):
         columns=["l_extendedprice"],
         predicate=[("l_extendedprice", ">", LADDER["p50"])],
     )
-    assert m.rows == 1  # one aggregate row
+    assert m.rows == len(m.result) == 1  # the collected aggregate row
+    assert m.result[0]["count_price"] > 0
     assert 0 < m.bytes_read <= m.dataset_bytes
     assert 0 < m.selectivity_pct <= 100
     d = m.as_dict()

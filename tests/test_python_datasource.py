@@ -1,9 +1,16 @@
 """Python Data Source (PySpark 4 extension API) — the v2 selective scan
 hosted in Spark's planner: footer-only row-group pruning in ``partitions()``,
-pushed filters re-applied by Spark, Arrow-batch reads."""
+pushed filters re-applied by Spark, Arrow-batch reads; and the writer's
+commit rule (the ``_SUCCESS`` manifest is the table) under injected
+faults."""
 
 from __future__ import annotations
 
+import json
+import os
+import re
+
+import pyarrow as pa
 import pyarrow.parquet as pq
 import pytest
 from pyspark.sql import functions as F
@@ -17,8 +24,10 @@ from parquet_near_storage_compute_spark.sources.pyds import (
     ROW_GROUP_ROWS,
     RowGroupParquetDataSource,
     RowGroupReader,
+    list_part_files,
     plan_row_groups,
     python_datasource_scan,
+    register,
     sized_events_path,
 )
 from tests.oracle import compare, duckdb_con
@@ -77,8 +86,7 @@ def test_reader_partitions_follow_pushed_filters(sized_path):
 
 
 def test_scan_tasks_equal_surviving_groups(spark, sized_path):
-    spark.dataSource.register(RowGroupParquetDataSource)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    register(spark)
     df = (
         spark.read.format("rowgroup_parquet")
         .option("path", sized_path)
@@ -124,14 +132,6 @@ def test_sink_round_trip_matches_oracle(spark):
 
 
 def test_sink_manifest_hides_uncommitted_parts(spark, tmp_path):
-    import json
-    import os
-
-    import pyarrow as pa
-    import pyarrow.parquet as pq
-
-    from parquet_near_storage_compute_spark.sources.pyds import list_part_files
-
     d = str(tmp_path / "tbl")
     os.makedirs(d)
     tbl = pa.table(
@@ -152,8 +152,7 @@ def test_rows_exact_despite_group_granularity(spark, sized_path):
     # pruning keeps whole groups; Spark's re-applied filter must trim to
     # the row-exact result (group 1 spans 250..499, filter keeps all 500
     # of groups 0-1 here, so compare a predicate that splits a group).
-    spark.dataSource.register(RowGroupParquetDataSource)
-    spark.conf.set("spark.sql.python.filterPushdown.enabled", "true")
+    register(spark)
     df = (
         spark.read.format("rowgroup_parquet")
         .option("path", sized_path)
@@ -162,11 +161,10 @@ def test_rows_exact_despite_group_granularity(spark, sized_path):
     )
     assert df.count() == 300  # not 500: group 1 was read, then filtered
 
+
 def _write_grouped(path: str, n_groups: int) -> None:
     """Deterministic events-shaped file with exactly n_groups row groups of
     ROW_GROUP_ROWS rows each (group g holds event_ids [g*R, (g+1)*R))."""
-    import pyarrow as pa
-
     n = n_groups * ROW_GROUP_ROWS
     table = pa.table(
         {
@@ -177,26 +175,16 @@ def _write_grouped(path: str, n_groups: int) -> None:
     )
     tmp = path + ".tmp"
     pq.write_table(table, tmp, row_group_size=ROW_GROUP_ROWS)
-    import os
-
     os.replace(tmp, path)
 
 
 def test_bounded_admission_replays_growth_exactly_once(spark, tmp_path):
-    """Bounded batch admission (VERDICT r5 #6): after the initial backlog,
-    24 appended row groups must replay as ⌈24/8⌉ = 3 deterministic batches
-    of ≤ 8·ROW_GROUP_ROWS rows, summing to exactly-once totals; restarting
+    """Bounded batch admission: after the initial backlog, 24 appended row
+    groups must replay as ⌈24/8⌉ = 3 deterministic batches of
+    ≤ 8·ROW_GROUP_ROWS rows, summing to exactly-once totals; restarting
     the checkpointed query must replay nothing (the admission bound never
     regresses the WAL offset — the planned-high-water floor invariant)."""
-    import json
-    import os
-    import uuid
-
-    from parquet_near_storage_compute_spark.sources.pyds import (
-        RowGroupParquetDataSource,
-    )
-
-    spark.dataSource.register(RowGroupParquetDataSource)
+    register(spark)
     src = os.path.join(str(tmp_path), "growing.parquet")
     out = os.path.join(str(tmp_path), "out")
     ckpt = os.path.join(str(tmp_path), "ckpt")
@@ -245,33 +233,23 @@ def test_bounded_admission_replays_growth_exactly_once(spark, tmp_path):
         assert spark.read.parquet(out).count() == 28 * ROW_GROUP_ROWS, attempt
 
 
-def _growth_restart_batches(spark, tmp_path, with_hint: bool):
-    """Shared harness for the recovery-batch bound: backlog of 4 groups,
-    stop, grow to 28 groups while down, restart — return the non-empty
-    post-restart batch row counts (and verify exactly-once totals)."""
-    import json
-    import os
-
-    from parquet_near_storage_compute_spark.sources.pyds import (
-        RowGroupParquetDataSource,
-    )
-
-    spark.dataSource.register(RowGroupParquetDataSource)
-    tag = "hint" if with_hint else "nohint"
-    src = os.path.join(str(tmp_path), f"grow_{tag}.parquet")
-    out = os.path.join(str(tmp_path), f"out_{tag}")
-    ckpt = os.path.join(str(tmp_path), f"ckpt_{tag}")
-    batch_log = os.path.join(str(tmp_path), f"batches_{tag}.jsonl")
+def _growth_restart_batches(spark, tmp_path):
+    """Backlog of 4 groups, stop, grow to 28 groups while down, restart —
+    return the non-empty post-restart batch row counts (and verify
+    exactly-once totals)."""
+    register(spark)
+    src = os.path.join(str(tmp_path), "grow.parquet")
+    out = os.path.join(str(tmp_path), "out")
+    ckpt = os.path.join(str(tmp_path), "ckpt")
+    batch_log = os.path.join(str(tmp_path), "batches.jsonl")
     _write_grouped(src, 4)
 
-    reader = (
+    stream = (
         spark.readStream.format("rowgroup_parquet")
         .option("path", src)
         .option("maxGroupsPerBatch", "8")
+        .load()
     )
-    if with_hint:
-        reader = reader.option("checkpointLocation", ckpt)
-    stream = reader.load()
 
     def sink(df, batch_id):
         with open(batch_log, "a") as fh:
@@ -297,58 +275,194 @@ def _growth_restart_batches(spark, tmp_path, with_hint: bool):
     return [b["rows"] for b in logged if b["batch"] > 0 and b["rows"] > 0]
 
 
-def test_checkpoint_hint_bounds_the_recovery_batch(spark, tmp_path):
-    """r7 (VERDICT r6 #8): with the query's checkpointLocation passed as a
-    READER option, a restart against a backlog that grew while the query
-    was down replays in bounded batches — the WAL-seeded floor closes the
-    one admission gap the Python API leaves open."""
-    rows = _growth_restart_batches(spark, tmp_path, with_hint=True)
-    assert len(rows) == 3, rows  # 24 grown groups / 8 per batch
-    assert all(r <= 8 * ROW_GROUP_ROWS for r in rows)
-
-
 def test_restart_recovery_is_bounded_even_without_the_hint(spark, tmp_path):
-    """Measured runner behaviour (r7, revising the r6 'never the recovery
-    batch' claim): on restart the runner re-plans/commits the restored WAL
-    batch BEFORE the first latestOffset, which seeds the planned-offset
-    floor — so the grown backlog replays bounded with no hint at all. The
-    hint mechanism covers the remaining theoretical path (latestOffset
-    firing first after restore), unit-tested directly below. If this test
-    ever fails with one unbounded batch, the runner stopped seeding the
-    floor and the hint becomes load-bearing."""
-    rows = _growth_restart_batches(spark, tmp_path, with_hint=False)
+    """On restart the runner re-plans/commits the restored WAL batch
+    BEFORE the first latestOffset, which seeds the planned-offset floor —
+    so a backlog that grew while the query was down replays in bounded
+    batches, with no checkpoint hint to the reader. If this test ever
+    fails with one unbounded batch, the runner stopped seeding the floor."""
+    rows = _growth_restart_batches(spark, tmp_path)
     assert len(rows) == 3, rows
     assert all(r <= 8 * ROW_GROUP_ROWS for r in rows)
 
 
-def test_wal_floor_bounds_first_latest_offset_directly(tmp_path):
-    """Unit test of the r7 WAL-seeded floor: a fresh reader whose first
-    call is latestOffset (no partitions/commit/initialOffset before it —
-    the one restart path the integration test can't force) must bound its
-    reply from the checkpoint's offset WAL when the hint is present, and
-    admit the full backlog when it is not."""
-    import json
-    import os
+# --- the commit rule under injected faults --------------------------------
 
-    from parquet_near_storage_compute_spark.sources.pyds import (
-        RowGroupStreamReader,
+
+def _events(lo: int, n: int) -> pa.Table:
+    ids = range(lo, lo + n)
+    return pa.table(
+        {
+            "event_id": pa.array(ids, pa.int64()),
+            "event_type": pa.array([f"t{i % 3}" for i in ids], pa.string()),
+            "value": pa.array([i / 4 for i in ids], pa.float64()),
+        }
     )
 
-    src = os.path.join(str(tmp_path), "g.parquet")
-    ckpt = os.path.join(str(tmp_path), "ckpt")
-    _write_grouped(src, 28)
-    os.makedirs(os.path.join(ckpt, "offsets"))
-    # the real OffsetSeqLog shape: version line, metadata JSON (no "rg"),
-    # one offset JSON per source
-    for batch, rg in ((0, 2), (1, 4)):
-        with open(os.path.join(ckpt, "offsets", str(batch)), "w") as fh:
-            fh.write('v1\n{"batchWatermarkMs":0,"conf":{}}\n')
-            fh.write(json.dumps({"rg": rg}) + "\n")
 
-    hinted = RowGroupStreamReader(
-        {"path": src, "maxGroupsPerBatch": "8", "checkpointLocation": ckpt}
+def _rows(*tables: pa.Table) -> list[tuple]:
+    return sorted(
+        tuple(r.values()) for t in tables for r in t.to_pylist()
     )
-    assert hinted.latestOffset() == {"rg": 12}  # WAL max 4 + bound 8
 
-    bare = RowGroupStreamReader({"path": src, "maxGroupsPerBatch": "8"})
-    assert bare.latestOffset() == {"rg": 28}  # full backlog — only safe reply
+
+def _save(spark, path: str, table: pa.Table, mode: str) -> None:
+    register(spark)
+    (
+        spark.createDataFrame(table.to_pandas())
+        .write.format("rowgroup_parquet")
+        .option("path", path)
+        .mode(mode)
+        .save()
+    )
+
+
+def _read(spark, path: str) -> list[tuple]:
+    df = spark.read.format("rowgroup_parquet").option("path", path).load()
+    return sorted(tuple(r) for r in df.collect())
+
+
+def _task_part(writer, table: pa.Table):
+    """What one write task does: hand the writer Arrow batches, get its
+    commit message back."""
+    return writer.write(iter(table.to_batches()))
+
+
+def _writer(path: str, overwrite: bool):
+    """The driver's writer for ``path``, built the way Spark builds it."""
+    source = RowGroupParquetDataSource({"path": path})
+    return source.writer(source.schema(), overwrite)
+
+
+def test_crash_before_commit_serves_the_previous_generation(spark, tmp_path):
+    """(a) An overwrite job's task writes its part, then the driver dies
+    before ``commit``: the previous generation is still the table, and
+    the uncommitted part stays invisible."""
+    path = str(tmp_path / "tbl")
+    _save(spark, path, _events(0, 10), "overwrite")
+    committed = list_part_files(path)
+    orphan = _task_part(_writer(path, overwrite=True), _events(100, 5))
+    assert os.path.exists(orphan.path)
+    assert list_part_files(path) == committed
+    assert _read(spark, path) == _rows(_events(0, 10))
+
+
+def test_failed_overwrite_keeps_the_previous_generation(spark, tmp_path):
+    """(b) An overwrite job whose task raises: after ``abort`` the previous
+    generation is intact."""
+    path = str(tmp_path / "tbl")
+    _save(spark, path, _events(0, 10), "overwrite")
+    committed = list_part_files(path)
+    # a Range, not a local relation: the optimizer would evaluate a
+    # projection over local rows, and so raise, before the job starts
+    failing = spark.range(100, 105).select(
+        F.col("id").alias("event_id"),
+        F.lit("t").alias("event_type"),
+        F.when(F.col("id") == 102, F.raise_error(F.lit("injected task failure")))
+        .otherwise(F.col("id") / 4)
+        .alias("value"),
+    )
+    with pytest.raises(Exception, match="injected task failure"):
+        (
+            failing.write.format("rowgroup_parquet")
+            .option("path", path)
+            .mode("overwrite")
+            .save()
+        )
+    assert list_part_files(path) == committed
+    assert _read(spark, path) == _rows(_events(0, 10))
+
+
+def test_append_adds_to_the_committed_generation(spark, tmp_path):
+    """(c) Append keeps what is there: 10 rows, then 5, read back as 15."""
+    path = str(tmp_path / "tbl")
+    _save(spark, path, _events(0, 10), "overwrite")
+    _save(spark, path, _events(100, 5), "append")
+    assert _read(spark, path) == _rows(_events(0, 10), _events(100, 5))
+
+
+@pytest.mark.parametrize("last", [0, 1])
+def test_interleaved_overwrites_publish_the_last_commit(spark, tmp_path, last):
+    """(d) Two overwrite writers whose tasks both finish before either
+    commits, committed in either order: the manifest lists exactly the
+    last committer's parts, every listed file exists, and the replaced
+    generations' parts are gone."""
+    path = str(tmp_path / "tbl")
+    _save(spark, path, _events(0, 10), "overwrite")
+    writers = [_writer(path, overwrite=True) for _ in range(2)]
+    inputs = [_events(100, 5), _events(200, 7)]
+    messages = [_task_part(w, t) for w, t in zip(writers, inputs)]
+    for i in (1 - last, last):
+        writers[i].commit([messages[i]])
+    listed = list_part_files(path)
+    assert listed == [messages[last].path]
+    assert all(os.path.exists(p) for p in listed)
+    on_disk = [f for f in os.listdir(path) if f.endswith(".parquet")]
+    assert [os.path.join(path, f) for f in on_disk] == listed
+    assert _read(spark, path) == _rows(inputs[last])
+
+
+def test_abort_removes_only_its_own_parts(spark, tmp_path):
+    path = str(tmp_path / "tbl")
+    _save(spark, path, _events(0, 10), "overwrite")
+    committed = list_part_files(path)
+    writer = _writer(path, overwrite=True)
+    message = _task_part(writer, _events(100, 5))
+    writer.abort([message, None])
+    assert not os.path.exists(message.path)
+    assert list_part_files(path) == committed
+    assert all(os.path.exists(p) for p in committed)
+
+
+def test_truncated_footer_fails_the_read_and_names_the_file(spark, tmp_path):
+    """(e) A committed part whose footer is cut off: the read fails and
+    names the file; it never returns the other parts' rows."""
+    path = str(tmp_path / "tbl")
+    _save(spark, path, _events(0, 10), "overwrite")
+    victim = list_part_files(path)[-1]
+    with open(victim, "r+b") as fh:
+        fh.truncate(os.path.getsize(victim) - 10)
+    with pytest.raises(Exception, match=re.escape(os.path.basename(victim))):
+        _read(spark, path)
+
+
+def test_zero_row_group_part_plans_no_partition(spark, tmp_path):
+    """(f) A listed part with no row group at all plans no partition, and
+    the rest of the table reads correctly."""
+    path = str(tmp_path / "tbl")
+    _save(spark, path, _events(0, 10), "overwrite")
+    empty = os.path.join(path, "part-empty.parquet")
+    pq.ParquetWriter(empty, _events(0, 0).schema).close()
+    assert pq.ParquetFile(empty).metadata.num_row_groups == 0
+    manifest = os.path.join(path, "_SUCCESS")
+    with open(manifest) as fh:
+        listed = json.load(fh)
+    listed["parts"].append({"path": "part-empty.parquet", "rows": 0})
+    with open(manifest, "w") as fh:
+        json.dump(listed, fh)
+    assert empty in list_part_files(path)
+    assert all(p.path != empty for p in RowGroupReader({"path": path}).partitions())
+    assert _read(spark, path) == _rows(_events(0, 10))
+
+
+def test_directory_without_manifest_is_no_table(tmp_path):
+    path = str(tmp_path / "tbl")
+    os.makedirs(path)
+    pq.write_table(_events(0, 3), os.path.join(path, "part-x.parquet"))
+    with pytest.raises(FileNotFoundError, match="no committed generation"):
+        list_part_files(path)
+
+
+def test_register_turns_filter_pushdown_on(spark, sized_path):
+    """A session that never set ``spark.sql.python.filterPushdown.enabled``
+    reads through ``register`` alone (Spark refuses a reader with
+    ``pushFilters`` while the conf is off)."""
+    spark.conf.unset("spark.sql.python.filterPushdown.enabled")
+    register(spark)
+    df = (
+        spark.read.format("rowgroup_parquet")
+        .option("path", sized_path)
+        .load()
+        .filter(F.col("event_id") < 500)
+    )
+    assert df.count() == 500

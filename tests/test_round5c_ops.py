@@ -423,8 +423,9 @@ def test_incremental_ingest_categories_partition_the_batch(spark, sf_dir):
 # -------------------------------------------------- streaming CDC upsert
 def test_stream_upsert_runs_incrementally_and_matches_batch(spark, sf_dir):
     """The foreachBatch merge must (a) actually execute once per source
-    file (4 generation dirs — not one big batch) and (b) converge to the
-    one-shot batch merge (relational_merge_upsert)."""
+    file (4 batches, so the last generation is gen_3 — not one big batch;
+    each publish removes the generation it supersedes) and (b) converge to
+    the one-shot batch merge (relational_merge_upsert)."""
     from parquet_near_storage_compute_spark.streaming import stream_ops
     from parquet_near_storage_compute_spark.tables import scratch_root
 
@@ -444,7 +445,7 @@ def test_stream_upsert_runs_incrementally_and_matches_batch(spark, sf_dir):
         for d in os.listdir(os.path.join(state_root, new_dirs.pop()))
         if d.startswith("gen_")
     )
-    assert gens == ["gen_0", "gen_1", "gen_2", "gen_3"], gens
+    assert gens == ["gen_3"], gens
 
 
 # -------------------------------------------------------------- compaction
