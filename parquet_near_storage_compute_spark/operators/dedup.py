@@ -385,9 +385,9 @@ def propagate_min_labels(edges: DataFrame) -> DataFrame:
 #: The candidate graph + its propagated labels are rebuilt identically by
 #: three registered contracts (connected_components, cluster_size_histogram,
 #: keep_best) — and building them is EAGER work (the edge checkpoint plus
-#: one count() per propagation round), measured at 3-4 s of per-query
-#: "plan construction" in BENCH_DETAIL (VERDICT r11 #3). Memoized per
-#: (session, corpus) so consumers share one propagation.
+#: one count() per propagation round), 3-4 s of plan construction per
+#: query. Memoized per (session, corpus) so consumers share one
+#: propagation.
 _CC_MEMO = PlanMemo(tables=("documents",))
 
 

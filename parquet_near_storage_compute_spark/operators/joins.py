@@ -273,65 +273,58 @@ N_BUCKETS = 8
 def bucketed_colocated_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Bucketed co-located join — the LAYOUT answer to the big-big join:
     ``orders`` and ``customer`` are written ``bucketBy(N, custkey)`` +
-    ``sortBy`` as warehouse tables, so the join needs NO exchange on
-    either side (each bucket pair is joined in place; the plan shows a
-    SortMergeJoin whose subtree is exchange-free, pinned in
-    tests/test_bucketed_join.py). At 100 TB this is the difference
-    between shuffling the fact table per join and shuffling it once at
-    WRITE time, amortized over every subsequent join on that key — the
-    bucketing counterpart of the reference's fixed file/partition grid.
+    ``sortBy``, so the join needs NO exchange on either side (each bucket
+    pair is joined in place; the plan shows a SortMergeJoin whose subtree
+    is exchange-free, pinned in tests/test_bucketed_join.py). At 100 TB
+    this is the difference between shuffling the fact table per join and
+    shuffling it once at WRITE time, amortized over every subsequent join
+    on that key — the bucketing counterpart of the reference's fixed
+    file/partition grid.
 
-    The bucketed tables are (re)materialized once per session into the
-    Spark warehouse (in-memory catalog; sf-scale writes are cheap and
-    keyed by table existence); output sums are integer cents, so the
-    contract is engine-exact."""
+    Each bucketed side is a derived copy keyed on its source's listing
+    (``tables.derived_copy``): a throwaway table writes the buckets to the
+    copy's path and is dropped, which keeps the files. Each session
+    registers the copy as an external bucketed table named after its path,
+    so nothing is written to the warehouse and a rewritten source names
+    a new table. Output sums are integer cents, so the contract is
+    engine-exact."""
     import hashlib
-    import os
+    import uuid
 
     from parquet_near_storage_compute_spark.tables import (
+        derived_copy,
         ensure_engine_confs,
-        listing_fingerprint,
         table_path,
     )
 
     ensure_engine_confs(spark)
-    # table names carry the realpath and file listing of both sources (the
-    # rule of tables.derived_copy_path: a rewritten orders or customer
-    # file names new tables, so stale buckets are never served) AND the
-    # pid (two processes sharing this repo's warehouse dir must not
-    # overwrite each other's buckets mid-read; the in-memory catalog is
-    # per-process anyway)
-    sources = tuple(
-        os.path.realpath(table_path(sf_dir, t)) for t in ("orders", "customer")
-    )
-    ident = repr((os.getpid(), listing_fingerprint("", (), sources)))
-    tag = hashlib.md5(ident.encode()).hexdigest()[:8]
-    pairs = [
-        (f"pnsc_orders_b_{tag}", "orders", "o_custkey"),
-        (f"pnsc_customer_b_{tag}", "customer", "c_custkey"),
-    ]
-    for tbl, src, key in pairs:
-        if not spark.catalog.tableExists(tbl):
-            # a previous SESSION may have left the managed location on
-            # disk (the in-memory catalog forgets it); clear it so
-            # saveAsTable doesn't refuse with LOCATION_ALREADY_EXISTS
-            import shutil
-            from urllib.parse import urlparse
+    tables = []
+    for side, key in (("orders", "o_custkey"), ("customer", "c_custkey")):
+        df = load_table(spark, sf_dir, side)
 
-            wh = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
-            loc = os.path.join(wh, tbl)
-            if os.path.isdir(loc):
-                shutil.rmtree(loc)
-            (
-                load_table(spark, sf_dir, src)
-                .write.bucketBy(N_BUCKETS, key)
-                .sortBy(key)
-                .mode("overwrite")
-                .format("parquet")
-                .saveAsTable(tbl)
-            )
-    orders = spark.table(pairs[0][0])
-    cust = spark.table(pairs[1][0])
+        def build(path: str) -> None:
+            scratch = f"pnsc_build_{uuid.uuid4().hex[:12]}"
+            try:
+                df.write.bucketBy(N_BUCKETS, key).sortBy(key).format(
+                    "parquet"
+                ).option("path", path).saveAsTable(scratch)
+            finally:
+                spark.sql(f"DROP TABLE IF EXISTS {scratch}")
+
+        path = derived_copy(
+            f"bucketed{N_BUCKETS}_{key}", (table_path(sf_dir, side),), build
+        )
+        name = f"pnsc_{side}_b_{hashlib.sha1(path.encode()).hexdigest()[:16]}"
+        cols = ", ".join(
+            f"`{f.name}` {f.dataType.simpleString()}" for f in df.schema
+        )
+        spark.sql(
+            f"CREATE TABLE IF NOT EXISTS {name} ({cols}) USING parquet "
+            f"CLUSTERED BY ({key}) SORTED BY ({key}) INTO {N_BUCKETS} BUCKETS "
+            f"LOCATION '{path}'"
+        )
+        tables.append(spark.table(name))
+    orders, cust = tables
     # hint("merge") pins SortMergeJoin: at driver SF the customer side
     # fits the broadcast threshold and Catalyst would (correctly) pick
     # BroadcastHashJoin, hiding the layout; at 100 TB both sides exceed

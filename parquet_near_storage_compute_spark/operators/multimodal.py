@@ -589,37 +589,15 @@ def _sig_neardup_decisions(
     )
 
 
-#: Decision-frame memo (r12, VERDICT r11 #3): the three modality dedup
-#: contracts are re-composed by `pipeline_modality_dedup_report`, paying
-#: ~1 s of plan construction each per composite build. Keyed on the
-#: committed fixture files (their ONLY inputs — sf_dir is carried in the
-#: key but never read), so a regenerated fixture invalidates.
-_MM_MEMO = None  # initialised lazily: fixture path constants sit below
+#: Decision-frame memos: the three modality dedup contracts are
+#: re-composed by `pipeline_modality_dedup_report`, paying ~1 s of plan
+#: construction each per composite build. Each memo is keyed on its
+#: committed fixture file (the contract's ONLY input — sf_dir is carried
+#: in the key but never read), so a regenerated fixture invalidates.
+_IMG_DEDUP_MEMO = PlanMemo(tables=(), extra_paths=(IMG_DEDUP_FIXTURE,))
 
 
-def _mm_memoized(label: str, fixture_attr: str):
-    import functools
-
-    def deco(fn):
-        @functools.wraps(fn)
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            global _MM_MEMO
-            if _MM_MEMO is None:
-                _MM_MEMO = {}
-            memo = _MM_MEMO.get(label)
-            if memo is None:
-                memo = PlanMemo(
-                    tables=(), extra_paths=(globals()[fixture_attr],)
-                )
-                _MM_MEMO[label] = memo
-            return memo.get(spark, sf_dir, label, lambda: fn(spark, sf_dir))
-
-        return wrapped
-
-    return deco
-
-
-@_mm_memoized("image_phash_dedup", "IMG_DEDUP_FIXTURE")
+@_IMG_DEDUP_MEMO.memoized("image_phash_dedup")
 def image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual near-duplicate dedup across the image modality — the
     multimodal × dedup bridge (VERDICT r6 #3): text has MinHash, embeddings
@@ -737,7 +715,10 @@ def audio_fingerprint63(samples) -> int:
     return int(sum(1 << i for i, b in enumerate(bits) if b))
 
 
-@_mm_memoized("audio_fingerprint_dedup", "AUDIO_DEDUP_FIXTURE")
+_AUDIO_DEDUP_MEMO = PlanMemo(tables=(), extra_paths=(AUDIO_DEDUP_FIXTURE,))
+
+
+@_AUDIO_DEDUP_MEMO.memoized("audio_fingerprint_dedup")
 def audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Spectral-fingerprint near-duplicate dedup across the audio modality
     — completing the per-modality near-dup matrix (text MinHash /
@@ -843,7 +824,10 @@ def video_phash_sig(payload: bytes) -> list[int]:
     ]
 
 
-@_mm_memoized("video_fingerprint_dedup", "VID_DEDUP_FIXTURE")
+_VID_DEDUP_MEMO = PlanMemo(tables=(), extra_paths=(VID_DEDUP_FIXTURE,))
+
+
+@_VID_DEDUP_MEMO.memoized("video_fingerprint_dedup")
 def video_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Sampled-frame perceptual near-duplicate dedup across the video
     modality — the fifth and final modality of the near-dup matrix (text

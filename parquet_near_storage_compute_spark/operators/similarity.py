@@ -17,7 +17,6 @@ the DuckDB oracle (list_dot_product on DOUBLE[]) matches bitwise-to-epsilon.
 
 from __future__ import annotations
 
-import functools
 import math
 from collections.abc import Callable
 
@@ -40,26 +39,13 @@ from parquet_near_storage_compute_spark.tables import (
     local_literal_df,
 )
 
-#: Query-frame memo (r12, VERDICT r11 #3): `sim_recall_report` composes
-#: five registered top-k variants and `pipeline_modality_dedup_report`
-#: composes the embedding decisions — each variant costs 1.5-4 s of eager
-#: construction (PQ codebook train collect, occupancy probes, deep-plan
-#: analysis) that was re-paid per composite. Every memoized frame is
-#: deterministic (EXACTNESS-pinned), so consumers can't observe sharing.
+#: Query-frame memo: `sim_recall_report` composes five registered top-k
+#: variants and `pipeline_modality_dedup_report` composes the embedding
+#: decisions — each variant costs 1.5-4 s of eager construction (PQ
+#: codebook train collect, occupancy probes, deep-plan analysis) that was
+#: re-paid per composite. Every memoized frame is deterministic
+#: (EXACTNESS-pinned), so consumers can't observe sharing.
 _SIM_MEMO = PlanMemo(tables=("embeddings",))
-
-
-def _memoized(label: str):
-    def deco(fn):
-        @functools.wraps(fn)
-        def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-            return _SIM_MEMO.get(
-                spark, sf_dir, label, lambda: fn(spark, sf_dir)
-            )
-
-        return wrapped
-
-    return deco
 
 N_QUERIES = 10  # vec_id < 10 are the query vectors
 TOP_K = 3
@@ -80,7 +66,7 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_memoized("topk_bruteforce")
+@_SIM_MEMO.memoized("topk_bruteforce")
 def topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact cosine top-k: for each query vector, the k nearest others."""
     v = _vectors(spark, sf_dir)
@@ -229,7 +215,7 @@ def _sq8_codes(v: DataFrame) -> DataFrame:
     )
 
 
-@_memoized("topk_sq8")
+@_SIM_MEMO.memoized("topk_sq8")
 def topk_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via int8 scalar quantization (SQ8 flat scan) — the memory-
     bandwidth scale path, complementing the blocking scale paths (LSH
@@ -415,7 +401,7 @@ def topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_memoized("topk_ivf_sq8")
+@_SIM_MEMO.memoized("topk_ivf_sq8")
 def topk_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-SQ8 ANN (FAISS IVFScalarQuantizer with by_residual=false): the
     two scale levers composed — the inverted-file layout bounds WHAT is
@@ -882,7 +868,7 @@ def range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_memoized("dedup_decisions")
+@_SIM_MEMO.memoized("dedup_decisions")
 def embedding_dedup_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-vector keep/drop decisions for the ≥τ cosine relation — the
     actionable step for embedding-space dedup, mirroring
@@ -1180,7 +1166,7 @@ PQ_SUB = DIM // PQ_M
 PQ_GRID = 1024
 #: Magnitude threshold (lattice units ≈ 0.12 in vector units) for the
 #: 2-bit-per-dim codebook seeding; picked by a measured recall sweep
-#: (t ∈ {120..320}: 120 best at every SF — see NOTES_r7).
+#: (t ∈ {120..320}: 120 best at every SF).
 PQ_TMAG = 120
 #: Lloyd refinement rounds on the lattice codebook (VERDICT r7 #3 —
 #: trained codebooks, the FAISS IndexPQ per-subspace k-means): the
@@ -1191,7 +1177,7 @@ PQ_TMAG = 120
 #: position). Every step is the same exact-integer / floor(Σx/n)
 #: algebra as the seed, so the DuckDB oracle unrolls the rounds as CTEs
 #: and still matches BIT-FOR-BIT. Rounds picked by measured recall
-#: sweep (tools/pq_train_sweep.py, NOTES_r8).
+#: sweep (tools/pq_train_sweep.py).
 PQ_ITERS = 3
 
 #: Bounded deterministic TRAINING set for the PQ codebooks (VERDICT r8
@@ -1491,7 +1477,7 @@ def _pq_recon(
     )
 
 
-@_memoized("topk_pq")
+@_SIM_MEMO.memoized("topk_pq")
 def topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via product quantization (PQ, asymmetric/ADC scoring — the
     FAISS IndexPQ default: the query stays unquantized, only candidates
@@ -1512,7 +1498,7 @@ def topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     tests/test_semdedup_pq.py (the geometry was picked by measured
     sweep: sign-only M=8 ~33%, +ADC ~50%, 2-bit M=16 53–70% across SFs;
     PQ_ITERS=3 training lifts that to 57–80%, beating the untrained
-    lattice at every SF — tools/pq_train_sweep.py, NOTES_r8.  This
+    lattice at every SF — tools/pq_train_sweep.py.  This
     corpus is near-random, PQ's hard case, so the numbers quantify
     the 16×-compression trade honestly rather than flattering it).  The
     reconstructed-code table feeds both join sides, so it is persisted —
@@ -1565,7 +1551,7 @@ def topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-@_memoized("topk_ivf_pq")
+@_SIM_MEMO.memoized("topk_ivf_pq")
 def topk_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     """IVF-PQ ANN (the FAISS IVFPQ shape, by_residual=false): the coarse
     inverted file bounds WHAT is scanned (the query's cell, exactly

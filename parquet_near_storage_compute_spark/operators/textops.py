@@ -714,7 +714,7 @@ def dedup_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-deriving the (doc, position, hash) stream — MEASURED faster than
     carrying collect_list(position) through the collapse (interleaved
     best-of-5 at sf0.1: 1.97 s vs 2.17 s; the array payload on every
-    collapsed row costs more than re-tokenizing, NOTES_r8 §13); a word
+    collapsed row costs more than re-tokenizing); a word
     is trimmed iff some dup window starts within the preceding W-1
     positions — a single rolling-max window pass, NOT a W× explode of
     covered spans.

@@ -372,7 +372,7 @@ def ewma_per_user(spark: SparkSession, sf_dir: str) -> DataFrame:
     summary rows. Per-task memory is therefore ≤ EWMA_CHUNK structs plus
     n/EWMA_CHUNK summaries, at any per-user event count.
 
-    Engine-exactness discipline (NOTES_r5): both engines run the
+    Engine-exactness discipline: both engines run the
     IDENTICAL op sequence — per-chunk ``list_reduce`` folds in event_id
     order, α = 0.5 an exact binary scale, decay (1−α)^n an exact power
     of two, and the stitch a sequential sum in chunk order — so the

@@ -638,9 +638,9 @@ def _bpe_loop(toks: DataFrame) -> tuple[list[tuple], DataFrame]:
     probe in the `_member_level_knn` / PQ-train class — 1 row regardless
     of corpus size) and the merge is applied as a LITERAL ``replace``
     projection, so each round costs exactly one eager job (the argmax
-    aggregate) instead of the r11 form's two (argmax localCheckpoint +
-    replace-crossJoin localCheckpoint): first-build construction measured
-    8.5 → 4.9 s fresh-session at sf0.1 (guide §5 driver latency; OPTIMIZATION_r12.md).
+    aggregate) instead of two (argmax localCheckpoint + replace-crossJoin
+    localCheckpoint): first-build construction fell from 8.5 to 4.9 s in
+    a fresh session at sf0.1.
     The lazy replace chain grows by one linear projection per round over
     the vocab-sized frame — round r's argmax re-runs r−1 string replaces,
     cheap against the pair-explode aggregate it feeds — and one final
@@ -705,12 +705,12 @@ def _bpe_loop(toks: DataFrame) -> tuple[list[tuple], DataFrame]:
 
 #: The merge loop (two eager checkpoints per round) was rebuilt by FOUR
 #: contracts — merges, encode, fertility, pack — at 3-4 s of construction
-#: each (BENCH_DETAIL plan_construction_sec, VERDICT r11 #3). One memoized
-#: training pass now serves them all: (per-round best frames, final vocab
-#: frame, persisted (doc_id, word) frame), over the FULL length ≥ 1
-#: vocabulary. bpe_merges historically trained on the length ≥ 2 subset;
-#: the trajectories are identical because 1-char words contribute no
-#: adjacent pairs (pinned independently of this code path by
+#: each. One memoized training pass now serves them all: (per-round best
+#: frames, final vocab frame, persisted (doc_id, word) frame), over the
+#: FULL length ≥ 1 vocabulary. bpe_merges historically trained on the
+#: length ≥ 2 subset; the trajectories are identical because 1-char
+#: words contribute no adjacent pairs (pinned independently of this code
+#: path by
 #: tests/test_bpe_lm_ivfpq.py::test_bpe_encode_trains_the_same_merges),
 #: so sharing the ≥ 1 loop changes no output.
 _BPE_MEMO = PlanMemo(tables=("documents",))

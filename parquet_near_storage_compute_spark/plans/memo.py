@@ -1,4 +1,4 @@
-"""Cross-query memoization of shared eager subframes (r12, VERDICT #3).
+"""Cross-query memoization of shared eager subframes.
 
 Several registered queries compose the SAME expensive subframe: the three
 cluster-level dedup contracts each rebuild the LSH candidate graph and
@@ -7,8 +7,7 @@ count() action per round); the four BPE consumers each re-run the merge
 loop (two eager checkpoints per round). Each query function must stay
 independently callable — the driver and the tests build queries fresh in
 any order — but within one session the repeated construction re-executes
-identical deterministic work, measured at 3-4 s per query in BENCH_DETAIL
-``plan_construction_sec``.
+identical deterministic work, 3-4 s of eager plan construction per query.
 
 ``PlanMemo`` hands every consumer the same DataFrame, keyed by
 (session, corpus identity, label):
@@ -35,6 +34,7 @@ it got a fresh or a shared frame except through construction latency.
 
 from __future__ import annotations
 
+import functools
 from collections import OrderedDict
 from collections.abc import Callable
 
@@ -85,6 +85,20 @@ class PlanMemo:
         while len(self._store) > _CAP:
             self._store.popitem(last=False)
         return df
+
+    def memoized(self, label: str) -> Callable:
+        """Decorator: a ``(spark, sf_dir) -> DataFrame`` query whose frame
+        is memoized under ``label``. ``get`` is looked up per call, so a
+        wrapper patched onto the class sees every memoized query."""
+
+        def deco(fn: Callable[[SparkSession, str], Any]) -> Callable:
+            @functools.wraps(fn)
+            def wrapped(spark: SparkSession, sf_dir: str) -> Any:
+                return self.get(spark, sf_dir, label, lambda: fn(spark, sf_dir))
+
+            return wrapped
+
+        return deco
 
     def clear(self) -> None:
         self._store.clear()

@@ -414,8 +414,9 @@ def python_datasource_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
     admission control, so Spark logs a fallback to single-batch execution:
     ONE microbatch spanning initialOffset → latestOffset (all row groups,
     read executor-parallel — 40 tasks at sf0.01), then stop. Equally
-    deterministic: the final memory-sink state equals the batch aggregate
-    over the whole file, which is what the oracle pins."""
+    deterministic: the folded complete-mode result (``_run_to_memory``)
+    equals the batch aggregate over the whole file, which is what the
+    oracle pins."""
     from pyspark.sql import functions as F
 
     from parquet_near_storage_compute_spark.streaming.stream_ops import (

@@ -2,11 +2,16 @@
 reference has no streaming at all; this is the engine-completeness layer).
 
 Pattern: file-source ``readStream`` over the same parquet tables →
-transformations → ``writeStream`` to a memory sink with
-``Trigger.AvailableNow`` — the batch-equivalent execution of a streaming
-query, which makes results deterministic and therefore DuckDB-oracle
-comparable. At scale the identical query runs against a live source
-(Kafka/files) with watermarked state eviction.
+transformations → one ``Trigger.AvailableNow`` run whose micro-batches
+``foreachBatch`` folds into a checkpointed frame (``_fold``) — the
+batch-equivalent execution of a streaming query, which makes results
+deterministic and therefore DuckDB-oracle comparable. The stateless and
+stateful-operator contracts fold the way a memory sink collects
+(``_run_to_memory``); the ingests fold each batch into their state with
+ordinary batch code (a MERGE, a near-duplicate admission). A call keeps
+nothing on disk but the split copy its file stream reads. At scale the
+identical query runs against a live source (Kafka/files) with
+watermarked state eviction.
 
 When the events table stores TIMESTAMP(NANOS), the stream reads the raw
 long (nanosAsLong) and rebuilds a microsecond timestamp, same as tables.py;
@@ -23,7 +28,7 @@ from collections.abc import Callable, Iterator
 
 import pandas as pd
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import Column, DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
@@ -39,35 +44,55 @@ from parquet_near_storage_compute_spark.tables import (
 _FMT = "yyyy-MM-dd HH:mm:ss"
 
 
-def _run_dir(kind: str) -> str:
-    """A fresh per-run directory (checkpoint or state generations)."""
-    return os.path.join(scratch_root(), kind, uuid.uuid4().hex[:12])
+def _fold(
+    stream: DataFrame,
+    step: Callable[[DataFrame | None, DataFrame, int], DataFrame],
+    mode: str = "append",
+) -> DataFrame:
+    """Run ``stream`` once under AvailableNow and fold its micro-batches:
+    ``foreachBatch`` hands each batch to ``step(acc, batch, batch_id)``
+    (``acc`` is None for the first batch), and the frame it returns is
+    ``localCheckpoint``-ed as the next ``acc``. Returns the last ``acc``,
+    or an empty frame of the stream's schema when no batch ran. The
+    result lives in Spark's block manager, which frees it with the frame,
+    and the query's checkpoint directory is removed once it ends: no call
+    resumes another.
 
+    Streaming plans can't use AQE's partition coalescing, so a default
+    200-partition shuffle runs 200 near-empty state tasks; pin a moderate
+    count for the query's scope and restore the caller's setting after.
+    The folded frame belongs to the micro-batch's session, a clone taken
+    when the query starts (so it runs with that shuffle width, AQE off)."""
+    spark = stream.sparkSession
+    acc = None
 
-def _publish_generation(
-    state: dict, run_dir: str, gen_id: int, df: DataFrame
-) -> None:
-    """Write ``df`` as generation ``gen_id`` under ``run_dir``, THEN point
-    ``state["path"]`` at it and remove the generation it supersedes: a
-    crashed write leaves the previous generation current, and a run keeps
-    one generation on disk."""
-    gen = os.path.join(run_dir, f"gen_{gen_id}")
-    df.write.mode("overwrite").parquet(gen)
-    previous, state["path"] = state["path"], gen
-    if previous is not None and previous != gen:
-        shutil.rmtree(previous, ignore_errors=True)
+    def each(batch: DataFrame, batch_id: int) -> None:
+        nonlocal acc
+        acc = step(acc, batch, batch_id).localCheckpoint()
 
-
-def _run_once(writer, ckpt: str) -> None:
-    """Start an AvailableNow query on ``ckpt``, wait for it, and remove the
-    checkpoint: every caller keeps its result elsewhere (memory sink or
-    state generations), and a later call never resumes from it."""
+    ckpt = os.path.join(scratch_root(), "checkpoints", uuid.uuid4().hex[:12])
+    key = "spark.sql.shuffle.partitions"
+    prev = spark.conf.get(key)
     try:
-        writer.option("checkpointLocation", ckpt).trigger(
-            availableNow=True
-        ).start().awaitTermination()
+        if int(prev) > 64:
+            spark.conf.set(key, "32")
+        stream.writeStream.foreachBatch(each).outputMode(mode).option(
+            "checkpointLocation", ckpt
+        ).trigger(availableNow=True).start().awaitTermination()
     finally:
+        spark.conf.set(key, prev)
         shutil.rmtree(ckpt, ignore_errors=True)
+    return acc if acc is not None else spark.createDataFrame([], stream.schema)
+
+
+def _split_stream(spark: SparkSession, src_dir: str) -> DataFrame:
+    """Stream the files of ``src_dir`` one per micro-batch, oldest first."""
+    schema = spark.read.parquet(src_dir).schema
+    return (
+        spark.readStream.schema(schema)
+        .option("maxFilesPerTrigger", "1")
+        .parquet(src_dir)
+    )
 
 
 def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -91,26 +116,16 @@ def _events_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def _run_to_memory(df: DataFrame, mode: str) -> DataFrame:
-    """Execute with AvailableNow into a memory sink; return the batch view.
+    """Run ``df`` to completion and return what a memory sink in ``mode``
+    would hold: complete mode keeps the last batch (each one is the whole
+    result table); append and update modes keep every batch's rows."""
 
-    Streaming plans can't use AQE's partition coalescing, so a default
-    200-partition shuffle runs 200 near-empty state tasks; pin a moderate
-    count for the query's scope and restore the caller's setting after."""
-    spark = df.sparkSession
-    ckpt = _run_dir("checkpoints")
-    name = f"mem_{os.path.basename(ckpt)}"
-    key = "spark.sql.shuffle.partitions"
-    prev = spark.conf.get(key)
-    try:
-        if int(prev) > 64:
-            spark.conf.set(key, "32")
-        _run_once(
-            df.writeStream.format("memory").queryName(name).outputMode(mode),
-            ckpt,
-        )
-    finally:
-        spark.conf.set(key, prev)
-    return spark.table(name)
+    def step(acc: DataFrame | None, batch: DataFrame, _: int) -> DataFrame:
+        if mode == "complete" or acc is None:
+            return batch
+        return acc.unionByName(batch)
+
+    return _fold(df, step, mode)
 
 
 def windowed_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -248,7 +263,7 @@ def stream_stream_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     time-range self-join and stays oracle-comparable.
 
     Output is the per-user attributed-pair count (aggregated post-join in
-    batch over the memory sink, keeping the streaming plan join-only —
+    batch over the folded pairs, keeping the streaming plan join-only —
     stream-stream join + streaming agg in one plan needs multiple stateful
     operators in append mode, a documented Structured Streaming limit).
     """
@@ -323,24 +338,21 @@ def session_windows(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming CDC apply via ``foreachBatch``: latest-wins upsert of each
-    micro-batch into a parquet state table — the incremental form of
+    micro-batch into the accumulated state — the incremental form of
     `relational_merge_upsert` and the standard way to run MERGE logic from
     Structured Streaming when the sink is a plain file format (foreachBatch
     hands every micro-batch to arbitrary BATCH DataFrame code on the
     driver, so the union+window merge runs per batch instead of per day).
 
-    Mechanics mirrored from production: the source is the events table
-    split across 4 files, streamed with ``maxFilesPerTrigger=1`` so the
-    merge genuinely executes 4 times incrementally; each merge writes a
-    NEW generation directory and only then moves the current-state pointer
-    and removes the superseded generation (``_publish_generation``: the
-    same publish-after-write discipline as the Python-datasource manifest
-    sink — a crashed batch leaves the previous generation intact).
-    Version counts accumulate through the merges, so the final
-    state must be identical to the one-shot batch merge over all events —
-    which is exactly what the DuckDB oracle computes. At 100 TB each merge
-    is one window shuffle of (state ∪ batch) on the merge key; partition
-    the state by that key and only touched partitions rewrite.
+    The source is the events table split across 4 files, streamed with
+    ``maxFilesPerTrigger=1`` so the merge genuinely executes 4 times
+    incrementally (``_fold``: each merged state is checkpointed and is
+    the next batch's input). Version counts accumulate through the
+    merges, so the final state must be identical to the one-shot batch
+    merge over all events — which is exactly what the DuckDB oracle
+    computes. At 100 TB each merge is one window shuffle of
+    (state ∪ batch) on the merge key; partition the state by that key
+    and only touched partitions rewrite.
     """
     from pyspark.sql import Window
 
@@ -351,42 +363,24 @@ def upsert_foreachbatch(spark: SparkSession, sf_dir: str) -> DataFrame:
         events.repartition(4).write.parquet(path)
 
     split_dir = derived_copy("upsert_src", (table_path(sf_dir, "events"),), split)
-    run_dir = _run_dir("upsert_state")
-    state = {"path": None}
+    latest = Window.partitionBy("user_id").orderBy(
+        F.col("ts").desc(), F.col("event_id").desc()
+    )
+    per_user = Window.partitionBy("user_id")
 
-    def _merge(batch: DataFrame, batch_id: int) -> None:
+    def merge(state: DataFrame | None, batch: DataFrame, _: int) -> DataFrame:
         batch = batch.select(*cols).withColumn(
             "n_versions", F.lit(1).cast("long")
         )
-        if state["path"] is not None:
-            prev = batch.sparkSession.read.parquet(state["path"])
-            merged = prev.unionByName(batch)
-        else:
-            merged = batch
-        w = Window.partitionBy("user_id").orderBy(
-            F.col("ts").desc(), F.col("event_id").desc()
-        )
-        wc = Window.partitionBy("user_id")
-        new_state = (
-            merged.withColumn("rn", F.row_number().over(w))
-            .withColumn("nv", F.sum("n_versions").over(wc))
+        merged = batch if state is None else state.unionByName(batch)
+        return (
+            merged.withColumn("rn", F.row_number().over(latest))
+            .withColumn("nv", F.sum("n_versions").over(per_user))
             .filter(F.col("rn") == 1)
-            .select(
-                "user_id", "event_id", "event_type", "value", "ts",
-                F.col("nv").alias("n_versions"),
-            )
+            .select(*cols, F.col("nv").alias("n_versions"))
         )
-        _publish_generation(state, run_dir, batch_id, new_state)
 
-    schema = spark.read.parquet(split_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(split_dir)
-    )
-    _run_once(stream.writeStream.foreachBatch(_merge), _run_dir("checkpoints"))
-    assert state["path"] is not None
-    return spark.read.parquet(state["path"]).select(
+    return _fold(_split_stream(spark, split_dir), merge).select(
         "user_id",
         F.col("event_id").alias("last_event_id"),
         F.col("event_type").alias("last_event_type"),
@@ -405,6 +399,51 @@ def _write_batches(src_dir: str, tables: list) -> None:
         path = os.path.join(src_dir, f"batch_{b}.parquet")
         pq.write_table(tbl, path)
         os.utime(path, (1_600_000_000 + b, 1_600_000_000 + b))
+
+
+def _admit(
+    state: DataFrame | None,
+    rows: DataFrame,
+    batch_id: int,
+    key: str,
+    bands: Callable[[DataFrame, str], DataFrame],
+    near: Callable[[str, str], Column],
+) -> DataFrame:
+    """One micro-batch of near-duplicate admission against the accepted
+    ``state`` (None before the first batch):
+
+      1. reject ``rows`` that share a band key with an accepted row and
+         are ``near`` it — candidates from the band equi-join, never all
+         pairs, verified exactly;
+      2. within the surviving rows, drop any row with a smaller-``key``
+         survivor passing the same test (batch-local min-wins);
+      3. append the survivors to the state with ``batch_no = batch_id``.
+
+    ``bands(df, pre)`` lists ``df``'s band keys as ``{pre}id``,
+    ``{pre}band`` and ``{pre}key`` plus what ``near(pre_a, pre_b)``, the
+    verify predicate between two prefixes, reads."""
+
+    def matched(a: DataFrame, b: DataFrame, smaller: bool) -> DataFrame:
+        """Ids of ``a`` rows near some ``b`` row they share a band with
+        (one with a smaller id when ``smaller``)."""
+        cond = (F.col("a_band") == F.col("b_band")) & (
+            F.col("a_key") == F.col("b_key")
+        )
+        if smaller:
+            cond &= F.col("b_id") < F.col("a_id")
+        return (
+            bands(a, "a_")
+            .join(bands(b, "b_"), cond)
+            .filter(near("a_", "b_"))
+            .select(F.col("a_id").alias(key))
+            .distinct()
+        )
+
+    if state is not None:
+        rows = rows.join(matched(rows, state, False), key, "left_anti")
+    accepted = rows.join(matched(rows, rows, True), key, "left_anti")
+    accepted = accepted.withColumn("batch_no", F.lit(batch_id).cast("int"))
+    return accepted if state is None else state.unionByName(accepted)
 
 
 #: Streaming perceptual ingest: pinned batch composition (id sets per
@@ -427,17 +466,10 @@ def phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming perceptual-dedup ingest — the streaming × modality
     bridge: micro-batches of image payloads arrive (file stream,
     ``maxFilesPerTrigger=1``, batch order pinned by file mtimes) and each
-    batch is admitted against the ACCEPTED perceptual state via
-    foreachBatch:
-
-      1. pHash the batch (one Arrow-batched mapInPandas pass);
-      2. reject rows whose hash lands within PHASH_HAMMING of any
-         accepted hash — candidates from the 4×16-bit bands (equi-join,
-         never all pairs), verified by exact Hamming;
-      3. within the surviving batch rows, drop any row with a
-         smaller-id survivor within PHASH_HAMMING (batch-local min-wins);
-      4. append the accepted rows to a NEW state generation dir, then
-         publish (write-then-move pointer, as `upsert_foreachbatch`).
+    batch is pHashed (one Arrow-batched mapInPandas pass) and admitted
+    against the ACCEPTED perceptual state (``_admit``): candidates from
+    the 4×16-bit bands, verified by exact Hamming distance
+    ≤ PHASH_HAMMING, then batch-local min-wins.
 
     This is `dedup_incremental`'s perceptual sibling: a crawler ingesting
     re-encoded copies of known assets does exactly this loop. At 100 TB
@@ -468,9 +500,6 @@ def phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src_dir = derived_copy("phash_ingest_src", (M.IMG_DEDUP_FIXTURE,), split)
-    run_dir = _run_dir("phash_state")
-    state: dict = {"path": None}
-    ham = M.PHASH_HAMMING
 
     def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         for pdf in batches:
@@ -495,60 +524,17 @@ def phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.expr(f"shiftright({pre}ph, 16 * {pre}band)").bitwiseAND(0xFFFF),
         )
 
-    def _ingest(batch: DataFrame, bid: int) -> None:
-        s = batch.sparkSession
+    def near(a: str, b: str) -> Column:
+        hamming = F.bit_count(F.col(f"{a}ph").bitwiseXOR(F.col(f"{b}ph")))
+        return hamming <= M.PHASH_HAMMING
+
+    def step(state: DataFrame | None, batch: DataFrame, bid: int) -> DataFrame:
         hashed = batch.select("img_id", "payload").mapInPandas(
             hash_batch, "img_id bigint, phash bigint"
         )
-        prev = (
-            s.read.parquet(state["path"]) if state["path"] is not None else None
-        )
-        if prev is not None:
-            hit = (
-                bands(hashed, "n_")
-                .join(
-                    bands(prev.select("img_id", "phash"), "s_"),
-                    (F.col("n_band") == F.col("s_band"))
-                    & (F.col("n_key") == F.col("s_key")),
-                )
-                .filter(
-                    F.bit_count(F.col("n_ph").bitwiseXOR(F.col("s_ph"))) <= ham
-                )
-                .select(F.col("n_id").alias("img_id"))
-                .distinct()
-            )
-            survivors = hashed.join(hit, "img_id", "left_anti")
-        else:
-            survivors = hashed
-        wb = (
-            bands(survivors, "a_")
-            .join(
-                bands(survivors, "b_"),
-                (F.col("a_band") == F.col("b_band"))
-                & (F.col("a_key") == F.col("b_key"))
-                & (F.col("b_id") < F.col("a_id")),
-            )
-            .filter(F.bit_count(F.col("a_ph").bitwiseXOR(F.col("b_ph"))) <= ham)
-            .select(F.col("a_id").alias("img_id"))
-            .distinct()
-        )
-        accepted = survivors.join(wb, "img_id", "left_anti").withColumn(
-            "batch_no", F.lit(bid).cast("int")
-        )
-        new_state = (
-            accepted if prev is None else prev.unionByName(accepted)
-        )
-        _publish_generation(state, run_dir, bid, new_state)
+        return _admit(state, hashed, bid, "img_id", bands, near)
 
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    _run_once(stream.writeStream.foreachBatch(_ingest), _run_dir("checkpoints"))
-    assert state["path"] is not None
-    return spark.read.parquet(state["path"]).select(
+    return _fold(_split_stream(spark, src_dir), step).select(
         "img_id", "phash", "batch_no"
     )
 
@@ -570,25 +556,17 @@ MINHASH_INGEST_J_NUM = 2
 
 def minhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Streaming MinHash admission — the TEXT sibling of
-    ``stream_phash_ingest``, closing the modality matrix's last asymmetry
-    (VERDICT r11 #4): images had stateful streaming admission, text
-    MinHash only the batch-vs-corpus ``dedup_incremental``. Micro-batches
-    of documents (file stream, ``maxFilesPerTrigger=1``, batch order
-    pinned by file mtimes, membership = doc_id % MINHASH_INGEST_BATCHES)
-    are admitted against the ACCEPTED signature state via foreachBatch:
-
-      1. MinHash the batch (the shared `_minhash_signatures` pipeline —
-         k=8 md5-sliced mins over distinct 3-word shingles) and build its
-         banded keys (`_bands`, 4 bands × 2 rows);
-      2. reject rows sharing ANY band hash with an accepted doc whose
-         exact shingle-Jaccard is ≥ 0.5 (banded state join → exact
-         verify on candidates only — the two-phase near-dup discipline,
-         never all pairs);
-      3. within the surviving batch rows, drop any row with a smaller-id
-         survivor passing the same band+Jaccard test (min-wins);
-      4. append the accepted rows (id, signature, shingle set) to a NEW
-         state generation dir, then publish (write-then-move pointer, as
-         `upsert_foreachbatch` / `phash_ingest`).
+    ``stream_phash_ingest``: images had stateful streaming admission,
+    text MinHash only the batch-vs-corpus ``dedup_incremental``.
+    Micro-batches of documents (file stream, ``maxFilesPerTrigger=1``,
+    batch order pinned by file mtimes, membership = doc_id %
+    MINHASH_INGEST_BATCHES) are MinHashed (the shared
+    `_minhash_signatures` pipeline — k=8 md5-sliced mins over distinct
+    3-word shingles, banded by `_bands`, 4 bands × 2 rows) and admitted
+    against the ACCEPTED signature state (``_admit``): a shared band hash
+    makes a candidate, an exact shingle-Jaccard ≥ 0.5 verifies it (the
+    two-phase near-dup discipline, never all pairs), then batch-local
+    min-wins.
 
     Documents with no 3-shingle (< 3 words) have no signature and no
     bands — they are admitted unconditionally, exactly as every batch
@@ -632,90 +610,36 @@ def minhash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
 
     src_dir = derived_copy("minhash_ingest_src", (docs,), split)
-    run_dir = _run_dir("minhash_state")
-    state: dict = {"path": None}
+    mh_cols = [f"mh{j}" for j in range(8)]
 
-    def _near(a_sets: str, b_sets: str):
-        inter = F.size(F.array_intersect(a_sets, b_sets)).cast("bigint")
+    def bands(df: DataFrame, pre: str) -> DataFrame:
+        signed = df.filter(F.col("mh0").isNotNull())
+        return _bands(signed.select("doc_id", "sset", *mh_cols), ("sset",)).select(
+            F.col("doc_id").alias(f"{pre}id"),
+            F.col("sset").alias(f"{pre}sset"),
+            F.col("band").alias(f"{pre}band"),
+            F.col("bh").alias(f"{pre}key"),
+        )
+
+    def near(a: str, b: str) -> Column:
+        inter = F.size(F.array_intersect(f"{a}sset", f"{b}sset")).cast("bigint")
         union = (
-            F.size(a_sets).cast("bigint")
-            + F.size(b_sets).cast("bigint")
+            F.size(f"{a}sset").cast("bigint")
+            + F.size(f"{b}sset").cast("bigint")
             - inter
         )
         return MINHASH_INGEST_J_NUM * inter >= union
 
-    def _ingest(batch: DataFrame, bid: int) -> None:
-        s = batch.sparkSession
-        sig = _minhash_signatures(batch)
+    def step(state: DataFrame | None, batch: DataFrame, bid: int) -> DataFrame:
         sets = batch.select(
             "doc_id",
             F.expr(f"array_distinct({shingles(words('text'), 3)}) AS sset"),
         )
-        cur = sets.join(sig, "doc_id", "left")  # shingle-less: null mh*
-        prev = (
-            s.read.parquet(state["path"]) if state["path"] is not None else None
-        )
-        mh_cols = [f"mh{j}" for j in range(8)]
+        # shingle-less documents get null mh* and no bands
+        rows = sets.join(_minhash_signatures(batch), "doc_id", "left")
+        return _admit(state, rows, bid, "doc_id", bands, near)
 
-        def _doc_bands(df: DataFrame, pre: str) -> DataFrame:
-            return _bands(
-                df.select("doc_id", "sset", *mh_cols), ("sset",)
-            ).select(
-                F.col("doc_id").alias(f"{pre}id"),
-                F.col("sset").alias(f"{pre}sset"),
-                F.col("band").alias(f"{pre}band"),
-                F.col("bh").alias(f"{pre}bh"),
-            )
-
-        if prev is not None:
-            hit = (
-                _doc_bands(cur.filter(F.col("mh0").isNotNull()), "n_")
-                .join(
-                    _doc_bands(prev.filter(F.col("mh0").isNotNull()), "s_"),
-                    (F.col("n_band") == F.col("s_band"))
-                    & (F.col("n_bh") == F.col("s_bh")),
-                )
-                .filter(_near("n_sset", "s_sset"))
-                .select(F.col("n_id").alias("doc_id"))
-                .distinct()
-            )
-            survivors = cur.join(hit, "doc_id", "left_anti")
-        else:
-            survivors = cur
-        sb = _doc_bands(survivors.filter(F.col("mh0").isNotNull()), "a_")
-        wb = (
-            sb.join(
-                sb.select(
-                    F.col("a_id").alias("b_id"),
-                    F.col("a_sset").alias("b_sset"),
-                    F.col("a_band").alias("b_band"),
-                    F.col("a_bh").alias("b_bh"),
-                ),
-                (F.col("a_band") == F.col("b_band"))
-                & (F.col("a_bh") == F.col("b_bh"))
-                & (F.col("b_id") < F.col("a_id")),
-            )
-            .filter(_near("a_sset", "b_sset"))
-            .select(F.col("a_id").alias("doc_id"))
-            .distinct()
-        )
-        accepted = survivors.join(wb, "doc_id", "left_anti").withColumn(
-            "batch_no", F.lit(bid).cast("int")
-        )
-        new_state = (
-            accepted if prev is None else prev.unionByName(accepted)
-        )
-        _publish_generation(state, run_dir, bid, new_state)
-
-    schema = spark.read.parquet(src_dir).schema
-    stream = (
-        spark.readStream.schema(schema)
-        .option("maxFilesPerTrigger", "1")
-        .parquet(src_dir)
-    )
-    _run_once(stream.writeStream.foreachBatch(_ingest), _run_dir("checkpoints"))
-    assert state["path"] is not None
-    return spark.read.parquet(state["path"]).select("doc_id", "batch_no")
+    return _fold(_split_stream(spark, src_dir), step).select("doc_id", "batch_no")
 
 
 QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {

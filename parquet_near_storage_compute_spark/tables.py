@@ -9,9 +9,11 @@ natively and reads footers at planning time (SURVEY.md §2.1 S1-S3, S7-S8).
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import hashlib
 import os
+import re
 import shutil
 import tempfile
 import threading
@@ -128,15 +130,21 @@ def scratch_root() -> str:
 
 
 def derived_copy_path(tag: str, sources: tuple[str, ...]) -> str:
-    """Where the copy ``tag`` of ``sources`` lives. The name hashes the tag
-    (which carries the layout's parameters) with the realpath and file
-    listing of every source (``listing_fingerprint``), so a source that
-    is rewritten, or a directory that gains, loses or rewrites a part,
-    maps to a new path and the stale copy is never read again."""
+    """Where the copy ``tag`` of ``sources`` lives:
+    ``{tag}_{sources digest}_{listing digest}``. The sources digest hashes
+    the realpath of every source; the listing digest hashes their file
+    listing (``listing_fingerprint``), so a source that is rewritten, or a
+    directory that gains, loses or rewrites a part, maps to a new path and
+    the stale copy is never read again."""
     real = tuple(os.path.realpath(s) for s in sources)
-    ident = repr((tag, listing_fingerprint("", (), real)))
-    digest = hashlib.sha1(ident.encode()).hexdigest()[:16]
-    return os.path.join(scratch_root(), f"{tag}_{digest}")
+    listing = listing_fingerprint("", (), real)
+    return os.path.join(
+        scratch_root(), f"{tag}_{_digest(real)}_{_digest(listing)}"
+    )
+
+
+def _digest(value: tuple) -> str:
+    return hashlib.sha1(repr(value).encode()).hexdigest()[:16]
 
 
 def derived_copy(
@@ -148,7 +156,11 @@ def derived_copy(
     published path is always complete and a failed build publishes
     nothing. When another process publishes a directory first, the
     rename fails and this process drops its own temporary; a file is
-    replaced by an identical one."""
+    replaced by an identical one.
+
+    A publish supersedes the copies of the same tag and sources built
+    from an older listing: they are removed. Temporary siblings are left
+    alone, since a build in flight cannot be told from a dead one."""
     path = derived_copy_path(tag, sources)
     if os.path.exists(path):
         return path
@@ -162,11 +174,21 @@ def derived_copy(
             if not os.path.isdir(path):
                 raise
     finally:
-        if os.path.isdir(tmp):
-            shutil.rmtree(tmp, ignore_errors=True)
-        elif os.path.exists(tmp):
-            os.remove(tmp)
+        _remove(tmp)
+    root, name = os.path.split(path)
+    older = re.compile(re.escape(name.rsplit("_", 1)[0]) + "_[0-9a-f]{16}")
+    for sibling in os.listdir(root):
+        if sibling != name and older.fullmatch(sibling):
+            _remove(os.path.join(root, sibling))
     return path
+
+
+def _remove(path: str) -> None:
+    if os.path.isdir(path):
+        shutil.rmtree(path, ignore_errors=True)
+    else:
+        with contextlib.suppress(FileNotFoundError):
+            os.remove(path)
 
 
 #: Session confs that change the schema Spark infers from the same footers
@@ -276,9 +298,9 @@ def local_literal_df(spark: SparkSession, rows: list, schema: str) -> DataFrame:
     relation whose EVERY action launches Python workers — measured
     0.4-0.5 s per noop run on the ≤20-row pagerank / MMR result frames
     and 1.2-2.4 s on the 6-branch BPE merge union, vs ~0.1 s for this
-    form (OPTIMIZATION_r12.md wave 4). Only for driver-computed literal
-    results bounded in the dozens of rows: each value becomes a plan
-    literal, so a corpus-sized list would explode the plan.
+    form. Only for driver-computed literal results bounded in the dozens
+    of rows: each value becomes a plan literal, so a corpus-sized list
+    would explode the plan.
 
     numPartitions=1 on the range seed (r13): the default
     ``spark.range(1)`` splits one row across defaultParallelism

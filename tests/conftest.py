@@ -72,3 +72,24 @@ def sf_dir() -> str:
 @pytest.fixture(scope="session")
 def sf_oracle_dir() -> str:
     return SF_ORACLE
+
+
+@pytest.fixture
+def fold_states(monkeypatch) -> list:
+    """Every accumulator ``streaming.stream_ops._fold`` folds during the
+    test, as ``(batch_id, rows)`` in fold order."""
+    from parquet_near_storage_compute_spark.streaming import stream_ops
+
+    states: list = []
+    fold = stream_ops._fold
+
+    def observed(stream, step, *args):
+        def watched(acc, batch, batch_id):
+            out = step(acc, batch, batch_id)
+            states.append((batch_id, out.collect()))
+            return out
+
+        return fold(stream, watched, *args)
+
+    monkeypatch.setattr(stream_ops, "_fold", observed)
+    return states

@@ -58,3 +58,31 @@ def test_rewritten_customer_rebuilds_buckets(spark, sf_dir, tmp_path):
     )
     pq.write_table(cust, table_path(corpus, "customer"))
     assert counts() == {"REWRITTEN": sum(before.values())}
+
+
+def test_builds_nothing_in_the_warehouse(spark, sf_dir, tmp_path, monkeypatch):
+    """The bucketed sides are derived copies under the scratch root,
+    registered as external tables: building them for a new corpus writes
+    nothing under ``spark.sql.warehouse.dir``."""
+    import os
+    import shutil
+    import tempfile
+    from urllib.parse import urlparse
+
+    from parquet_near_storage_compute_spark.tables import table_path
+
+    monkeypatch.setattr(tempfile, "tempdir", str(tmp_path / "tmp"))
+    os.makedirs(tempfile.tempdir)
+    corpus = tmp_path / "corpus"
+    corpus.mkdir()
+    for t in ("orders", "customer"):
+        shutil.copy(table_path(sf_dir, t), table_path(str(corpus), t))
+
+    warehouse = urlparse(spark.conf.get("spark.sql.warehouse.dir")).path
+
+    def listing() -> set:
+        return set(os.listdir(warehouse)) if os.path.isdir(warehouse) else set()
+
+    before = listing()
+    assert bucketed_colocated_join(spark, str(corpus)).count() > 0
+    assert listing() - before == set()

@@ -145,12 +145,53 @@ def test_key_covers_tag_and_listing(tmp_path, root):
     assert derived_copy_path("t", (str(src),)) != first
 
 
+def test_rewritten_source_supersedes_its_copy(tmp_path, root):
+    """Publishing the copy of a rewritten source drops the copy of its
+    previous listing; the same tag over another source keeps its own
+    copy, and a temporary sibling (a build that may still be running) is
+    left alone."""
+    src, other = tmp_path / "src.parquet", tmp_path / "other.parquet"
+    src.write_bytes(b"a")
+    other.write_bytes(b"a")
+
+    def build(path: str) -> None:
+        os.makedirs(path)
+
+    kept = derived_copy("t", (str(other),), build)
+    first = derived_copy("t", (str(src),), build)
+    building = f"{first}.0123456789ab.tmp"
+    os.makedirs(building)
+    src.write_bytes(b"bb")
+    second = derived_copy("t", (str(src),), build)
+    assert second != first
+    assert sorted(os.listdir(root)) == sorted(
+        os.path.basename(p) for p in (kept, second, building)
+    )
+
+
 def test_streaming_contracts_leave_no_checkpoint(spark, sf_dir, root):
-    """The memory-sink and foreachBatch contracts remove their checkpoint
-    once the query has finished; their results stay readable."""
+    """A streaming contract leaves nothing behind but the derived copy its
+    file stream reads: no checkpoint, no state and no temp view in the
+    session. Its result stays readable."""
     from parquet_near_storage_compute_spark.streaming import stream_ops
 
-    assert stream_ops.windowed_counts(spark, sf_dir).count() > 0
-    assert stream_ops.upsert_foreachbatch(spark, sf_dir).count() > 0
-    ckpts = os.path.join(root, "checkpoints")
-    assert not os.path.isdir(ckpts) or os.listdir(ckpts) == []
+    def temp_views() -> set:
+        return {t.name for t in spark.catalog.listTables() if t.isTemporary}
+
+    os.makedirs(root)
+    for contract, copy in [
+        (stream_ops.windowed_counts, None),
+        (stream_ops.upsert_foreachbatch, ("upsert_src", "events")),
+        (stream_ops.minhash_ingest, ("minhash_ingest_src", "documents")),
+    ]:
+        views, before = temp_views(), set(os.listdir(root))
+        assert contract(spark, sf_dir).count() > 0
+        assert temp_views() == views, contract.__name__
+        expect = set()
+        if copy is not None:
+            tag, table = copy
+            path = derived_copy_path(tag, (table_path(sf_dir, table),))
+            expect.add(os.path.basename(path))
+        new = set(os.listdir(root)) - before - {"checkpoints"}
+        assert new == expect, contract.__name__
+        assert os.listdir(os.path.join(root, "checkpoints")) == []

@@ -6,23 +6,21 @@ admission; text MinHash had only the batch-vs-corpus dedup_incremental).
 Micro-batches (membership doc_id % MINHASH_INGEST_BATCHES, order pinned
 by file mtimes) are admitted against the accepted-signature state via
 foreachBatch: banded state join → exact shingle-Jaccard verify (2·|A∩B| ≥
-|A∪B|, integer algebra) → within-batch min-wins → write-then-publish
-state generations. The DuckDB oracle replays the admission SEQUENTIALLY
-with a recursive CTE over a member-level band+Jaccard pair table.
+|A∪B|, integer algebra) → within-batch min-wins, and the new state is
+the next batch's input. The DuckDB oracle replays the admission
+SEQUENTIALLY with a recursive CTE over a member-level band+Jaccard pair
+table.
 
 Beyond the full-parity compares (committed corpus + planted corpus),
 this file pins: the batch partition, both rejection branches firing, the
-shingle-less-document admission rule, and the generation-dir publishing
-protocol."""
+shingle-less-document admission rule, and the per-batch fold of the
+accepted state."""
 
 from __future__ import annotations
-
-import os
 
 import duckdb
 
 from parquet_near_storage_compute_spark.streaming import stream_ops as SO
-from parquet_near_storage_compute_spark.tables import scratch_root
 from tests.oracle import compare
 
 
@@ -103,32 +101,15 @@ def test_planted_branches_and_oracle(spark, tmp_path):
     assert got.get(3) == 3
 
 
-def test_generation_dirs_publish_monotonically(spark, sf_dir, monkeypatch):
-    """The state protocol: each batch writes gen_<b> COMPLETELY before the
-    pointer moves (write-then-publish) and the superseded generation goes.
-    Every batch publishes, row counts grow monotonically, the final
-    generation IS the returned frame, and it is the only one left."""
-    published = []
-    publish = SO._publish_generation
-
-    def observed(state, run_dir, gen_id, df):
-        publish(state, run_dir, gen_id, df)
-        rows = spark.read.parquet(state["path"]).collect()
-        published.append((os.path.basename(state["path"]), rows))
-
-    monkeypatch.setattr(SO, "_publish_generation", observed)
-    state_root = os.path.join(scratch_root(), "minhash_state")
-    before = set(os.listdir(state_root)) if os.path.isdir(state_root) else set()
-    result = SO.minhash_ingest(spark, sf_dir)
-    runs = set(os.listdir(state_root)) - before
-    assert len(runs) == 1
-    run_dir = os.path.join(state_root, runs.pop())
-    gens = [g for g, _ in published]
-    assert gens == [f"gen_{b}" for b in range(SO.MINHASH_INGEST_BATCHES)]
-    assert os.listdir(run_dir) == [gens[-1]]
-    counts = [len(rows) for _, rows in published]
+def test_fold_states_grow_monotonically(spark, sf_dir, fold_states):
+    """The state protocol: every micro-batch folds one admission into the
+    accepted state. Row counts grow monotonically, each state holds only
+    batches ≤ its own number, and the last state IS the returned frame."""
+    result = SO.minhash_ingest(spark, sf_dir).collect()
+    assert [b for b, _ in fold_states] == list(range(SO.MINHASH_INGEST_BATCHES))
+    counts = [len(rows) for _, rows in fold_states]
     assert counts == sorted(counts)
-    assert counts[-1] == result.count()
-    # each generation holds only batches ≤ its own number
-    for b, (_, rows) in enumerate(published):
+    for b, rows in fold_states:
         assert all(r.batch_no <= b for r in rows)
+    final = sorted((r.doc_id, r.batch_no) for r in fold_states[-1][1])
+    assert final == sorted((r.doc_id, r.batch_no) for r in result)

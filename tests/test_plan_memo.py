@@ -41,3 +41,29 @@ def test_unfingerprintable_corpus_is_never_cached(spark, tmp_path):
     for sf_dir in ("s3a://bucket/sf", f"{tmp_path}/sf*", str(tmp_path / "none")):
         assert _get_counting_builds(memo, spark, sf_dir) == 1
         assert _get_counting_builds(memo, spark, sf_dir) == 1
+
+
+def test_memoized_query_goes_through_the_class_get(spark, tmp_path, monkeypatch):
+    """A ``memoized`` query shares one frame per corpus, and it calls
+    ``get`` as looked up at call time: a wrapper patched onto the class
+    (as a tracer counting memo hits does) sees every call."""
+    _documents(str(tmp_path), 3)
+    memo = PlanMemo(tables=("documents",))
+    builds, gets = [], []
+
+    @memo.memoized("label")
+    def query(spark, sf_dir):
+        """The query's own docstring."""
+        builds.append(sf_dir)
+        return object()
+
+    get = PlanMemo.get
+
+    def counted(self, *args):
+        gets.append(args[2])
+        return get(self, *args)
+
+    monkeypatch.setattr(PlanMemo, "get", counted)
+    assert query(spark, str(tmp_path)) is query(spark, str(tmp_path))
+    assert builds == [str(tmp_path)] and gets == ["label", "label"]
+    assert query.__doc__ == "The query's own docstring."

@@ -92,8 +92,9 @@ BNLJ_WHITELIST = {
 
 _QUERIES = all_queries()
 
-#: Streaming queries execute on build (memory sink), so exclude them from
-#: the plan-text audit — their batch twins are covered.
+#: Streaming queries execute on build (their micro-batches are folded into
+#: a checkpointed frame), so exclude them from the plan-text audit — their
+#: batch twins are covered.
 _SKIP = {
     "stream_windowed_counts",
     "stream_stateful_user_stats",

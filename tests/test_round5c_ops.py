@@ -421,31 +421,27 @@ def test_incremental_ingest_categories_partition_the_batch(spark, sf_dir):
 
 
 # -------------------------------------------------- streaming CDC upsert
-def test_stream_upsert_runs_incrementally_and_matches_batch(spark, sf_dir):
+def test_stream_upsert_runs_incrementally_and_matches_batch(
+    spark, sf_dir, fold_states
+):
     """The foreachBatch merge must (a) actually execute once per source
-    file (4 batches, so the last generation is gen_3 — not one big batch;
-    each publish removes the generation it supersedes) and (b) converge to
+    file (4 folded batches — not one big batch — over a state that never
+    shrinks, the last of which is the returned frame) and (b) converge to
     the one-shot batch merge (relational_merge_upsert)."""
     from parquet_near_storage_compute_spark.streaming import stream_ops
-    from parquet_near_storage_compute_spark.tables import scratch_root
 
-    state_root = os.path.join(scratch_root(), "upsert_state")
-    before = set(os.listdir(state_root)) if os.path.isdir(state_root) else set()
     out = stream_ops.upsert_foreachbatch(spark, sf_dir)
     batch = merge_upsert(spark, sf_dir)
     assert out.count() == batch.count()
     assert out.exceptAll(batch).count() == 0
 
-    # THIS call's uuid dir, not newest-by-mtime — a concurrent process
-    # (e.g. a parallel oracle sweep) may be writing its own state dirs
-    new_dirs = set(os.listdir(state_root)) - before
-    assert len(new_dirs) == 1, new_dirs
-    gens = sorted(
-        d
-        for d in os.listdir(os.path.join(state_root, new_dirs.pop()))
-        if d.startswith("gen_")
+    assert [b for b, _ in fold_states] == [0, 1, 2, 3]
+    counts = [len(rows) for _, rows in fold_states]
+    assert counts == sorted(counts)
+    final = sorted((r.user_id, r.event_id, r.n_versions) for r in fold_states[-1][1])
+    assert final == sorted(
+        (r.user_id, r.last_event_id, r.n_versions) for r in out.collect()
     )
-    assert gens == ["gen_3"], gens
 
 
 # -------------------------------------------------------------- compaction

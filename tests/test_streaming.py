@@ -1,5 +1,6 @@
 """Structured Streaming: file source → watermark/window/stateful →
-memory sink (AvailableNow), checked against batch equivalents."""
+micro-batches folded through foreachBatch (AvailableNow), checked
+against batch equivalents."""
 
 from __future__ import annotations
 
@@ -89,7 +90,7 @@ def test_stream_stream_join_equals_batch(spark, sf_dir):
 
 
 def test_file_sink_checkpoint_exactly_once(spark, sf_dir, tmp_path):
-    """Production property the memory-sink contracts don't cover: a
+    """Production property the folded contracts don't cover: a
     checkpointed parquet file sink is exactly-once across restarts — a
     second AvailableNow run over the SAME source with the SAME checkpoint
     must be a no-op (no duplicate output rows), because the checkpoint
