@@ -33,6 +33,7 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from parquet_near_storage_compute_spark.functions.sql import sql_double
 from parquet_near_storage_compute_spark.functions.text import (
     attach_minhash,
     band_hash,
@@ -40,11 +41,7 @@ from parquet_near_storage_compute_spark.functions.text import (
     shingles,
     words,
 )
-from parquet_near_storage_compute_spark.functions.vectors import (
-    as_double,
-    dot,
-    norm,
-)
+from parquet_near_storage_compute_spark.functions.vectors import dot, lsh_bucket
 from parquet_near_storage_compute_spark.plans.memo import PlanMemo
 from parquet_near_storage_compute_spark.tables import fan_out, load_table
 
@@ -536,7 +533,7 @@ def lsh_overflow(spark: SparkSession, sf_dir: str) -> DataFrame:
     at every tested SF; at 100 TB this is the report a pipeline operator
     reads to route mega-buckets to cluster-level dedup instead of pairs.
     Not a registered contract (nothing to hash at small SF) — exercised by
-    tests/test_skew.py with an adversarial fixture."""
+    tests/test_lsh_hot_bucket.py with an adversarial fixture."""
     docs = load_table(spark, sf_dir, "documents")
     buckets = _banded_buckets(_bands(_minhash_signatures(docs)), ["band", "bh"])
     return buckets.filter(F.col("n_docs") > LSH_BUCKET_CAP).select(
@@ -931,29 +928,31 @@ def simhash(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Embedding near-dup: cosine ≥ 0.4 pairs. Small-scale: all pairs; the
-    scale path is the sign-LSH blocked variant in similarity.py (same cosine
-    kernel)."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    # precompute norms per vector (O(n)) instead of inside every pair (O(n²))
-    v = fan_out(emb).select(
-        "vec_id",
-        F.expr(f"{as_double('embedding')} AS v"),
-    ).withColumn("nrm", F.expr(norm("v")))
-    a = v.select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"), F.col("nrm").alias("na")
-    )
-    b = v.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"), F.col("nrm").alias("nb")
-    )
-    pairs = a.join(b, F.col("vec_a") < F.col("vec_b"))
-    cos = F.expr(dot("va", "vb")) / (F.col("na") * F.col("nb"))
+def _embedding_pairs(v: DataFrame, block: str | None = None) -> DataFrame:
+    """Pairs vec_a < vec_b of `similarity._vectors` rows with cosine ≥ 0.4,
+    in (vec_a, vec_b) order; equi-joined on the column `block` when one is
+    given. Norms come precomputed per vector (O(n)), not per pair (O(n²))."""
+
+    def side(s: str) -> DataFrame:
+        cols = [f"vec_id AS vec_{s}", f"v AS v{s}", f"nrm AS n{s}"]
+        return v.selectExpr(*cols, *([f"{block} AS b{s}"] if block else []))
+
+    on = "vec_a < vec_b" if block is None else "(ba = bb) AND (vec_a < vec_b)"
     return (
-        pairs.select("vec_a", "vec_b", cos.alias("cos_sim"))
-        .filter(F.col("cos_sim") >= 0.4)
+        side("a")
+        .join(side("b"), F.expr(on))
+        .selectExpr("vec_a", "vec_b", f"({dot('va', 'vb')} / (na * nb)) AS cos_sim")
+        .where(f"cos_sim >= {sql_double(0.4)}")
         .orderBy("vec_a", "vec_b")
     )
+
+
+def embedding_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Embedding near-dup: cosine ≥ 0.4 pairs. Small-scale: all pairs; the
+    scale path is the sign-LSH blocked variant below (same cosine kernel)."""
+    from parquet_near_storage_compute_spark.operators.similarity import _vectors
+
+    return _embedding_pairs(_vectors(spark, sf_dir))
 
 
 def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -963,31 +962,13 @@ def embedding_neardup_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     them). Same cosine kernel and threshold as dedup_embedding."""
     from parquet_near_storage_compute_spark.operators.similarity import (
         _PLANES,
+        _vectors,
     )
-    from parquet_near_storage_compute_spark.functions.vectors import lsh_bucket
 
-    emb = load_table(spark, sf_dir, "embeddings")
-    v = (
-        fan_out(emb)
-        .select("vec_id", F.expr(f"{as_double('embedding')} AS v"))
-        .withColumn("nrm", F.expr(norm("v")))
-        .withColumn("bucket", F.expr(lsh_bucket("v", _PLANES)))
+    v = _vectors(spark, sf_dir).selectExpr(
+        "*", f"{lsh_bucket('v', _PLANES)} AS bucket"
     )
-    a = v.select(
-        F.col("vec_id").alias("vec_a"), F.col("v").alias("va"),
-        F.col("nrm").alias("na"), F.col("bucket").alias("ba"),
-    )
-    b = v.select(
-        F.col("vec_id").alias("vec_b"), F.col("v").alias("vb"),
-        F.col("nrm").alias("nb"), F.col("bucket").alias("bb"),
-    )
-    pairs = a.join(b, (F.col("ba") == F.col("bb")) & (F.col("vec_a") < F.col("vec_b")))
-    cos = F.expr(dot("va", "vb")) / (F.col("na") * F.col("nb"))
-    return (
-        pairs.select("vec_a", "vec_b", cos.alias("cos_sim"))
-        .filter(F.col("cos_sim") >= 0.4)
-        .orderBy("vec_a", "vec_b")
-    )
+    return _embedding_pairs(v, "bucket")
 
 
 def incremental_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:

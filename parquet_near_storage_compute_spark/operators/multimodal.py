@@ -432,11 +432,17 @@ def phash64(img) -> int:
     return int(sum(1 << i for i, v in enumerate(ac) if v > med))
 
 
-def _hash_neardup_decisions(
-    hashed: DataFrame, id_col: str, hash_col: str, hamming_max: int
-) -> DataFrame:
-    """Single-hash view of `_sig_neardup_decisions` (images, audio)."""
-    return _sig_neardup_decisions(hashed, id_col, [hash_col], hamming_max)
+def phash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
+    """mapInPandas kernel of the image hashing pass: (img_id, payload)
+    batches in, (img_id, phash) out (`dedup_image_phash`,
+    `stream_phash_ingest`)."""
+    for pdf in batches:
+        yield pd.DataFrame(
+            {
+                "img_id": pdf["img_id"],
+                "phash": pdf["payload"].map(lambda p: phash64(decode_image(p))),
+            }
+        )
 
 
 def _sig_neardup_decisions(
@@ -632,21 +638,10 @@ def image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     ensure_engine_confs(spark)
     imgs = fan_out(spark.read.parquet(IMG_DEDUP_FIXTURE))
 
-    def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "img_id": pdf["img_id"],
-                    "phash": pdf["payload"].map(
-                        lambda p: phash64(decode_image(p))
-                    ),
-                }
-            )
-
     ph = imgs.select("img_id", "payload").mapInPandas(
-        hash_batch, "img_id bigint, phash bigint"
+        phash_batch, "img_id bigint, phash bigint"
     )
-    return _hash_neardup_decisions(ph, "img_id", "phash", PHASH_HAMMING)
+    return _sig_neardup_decisions(ph, "img_id", ["phash"], PHASH_HAMMING)
 
 
 AUDIO_DEDUP_FIXTURE = _os.path.join(
@@ -729,7 +724,7 @@ def audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Per-clip fingerprints run as one Arrow-batched mapInPandas pass
     (stdlib WAV decode via `decode_audio` + numpy band energies); then
-    the shared `_hash_neardup_decisions` algebra: distinct-fingerprint
+    the shared `_sig_neardup_decisions` algebra: distinct-fingerprint
     value collapse → 4×16-bit banded candidates → exact Hamming ≤
     AUDIO_FP_HAMMING → exact member-level reconstruction.  The DuckDB
     oracle is the brute member-level definition — hex → nibble-list PCM16
@@ -761,7 +756,7 @@ def audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     hashed = clips.select("clip_id", "payload").mapInPandas(
         hash_batch, "clip_id bigint, fp bigint"
     )
-    return _hash_neardup_decisions(hashed, "clip_id", "fp", AUDIO_FP_HAMMING)
+    return _sig_neardup_decisions(hashed, "clip_id", ["fp"], AUDIO_FP_HAMMING)
 
 
 VID_DEDUP_FIXTURE = _os.path.join(

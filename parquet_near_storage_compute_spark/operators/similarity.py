@@ -1,8 +1,12 @@
 """Similarity search over the ``embeddings`` table (north-star extension).
 
-- Brute-force cosine top-k: the correctness baseline. Query set broadcast,
-  candidates streamed — one pass over the big side, per-group heap via
-  window row_number.
+- The top-k family (``sim_topk_*``): a block key picks each query's
+  candidates (none for the brute-force and quantized flat scans, a
+  sign-LSH bucket, an IVF cell), and one exact step ranks them. Every
+  variant builds its scored pairs with `_pairs` (broadcast queries, the
+  query itself excluded, an equi-join on the block key) and ranks through
+  `_topk`, the family's one ranking rule: per query, the best TOP_K by
+  (score desc, cand_id). Variants differ only in their frames and score.
 - Sign-LSH bucketed ANN: the scale path. Bucket assignment is a pure per-row
   expression against constant ±1 hyperplanes (functions/vectors.py), so at
   100 TB it's a narrow map + one equi-join on (bucket) instead of a cross
@@ -66,60 +70,83 @@ def _vectors(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def _pairs(
+    q: DataFrame,
+    c: DataFrame,
+    carry: dict[str, str],
+    score_sql: str,
+    score: str,
+    block: str | None = None,
+) -> DataFrame:
+    """The scored (query_id, cand_id, score) pairs of a top-k variant: the
+    N_QUERIES query rows of `q` broadcast against the rows of `c`, the
+    query itself excluded. `carry` maps a short name to a column both
+    frames hold; the query side carries it as ``q<name>``, the candidate
+    side as ``c<name>``, and `score_sql` reads those. `block`, a carried
+    name, makes the pairing an equi-join on it (an LSH bucket, an IVF
+    cell) instead of a broadcast nested loop."""
+
+    def side(df: DataFrame, key: str, p: str) -> DataFrame:
+        return df.selectExpr(
+            f"vec_id AS {key}", *(f"{col} AS {p}{n}" for n, col in carry.items())
+        )
+
+    on = "query_id != cand_id"
+    if block is not None:
+        on = f"(q{block} = c{block}) AND ({on})"
+    return (
+        side(q.where(f"vec_id < {N_QUERIES}"), "query_id", "q")
+        .hint("broadcast")
+        .join(side(c, "cand_id", "c"), F.expr(on))
+        .selectExpr("query_id", "cand_id", f"{score_sql} AS {score}")
+    )
+
+
+def _topk(scored: DataFrame, score: str, k: int = TOP_K) -> DataFrame:
+    """The top-k family's one ranking rule: per query, the k candidates
+    with the highest `score`, ties broken by cand_id, ranked 1..k as INT."""
+    return (
+        scored.selectExpr(
+            "*",
+            f"row_number() OVER (PARTITION BY query_id ORDER BY {score} DESC, cand_id) AS rk",
+        )
+        .where(f"rk <= {k}")
+        .selectExpr("query_id", "cand_id", score, "CAST(rk AS INT) AS rk")
+    )
+
+
+#: The exact cosine over carried vectors ``v`` and norms ``n``.
+_COS_CARRY = {"v": "v", "n": "nrm"}
+_PAIR_COS = f"({dot('qv', 'cv')} / (qn * cn))"
+
+#: The quantized variants' integer cosine over carried integer codes ``c``
+#: (SQ8 codes, PQ lattice or reconstructed codes) and their exact norms²
+#: ``n2``: an exact BIGINT dot, one double division, so the oracle matches
+#: bit for bit. A zero vector scores -2.0, below every real cosine, where
+#: 0/0 would be NaN and sort first.
+_PAIR_ICOS = (
+    "CASE WHEN qn2 = 0 OR cn2 = 0 THEN -2.0D ELSE "
+    "CAST(aggregate(zip_with(qc, cc, (_x, _y) -> CAST(_x AS BIGINT) * _y), "
+    "0L, (_acc, _v) -> _acc + _v) AS DOUBLE) "
+    "/ sqrt(CAST(qn2 AS DOUBLE) * CAST(cn2 AS DOUBLE)) END"
+)
+
+
 @_SIM_MEMO.memoized("topk_bruteforce")
 def topk_bruteforce(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Exact cosine top-k: for each query vector, the k nearest others."""
+    """Exact cosine top-k: for each query vector, the k nearest others
+    (every pair scored, ranked through `_topk`)."""
     v = _vectors(spark, sf_dir)
-    q = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
-    c = v.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            (F.expr(dot("qv", "cv")) / (F.col("qn") * F.col("cn"))).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "cand_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "cand_id", "cos_sim", F.col("rk").cast("int").alias("rk"))
-    )
+    return _topk(_pairs(v, v, _COS_CARRY, _PAIR_COS, "cos_sim"), "cos_sim")
 
 
 def topk_lsh(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ANN via sign-LSH blocking: candidates share the query's bucket; top-k
     by exact cosine within the bucket (recall < 1, cost « brute force)."""
     v = _vectors(spark, sf_dir).selectExpr("*", f"{lsh_bucket('v', _PLANES)} AS bucket")
-    q = v.where(f"vec_id < {N_QUERIES}").selectExpr(
-        "vec_id AS query_id", "v AS qv", "nrm AS qn", "bucket AS qb"
-    )
-    c = v.selectExpr("vec_id AS cand_id", "v AS cv", "nrm AS cn", "bucket AS cb")
-    scored = (
-        q.hint("broadcast")
-        .join(c, F.expr("(qb = cb) AND (query_id != cand_id)"))
-        .selectExpr("query_id", "cand_id", f"({dot('qv', 'cv')} / (qn * cn)) AS cos_sim")
-    )
-    return (
-        scored.selectExpr(
-            "*", "row_number() OVER (PARTITION BY query_id ORDER BY cos_sim DESC, cand_id) AS rk"
-        )
-        .where(f"rk <= {TOP_K}")
-        .selectExpr("query_id", "cand_id", "cos_sim", "CAST(rk AS INT) AS rk")
-    )
+    carry = {**_COS_CARRY, "b": "bucket"}
+    scored = _pairs(v, v, carry, _PAIR_COS, "cos_sim", block="b")
+    return _topk(scored, "cos_sim")
 
 
 def topk_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -129,7 +156,7 @@ def topk_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     collected once (tiny), shipped in the closure, and each Arrow batch of
     candidates is scored as one BLAS matmul — per-row Python cost ~zero.
     Per-batch local top-k keeps the shuffle to (batches × queries × k) rows;
-    a final window pass merges. Same results as topk_bruteforce (modulo
+    `_topk` merges them. Same results as topk_bruteforce (modulo
     float summation order, far below comparison epsilon).
     """
     import numpy as np
@@ -172,12 +199,11 @@ def topk_numpy(spark: SparkSession, sf_dir: str) -> DataFrame:
     scored = fan_out(emb).select("vec_id", "embedding").mapInPandas(
         score, "query_id bigint, cand_id bigint, cos_sim double"
     )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "cand_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "cand_id", "cos_sim", F.col("rk").cast("int").alias("rk"))
-    )
+    return _topk(scored, "cos_sim")
+
+
+#: What the SQ8 variants carry into `_PAIR_ICOS`.
+_SQ8_CARRY = {"c": "code", "n2": "n2"}
 
 
 def _sq8_codes(v: DataFrame) -> DataFrame:
@@ -228,56 +254,14 @@ def topk_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Scoring is exact integer work over the codes (see `_sq8_codes`), so
     unlike every float ANN variant the DuckDB oracle matches bit-for-bit
-    — including rank ties, broken deterministically by (score desc,
-    cand_id). Recall vs exact float cosine is fixture-measured in
+    — including rank ties, which `_topk` breaks deterministically by
+    cand_id. Recall vs exact float cosine is fixture-measured in
     tests/test_sq8_topk.py (28/30 = 93% at sf0.001 — the misses are
     neighbours whose exact-cosine gap is inside SQ8's ~1e-2 relative
     quantization error, the standard SQ8 trade)."""
-    v = _vectors(spark, sf_dir).select("vec_id", "v")
-    codes = _sq8_codes(v)
-    q = codes.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("code").alias("qc"),
-        F.col("n2").alias("qn2"),
-    )
-    c = codes.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("code").alias("cc"),
-        F.col("n2").alias("cn2"),
-    )
-    idot = F.expr(
-        "aggregate(zip_with(qc, cc, (a, b) -> CAST(a AS BIGINT) * b), "
-        "0L, (acc, x) -> acc + x)"
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.when(
-                (F.col("qn2") == 0) | (F.col("cn2") == 0), F.lit(-2.0)
-            )
-            .otherwise(
-                idot.cast("double")
-                / F.sqrt(
-                    F.col("qn2").cast("double") * F.col("cn2").cast("double")
-                )
-            )
-            .alias("cos_sq8"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sq8").desc(), "cand_id"
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id", "cand_id", "cos_sq8", F.col("rk").cast("int").alias("rk")
-        )
-    )
+    codes = _sq8_codes(_vectors(spark, sf_dir).select("vec_id", "v"))
+    scored = _pairs(codes, codes, _SQ8_CARRY, _PAIR_ICOS, "cos_sq8")
+    return _topk(scored, "cos_sq8")
 
 
 def _label_centroids(emb: DataFrame) -> DataFrame:
@@ -371,34 +355,9 @@ def topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     # persisted (r7): both join sides consume the assignment — without the
     # cache each side re-scans the corpus and re-runs the codebook pass
     assigned = _ranked_cells(emb).select("vec_id", "v", "nrm", "cell").persist()
-
-    q = assigned.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-        F.col("cell").alias("qcell"),
-    )
-    c = assigned.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
-        F.col("cell").alias("ccell"),
-    )
-    scored = (
-        F.broadcast(q)
-        .join(c, (F.col("qcell") == F.col("ccell")) & (F.col("query_id") != F.col("cand_id")))
-        .select(
-            "query_id",
-            "cand_id",
-            (F.expr(dot("qv", "cv")) / (F.col("qn") * F.col("cn"))).alias("cos_sim"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "cand_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("query_id", "cand_id", "cos_sim", F.col("rk").cast("int").alias("rk"))
-    )
+    carry = {**_COS_CARRY, "cell": "cell"}
+    scored = _pairs(assigned, assigned, carry, _PAIR_COS, "cos_sim", block="cell")
+    return _topk(scored, "cos_sim")
 
 
 @_SIM_MEMO.memoized("topk_ivf_sq8")
@@ -427,52 +386,9 @@ def topk_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(assigned.select("vec_id", "cell"), "vec_id")
         .persist()
     )
-    q = codes.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("code").alias("qc"),
-        F.col("n2").alias("qn2"),
-        F.col("cell").alias("qcell"),
-    )
-    c = codes.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("code").alias("cc"),
-        F.col("n2").alias("cn2"),
-        F.col("cell").alias("ccell"),
-    )
-    idot = F.expr(
-        "aggregate(zip_with(qc, cc, (a, b) -> CAST(a AS BIGINT) * b), "
-        "0L, (acc, x) -> acc + x)"
-    )
-    scored = (
-        F.broadcast(q)
-        .join(
-            c,
-            (F.col("qcell") == F.col("ccell"))
-            & (F.col("query_id") != F.col("cand_id")),
-        )
-        .select(
-            "query_id",
-            "cand_id",
-            F.when((F.col("qn2") == 0) | (F.col("cn2") == 0), F.lit(-2.0))
-            .otherwise(
-                idot.cast("double")
-                / F.sqrt(
-                    F.col("qn2").cast("double") * F.col("cn2").cast("double")
-                )
-            )
-            .alias("cos_sq8"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sq8").desc(), "cand_id"
-    )
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id", "cand_id", "cos_sq8", F.col("rk").cast("int").alias("rk")
-        )
-    )
+    carry = {**_SQ8_CARRY, "cell": "cell"}
+    scored = _pairs(codes, codes, carry, _PAIR_ICOS, "cos_sq8", block="cell")
+    return _topk(scored, "cos_sq8")
 
 
 def bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -490,16 +406,7 @@ def label_centroid_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-label centroid (element-wise mean), then each vector's cosine to
     its own centroid, averaged per label — IVF-style coarse structure."""
     emb = load_table(spark, sf_dir, "embeddings")
-    v = emb.select("vec_id", "label", F.posexplode(F.expr(as_double("embedding"))))
-    cent = (
-        v.groupBy("label", "pos")
-        .agg(F.avg("col").alias("c"))
-        .groupBy("label")
-        .agg(F.array_sort(F.collect_list(F.struct("pos", "c"))).alias("pc"))
-        .select(
-            "label", F.transform("pc", lambda x: x.getField("c")).alias("centroid")
-        )
-    )
+    cent = _label_centroids(emb).selectExpr("cell AS label", "centroid")
     vv = emb.select("vec_id", "label", F.expr(f"{as_double('embedding')} AS v"))
     joined = vv.join(F.broadcast(cent), "label")
     return (
@@ -1226,11 +1133,27 @@ PQ_TRAIN_MAX_CORPUS = 2000
 def _lattice_expr(src: str = "v") -> str:
     """The PQ lattice quantizer as a SQL expression: x·PQ_GRID is an exact
     double op and floor(x + 0.5) spells half-up identically on both
-    engines. ONE definition — `_pq_recon`, `topk_pq` and `topk_ivf_pq`
-    must quantize identically or codes and queries silently diverge."""
+    engines. ONE definition — `_pq_recon` and `_pq_queries` must
+    quantize identically or codes and queries silently diverge."""
     return (
         f"transform({src}, x -> "
         f"CAST(floor(x * {PQ_GRID}.0D + 0.5D) AS BIGINT))"
+    )
+
+
+#: Exact norm² of a lattice or reconstructed vector ``r``.
+_R_N2 = "aggregate(r, 0L, (acc, x) -> acc + x * x)"
+
+#: What the PQ variants carry into `_PAIR_ICOS`: the query's exact lattice
+#: vector against a candidate's reconstructed codes (asymmetric, ADC).
+_PQ_CARRY = {"c": "r", "n2": "n2"}
+
+
+def _pq_queries(v: DataFrame) -> DataFrame:
+    """`v` plus its exact lattice vector ``r`` and ``n2``: the query side
+    of the PQ variants, which stays unquantized."""
+    return v.selectExpr("*", f"{_lattice_expr()} AS r").selectExpr(
+        "*", f"{_R_N2} AS n2"
     )
 
 
@@ -1472,7 +1395,7 @@ def _pq_recon(
     return (
         vi.crossJoin(F.broadcast(book_row))
         .select("vec_id", F.expr(enc).alias("r"))
-        .withColumn("n2", F.expr("aggregate(r, 0L, (acc, x) -> acc + x * x)"))
+        .withColumn("n2", F.expr(_R_N2))
         .select("vec_id", "r", "n2")
     )
 
@@ -1504,51 +1427,10 @@ def topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     reconstructed-code table feeds both join sides, so it is persisted —
     at scale it IS the materialized PQ code table (the 32×-smaller scan
     target) a deployment writes."""
-    emb = load_table(spark, sf_dir, "embeddings")
-    v = fan_out(emb).select("vec_id", F.expr(f"{as_double('embedding')} AS v"))
+    v = _vectors(spark, sf_dir).select("vec_id", "v")
     codes = _pq_recon(v, _pq_book(spark, sf_dir)).persist()
-    q = (
-        v.filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("qr", F.expr(_lattice_expr()))
-        .withColumn(
-            "qn2",
-            F.expr("aggregate(qr, 0L, (acc, x) -> acc + x * x)"),
-        )
-        .select(F.col("vec_id").alias("query_id"), "qr", "qn2")
-    )
-    c = codes.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("r").alias("cr"),
-        F.col("n2").alias("cn2"),
-    )
-    idot = F.expr(
-        "aggregate(zip_with(qr, cr, (a, b) -> a * b), 0L, (acc, x) -> acc + x)"
-    )
-    scored = (
-        F.broadcast(q)
-        .crossJoin(c)
-        .filter(F.col("query_id") != F.col("cand_id"))
-        .select(
-            "query_id",
-            "cand_id",
-            F.when((F.col("qn2") == 0) | (F.col("cn2") == 0), F.lit(-2.0))
-            .otherwise(
-                idot.cast("double")
-                / F.sqrt(
-                    F.col("qn2").cast("double") * F.col("cn2").cast("double")
-                )
-            )
-            .alias("cos_pq"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_pq").desc(), "cand_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id", "cand_id", "cos_pq", F.col("rk").cast("int").alias("rk")
-        )
-    )
+    scored = _pairs(_pq_queries(v), codes, _PQ_CARRY, _PAIR_ICOS, "cos_pq")
+    return _topk(scored, "cos_pq")
 
 
 @_SIM_MEMO.memoized("topk_ivf_pq")
@@ -1577,54 +1459,10 @@ def topk_ivf_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
         .join(assigned.select("vec_id", "cell"), "vec_id")
         .persist()
     )
-    q = (
-        assigned.filter(F.col("vec_id") < N_QUERIES)
-        .withColumn("qr", F.expr(_lattice_expr()))
-        .withColumn("qn2", F.expr("aggregate(qr, 0L, (acc, x) -> acc + x * x)"))
-        .select(
-            F.col("vec_id").alias("query_id"),
-            "qr",
-            "qn2",
-            F.col("cell").alias("qcell"),
-        )
-    )
-    c = codes.select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("r").alias("cr"),
-        F.col("n2").alias("cn2"),
-        F.col("cell").alias("ccell"),
-    )
-    idot = F.expr(
-        "aggregate(zip_with(qr, cr, (a, b) -> a * b), 0L, (acc, x) -> acc + x)"
-    )
-    scored = (
-        F.broadcast(q)
-        .join(
-            c,
-            (F.col("qcell") == F.col("ccell"))
-            & (F.col("query_id") != F.col("cand_id")),
-        )
-        .select(
-            "query_id",
-            "cand_id",
-            F.when((F.col("qn2") == 0) | (F.col("cn2") == 0), F.lit(-2.0))
-            .otherwise(
-                idot.cast("double")
-                / F.sqrt(
-                    F.col("qn2").cast("double") * F.col("cn2").cast("double")
-                )
-            )
-            .alias("cos_pq"),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_pq").desc(), "cand_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id", "cand_id", "cos_pq", F.col("rk").cast("int").alias("rk")
-        )
-    )
+    carry = {**_PQ_CARRY, "cell": "cell"}
+    q = _pq_queries(assigned)
+    scored = _pairs(q, codes, carry, _PAIR_ICOS, "cos_pq", block="cell")
+    return _topk(scored, "cos_pq")
 
 
 #: Coarse cells a multiprobe query searches (`sim_topk_ivf_mp`). nprobe is
@@ -1643,10 +1481,11 @@ def topk_ivf_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
     Candidates keep their single home cell (the inverted-file layout is
     unchanged; only the query-side fan-out grows), so each (query,
     candidate) pair arises at most once and no dedup step is needed.
-    Scoring within the probed cells is the exact cosine, rank per query
-    across ALL probed cells. Recall can only improve over single-probe:
-    the candidate set is a superset, so the exact top-k within it is at
-    least as close to the brute-force answer (pinned by test)."""
+    Scoring within the probed cells is the exact cosine, ranked per query
+    across ALL probed cells by `_topk`. Recall can only improve over
+    single-probe: the candidate set is a superset, so the exact top-k
+    within it is at least as close to the brute-force answer (pinned by
+    test)."""
     emb = load_table(spark, sf_dir, "embeddings")
     # persisted: the ranked assignment feeds both the probe list (crk <=
     # NPROBE, query side) and the inverted file (crk == 1, candidate side)
@@ -1655,41 +1494,10 @@ def topk_ivf_mp(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("vec_id", "v", "nrm", "cell", "crk")
         .persist()
     )
-    q = ranked.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-        F.col("cell").alias("qcell"),
-    )
-    c = ranked.filter(F.col("crk") == 1).select(
-        F.col("vec_id").alias("cand_id"),
-        F.col("v").alias("cv"),
-        F.col("nrm").alias("cn"),
-        F.col("cell").alias("ccell"),
-    )
-    scored = (
-        F.broadcast(q)
-        .join(
-            c,
-            (F.col("qcell") == F.col("ccell"))
-            & (F.col("query_id") != F.col("cand_id")),
-        )
-        .select(
-            "query_id",
-            "cand_id",
-            (F.expr(dot("qv", "cv")) / (F.col("qn") * F.col("cn"))).alias(
-                "cos_sim"
-            ),
-        )
-    )
-    w = Window.partitionBy("query_id").orderBy(F.col("cos_sim").desc(), "cand_id")
-    return (
-        scored.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id", "cand_id", "cos_sim", F.col("rk").cast("int").alias("rk")
-        )
-    )
+    carry = {**_COS_CARRY, "cell": "cell"}
+    c = ranked.where("crk = 1")
+    scored = _pairs(ranked, c, carry, _PAIR_COS, "cos_sim", block="cell")
+    return _topk(scored, "cos_sim")
 
 
 #: Dimensions of the cheap first stage in `sim_topk_prefix_rerank` — the
@@ -1713,7 +1521,8 @@ def topk_prefix_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     best per query; stage 2 re-scores only those with the exact
     full-width cosine and emits the top k. The final ranking among the
     survivors is EXACT; the approximation is confined to which RERANK_M
-    survive stage 1 (recall vs brute force pinned by test, and monotone
+    survive stage 1. Both stages rank through `_topk`, stage 1 with
+    k=RERANK_M (recall vs brute force pinned by test, and monotone
     in RERANK_M by construction).
 
     At 100 TB the stage-1 scan is the whole cost — it touches
@@ -1722,87 +1531,36 @@ def topk_prefix_rerank(spark: SparkSession, sf_dir: str) -> DataFrame:
     for queries × RERANK_M rows only. Recall is monotone in both knobs;
     the committed 32/64 point is measured at 83–93% recall@3 (see
     PREFIX_DIMS)."""
-    emb = load_table(spark, sf_dir, "embeddings")
     # persisted: the full-vector frame (with its norms precomputed once per
     # vector, never per joined pair) feeds the stage-1 prefix projection
     # AND the stage-2 exact re-rank fetch
-    v = (
-        fan_out(emb)
-        .select("vec_id", F.expr(f"{as_double('embedding')} AS v"))
-        .withColumn("nrm", F.expr(norm("v")))
-        .persist()
-    )
-    pv = v.select(
-        "vec_id", F.slice("v", 1, PREFIX_DIMS).alias("p")
-    ).withColumn("pn", F.expr(norm("p")))
-    q1 = pv.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("p").alias("qp"),
-        F.col("pn").alias("qpn"),
-    )
-    # -2.0 sentinel on a zero prefix (legal input: the first PREFIX_DIMS
-    # dims may all be zero while the tail is not) — without it the cosine
-    # is 0/0 = NaN, which sorts ABOVE every real score under DESC in both
-    # engines and would displace genuine survivors
-    s1 = (
-        F.broadcast(q1)
-        .join(
-            pv.select(F.col("vec_id").alias("cand_id"), "p", "pn"),
-            F.col("query_id") != F.col("cand_id"),
+    v = _vectors(spark, sf_dir).persist()
+
+    # -2.0 sentinel on a zero prefix or vector (legal input: the first
+    # PREFIX_DIMS dims may all be zero while the tail is not) — without it
+    # the cosine is 0/0 = NaN, which sorts ABOVE every real score under
+    # DESC in both engines and would displace genuine survivors
+    def guarded(x: str, n: str) -> str:
+        return (
+            f"CASE WHEN q{n} = 0 OR c{n} = 0 THEN -2.0D "
+            f"ELSE {dot(f'q{x}', f'c{x}')} / (q{n} * c{n}) END"
         )
-        .select(
-            "query_id",
-            "cand_id",
-            F.when((F.col("qpn") == 0) | (F.col("pn") == 0), F.lit(-2.0))
-            .otherwise(
-                F.expr(dot("qp", "p")) / (F.col("qpn") * F.col("pn"))
-            )
-            .alias("cos_prefix"),
-        )
+
+    pv = v.selectExpr("vec_id", f"slice(v, 1, {PREFIX_DIMS}) AS p").selectExpr(
+        "*", f"{norm('p')} AS pn"
     )
-    w1 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_prefix").desc(), "cand_id"
+    s1 = _pairs(pv, pv, {"p": "p", "n": "pn"}, guarded("p", "n"), "cos_prefix")
+    survivors = _topk(s1, "cos_prefix", k=RERANK_M).select("query_id", "cand_id")
+    qa = v.where(f"vec_id < {N_QUERIES}").selectExpr(
+        "vec_id AS query_id", "v AS qv", "nrm AS qn"
     )
-    survivors = (
-        s1.withColumn("prk", F.row_number().over(w1))
-        .filter(F.col("prk") <= RERANK_M)
-        .select("query_id", "cand_id")
-    )
-    qa = v.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("v").alias("qv"),
-        F.col("nrm").alias("qn"),
-    )
+    ca = v.selectExpr("vec_id AS cand_id", "v AS cv", "nrm AS cn")
     rerank = (
-        survivors.join(
-            v.select(
-                F.col("vec_id").alias("cand_id"),
-                F.col("v").alias("cv"),
-                F.col("nrm").alias("cn"),
-            ),
-            "cand_id",
-        )
-        .join(F.broadcast(qa), "query_id")
-        .select(
-            "query_id",
-            "cand_id",
-            F.when((F.col("qn") == 0) | (F.col("cn") == 0), F.lit(-2.0))
-            .otherwise(
-                F.expr(dot("qv", "cv")) / (F.col("qn") * F.col("cn"))
-            )
-            .alias("cos_sim"),
-        )
+        survivors.join(ca, "cand_id")
+        .join(qa.hint("broadcast"), "query_id")
+        .selectExpr("query_id", "cand_id", f"{guarded('v', 'n')} AS cos_sim")
     )
-    w2 = Window.partitionBy("query_id").orderBy(
-        F.col("cos_sim").desc(), "cand_id"
-    )
-    return (
-        rerank.withColumn("rk", F.row_number().over(w2))
-        .filter(F.col("rk") <= TOP_K)
-        .select(
-            "query_id", "cand_id", "cos_sim", F.col("rk").cast("int").alias("rk")
-        )
-    )
+    return _topk(rerank, "cos_sim")
 
 
 #: The quantized ANN variants the recall report evaluates, in report

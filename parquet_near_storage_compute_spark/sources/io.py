@@ -345,8 +345,9 @@ def compaction_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregates; equality with the parquet-view oracle proves the rewrite
     was lossless. tests/test_round5c_ops.py pins the file counts
     (fragments in, ≤2 out) and the shuffle-free plan. Integer-cents sums —
-    engine-exact. The fragmented copy is keyed on the events listing and
-    the compacted copy on the fragmented one (``tables.derived_copy``).
+    engine-exact. Both copies are keyed on the events listing
+    (``tables.derived_copy``), so a rewritten events file supersedes the
+    compacted copy along with the fragmented one it was built from.
     """
     import glob as _glob
     import math
@@ -363,7 +364,8 @@ def compaction_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
             .write.parquet(path)
         )
 
-    frag = derived_copy("compact_frag", (table_path(sf_dir, "events"),), fragment)
+    events = (table_path(sf_dir, "events"),)
+    frag = derived_copy("compact_frag", events, fragment)
 
     def compact(path: str) -> None:
         in_bytes = sum(
@@ -372,7 +374,7 @@ def compaction_sink(spark: SparkSession, sf_dir: str) -> DataFrame:
         n_out = max(1, math.ceil(in_bytes / _COMPACT_TARGET_BYTES))
         read_parquet(spark, frag).coalesce(n_out).write.parquet(path)
 
-    compacted = derived_copy("compact_out", (frag,), compact)
+    compacted = derived_copy("compact_out", events, compact)
     return (
         read_parquet(spark, compacted)
         .groupBy("event_type")

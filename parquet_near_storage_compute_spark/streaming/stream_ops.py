@@ -501,17 +501,6 @@ def phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     src_dir = derived_copy("phash_ingest_src", (M.IMG_DEDUP_FIXTURE,), split)
 
-    def hash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        for pdf in batches:
-            yield pd.DataFrame(
-                {
-                    "img_id": pdf["img_id"],
-                    "phash": pdf["payload"].map(
-                        lambda p: M.phash64(M.decode_image(p))
-                    ),
-                }
-            )
-
     def bands(df: DataFrame, pre: str) -> DataFrame:
         return df.select(
             F.col("img_id").alias(f"{pre}id"),
@@ -530,7 +519,7 @@ def phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     def step(state: DataFrame | None, batch: DataFrame, bid: int) -> DataFrame:
         hashed = batch.select("img_id", "payload").mapInPandas(
-            hash_batch, "img_id bigint, phash bigint"
+            M.phash_batch, "img_id bigint, phash bigint"
         )
         return _admit(state, hashed, bid, "img_id", bands, near)
 

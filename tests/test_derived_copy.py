@@ -169,6 +169,28 @@ def test_rewritten_source_supersedes_its_copy(tmp_path, root):
     )
 
 
+def test_rewritten_events_supersede_both_compaction_copies(
+    spark, sf_dir, tmp_path, root
+):
+    """`sink_compaction` builds its compacted copy from its fragmented one.
+    After `events.parquet` is rewritten, the second call leaves exactly one
+    copy of each, the new listing's."""
+    from parquet_near_storage_compute_spark.sources.io import compaction_sink
+
+    corpus = _events_corpus(sf_dir, tmp_path)
+    events = table_path(corpus, "events")
+
+    def copies(tag: str) -> list:
+        return [n for n in os.listdir(root) if n.startswith(f"{tag}_")]
+
+    compaction_sink(spark, corpus).collect()
+    tbl = pq.read_table(events)
+    pq.write_table(tbl.filter(pc.equal(pc.bit_wise_and(tbl["event_id"], 1), 0)), events)
+    compaction_sink(spark, corpus).collect()
+    for tag in ("compact_frag", "compact_out"):
+        assert copies(tag) == [os.path.basename(derived_copy_path(tag, (events,)))], tag
+
+
 def test_streaming_contracts_leave_no_checkpoint(spark, sf_dir, root):
     """A streaming contract leaves nothing behind but the derived copy its
     file stream reads: no checkpoint, no state and no temp view in the

@@ -1,6 +1,5 @@
-"""Disk-path observable (VERDICT r9 #5): the microbench must produce
-positive, internally consistent throughputs (BENCH_DETAIL's recorded
-``disk_path`` entry)."""
+"""Disk-path observable: the microbench must produce positive,
+internally consistent throughputs."""
 
 from __future__ import annotations
 

@@ -1,6 +1,5 @@
-"""Loopback network-path observables (VERDICT r6 #7): both benches must
-produce positive, internally consistent throughput numbers (BENCH_DETAIL's
-recorded ``network_path`` entry)."""
+"""Loopback network-path observables: both benches must produce positive,
+internally consistent throughput numbers."""
 
 from __future__ import annotations
 

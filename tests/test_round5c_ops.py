@@ -466,8 +466,11 @@ def _compaction_dirs(sf_dir):
         table_path,
     )
 
-    frag = derived_copy_path("compact_frag", (table_path(sf_dir, "events"),))
-    return frag, derived_copy_path("compact_out", (frag,))
+    events = (table_path(sf_dir, "events"),)
+    return (
+        derived_copy_path("compact_frag", events),
+        derived_copy_path("compact_out", events),
+    )
 
 
 def _clustered_files(spark, sf_dir):

@@ -1,4 +1,4 @@
-"""Disk-path throughput observables (VERDICT r9 #5 — M-family completeness).
+"""Disk-path throughput observables.
 
 Mirrors the reference's disk microbenchmark semantics —
 ``microbenchmarks/src/disk/read.rs:60-79`` (N parallel duration-bounded
@@ -9,8 +9,8 @@ this sandbox can honestly measure: the repo filesystem. The reference
 numbers characterize a RAID0 of NVMe drives (`/mnt/raid0`); these
 characterize THIS host's filesystem + page-cache path, the same one
 Spark's shuffle spill and parquet scan share. They are methodology parity,
-not hardware parity — BENCH_DETAIL labels the entry ``disk_path`` with a
-``scope`` note so nobody reads them as RAID numbers.
+not hardware parity — the ``disk_path`` result carries a ``scope`` note
+so nobody reads them as RAID numbers.
 
 Three rungs per run:
 
@@ -173,7 +173,7 @@ def bench_read(
 
 
 def run() -> dict:
-    """The BENCH_DETAIL ``disk_path`` entry."""
+    """The ``disk_path`` measurement."""
     write_buf, write_durable = bench_write()
     read_buf, read_direct = bench_read()
     shutil.rmtree(_DIR, ignore_errors=True)

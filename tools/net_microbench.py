@@ -1,4 +1,4 @@
-"""Loopback network-path throughput observables (VERDICT r6 #7).
+"""Loopback network-path throughput observables.
 
 Mirrors the reference's network/HTTP microbenchmark semantics —
 ``microbenchmarks/src/http/client.rs:47-96`` (N parallel streams POSTing
@@ -8,8 +8,8 @@ duration, 512 KiB blocks) and ``microbenchmarks/src/network/client.rs``
 measure: the 127.0.0.1 loopback.  The reference numbers characterize a
 100 Gbps NIC + RAID0 ingest path; these characterize the local TCP/HTTP
 stack ceiling the Spark engine's shuffle/fetch path shares on this host.
-They are methodology parity, not hardware parity — BENCH_DETAIL labels
-them ``loopback_*`` so nobody reads them as NIC numbers.
+They are methodology parity, not hardware parity — the result keys are
+``loopback_*`` so nobody reads them as NIC numbers.
 
 Both benches: per-stream threads send the SAME pre-built block repeatedly
 (reference: one random buffer per stream, re-chunked) until the deadline;

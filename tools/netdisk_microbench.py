@@ -1,5 +1,5 @@
-"""Chained network→disk throughput observable (VERDICT r10 — the last
-missing reference harness observable).
+"""Chained network→disk throughput observable (the reference harness's
+network-to-disk path).
 
 Mirrors ``microbenchmarks/src/network_disk/server.rs:61-115``: a TCP
 receive loop (256-byte ``name|size`` header, then 256 KiB blocks) feeding
@@ -10,7 +10,7 @@ writers drain — and that the bounded channel caps memory at
 channel_size × block regardless of file size; this analogue measures the
 same topology on the loopback + local filesystem (methodology parity,
 not hardware parity with the reference's 100 Gbps NIC + RAID0 —
-BENCH_DETAIL labels the entry with a ``scope`` note).
+the result carries a ``scope`` note).
 
 Reported legs:
 
@@ -79,7 +79,7 @@ def run_one(
     channel_size: int = CHANNEL_SIZE,
     want_odirect: bool = True,
 ) -> dict:
-    """One chained transfer; returns one leg of the BENCH_DETAIL entry."""
+    """One chained transfer; returns one leg of the `run` result."""
     assert file_bytes % BLOCK_SIZE == 0, "keep chunks block-aligned"
     os.makedirs(_DIR, exist_ok=True)
     target = os.path.join(_DIR, "testfile")
@@ -212,7 +212,7 @@ def run_one(
 
 
 def run() -> dict:
-    """The BENCH_DETAIL ``network_disk_path`` entry: the reference's
+    """The ``network_disk_path`` measurement: the reference's
     O_DIRECT form plus a buffered(+fsync-in-writer-close) pass for
     context — on this host same-file concurrent O_DIRECT writes
     serialize on the inode, so the two differ by >10× and reporting only
