@@ -50,6 +50,18 @@ def seeded_hash(seed: int, token: str) -> str:
     return f"md5(concat({sql_string(f'{seed}:')}, {token}))"
 
 
+def hash32(seed: str, key: str) -> str:
+    """Deterministic 32-bit hash as a non-negative BIGINT: the first 8 hex
+    chars of md5('<seed>:<key>'), both operands cast to STRING. The
+    cross-engine hash device of the sketches, the quality classifier and
+    the training draws; DuckDB spells the same value
+    ``('0x' || substr(md5(seed || ':' || key), 1, 8))::BIGINT``."""
+    return (
+        f"CAST(conv(substring(md5(concat(CAST({seed} AS STRING), ':', "
+        f"CAST({key} AS STRING))), 1, 8), 16, 10) AS BIGINT)"
+    )
+
+
 #: Hex chars per MinHash slice: 8 hex = 32 bits per hash function.
 MINHASH_SLICE = 8
 #: Slices carved from one md5 (32 hex chars / 8).

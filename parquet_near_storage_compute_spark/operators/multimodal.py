@@ -25,8 +25,13 @@ import pandas as pd
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parquet_near_storage_compute_spark.operators.similarity import _group_decisions
 from parquet_near_storage_compute_spark.plans.memo import PlanMemo
-from parquet_near_storage_compute_spark.tables import fan_out, load_table
+from parquet_near_storage_compute_spark.tables import (
+    ensure_engine_confs,
+    fan_out,
+    load_table,
+)
 
 N_FEATURES = 4
 
@@ -50,8 +55,8 @@ def with_binary_payload(docs: DataFrame) -> DataFrame:
 
 def decode_image(payload: bytes):
     """Real image decode for binary netpbm payloads — pure numpy, no image
-    library needed (P6 RGB in round 4; P5 grayscale and 16-bit maxval in
-    round 5; compressed formats — PNG/JPEG — genuinely need PIL/opencv
+    library needed (P6 RGB, P5 grayscale and 16-bit maxval; compressed
+    formats — PNG/JPEG — genuinely need PIL/opencv
     and raise). Parses the header (magic, dims, maxval, each terminated
     by single whitespace per the netpbm spec) and returns the pixel block
     as a (height, width, 3) or (height, width) array — uint8 for
@@ -91,7 +96,7 @@ def decode_image(payload: bytes):
 
 def decode_audio(payload: bytes):
     """Real audio decode for WAV (RIFF/PCM) payloads — stdlib ``wave`` +
-    numpy, no audio library needed (round 5; lossy codecs — mp3/ogg/flac —
+    numpy, no audio library needed (lossy codecs — mp3/ogg/flac —
     need soundfile/librosa and raise). Returns
     ``(n_channels, sample_rate, samples)`` where ``samples`` is a
     (n_frames, n_channels) int16 array. Raises ValueError on truncated or
@@ -154,9 +159,8 @@ def feature_extract_raw(spark: SparkSession, sf_dir: str) -> DataFrame:
 def feature_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Contract form of ``feature_extract_raw``: the fixed-width feature
     vector flattened to one double column per dimension — an array column
-    is unhashable by the driver's pandas canonicalizer (the r1 agg_collect
-    failure mode), and per-dimension doubles avoid float→string formatting
-    drift between engines."""
+    is unhashable by the driver's pandas canonicalizer, and per-dimension
+    doubles avoid float→string formatting drift between engines."""
     raw = feature_extract_raw(spark, sf_dir)
     return raw.select(
         "doc_id",
@@ -273,8 +277,6 @@ def image_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     integers, so there is no float drift surface. At 100 TB this is the
     image-corpus profile pass: mapInPandas streams Arrow batches, one
     Python worker per core, metadata joins stay JVM-side."""
-    from parquet_near_storage_compute_spark.tables import ensure_engine_confs
-
     ensure_engine_confs(spark)
     imgs = fan_out(spark.read.parquet(IMAGE_FIXTURE))
 
@@ -337,8 +339,6 @@ def audio_decode(spark: SparkSession, sf_dir: str) -> DataFrame:
     there is no float drift surface. At 100 TB this is the audio-corpus
     profile pass: mapInPandas streams Arrow batches, one Python worker
     per core."""
-    from parquet_near_storage_compute_spark.tables import ensure_engine_confs
-
     ensure_engine_confs(spark)
     clips = fan_out(spark.read.parquet(AUDIO_FIXTURE))
 
@@ -445,6 +445,30 @@ def phash_batch(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
         )
 
 
+def hash_bands(hash_cols: list[str]) -> str:
+    """SQL text of a row's (band, key) candidate keys, an array of structs
+    to ``inline``: the PHASH_BANDS 16-bit bands of each 63-bit perceptual
+    hash column. Band ids are PHASH_BANDS·component + 0..PHASH_BANDS-1,
+    so the bands of different components never cross-match. Two hashes
+    within the Hamming threshold share a clean band unless their
+    differing bits spread across every band."""
+    keys = (
+        f"named_struct('band', {PHASH_BANDS * f + b}, "
+        f"'key', shiftright({hc}, {16 * b}) & 65535)"
+        for f, hc in enumerate(hash_cols)
+        for b in range(PHASH_BANDS)
+    )
+    return f"array({', '.join(keys)})"
+
+
+def hamming_near(a_cols: list[str], b_cols: list[str], hamming_max: int) -> str:
+    """SQL text of the exact verify: every aligned pair of hash columns
+    differs in at most `hamming_max` bits."""
+    dists = [f"bit_count({a} ^ {b})" for a, b in zip(a_cols, b_cols)]
+    worst = dists[0] if len(dists) == 1 else f"greatest({', '.join(dists)})"
+    return f"{worst} <= {hamming_max}"
+
+
 def _sig_neardup_decisions(
     hashed: DataFrame, id_col: str, hash_cols: list[str], hamming_max: int
 ) -> DataFrame:
@@ -463,13 +487,16 @@ def _sig_neardup_decisions(
        multiplicity) — pair volume is bounded by distinct-signature
        density and invariant under duplication (a million re-crawls of
        one asset add zero pairs);
-    2. 4×16-bit bands PER COMPONENT → equi-join candidates (never all
-       pairs); recall is per-component: two signatures within the
-       threshold have ≤ ``hamming_max`` flipped bits in EVERY component,
-       so every component independently offers a clean-band chance;
-    3. exact per-component Hamming verification, max ≤ ``hamming_max``;
-    4. exact member-level reconstruction: n_partners = (m−1) +
-       Σ similar-group m'; keep ⇔ the member is its group's rep AND no
+    2. 4×16-bit bands PER COMPONENT (`hash_bands`) → equi-join
+       candidates (never all pairs); recall is per-component: two
+       signatures within the threshold have ≤ ``hamming_max`` flipped
+       bits in EVERY component, so every component independently offers
+       a clean-band chance;
+    3. exact per-component Hamming verification (`hamming_near`), max ≤
+       ``hamming_max``;
+    4. exact member-level reconstruction through
+       `similarity._group_decisions`: n_partners = (m−1) + Σ
+       similar-group m'; keep ⇔ the member is its group's rep AND no
        similar group has a smaller rep.
 
     Output: (id, *hash_cols, n_partners BIGINT, keep BOOLEAN) for every
@@ -477,9 +504,9 @@ def _sig_neardup_decisions(
     member-level DuckDB oracles, proving the collapse semantics-
     preserving.
 
-    Plan shape (r7 audit): the hash frame is persisted — it feeds the
-    group aggregation AND the final member mapping, and without the cache
-    the decode+hash pass (the dominant cost at scale: it touches every
+    Plan shape: the hash frame is persisted — it feeds the group
+    aggregation AND the final member mapping, and without the cache the
+    decode+hash pass (the dominant cost at scale: it touches every
     payload byte) executes twice.  The group frame is persisted for its
     four consumers (both band-join sides, partner sums, member mapping).
     The symmetric partner view is ONE explode over the pair frame, not a
@@ -490,123 +517,51 @@ def _sig_neardup_decisions(
         .agg(F.min(id_col).alias("rep_id"), F.count(F.lit(1)).alias("m"))
         .persist()
     )
-    # one (band, key) stream per signature component: band ids are
-    # 4·component + 0..3 so components never cross-match
-    bands = groups.select(*hash_cols, "rep_id", "m").withColumn(
-        "bk",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(PHASH_BANDS * f + b).alias("band"),
-                        # shiftright's python signature wants a literal bit
-                        # count, so the per-band shift goes through expr()
-                        F.expr(f"shiftright({hc}, {16 * b})")
-                        .bitwiseAND(0xFFFF)
-                        .alias("key"),
-                    )
-                    for f, hc in enumerate(hash_cols)
-                    for b in range(PHASH_BANDS)
-                ]
-            )
-        ),
-    ).select(*hash_cols, "rep_id", "m", "bk.band", "bk.key")
-    a = bands.select(
-        F.col("band").alias("band_a"),
-        F.col("key").alias("key_a"),
-        F.col("rep_id").alias("rep_a"),
-        F.col("m").alias("m_a"),
-        *[F.col(hc).alias(f"{hc}__a") for hc in hash_cols],
+    bands = groups.selectExpr(
+        *hash_cols, "rep_id", "m", f"inline({hash_bands(hash_cols)}) AS (band, key)"
     )
-    b = bands.select(
-        F.col("band").alias("band_b"),
-        F.col("key").alias("key_b"),
-        F.col("rep_id").alias("rep_b"),
-        F.col("m").alias("m_b"),
-        *[F.col(hc).alias(f"{hc}__b") for hc in hash_cols],
-    )
+
+    def side(p: str) -> DataFrame:
+        return bands.selectExpr(
+            f"band AS band_{p}",
+            f"key AS key_{p}",
+            f"rep_id AS rep_{p}",
+            f"m AS m_{p}",
+            *(f"{hc} AS {hc}__{p}" for hc in hash_cols),
+        )
+
+    a_cols = [f"{hc}__a" for hc in hash_cols]
+    b_cols = [f"{hc}__b" for hc in hash_cols]
     pairs = (
-        a.join(
-            b,
-            (F.col("band_a") == F.col("band_b"))
-            & (F.col("key_a") == F.col("key_b"))
-            & (F.col("rep_a") < F.col("rep_b")),
-        )
-        .select(
-            "rep_a",
-            "m_a",
-            "rep_b",
-            "m_b",
-            *[f"{hc}__a" for hc in hash_cols],
-            *[f"{hc}__b" for hc in hash_cols],
-        )
+        side("a")
+        .join(side("b"), F.expr("band_a = band_b AND key_a = key_b AND rep_a < rep_b"))
+        .select("rep_a", "m_a", "rep_b", "m_b", *a_cols, *b_cols)
         .distinct()  # a close pair can share several bands
+        .where(hamming_near(a_cols, b_cols, hamming_max))
     )
-    dists = [
-        F.bit_count(F.col(f"{hc}__a").bitwiseXOR(F.col(f"{hc}__b")))
-        for hc in hash_cols
-    ]
-    worst = dists[0] if len(dists) == 1 else F.greatest(*dists)
-    pairs = pairs.filter(worst <= hamming_max)
-    sym = pairs.select(
-        F.explode(
-            F.array(
-                F.struct(
-                    F.col("rep_a").alias("rep_id"),
-                    F.col("m_b").alias("partner_m"),
-                    F.col("rep_b").alias("partner_rep"),
-                ),
-                F.struct(
-                    F.col("rep_b").alias("rep_id"),
-                    F.col("m_a").alias("partner_m"),
-                    F.col("rep_a").alias("partner_rep"),
-                ),
-            )
-        ).alias("s")
+    partners = pairs.selectExpr(
+        "explode(array("
+        "named_struct('rep_id', rep_a, 'partner_m', m_b, 'partner_rep', rep_b), "
+        "named_struct('rep_id', rep_b, 'partner_m', m_a, 'partner_rep', rep_a))) AS s"
     ).select("s.*")
-    gstats = sym.groupBy("rep_id").agg(
-        F.sum("partner_m").alias("cross_partners"),
-        F.min("partner_rep").alias("min_sim_rep"),
-    )
-    gdec = groups.join(gstats, "rep_id", "left").select(
-        *hash_cols,
-        "rep_id",
-        (F.col("m") - 1 + F.coalesce(F.col("cross_partners"), F.lit(0))).alias(
-            "n_partners"
-        ),
-        F.coalesce(F.col("min_sim_rep"), F.lit(None).cast("long")).alias(
-            "min_sim_rep"
-        ),
-    )
-    return (
-        hashed.join(gdec, hash_cols)
-        .select(
-            id_col,
-            *hash_cols,
-            F.col("n_partners").cast("bigint").alias("n_partners"),
-            (
-                (F.col(id_col) == F.col("rep_id"))
-                & (
-                    F.col("min_sim_rep").isNull()
-                    | (F.col("rep_id") < F.col("min_sim_rep"))
-                )
-            ).alias("keep"),
-        )
+    return _group_decisions(hashed, groups, hash_cols, id_col, partners).select(
+        id_col, *hash_cols, "n_partners", "keep"
     )
 
 
 #: Decision-frame memos: the three modality dedup contracts are
 #: re-composed by `pipeline_modality_dedup_report`, paying ~1 s of plan
 #: construction each per composite build. Each memo is keyed on its
-#: committed fixture file (the contract's ONLY input — sf_dir is carried
-#: in the key but never read), so a regenerated fixture invalidates.
+#: committed fixture file alone (the contract's ONLY input — sf_dir is
+#: never read), so every corpus shares one frame and a regenerated
+#: fixture invalidates.
 _IMG_DEDUP_MEMO = PlanMemo(tables=(), extra_paths=(IMG_DEDUP_FIXTURE,))
 
 
 @_IMG_DEDUP_MEMO.memoized("image_phash_dedup")
 def image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Perceptual near-duplicate dedup across the image modality — the
-    multimodal × dedup bridge (VERDICT r6 #3): text has MinHash, embeddings
+    multimodal × dedup bridge: text has MinHash, embeddings
     have sign-LSH; images get DCT pHash over the committed near-dup fixture
     (fixtures/images_dedup.parquet — base images plus noise / brightness /
     requantization variants; generator in tools/make_image_dedup_fixture.py).
@@ -633,8 +588,6 @@ def image_phash_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     frames) bounds at distinct-density like the knn pilot cap, with the
     minhash overflow-cluster route (`dedup.py`) as the documented escape
     for adversarial distinct-density; at fixture scale no guard binds."""
-    from parquet_near_storage_compute_spark.tables import ensure_engine_confs
-
     ensure_engine_confs(spark)
     imgs = fan_out(spark.read.parquet(IMG_DEDUP_FIXTURE))
 
@@ -735,8 +688,6 @@ def audio_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     only, no float output surface.  Scale shape identical to
     `dedup_image_phash` (the shared algebra's docstring carries the
     100 TB analysis)."""
-    from parquet_near_storage_compute_spark.tables import ensure_engine_confs
-
     ensure_engine_confs(spark)
     clips = fan_out(spark.read.parquet(AUDIO_DEDUP_FIXTURE))
 
@@ -850,8 +801,6 @@ def video_fingerprint_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     copies of one asset add zero pairs) with banded candidates — the
     scale analysis of `_sig_neardup_decisions` applies with 4× the band
     streams of the single-hash modalities."""
-    from parquet_near_storage_compute_spark.tables import ensure_engine_confs
-
     ensure_engine_confs(spark)
     vids = fan_out(spark.read.parquet(VID_DEDUP_FIXTURE))
     cols = [f"ph{i}" for i in range(VID_SAMPLED)]
@@ -892,8 +841,6 @@ def decode_quarantine(spark: SparkSession, sf_dir: str) -> DataFrame:
     'ok' with the decoded pixel count. The DuckDB oracle re-derives the
     status from the payload bytes (magic nibbles + octet length) and the
     pixel count from the pinned geometry — integer/string outputs only."""
-    from parquet_near_storage_compute_spark.tables import ensure_engine_confs
-
     ensure_engine_confs(spark)
     imgs = fan_out(spark.read.parquet(IMG_DEDUP_FIXTURE)).select(
         "img_id", "payload"

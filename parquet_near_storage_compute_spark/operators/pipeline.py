@@ -195,10 +195,10 @@ def incremental_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     that touch it are the ≤64-row broadcast Bloom table and the
     signature semi-join over the few-percent Bloom-positive slice.
     """
+    from parquet_near_storage_compute_spark.functions.text import hash32
     from parquet_near_storage_compute_spark.operators.sketches import (
         BLOOM_BITS,
         BLOOM_K,
-        _hash32,
     )
 
     docs = load_table(spark, sf_dir, "documents")
@@ -212,7 +212,7 @@ def incremental_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch = base.filter(F.col("doc_id") % 2 == 1)
 
     j = F.explode(F.sequence(F.lit(0), F.lit(BLOOM_K - 1))).alias("j")
-    idx = (_hash32(F.col("j"), F.col("sig")) % BLOOM_BITS).alias("idx")
+    idx = F.expr(f"{hash32('j', 'sig')} % {BLOOM_BITS} AS idx")
     bloom = (
         corpus.select("sig", j)
         .select(idx)

@@ -7,6 +7,13 @@
   query itself excluded, an equi-join on the block key) and ranks through
   `_topk`, the family's one ranking rule: per query, the best TOP_K by
   (score desc, cand_id). Variants differ only in their frames and score.
+- The all-pairs family (`sim_knn_join`, `sim_range_search`,
+  `sim_dedup_decisions`, `dedup_semantic_clusters`): every pair within a
+  block (a sign-LSH bucket, an IVF cell), then one exact verify. Each
+  pairs through `_block_pairs` (the salted block self-join), ranks
+  through `_salted_topk` (the two-phase salted top-k) and `_topk`, and
+  the duplicate-group contracts decide through `_group_decisions`, which
+  the perceptual dedups in `multimodal` share.
 - Sign-LSH bucketed ANN: the scale path. Bucket assignment is a pure per-row
   expression against constant ±1 hyperplanes (functions/vectors.py), so at
   100 TB it's a narrow map + one equi-join on (bucket) instead of a cross
@@ -24,9 +31,10 @@ from __future__ import annotations
 import math
 from collections.abc import Callable
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parquet_near_storage_compute_spark.functions.sql import sql_double
 from parquet_near_storage_compute_spark.functions.vectors import (
     as_double,
     cosine,
@@ -102,16 +110,24 @@ def _pairs(
     )
 
 
-def _topk(scored: DataFrame, score: str, k: int = TOP_K) -> DataFrame:
+def _topk(
+    scored: DataFrame,
+    score: str,
+    k: int = TOP_K,
+    part: str = "query_id",
+    tie: str = "cand_id",
+) -> DataFrame:
     """The top-k family's one ranking rule: per query, the k candidates
-    with the highest `score`, ties broken by cand_id, ranked 1..k as INT."""
+    with the highest `score`, ties broken by cand_id, ranked 1..k as INT.
+    `part` and `tie` rename the query and candidate columns (`knn_join`
+    ranks each member's neighbours by src_id and nbr_id)."""
     return (
         scored.selectExpr(
             "*",
-            f"row_number() OVER (PARTITION BY query_id ORDER BY {score} DESC, cand_id) AS rk",
+            f"row_number() OVER (PARTITION BY {part} ORDER BY {score} DESC, {tie}) AS rk",
         )
         .where(f"rk <= {k}")
-        .selectExpr("query_id", "cand_id", score, "CAST(rk AS INT) AS rk")
+        .selectExpr(part, tie, score, "CAST(rk AS INT) AS rk")
     )
 
 
@@ -289,7 +305,7 @@ def _ranked_cells(emb: DataFrame, max_rank: int = 1) -> DataFrame:
     rest. ONE implementation so a fix to the tie-break or the cosine can
     never leave the five consumers divergent.
 
-    r12 (guide §2.4 / §4.1): the ranking is a per-row array_sort over a
+    The ranking is a per-row array_sort over a
     ONE-ROW broadcast codebook array instead of a |vectors|·|cells|
     crossJoin fan-out followed by a row_number window (whose
     partitionBy(vec_id) forced an Exchange + Sort of the fanned-out
@@ -352,7 +368,7 @@ def topk_ivf(spark: SparkSession, sf_dir: str) -> DataFrame:
     query's cell. At scale this is the inverted-file layout: cells are the
     partition key, the probe touches 1/k of the data."""
     emb = load_table(spark, sf_dir, "embeddings")
-    # persisted (r7): both join sides consume the assignment — without the
+    # persisted: both join sides consume the assignment — without the
     # cache each side re-scans the corpus and re-runs the codebook pass
     assigned = _ranked_cells(emb).select("vec_id", "v", "nrm", "cell").persist()
     carry = {**_COS_CARRY, "cell": "cell"}
@@ -375,7 +391,7 @@ def topk_ivf_sq8(spark: SparkSession, sf_dir: str) -> DataFrame:
     integer-exact; residual coding would trade that for recall."""
     emb = load_table(spark, sf_dir, "embeddings")
     assigned = _ranked_cells(emb).select("vec_id", "v", "cell")
-    # persisted (r7): the code table feeds both join sides — without the
+    # persisted: the code table feeds both join sides — without the
     # cache each side re-scans the corpus and re-runs the centroid
     # assignment + quantization (8 corpus scans in the executed plan);
     # with it the corpus is read once for codes and once for centroids.
@@ -395,7 +411,7 @@ def bucket_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
     """LSH bucket occupancy — the tuning observable for plane count (skew in
     this histogram = skew in the ANN join). Buckets with n_vectors >
     KNN_BUCKET_CAP are exactly the ones `sim_knn_join` bounds to the
-    KNN_PILOT pilot set (r6), so this histogram is also the capping
+    KNN_PILOT pilot set, so this histogram is also the capping
     observable: compare it against the cap to see where and how hard the
     bound binds."""
     v = _vectors(spark, sf_dir).withColumn("bucket", F.expr(lsh_bucket("v", _PLANES)))
@@ -421,24 +437,104 @@ def label_centroid_cosine(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Salt factor for the kNN self-join: one LSH bucket's O(b²) candidate
-#: volume is split across KNN_SALT tasks, bounding per-task work by
-#: b²/KNN_SALT.  Exact — top-k merges associatively, so local top-k per
-#: (src_id, salt) followed by a global top-k per src_id returns exactly
-#: the unsalted result (same device as window_topk_per_group).
+#: Salt factor for the all-pairs self-joins (`_block_pairs`): one block's
+#: O(b²) candidate volume is split across KNN_SALT tasks, bounding
+#: per-task work by b²/KNN_SALT.  Exact — top-k merges associatively, so
+#: local top-k per (src_id, salt) followed by a global top-k per src_id
+#: returns exactly the unsalted result (`_salted_topk`; same device as
+#: window_topk_per_group).
 KNN_SALT = 8
 
-#: Occupancy bound for the kNN candidate enumeration (VERDICT r5 #2): a
-#: bucket with more members than this enumerates only a bounded pilot set
-#: as neighbour candidates, so its candidate volume is b·KNN_PILOT (linear
-#: in bucket size) instead of b².  Chosen above the sf0.1 1× maximum
-#: (162), so the bound never binds at contract/bench scale and binds at
-#: the ≥10× adversarial rungs (max bucket ~1620 at 10×).
+#: Occupancy bound for the kNN candidate enumeration: a bucket with more
+#: members than this enumerates only a bounded pilot set as neighbour
+#: candidates, so its candidate volume is b·KNN_PILOT (linear in bucket
+#: size) instead of b².  Chosen above the sf0.1 1× maximum (162), so the
+#: bound never binds at contract/bench scale and binds at the ≥10×
+#: adversarial rungs (max bucket ~1620 at 10×).
 KNN_BUCKET_CAP = 512
 #: Pilot-set size for over-cap buckets: the KNN_PILOT smallest vec_ids of
 #: the bucket.  Deterministic (so the DuckDB oracle re-derives the exact
 #: same set) and ≫ TOP_K, so every member still receives a full top-k.
 KNN_PILOT = 64
+
+
+def _block_pairs(
+    a: DataFrame, b: DataFrame, carry: dict[str, str], rel: str
+) -> DataFrame:
+    """Every (a, b) row pair that shares a block — the pairing step of the
+    all-pairs family (`sim_knn_join`, `sim_range_search`,
+    `sim_dedup_decisions`, `dedup_semantic_clusters`). `carry` maps a
+    short name to a column both frames hold; the a side carries it as
+    ``a<name>``, the b side as ``b<name>``. ``id`` (the row id) and
+    ``blk`` (the block key: a sign-LSH bucket, an IVF cell) are required.
+
+    The pairing is an equi-join on (blk, salt) with ``aid <rel> bid``
+    (``!=`` gives ordered pairs, ``<`` each unordered pair once). The a
+    side is replicated over every salt 0..KNN_SALT-1 and the b side takes
+    the one salt pmod(bid, KNN_SALT), so each pair meets exactly once and
+    one hot block's pairs spread over KNN_SALT tasks. The a side's salt
+    stays in the result as ``salt`` (`_salted_topk` ranks per it)."""
+
+    def side(df: DataFrame, p: str, salt: str) -> DataFrame:
+        return df.selectExpr(*(f"{col} AS {p}{n}" for n, col in carry.items()), salt)
+
+    return side(a, "a", f"explode(sequence(0, {KNN_SALT - 1})) AS salt").join(
+        side(b, "b", f"pmod({carry['id']}, {KNN_SALT}) AS bsalt"),
+        F.expr(f"ablk = bblk AND salt = bsalt AND aid {rel} bid"),
+    )
+
+
+#: What the vector pairings carry into `_block_pairs`, and the exact
+#: cosine of a pair over the carried vectors ``v`` and norms ``n``.
+_BLOCK_CARRY = {"id": "vec_id", "blk": "bucket", "v": "v", "n": "nrm"}
+_BLOCK_COS = f"({dot('av', 'bv')} / (an * bn))"
+
+
+def _salted_topk(
+    df: DataFrame, part: str, salt: str, order: str, k: int, keep: str = "false"
+) -> DataFrame:
+    """The two-phase salted top-k: the first k rows by `order` per
+    (`part`, `salt`), then the first k of those ≤ KNN_SALT·k rows per
+    `part`. Exact (top-k merges associatively), and no task ever sorts a
+    whole hot part. Rows where `keep` holds bypass both cuts — the
+    over-cap pilot rule's in-cap members. `salt` is a column or an
+    expression; the result is `df`'s rows plus ``rk``, the rank within
+    `part`."""
+
+    def ranked(frame: DataFrame, by: str) -> DataFrame:
+        return frame.selectExpr(
+            "*", f"row_number() OVER (PARTITION BY {by} ORDER BY {order}) AS rk"
+        ).where(f"({keep}) OR rk <= {k}")
+
+    return ranked(ranked(df, f"{part}, {salt}").drop("rk"), part)
+
+
+def _group_decisions(
+    members: DataFrame,
+    groups: DataFrame,
+    key: list[str],
+    id_col: str,
+    partners: DataFrame,
+) -> DataFrame:
+    """The duplicate-group decision rule of `sim_dedup_decisions` and the
+    perceptual dedups (`multimodal._sig_neardup_decisions`). `groups` has
+    one row per distinct `key` value with rep_id (its minimum member id)
+    and m (its multiplicity); `partners` has directed (rep_id,
+    partner_rep, partner_m) rows, one per ordered pair of similar groups.
+    Each `members` row, joined to its group on `key`, gets
+
+      n_partners = (m − 1) + Σ partner_m
+      keep ⇔ its `id_col` is the group's rep AND no similar group has a
+             smaller rep."""
+    stats = partners.groupBy("rep_id").agg(
+        F.sum("partner_m").alias("ext"), F.min("partner_rep").alias("min_rep")
+    )
+    dec = groups.join(stats, "rep_id", "left").selectExpr(
+        *key, "rep_id", "(m - 1) + coalesce(ext, 0) AS n_partners", "min_rep"
+    )
+    return members.join(dec, key).selectExpr(
+        "*", f"{id_col} = rep_id AND (min_rep IS NULL OR min_rep > rep_id) AS keep"
+    )
 
 
 def _nbr_candidates(v: DataFrame, max_bucket: int | None = None) -> DataFrame:
@@ -458,31 +554,26 @@ def _nbr_candidates(v: DataFrame, max_bucket: int | None = None) -> DataFrame:
     (one narrow pass, AQE-style statistics) — when no bucket exceeds the
     cap the function returns ``v`` unchanged and the plan is identical to
     the uncapped one.  Callers that already probed bucket occupancy pass
-    ``max_bucket`` to skip the probe job (r7: ``knn_join`` folds the
+    ``max_bucket`` to skip the probe job: ``knn_join`` folds the
     duplicate probe and both occupancy probes into ONE aggregation, so
-    construction runs one statistics job instead of up to three — ADVICE
-    r6 measured these probes as real per-invocation cost).  When the cap
-    binds, pilots are selected with the salted two-phase k-min (local
-    k-min per (bucket, salt) → global k-min per bucket over ≤
-    KNN_SALT·KNN_PILOT rows), never a single-task whole-bucket sort."""
+    construction runs one statistics job instead of up to three (each
+    probe is a Spark job paid on every build).  When the cap binds,
+    pilots are selected with `_salted_topk` (local k-min per (bucket,
+    salt) → global k-min per bucket over ≤ KNN_SALT·KNN_PILOT rows),
+    never a single-task whole-bucket sort."""
     sizes = v.groupBy("bucket").agg(F.count(F.lit(1)).alias("n_in_bucket"))
     if max_bucket is None:
         max_bucket = sizes.agg(F.max("n_in_bucket")).collect()[0][0] or 0
     if max_bucket <= KNN_BUCKET_CAP:
         return v
-    vs = v.join(F.broadcast(sizes), "bucket")
-    wl = Window.partitionBy(
-        "bucket", F.pmod(F.col("vec_id"), F.lit(KNN_SALT))
-    ).orderBy("vec_id")
-    wg = Window.partitionBy("bucket").orderBy("vec_id")
-    incap = F.col("n_in_bucket") <= KNN_BUCKET_CAP
-    return (
-        vs.withColumn("_pl", F.row_number().over(wl))
-        .filter(incap | (F.col("_pl") <= KNN_PILOT))
-        .withColumn("_pg", F.row_number().over(wg))
-        .filter(incap | (F.col("_pg") <= KNN_PILOT))
-        .drop("_pl", "_pg", "n_in_bucket")
-    )
+    return _salted_topk(
+        v.join(F.broadcast(sizes), "bucket"),
+        "bucket",
+        f"pmod(vec_id, {KNN_SALT})",
+        "vec_id",
+        KNN_PILOT,
+        keep=f"n_in_bucket <= {KNN_BUCKET_CAP}",
+    ).drop("rk", "n_in_bucket")
 
 
 #: Member ids stored per duplicate group: TOP_K neighbours plus one spare
@@ -498,19 +589,17 @@ def _value_groups(v: DataFrame) -> DataFrame:
     (v, bucket, rep_id = min member id, m = multiplicity, ids = the
     KNN_GROUP_IDS smallest member ids).  Grouping keys are the vector
     arrays themselves — engine-mirrorable (DuckDB GROUP BY DOUBLE[]),
-    no string-format hashing.  Member-id selection is the salted
+    no string-format hashing.  Member-id selection is `_salted_topk`'s
     two-phase k-min, so a million-copy group never sorts in one task;
     the per-group stats aggregate is map-side combinable."""
-    wl = Window.partitionBy(
-        "v", F.pmod(F.col("vec_id"), F.lit(KNN_SALT))
-    ).orderBy("vec_id")
-    wg = Window.partitionBy("v").orderBy("vec_id")
     ids = (
-        v.select("v", "vec_id")
-        .withColumn("_l", F.row_number().over(wl))
-        .filter(F.col("_l") <= KNN_GROUP_IDS)
-        .withColumn("_g", F.row_number().over(wg))
-        .filter(F.col("_g") <= KNN_GROUP_IDS)
+        _salted_topk(
+            v.select("v", "vec_id"),
+            "v",
+            f"pmod(vec_id, {KNN_SALT})",
+            "vec_id",
+            KNN_GROUP_IDS,
+        )
         .groupBy("v")
         .agg(F.sort_array(F.collect_list("vec_id")).alias("ids"))
     )
@@ -523,51 +612,17 @@ def _value_groups(v: DataFrame) -> DataFrame:
 
 
 def _member_level_knn(v: DataFrame, max_bucket: int | None = None) -> DataFrame:
-    """The direct salted bucket join (r5 form): exact when the corpus has
-    no exact-duplicate vectors — then the value collapse is the identity
+    """The direct salted bucket join: exact when the corpus has no
+    exact-duplicate vectors — then the value collapse is the identity
     and this plan skips its machinery. `_nbr_candidates` still bounds
     bucket occupancy (= distinct occupancy here)."""
     nbrs = _nbr_candidates(v, max_bucket)
-    a = v.select(
-        F.col("vec_id").alias("src_id"),
-        F.col("v").alias("sv"),
-        F.col("nrm").alias("sn"),
-        F.col("bucket").alias("sb"),
-    ).withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(KNN_SALT - 1))))
-    b = nbrs.select(
-        F.col("vec_id").alias("nbr_id"),
-        F.col("v").alias("nv"),
-        F.col("nrm").alias("nn"),
-        F.col("bucket").alias("nb"),
-        F.pmod(F.col("vec_id"), F.lit(KNN_SALT)).alias("nsalt"),
+    scored = _block_pairs(v, nbrs, _BLOCK_CARRY, "!=").selectExpr(
+        "aid AS src_id", "salt", "bid AS nbr_id", f"{_BLOCK_COS} AS cos_sim"
     )
-    scored = a.join(
-        b,
-        (F.col("sb") == F.col("nb"))
-        & (F.col("salt") == F.col("nsalt"))
-        & (F.col("src_id") != F.col("nbr_id")),
-    ).select(
-        "src_id",
-        "salt",
-        "nbr_id",
-        (F.expr(dot("sv", "nv")) / (F.col("sn") * F.col("nn"))).alias(
-            "cos_sim"
-        ),
-    )
-    wl = Window.partitionBy("src_id", "salt").orderBy(
-        F.col("cos_sim").desc(), "nbr_id"
-    )
-    local = (
-        scored.withColumn("lrk", F.row_number().over(wl))
-        .filter(F.col("lrk") <= TOP_K)
-        .drop("lrk", "salt")
-    )
-    w = Window.partitionBy("src_id").orderBy(F.col("cos_sim").desc(), "nbr_id")
-    return (
-        local.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("src_id", "nbr_id", "cos_sim", F.col("rk").cast("int").alias("rk"))
-    )
+    return _salted_topk(
+        scored, "src_id", "salt", "cos_sim DESC, nbr_id", TOP_K
+    ).selectExpr("src_id", "nbr_id", "cos_sim", "CAST(rk AS INT) AS rk")
 
 
 def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -576,40 +631,39 @@ def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     family ranks against a small query set; this builds the full graph
     that embedding clustering / near-dup detection consumes).
 
-    Duplicate collapse (r6, second iteration): exact-duplicate vectors —
-    the dominant mass of duplicate-heavy corpora — are collapsed to one
-    group per distinct VALUE before any pair work, and the member-level
-    graph is reconstructed EXACTLY afterwards.  This replaced the first
-    r6 design (member-level pilot cap), whose measured edge recall at 10×
-    replication was 15% — pilots cannot contain most members' own
-    duplicates.  The reconstruction is exact because cosine is constant
-    on value groups: for a source member, candidate members order by
-    (cos DESC, id), so the top-k comes from at most KNN_GROUP_FANOUT
-    candidate GROUPS (coverage lemma: if the k-th chosen id lives in
-    group G, fewer than k ids precede it, so at most k−1 groups have a
-    smaller min id than G — k groups by (cos, rep_id) suffice; +1 spare
-    covers the member excluded as self), each contributing at most its
-    KNN_GROUP_IDS smallest member ids.  Own-group duplicates enter as a
-    candidate with the SAME computed self-cosine expression the
-    member-level oracle produces (dot(v,v)/(nrm·nrm) — deterministic,
-    not assumed 1.0).
+    Duplicate collapse: exact-duplicate vectors — the dominant mass of
+    duplicate-heavy corpora — are collapsed to one group per distinct
+    VALUE before any pair work, and the member-level graph is
+    reconstructed EXACTLY afterwards.  This replaced an earlier
+    member-level pilot cap, whose measured edge recall at 10× replication
+    was 15% — pilots cannot contain most members' own duplicates.  The
+    reconstruction is exact because cosine is constant on value groups:
+    for a source member, candidate members order by (cos DESC, id), so
+    the top-k comes from at most KNN_GROUP_FANOUT candidate GROUPS
+    (coverage lemma: if the k-th chosen id lives in group G, fewer than k
+    ids precede it, so at most k−1 groups have a smaller min id than G —
+    k groups by (cos, rep_id) suffice; +1 spare covers the member
+    excluded as self), each contributing at most its KNN_GROUP_IDS
+    smallest member ids.  Own-group duplicates enter as a candidate with
+    the SAME computed self-cosine expression the member-level oracle
+    produces (dot(v,v)/(nrm·nrm) — deterministic, not assumed 1.0).
 
     Shape: a one-aggregate duplicate probe first — on a duplicate-FREE
     corpus (every contract/bench corpus) the collapse is the identity, so
     the direct member-level salted join runs instead (identical result,
     none of the collapse cost).  Otherwise: value-group collapse (two
     narrow shuffles on v, persisted — one row per DISTINCT value) →
-    salted rep-level bucket join with ``_nbr_candidates`` bounding
-    DISTINCT occupancy (the cap is now a distinct-density backstop:
-    duplication can never re-inflate a bucket) → two-phase top-group
-    selection → a bounded expansion join (≤ KNN_GROUP_FANOUT·
-    KNN_GROUP_IDS candidate rows per source member) → final member
-    window.  Pair work is O(Σ min(distinct_b, pilot)·distinct_b):
-    measured duplication-INVARIANT (261 364 rep pairs at 10×, 30× AND
-    100× replication), and the result is bit-identical to the uncapped
-    member-level graph whenever the distinct-density cap doesn't bind
-    (measured: edge recall 100% at 10×, vs 15% for the superseded
-    member-level pilot-cap design)."""
+    salted rep-level bucket join (`_block_pairs`) with ``_nbr_candidates``
+    bounding DISTINCT occupancy (the cap is now a distinct-density
+    backstop: duplication can never re-inflate a bucket) → two-phase
+    top-group selection (`_salted_topk`) → a bounded expansion join
+    (≤ KNN_GROUP_FANOUT·KNN_GROUP_IDS candidate rows per source member) →
+    the final member window (`_topk`).  Pair work is
+    O(Σ min(distinct_b, pilot)·distinct_b): measured duplication-INVARIANT
+    (261 364 rep pairs at 10×, 30× AND 100× replication), and the result
+    is bit-identical to the uncapped member-level graph whenever the
+    distinct-density cap doesn't bind (measured: edge recall 100% at 10×,
+    vs 15% for the superseded member-level pilot-cap design)."""
     v = _vectors(spark, sf_dir).withColumn(
         "bucket", F.expr(lsh_bucket("v", _PLANES))
     )
@@ -618,11 +672,11 @@ def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # so the cap decision below cannot be fooled by a collision).
     # Equality proves the corpus duplicate-free, so the value collapse is
     # the identity and the direct member-level plan is the same result.
-    # r7 (ADVICE r6 #3): ONE per-bucket aggregation yields the duplicate
-    # stats AND both occupancy maxima (identical values share a bucket,
-    # so per-bucket distincts partition the distinct set), collapsing
-    # construction's up-to-three probe jobs into one; _nbr_candidates
-    # then skips its own probe on both paths.
+    # ONE per-bucket aggregation yields the duplicate stats AND both
+    # occupancy maxima (identical values share a bucket, so per-bucket
+    # distincts partition the distinct set), so construction runs one
+    # probe job, not three; _nbr_candidates then skips its own probe on
+    # both paths.
     stats = (
         v.groupBy("bucket")
         .agg(
@@ -645,75 +699,32 @@ def knn_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     # frame is one row per DISTINCT value, so the cache is corpus-size
     # independent under duplication (same device as dedup's bands cache)
     groups = _value_groups(v).persist()
-    reps = groups.select(
-        F.col("rep_id").alias("vec_id"), "v", "nrm", "bucket"
-    )
+    reps = groups.selectExpr("rep_id AS vec_id", "v", "nrm", "bucket")
     nbr_groups = _nbr_candidates(reps, max_bucket=stats.max_distinct)
-    a = groups.select(
-        F.col("rep_id").alias("ga"),
-        F.col("v").alias("av"),
-        F.col("nrm").alias("an"),
-        F.col("bucket").alias("ab"),
-    ).withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(KNN_SALT - 1))))
-    b = nbr_groups.select(
-        F.col("vec_id").alias("gb"),
-        F.col("v").alias("bv"),
-        F.col("nrm").alias("bn"),
-        F.col("bucket").alias("bb"),
-        F.pmod(F.col("vec_id"), F.lit(KNN_SALT)).alias("bsalt"),
-    )
-    cross = a.join(
-        b,
-        (F.col("ab") == F.col("bb"))
-        & (F.col("salt") == F.col("bsalt"))
-        & (F.col("ga") != F.col("gb")),
-    ).select(
-        "ga",
-        "salt",
-        "gb",
-        (F.expr(dot("av", "bv")) / (F.col("an") * F.col("bn"))).alias(
-            "cos_sim"
-        ),
+    cross = _block_pairs(reps, nbr_groups, _BLOCK_CARRY, "!=").selectExpr(
+        "aid AS ga", "salt", "bid AS gb", f"{_BLOCK_COS} AS cos_sim"
     )
     # own group as a candidate (multiplicity ≥ 2): the self-cosine is the
     # SAME expression the member-level computation would produce
-    self_cand = groups.filter(F.col("m") >= 2).select(
-        F.col("rep_id").alias("ga"),
-        F.lit(0).alias("salt"),
-        F.col("rep_id").alias("gb"),
-        (F.expr(dot("v", "v")) / (F.col("nrm") * F.col("nrm"))).alias(
-            "cos_sim"
-        ),
+    self_cand = groups.where("m >= 2").selectExpr(
+        "rep_id AS ga",
+        "0 AS salt",
+        "rep_id AS gb",
+        f"({dot('v', 'v')} / (nrm * nrm)) AS cos_sim",
     )
-    scored = cross.unionByName(self_cand)
-    wl = Window.partitionBy("ga", "salt").orderBy(F.col("cos_sim").desc(), "gb")
-    wg = Window.partitionBy("ga").orderBy(F.col("cos_sim").desc(), "gb")
-    top_groups = (
-        scored.withColumn("_l", F.row_number().over(wl))
-        .filter(F.col("_l") <= KNN_GROUP_FANOUT)
-        .drop("_l", "salt")
-        .withColumn("_g", F.row_number().over(wg))
-        .filter(F.col("_g") <= KNN_GROUP_FANOUT)
-        .drop("_g")
+    top_groups = _salted_topk(
+        cross.unionByName(self_cand), "ga", "salt", "cos_sim DESC, gb", KNN_GROUP_FANOUT
     )
     # bounded expansion: candidate member ids of each selected group
     cand_members = top_groups.join(
-        groups.select(F.col("rep_id").alias("gb"), F.col("ids").alias("b_ids")),
-        "gb",
-    ).select("ga", "cos_sim", F.explode("b_ids").alias("nbr_id"))
+        groups.selectExpr("rep_id AS gb", "ids AS b_ids"), "gb"
+    ).selectExpr("ga", "cos_sim", "explode(b_ids) AS nbr_id")
     # source members × their group's candidates (≤ FANOUT·GROUP_IDS rows each)
-    members = v.join(
-        groups.select("v", F.col("rep_id").alias("ga")), "v"
-    ).select(F.col("vec_id").alias("src_id"), "ga")
-    expanded = members.join(cand_members, "ga").filter(
-        F.col("src_id") != F.col("nbr_id")
+    members = v.join(groups.selectExpr("v", "rep_id AS ga"), "v").selectExpr(
+        "vec_id AS src_id", "ga"
     )
-    w = Window.partitionBy("src_id").orderBy(F.col("cos_sim").desc(), "nbr_id")
-    return (
-        expanded.withColumn("rk", F.row_number().over(w))
-        .filter(F.col("rk") <= TOP_K)
-        .select("src_id", "nbr_id", "cos_sim", F.col("rk").cast("int").alias("rk"))
-    )
+    expanded = members.join(cand_members, "ga").where("src_id != nbr_id")
+    return _topk(expanded, "cos_sim", part="src_id", tie="nbr_id")
 
 
 #: Cosine threshold for range search — picked against the corpus: random
@@ -729,49 +740,22 @@ def range_search(spark: SparkSession, sf_dir: str) -> DataFrame:
     answer set drives drop decisions exactly like MinHash pairs drive
     near-dup removal).
 
-    Shape: identical to the salted kNN join (neighbour side salted by
-    pmod(vec_id, KNN_SALT), src side replicated, join on (bucket, salt))
-    but with a thresholded filter instead of a top-k window — no window
-    at all, so the only post-join work is the predicate. The vec_a <
-    vec_b condition emits each unordered pair once. Exact within a
-    bucket; recall across hyperplanes trades as in `sim_topk_lsh`.
-    The output is an unordered pair SET (consumers key on the pair, the
-    contract compare is order-insensitive): no terminal sort — at scale
-    that would be a range-partitioned global sort over the full Θ(pairs)
-    frame for presentation only (VERDICT r6)."""
+    Shape: the kNN join's salted bucket pairing (`_block_pairs`) with a
+    thresholded filter instead of a top-k window — no window at all, so
+    the only post-join work is the predicate. The vec_a < vec_b relation
+    emits each unordered pair once. Exact within a bucket; recall across
+    hyperplanes trades as in `sim_topk_lsh`. The output is an unordered
+    pair SET (consumers key on the pair, the contract compare is
+    order-insensitive): no terminal sort — at scale that would be a
+    range-partitioned global sort over the full Θ(pairs) frame for
+    presentation only."""
     v = _vectors(spark, sf_dir).withColumn(
         "bucket", F.expr(lsh_bucket("v", _PLANES))
     )
-    a = v.select(
-        F.col("vec_id").alias("vec_a"),
-        F.col("v").alias("av"),
-        F.col("nrm").alias("an"),
-        F.col("bucket").alias("ab"),
-    ).withColumn(
-        "salt", F.explode(F.sequence(F.lit(0), F.lit(KNN_SALT - 1)))
-    )
-    b = v.select(
-        F.col("vec_id").alias("vec_b"),
-        F.col("v").alias("bv"),
-        F.col("nrm").alias("bn"),
-        F.col("bucket").alias("bb"),
-        F.pmod(F.col("vec_id"), F.lit(KNN_SALT)).alias("bsalt"),
-    )
     return (
-        a.join(
-            b,
-            (F.col("ab") == F.col("bb"))
-            & (F.col("salt") == F.col("bsalt"))
-            & (F.col("vec_a") < F.col("vec_b")),
-        )
-        .select(
-            "vec_a",
-            "vec_b",
-            (F.expr(dot("av", "bv")) / (F.col("an") * F.col("bn"))).alias(
-                "cos_sim"
-            ),
-        )
-        .filter(F.col("cos_sim") >= COS_RANGE_THRESHOLD)
+        _block_pairs(v, v, _BLOCK_CARRY, "<")
+        .selectExpr("aid AS vec_a", "bid AS vec_b", f"{_BLOCK_COS} AS cos_sim")
+        .where(f"cos_sim >= {sql_double(COS_RANGE_THRESHOLD)}")
     )
 
 
@@ -783,30 +767,30 @@ def embedding_dedup_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
     vec_id of every similar pair (min-id-wins), report each vector's
     partner count as the dedup-pressure observable.
 
-    Scale shape (r6): exact-duplicate vectors — the dominant mass on
+    Scale shape: exact-duplicate vectors — the dominant mass on
     duplicate-heavy corpora, where the member-level pair set is
     Θ(Σ duplicates²) BY DEFINITION — are collapsed to (representative =
     min vec_id, multiplicity) groups BEFORE any pair work, keyed on an
     engine-internal md5 of the vector bytes.  The ≥τ relation is constant
     on duplicate groups (every member shares the exact value), so the
-    member-level answers are exact group-level algebra:
+    member-level answers are exact group-level algebra (`_group_decisions`):
 
       n_partners(member of g) = (m_g − 1) + Σ_{g'≠g, g'~g} m_{g'}
       keep(x) = x is g's min id AND no similar group has a smaller min id
 
-    The pair search then runs over DISTINCT vectors only (same salted
-    sign-LSH bucket join as `sim_range_search`), so pair work is constant
-    in duplication and the member-side cost is two narrow joins — while
-    the DuckDB oracle stays the brute member-level definition, proving
-    the collapse is semantics-preserving at any scale. Integer outputs.
-    The group frame is persisted — its consumers otherwise re-run the
-    collapse.  (No duplicate-free fast path here, unlike `knn_join`:
-    measured at sf0.1, the member-level alternative — range_search's
-    SORTED pair listing + endpoint reduction — is slower than the
-    collapse even with zero duplicates, 2.97 s vs 2.34 s.)
+    The pair search then runs over DISTINCT vectors only (the salted
+    sign-LSH bucket pairing of `sim_range_search`, `_block_pairs`), so
+    pair work is constant in duplication and the member-side cost is two
+    narrow joins — while the DuckDB oracle stays the brute member-level
+    definition, proving the collapse is semantics-preserving at any
+    scale. Integer outputs. The group frame is persisted — its consumers
+    otherwise re-run the collapse.  (No duplicate-free fast path here,
+    unlike `knn_join`: measured at sf0.1, the member-level alternative —
+    range_search's SORTED pair listing + endpoint reduction — is slower
+    than the collapse even with zero duplicates, 2.97 s vs 2.34 s.)
     """
     emb = load_table(spark, sf_dir, "embeddings")
-    # persisted (r7): three consumers (group collapse, rep selection, the
+    # persisted: three consumers (group collapse, rep selection, the
     # final member mapping) otherwise each re-scan the corpus and re-hash
     # every vector — 3× I/O + 3× md5 at 100 TB for one narrow projection
     mem = (
@@ -829,60 +813,14 @@ def embedding_dedup_decisions(spark: SparkSession, sf_dir: str) -> DataFrame:
         .withColumn("nrm", F.expr(norm("v")))
         .withColumn("bucket", F.expr(lsh_bucket("v", _PLANES)))
     )
-    a = reps.select(
-        F.col("rep_id").alias("ra"),
-        F.col("v").alias("av"),
-        F.col("nrm").alias("an"),
-        F.col("bucket").alias("ab"),
-    ).withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(KNN_SALT - 1))))
-    b = reps.select(
-        F.col("rep_id").alias("rb"),
-        F.col("m").alias("mb"),
-        F.col("v").alias("bv"),
-        F.col("nrm").alias("bn"),
-        F.col("bucket").alias("bb"),
-        F.pmod(F.col("rep_id"), F.lit(KNN_SALT)).alias("bsalt"),
+    carry = {**_BLOCK_CARRY, "id": "rep_id", "m": "m"}
+    partners = (
+        _block_pairs(reps, reps, carry, "!=")
+        .where(f"{_BLOCK_COS} >= {sql_double(COS_RANGE_THRESHOLD)}")
+        .selectExpr("aid AS rep_id", "bid AS partner_rep", "bm AS partner_m")
     )
-    sim = (
-        a.join(
-            b,
-            (F.col("ab") == F.col("bb"))
-            & (F.col("salt") == F.col("bsalt"))
-            & (F.col("ra") != F.col("rb")),
-        )
-        .filter(
-            (F.expr(dot("av", "bv")) / (F.col("an") * F.col("bn")))
-            >= COS_RANGE_THRESHOLD
-        )
-        .groupBy("ra")
-        .agg(
-            F.sum("mb").alias("ext"),
-            F.min("rb").alias("min_partner_rep"),
-        )
-    )
-    ginfo = groups.join(
-        sim, groups["rep_id"] == sim["ra"], "left"
-    ).select(
-        "gsig",
-        "rep_id",
-        "m",
-        F.coalesce(F.col("ext"), F.lit(0)).alias("ext"),
-        "min_partner_rep",
-    )
-    return mem.join(ginfo, "gsig").select(
-        "vec_id",
-        "label",
-        ((F.col("m") - 1) + F.col("ext")).alias("n_partners"),
-        F.when(
-            (F.col("vec_id") == F.col("rep_id"))
-            & (
-                F.col("min_partner_rep").isNull()
-                | (F.col("min_partner_rep") > F.col("rep_id"))
-            ),
-            F.lit(1),
-        )
-        .otherwise(F.lit(0))
-        .alias("keep"),
+    return _group_decisions(mem, groups, ["gsig"], "vec_id", partners).selectExpr(
+        "vec_id", "label", "n_partners", "CASE WHEN keep THEN 1 ELSE 0 END AS keep"
     )
 
 
@@ -918,26 +856,28 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     - Exact-duplicate vectors — the dominant mass of duplicate-heavy
       corpora, which a fixed-k replication would otherwise grow
       QUADRATICALLY in pair volume — are collapsed to one group per
-      distinct VALUE before any pair work (the r6 kNN device), so the
-      within-cell pair join is over distinct values only and the pair
-      volume is duplication-INVARIANT.  Member-level decisions are then
-      reconstructed EXACTLY in closed form: a member's own-group
-      witnesses are precisely its smaller-id co-members (identical
-      vectors share cell and centroid-cosine bitwise, and cos(v,v) ≥
-      eps always), so n_own = rank-within-group − 1 and the witness is
-      the group minimum — linear per member, no pair enumeration.  The
-      rare cross-group centroid-cosine TIE (two distinct values, equal
-      cc — the priority comparison falls through to member ids) gets a
-      member-level fallback join over just the tied group pairs.  The
-      DuckDB oracle stays the brute member-level rule, so the green
-      contract PROVES the collapse semantics-preserving.
-    - The group pair join is salted like the kNN join; the per-member
-      rank window runs only over multi-member groups (one task per
-      duplicate group — LINEAR in group size, vs the quadratic pair
-      blow-up it replaces); the evidence aggregates are map-side
-      combinable.  The assignment frame feeds the group collapse and
-      the final mapping, so it is persisted — at scale it IS the
-      materialized cluster-assignment table a real pipeline writes.
+      distinct VALUE before any pair work (`knn_join`'s value-group
+      device), so the within-cell pair join is over distinct values only
+      and the pair volume is duplication-INVARIANT.  Member-level
+      decisions are then reconstructed EXACTLY in closed form: a member's
+      own-group witnesses are precisely its smaller-id co-members
+      (identical vectors share cell and centroid-cosine bitwise, and
+      cos(v,v) ≥ eps always), so n_own = rank-within-group − 1 and the
+      witness is the group minimum — linear per member, no pair
+      enumeration.  The rare cross-group centroid-cosine TIE (two
+      distinct values, equal cc — the priority comparison falls through
+      to member ids) gets a member-level fallback join over just the
+      tied group pairs.  The DuckDB oracle stays the brute member-level
+      rule, so the green contract PROVES the collapse
+      semantics-preserving.
+    - The group pair join is the kNN join's salted pairing
+      (`_block_pairs`, cell as the block); the per-member rank window
+      runs only over multi-member groups (one task per duplicate group —
+      LINEAR in group size, vs the quadratic pair blow-up it replaces);
+      the evidence aggregates are map-side combinable.  The assignment
+      frame feeds the group collapse and the final mapping, so it is
+      persisted — at scale it IS the materialized cluster-assignment
+      table a real pipeline writes.
 
     Output per vector: cell, centroid-cosine, keep flag, the minimum-id
     higher-priority witness that dropped it (NULL if kept), and the
@@ -963,45 +903,21 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .persist()
     )
-    ga = g.select(
-        F.col("v").alias("va"),
-        F.col("gid").alias("gid_a"),
-        F.col("nrm").alias("na"),
-        "cell",
-        F.col("cc").alias("cc_a"),
-    ).withColumn("salt", F.explode(F.sequence(F.lit(0), F.lit(KNN_SALT - 1))))
-    gb = g.select(
-        F.col("v").alias("vb"),
-        F.col("gid").alias("gid_b"),
-        F.col("m").alias("m_b"),
-        F.col("nrm").alias("nb"),
-        F.col("cell").alias("cell_b"),
-        F.col("cc").alias("cc_b"),
-    ).withColumn("bsalt", F.pmod(F.col("gid_b"), F.lit(KNN_SALT)))
-    pairs = ga.join(
-        gb,
-        (F.col("cell") == F.col("cell_b"))
-        & (F.col("salt") == F.col("bsalt"))
-        & (F.col("gid_a") != F.col("gid_b")),
-    ).filter(
-        # zero-norm guard (ADVICE r7): 0/0 = NaN, which Spark compares
-        # false but DuckDB ORDERs above all values — requiring na,nb > 0
-        # on BOTH engines keeps the contract total on arbitrary vectors.
-        (F.col("na") > 0)
-        & (F.col("nb") > 0)
-        & (
-            F.expr(dot("va", "vb")) / (F.col("na") * F.col("nb"))
-            >= SEMDEDUP_EPS
-        )
+    carry = {**_BLOCK_CARRY, "id": "gid", "blk": "cell", "m": "m", "cc": "cc"}
+    # zero-norm guard: 0/0 = NaN, which Spark compares false but DuckDB
+    # ORDERs above all values — requiring an, bn > 0 on BOTH engines
+    # keeps the contract total on arbitrary vectors.
+    pairs = _block_pairs(g, g, carry, "!=").where(
+        f"an > 0 AND bn > 0 AND {_BLOCK_COS} >= {sql_double(SEMDEDUP_EPS)}"
     )
     # strict-priority witness groups: every member of H qualifies against
     # every member of the target group
     strict = (
-        pairs.filter(F.col("cc_b") < F.col("cc_a"))
-        .groupBy("gid_a")
+        pairs.where("bcc < acc")
+        .groupBy("aid")
         .agg(
-            F.sum("m_b").alias("n_strict"),
-            F.min("gid_b").alias("w_strict"),
+            F.sum("bm").alias("n_strict"),
+            F.min("bid").alias("w_strict"),
         )
     )
     # cc-tie edges (distinct values, bitwise-equal centroid cosine): the
@@ -1009,31 +925,30 @@ def semantic_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
     # just these group pairs (empty on both the fixed and random corpora;
     # the branch exists for exactness, and tests construct one)
     tie_b = (
-        pairs.filter(F.col("cc_b") == F.col("cc_a"))
-        .select("gid_a", F.col("vb").alias("v"))
-        .join(assigned.select("v", F.col("vec_id").alias("b_id")), "v")
-        .select("gid_a", "b_id")
+        pairs.where("bcc = acc")
+        .selectExpr("aid", "bv AS v")
+        .join(assigned.selectExpr("v", "vec_id AS b_id"), "v")
+        .select("aid", "b_id")
     )
     # ---- member-level reconstruction
     mem = assigned.select("vec_id", "v", "cell", "cell_cos").join(
         g.select("v", "gid", "m"), "v"
     )
     singles = mem.filter(F.col("m") == 1).withColumn("rk", F.lit(1))
-    wr = Window.partitionBy("v").orderBy("vec_id")
-    multis = mem.filter(F.col("m") >= 2).withColumn(
-        "rk", F.row_number().over(wr)
+    multis = mem.filter(F.col("m") >= 2).selectExpr(
+        "*", "row_number() OVER (PARTITION BY v ORDER BY vec_id) AS rk"
     )
     memr = singles.unionByName(multis)
     tie_ev = (
         memr.select("vec_id", "gid")
-        .join(tie_b, F.col("gid") == F.col("gid_a"))
+        .join(tie_b, F.col("gid") == F.col("aid"))
         .filter(F.col("b_id") < F.col("vec_id"))
         .groupBy("vec_id")
         .agg(F.count(F.lit(1)).alias("n_tie"), F.min("b_id").alias("w_tie"))
     )
     out = (
-        memr.join(strict, memr["gid"] == strict["gid_a"], "left")
-        .drop("gid_a")
+        memr.join(strict, memr["gid"] == strict["aid"], "left")
+        .drop("aid")
         .join(tie_ev, "vec_id", "left")
         .withColumn(
             "n_closer_dups",
@@ -1075,8 +990,8 @@ PQ_GRID = 1024
 #: 2-bit-per-dim codebook seeding; picked by a measured recall sweep
 #: (t ∈ {120..320}: 120 best at every SF).
 PQ_TMAG = 120
-#: Lloyd refinement rounds on the lattice codebook (VERDICT r7 #3 —
-#: trained codebooks, the FAISS IndexPQ per-subspace k-means): the
+#: Lloyd refinement rounds on the lattice codebook (trained codebooks,
+#: the FAISS IndexPQ per-subspace k-means): the
 #: 2-bit-cell floor-means SEED k-means, then each round reassigns every
 #: subvector to its integer-L2-nearest codeword (ties by codeword id)
 #: and refits each codeword as the lattice floor-mean of its assigned
@@ -1087,8 +1002,8 @@ PQ_TMAG = 120
 #: sweep (tools/pq_train_sweep.py).
 PQ_ITERS = 3
 
-#: Bounded deterministic TRAINING set for the PQ codebooks (VERDICT r8
-#: #3 — FAISS trains on a sample, not the corpus): the PQ_TRAIN_N
+#: Bounded deterministic TRAINING set for the PQ codebooks (FAISS
+#: trains on a sample, not the corpus): the PQ_TRAIN_N
 #: vectors with the smallest md5('pq:' || vec_id) draw (the
 #: `train_uniform_sample` k-min device — a pure function of the keys,
 #: identical on both engines). Seeding and every Lloyd round run over
@@ -1096,7 +1011,7 @@ PQ_ITERS = 3
 #: (the sample semi-join) + PQ_ITERS jobs over ≤ PQ_TRAIN_N·PQ_M rows
 #: instead of ~4 full corpus scans; the full corpus is encoded exactly
 #: once against the finished book. 512 was picked by measured sweep
-#: (tools/pq_train_sweep.py --samples; SCALING.md r9 table): it covers
+#: (tools/pq_train_sweep.py --samples; recorded in SCALING.md): it covers
 #: the sf0.001/sf0.01 corpora outright (500 vectors — sampled training
 #: degenerates to the full-corpus codebooks there) and at sf0.1, where
 #: it genuinely binds (512 of 2000), recall is within one top-k pair of
@@ -1105,7 +1020,7 @@ PQ_ITERS = 3
 #: constant-size bound that makes training corpus-independent.
 PQ_TRAIN_N = 512
 
-#: Sizing rule for PQ_TRAIN_N (VERDICT r9 #4). The classic FAISS
+#: Sizing rule for PQ_TRAIN_N. The classic FAISS
 #: guidance (≥ ~39 training points per centroid) does NOT transfer to
 #: these grid-seeded books: the 2-bit-cell seeding occupies k_eff ≈ 207
 #: of the 256 possible codewords per subspace from a 512-vector sample
@@ -1114,7 +1029,7 @@ PQ_TRAIN_N = 512
 #: full-corpus training at every committed size. The rule actually
 #: validated by the recorded sweeps (``tools/pq_train_sweep.py
 #: --samples`` on the testdata corpora; ``--emb`` on the clustered
-#: fixture — SCALING.md r9/r10 tables) is a SAMPLE-FRACTION floor:
+#: fixture — both recorded in SCALING.md) is a SAMPLE-FRACTION floor:
 #:
 #:     PQ_TRAIN_N >= ceil(corpus_n / PQ_TRAIN_MAX_SUBSAMPLE)
 #:
@@ -1164,7 +1079,7 @@ def _pq_train_ctes(iters: int = PQ_ITERS) -> str:
     emits asg/fit/nb/book{t} per round and a final `book` alias. Every
     step is exact-integer (d2 argmin with ties by codeword id,
     floor(Σx/n) refit, empty codewords keep their previous position), so
-    the unroll stays bit-for-bit with the Spark loop. Since r9 the
+    the unroll stays bit-for-bit with the Spark loop. The
     rounds assign `trainsub` (the PQ_TRAIN_N-vector sample emitted by
     `_pq_sample_ctes`), not the full `subo` — mirroring the sampled
     Spark training."""
@@ -1211,7 +1126,7 @@ def _pq_train_ctes(iters: int = PQ_ITERS) -> str:
 
 
 def _pq_sample_ctes(train_n: int = PQ_TRAIN_N) -> str:
-    """DuckDB CTE text for the bounded training sample (VERDICT r8 #3):
+    """DuckDB CTE text for the bounded training sample:
     expects `vi` (one row per vector) and `subo` in scope; emits
     `trainids` (the train_n smallest md5('pq:' || vec_id) draws — the
     `train_uniform_sample` k-min device, a pure function of the keys) and
@@ -1298,7 +1213,7 @@ def _pq_book(
     def build() -> list[tuple[int, int, list[int]]]:
         emb = load_table(spark, sf_dir, "embeddings")
         v = fan_out(emb).select("vec_id", F.expr(f"{as_double('embedding')} AS v"))
-        # Bounded deterministic training set (VERDICT r8 #3): the
+        # Bounded deterministic training set: the
         # PQ_TRAIN_N smallest md5('pq:' || vec_id) draws — the
         # train_uniform_sample k-min device, a pure function of the keys
         # so DuckDB re-derives the exact same sample. ONE TakeOrdered job
@@ -1306,7 +1221,7 @@ def _pq_book(
         # doubles ≈ 256 KB — a bounded statistics probe in the
         # _member_level_knn class, constant in the corpus size, NOT a
         # corpus collect), and `_lloyd_book` trains the codebook in exact
-        # int64 NumPy. This replaces r8's distributed Lloyd loop, whose
+        # int64 NumPy. This replaces a distributed Lloyd loop, whose
         # ~4 corpus scans and 3 sequential eager checkpoints cost 8-9 s
         # of plan-construction latency at sf0.1 for jobs that touch
         # kilobytes — the FAISS split (sampled train on one node,
@@ -1341,7 +1256,7 @@ def _pq_recon(
        grid-seeded quantizer with up to 4^PQ_SUB = 256 data-dependent
        codewords per subspace, the classic PQ codebook size. Seeding and
        the Lloyd refits run over the bounded PQ_TRAIN_N k-min sample
-       (r9, the FAISS train-on-sample discipline); only the final encode
+       (the FAISS train-on-sample discipline); only the final encode
        touches every corpus vector.  The cell
        key encodes sign and magnitude (|x| ≥ PQ_TMAG) per dim — measured
        recall doubled vs a sign-only 2^8-orthant key at 8 subspaces, and
@@ -1365,8 +1280,8 @@ def _pq_recon(
     (≤ PQ_M·4^PQ_SUB rows) broadcasts for free."""
     vi = v.withColumn("vi", F.expr(_lattice_expr()))
     # Nearest-codeword argmin as a PURE PROJECTION over a 1-row broadcast
-    # codebook (r12, guide §2.4 "remove shuffles outright" / §4.1
-    # higher-order functions — supersedes r9's min(struct) aggregate):
+    # codebook (no shuffle, higher-order functions — it replaced a
+    # min(struct) aggregate):
     # the trained book (`_pq_book` — sampled + Lloyd-fit once per
     # session/corpus) is a driver-side list, so shipping it as
     # one nested-array row and folding the argmin into
@@ -1410,7 +1325,7 @@ def topk_pq(spark: SparkSession, sf_dir: str) -> DataFrame:
     codes, 16×), trading recall for bandwidth the way billion-vector
     deployments do (FAISS PQ / IVFPQ).
 
-    Codebooks are TRAINED (r8): per-(subspace, 2-bit-cell) lattice
+    Codebooks are TRAINED: per-(subspace, 2-bit-cell) lattice
     floor-means seed PQ_ITERS Lloyd rounds of per-subspace k-means (see
     `_pq_recon` — up to 256 codewords per subspace, the classic PQ
     size); the query side is its exact lattice vector.  Encoding
@@ -1571,7 +1486,7 @@ RECALL_VARIANTS = ("ivf_pq", "ivf_sq8", "pq", "sq8")
 
 
 def recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """ANN evaluation as a first-class operator (r10 continuation):
+    """ANN evaluation as a first-class operator:
     recall@TOP_K of every quantized variant against the exact cosine
     baseline, in one report — the build (sim_topk_*) → tune
     (tools/nprobe_curve.py, pq_train_sweep.py) → **evaluate** leg a
@@ -1629,7 +1544,7 @@ def recall_report(spark: SparkSession, sf_dir: str) -> DataFrame:
     return out.orderBy("variant")
 
 
-#: MMR diversified selection (r12): tradeoff weight λ = 7/10 carried as
+#: MMR diversified selection: tradeoff weight λ = 7/10 carried as
 #: an integer pair so the greedy score 10·mmr = 7·rel − 3·maxsim stays
 #: in exact BIGINT algebra on both engines; K exemplars selected from a
 #: relevance top-POOL candidate set (the standard two-stage MMR a

@@ -36,6 +36,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
+from parquet_near_storage_compute_spark.functions.sql import sql_string
+from parquet_near_storage_compute_spark.functions.text import hash32
 from parquet_near_storage_compute_spark.tables import load_table
 
 # ---- count-min parameters ------------------------------------------------
@@ -49,19 +51,6 @@ BLOOM_BITS = BLOOM_WORDS * 32
 BLOOM_K = 3  #: hash functions per element
 
 
-def _hash32(seed: F.Column, key: F.Column) -> F.Column:
-    """Deterministic 32-bit hash: first 8 hex chars of md5('<seed>:<key>').
-
-    Bitwise identical in DuckDB as ('0x'||substr(md5(seed||':'||key),1,8))
-    ::BIGINT — same device as train_mixture_sample's draw
-    (operators/training.py:327)."""
-    return F.conv(
-        F.substring(F.md5(F.concat(seed.cast("string"), F.lit(":"), key.cast("string"))), 1, 8),
-        16,
-        10,
-    ).cast("long")
-
-
 def countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Count-min estimates vs exact counts for the probe keys.
 
@@ -70,7 +59,7 @@ def countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     then the ≤|keys|-row frame explodes into CM_DEPTH (d, bucket) cells
     and the sketch sums the counts. Identical counters to hashing every
     event row (Σ per-key counts = per-cell row count), but the md5-based
-    `_hash32` runs D× per DISTINCT KEY instead of D× per event — at
+    `hash32` runs D× per DISTINCT KEY instead of D× per event — at
     sf0.1 that is 6 K digests instead of 400 K (r12 wave 3; interleaved
     best-of-9 at sf0.1: 1.166 → 0.687 s, every pair in favor). The
     per-key frame is persisted: it feeds the sketch build AND the probe
@@ -87,7 +76,7 @@ def countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
     d = F.explode(F.sequence(F.lit(0), F.lit(CM_DEPTH - 1))).alias("d")
     cells = per_key.select("user_id", "n", d).select(
         "d",
-        (_hash32(F.col("d"), F.col("user_id")) % CM_WIDTH).alias("bucket"),
+        F.expr(f"{hash32('d', 'user_id')} % {CM_WIDTH} AS bucket"),
         "n",
     )
     sketch = cells.groupBy("d", "bucket").agg(F.sum("n").alias("cnt"))
@@ -99,7 +88,7 @@ def countmin(spark: SparkSession, sf_dir: str) -> DataFrame:
         "user_id",
         "exact_count",
         "d",
-        (_hash32(F.col("d"), F.col("user_id")) % CM_WIDTH).alias("bucket"),
+        F.expr(f"{hash32('d', 'user_id')} % {CM_WIDTH} AS bucket"),
     )
     return (
         probe_cells.join(F.broadcast(sketch), ["d", "bucket"])
@@ -131,7 +120,7 @@ def bloom_membership(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     j = F.explode(F.sequence(F.lit(0), F.lit(BLOOM_K - 1))).alias("j")
-    idx = (_hash32(F.col("j"), F.col("sig")) % BLOOM_BITS).alias("idx")
+    idx = F.expr(f"{hash32('j', 'sig')} % {BLOOM_BITS} AS idx")
     bloom = (
         corpus.select("sig", j)
         .select(idx)
@@ -318,7 +307,7 @@ def kmv_distinct(spark: SparkSession, sf_dir: str) -> DataFrame:
         .distinct()
         .select(
             "event_type",
-            _hash32(F.lit("kmv"), F.col("user_id")).alias("h"),
+            F.expr(f"{hash32(sql_string('kmv'), 'user_id')} AS h"),
         )
         .distinct()  # hash collisions count once (KMV is over hash values)
     )
@@ -396,7 +385,7 @@ def kmv_overlap(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select(
             "event_type",
             "user_id",
-            _hash32(F.lit("kmv"), F.col("user_id")).alias("h"),
+            F.expr(f"{hash32(sql_string('kmv'), 'user_id')} AS h"),
         )
     )
     sk = (

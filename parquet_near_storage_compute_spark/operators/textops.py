@@ -13,11 +13,13 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parquet_near_storage_compute_spark.functions.sql import sql_string
 from parquet_near_storage_compute_spark.functions.text import (
     MARKERS,
     STOPWORDS_EN,
     char_ngrams,
     count_in,
+    hash32,
     shingles,
     words,
 )
@@ -447,21 +449,6 @@ QC_BUCKET_SCALE = 2_000
 QC_BUCKET_CLAMP = 5
 
 
-def _hash32(seed: F.Column, key: F.Column) -> F.Column:
-    """First 8 hex chars of md5('<seed>:<key>') as a non-negative long —
-    the shared cross-engine hash device (operators/sketches.py:52,
-    operators/training.py draw)."""
-    return F.conv(
-        F.substring(
-            F.md5(F.concat(seed.cast("string"), F.lit(":"), key.cast("string"))),
-            1,
-            8,
-        ),
-        16,
-        10,
-    ).cast("long")
-
-
 def quality_margins(docs: DataFrame) -> DataFrame:
     """Linear quality-model scoring over hashed word-bigram features —
     the model-based half of quality filtering (the heuristic half is
@@ -481,9 +468,10 @@ def quality_margins(docs: DataFrame) -> DataFrame:
         "doc_id", F.expr(f"{shingles(words('text'), QC_NGRAM)} AS gs")
     )
     feats = base.select("doc_id", F.explode_outer("gs").alias("g"))
-    f_id = _hash32(F.lit("qf"), F.col("g")) % QC_DIM
-    wt = F.when(F.col("g").isNull(), F.lit(0)).otherwise(
-        (_hash32(F.lit("qw"), f_id) % QC_WEIGHT_MOD) - QC_WEIGHT_SHIFT
+    f_id = f"{hash32(sql_string('qf'), 'g')} % {QC_DIM}"
+    wt = F.expr(
+        f"CASE WHEN g IS NULL THEN 0 ELSE "
+        f"({hash32(sql_string('qw'), f_id)} % {QC_WEIGHT_MOD}) - {QC_WEIGHT_SHIFT} END"
     )
     scored = feats.groupBy("doc_id").agg(
         F.sum(F.col("g").isNotNull().cast("long")).alias("n_features"),

@@ -28,7 +28,8 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-from parquet_near_storage_compute_spark.functions.text import shingles, words
+from parquet_near_storage_compute_spark.functions.sql import sql_string
+from parquet_near_storage_compute_spark.functions.text import hash32, shingles, words
 from parquet_near_storage_compute_spark.plans.memo import PlanMemo
 from parquet_near_storage_compute_spark.tables import (
     fan_out,
@@ -443,13 +444,7 @@ def mixture_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
         .select("source", "target_rate", "threshold")
     )
-    draw = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("m:"), F.col("doc_id").cast("string"))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("long")
+    draw = F.expr(hash32(sql_string("m"), "doc_id"))
     kept = docs.join(F.broadcast(rates), "source").select(
         "source", "target_rate", (draw < F.col("threshold")).alias("kept")
     )
@@ -501,13 +496,7 @@ def quality_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.lit(QR_BASE)
         + (F.col("quality_bucket") + F.lit(QC_BUCKET_CLAMP)) * F.lit(QR_STEP)
     ).alias("keep_permille")
-    draw = F.conv(
-        F.substring(
-            F.md5(F.concat(F.lit("qr:"), F.col("doc_id").cast("string"))), 1, 8
-        ),
-        16,
-        10,
-    ).cast("long")
+    draw = F.expr(hash32(sql_string("qr"), "doc_id"))
     decided = scored.select(
         "quality_bucket",
         threshold,
@@ -1391,17 +1380,6 @@ from parquet_near_storage_compute_spark.functions.intmath import (  # noqa: E402
 DSIR_TOPK = 100
 
 
-def _dsir_bucket(col: F.Column) -> F.Column:
-    """Hashed unigram feature id — the shared md5-prefix hash device
-    (operators/sketches.py:52, textops._hash32) modulo DSIR_DIM."""
-    return (
-        F.conv(
-            F.substring(F.md5(F.concat(F.lit("dsir:"), col)), 1, 8), 16, 10
-        ).cast("long")
-        % DSIR_DIM
-    )
-
-
 def dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Importance resampling for data selection (DSIR, Xie et al. 2023,
     arXiv:2302.03169), exact-integer end to end: tokens hash into
@@ -1433,7 +1411,7 @@ def dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         "lang",
         "source",
         F.expr(f"explode({words('text')}) AS w"),
-    ).withColumn("b", _dsir_bucket(F.col("w")))
+    ).withColumn("b", F.expr(f"{hash32(sql_string('dsir'), 'w')} % {DSIR_DIM}"))
     counts = (
         toks.groupBy("b")
         .agg(

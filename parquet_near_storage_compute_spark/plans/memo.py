@@ -20,7 +20,9 @@ identical deterministic work, 3-4 s of eager plan construction per query.
   ``tables.corpus_identity``, shared with ``load_table``'s schema cache)
   — a test that overwrites its tmp corpus invalidates automatically. A
   corpus that cannot be fingerprinted (remote scheme, glob, missing
-  source) is never cached: every ``get`` builds;
+  source) is never cached: every ``get`` builds. A memo with no tables
+  (one keyed on committed fixtures, ``extra_paths``) is keyed on their
+  fingerprint alone, so every corpus shares its frames;
 - label: the subframe family (component labels, BPE doc counts, ...).
 
 Entries are LRU-bounded (a handful of frames per family at most — tests

@@ -502,20 +502,14 @@ def phash_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     src_dir = derived_copy("phash_ingest_src", (M.IMG_DEDUP_FIXTURE,), split)
 
     def bands(df: DataFrame, pre: str) -> DataFrame:
-        return df.select(
-            F.col("img_id").alias(f"{pre}id"),
-            F.col("phash").alias(f"{pre}ph"),
-            F.explode(
-                F.array(*[F.lit(b) for b in range(M.PHASH_BANDS)])
-            ).alias(f"{pre}band"),
-        ).withColumn(
-            f"{pre}key",
-            F.expr(f"shiftright({pre}ph, 16 * {pre}band)").bitwiseAND(0xFFFF),
+        return df.selectExpr(
+            f"img_id AS {pre}id",
+            f"phash AS {pre}ph",
+            f"inline({M.hash_bands(['phash'])}) AS ({pre}band, {pre}key)",
         )
 
     def near(a: str, b: str) -> Column:
-        hamming = F.bit_count(F.col(f"{a}ph").bitwiseXOR(F.col(f"{b}ph")))
-        return hamming <= M.PHASH_HAMMING
+        return F.expr(M.hamming_near([f"{a}ph"], [f"{b}ph"], M.PHASH_HAMMING))
 
     def step(state: DataFrame | None, batch: DataFrame, bid: int) -> DataFrame:
         hashed = batch.select("img_id", "payload").mapInPandas(

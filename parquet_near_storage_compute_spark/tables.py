@@ -111,15 +111,21 @@ def corpus_identity(
     keyed on: the corpus directory's realpath and ``listing_fingerprint``.
     A ``file://`` URL is resolved to its local path. None when the sources
     cannot be fingerprinted here — a remote scheme, a glob, or a source
-    that does not exist locally — and the caller must not cache."""
-    url = urlsplit(sf_dir)
-    if url.scheme not in ("", "file") or glob.has_magic(sf_dir):
-        return None
-    local = url.path if url.scheme else sf_dir
+    that does not exist locally — and the caller must not cache. With no
+    ``tables`` the cache reads ``extra_paths`` alone, the same files for
+    every corpus, so ``sf_dir`` is not part of the key."""
+    if not tables:
+        local, root = "", None
+    else:
+        url = urlsplit(sf_dir)
+        if url.scheme not in ("", "file") or glob.has_magic(sf_dir):
+            return None
+        local = url.path if url.scheme else sf_dir
+        root = os.path.realpath(local)
     listing = listing_fingerprint(local, tables, extra_paths)
     if any(entry[1:] == ("missing",) for entry in listing):
         return None
-    return os.path.realpath(local), listing
+    return root, listing
 
 
 def scratch_root() -> str:

@@ -67,3 +67,13 @@ def test_memoized_query_goes_through_the_class_get(spark, tmp_path, monkeypatch)
     assert query(spark, str(tmp_path)) is query(spark, str(tmp_path))
     assert builds == [str(tmp_path)] and gets == ["label", "label"]
     assert query.__doc__ == "The query's own docstring."
+
+
+def test_fixture_keyed_memo_ignores_the_corpus(spark, sf_dir, sf_oracle_dir):
+    """A memo with no tables reads only its fixtures: one frame serves
+    every corpus directory instead of one build and persist per corpus."""
+    from parquet_near_storage_compute_spark.operators.multimodal import (
+        image_phash_dedup,
+    )
+
+    assert image_phash_dedup(spark, sf_dir) is image_phash_dedup(spark, sf_oracle_dir)

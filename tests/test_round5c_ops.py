@@ -13,6 +13,8 @@ import os
 import pytest
 from pyspark.sql import functions as F
 
+from parquet_near_storage_compute_spark.functions.sql import sql_string
+from parquet_near_storage_compute_spark.functions.text import hash32
 from parquet_near_storage_compute_spark.operators import sketches
 from parquet_near_storage_compute_spark.operators.dedup import incremental_dedup
 from parquet_near_storage_compute_spark.operators.joins import (
@@ -39,9 +41,7 @@ def test_countmin_sketch_is_fixed_size(spark, sf_dir):
     d = F.explode(F.sequence(F.lit(0), F.lit(sketches.CM_DEPTH - 1))).alias("d")
     cells = ev.select(F.col("user_id"), d).select(
         "d",
-        (sketches._hash32(F.col("d"), F.col("user_id")) % sketches.CM_WIDTH).alias(
-            "bucket"
-        ),
+        F.expr(f"{hash32('d', 'user_id')} % {sketches.CM_WIDTH} AS bucket"),
     )
     n_cells = cells.groupBy("d", "bucket").count().count()
     assert n_cells <= sketches.CM_DEPTH * sketches.CM_WIDTH
@@ -84,9 +84,7 @@ def test_bloom_filter_is_fixed_size(spark, sf_dir):
     words = (
         corpus.select("sig", j)
         .select(
-            (
-                sketches._hash32(F.col("j"), F.col("sig")) % sketches.BLOOM_BITS
-            ).alias("idx")
+            F.expr(f"{hash32('j', 'sig')} % {sketches.BLOOM_BITS} AS idx")
         )
         .select(F.expr("idx div 32").alias("word"))
         .distinct()
@@ -192,7 +190,7 @@ def test_kmv_union_of_sketches_equals_direct_sketch(spark, sf_dir):
         ev.select("event_type", "user_id")
         .distinct()
         .select(
-            "event_type", sketches._hash32(F.lit("kmv"), F.col("user_id")).alias("h")
+            "event_type", F.expr(f"{hash32(sql_string('kmv'), 'user_id')} AS h")
         )
         .distinct()
     )
