@@ -5,14 +5,19 @@ Five dedup families, all expressed as shuffle-bounded DataFrame plans:
 - exact:        hash-groupBy on md5(text) — one shuffle on the 16-byte hash.
 - key-based:    min-per-group dedup on (lang, source).
 - MinHash+LSH:  shingle → k-mins signature → banded buckets with the
-                hot-bucket guard (r3): pairwise work is O(Σ min(bucket,
+                hot-bucket guard: pairwise work is O(Σ min(bucket,
                 cap)²), over-cap buckets route to overflow accounting /
                 cluster-level dedup instead of cap² pair explosion — the
                 standard 100 TB near-dup pattern with a hard per-task
                 ceiling (the full similarity join never materializes).
-- n-gram Jaccard: exact verify step on the LSH candidates only.
+- exact verify: ``_verified`` joins both sides' shingle sets onto the
+                LSH candidates and measures |A∩B| and |A∪B| once; the
+                Jaccard, threshold-curve, calibration, band-tuning,
+                containment and blocked-Jaccard reports read those counts
+                (``_JACCARD``, ``_DECILE``), and so does the composite
+                ``pipeline.training_data_pipeline``.
 - blocked Jaccard: MinHash-LSH candidates INSIDE (lang, source) blocks
-                (r3) — never quadratic in a natural-key block.
+                — never quadratic in a natural-key block.
 - SimHash:      16-bit fingerprint via per-token bit votes; duplicates =
                 fingerprint collisions (groupBy, no pairwise step at all).
 - embedding:    cosine-threshold pairs, blocked by sign-LSH bucket.
@@ -113,7 +118,7 @@ def _minhash_signatures(docs: DataFrame) -> DataFrame:
 
     Hashes are computed inline in the partial aggregate (map-side min per
     doc): one narrow pass, no extra shuffle.  Two alternatives were
-    measured SLOWER here (r12 interleaved A/B at sf0.1, fresh plans under
+    measured SLOWER here (interleaved A/B at sf0.1, fresh plans under
     the noop sink): (a) the narrow attach_minhash projection — array_min
     over transformed digest arrays — removes the SortAggregate pair from
     the plan but loses 0.94 → 2.22 s end-to-end on the LSH pipeline,
@@ -158,8 +163,8 @@ def _banded_buckets(bands: DataFrame, keys: list[str]) -> DataFrame:
     Single pass over the bands stream (a count-then-join alternative would
     execute the signature pipeline twice).
 
-    The ONLY sort is at level 2 (round 4; the r3 form also sorted every
-    level-1 slice, paying for the pathological case on every bucket). For
+    The ONLY sort is at level 2 (sorting every level-1 slice as well
+    would pay for the pathological case on every bucket). For
     in-cap buckets every salt-slice is untrimmed (bucket ≤ CAP ⇒ each salt
     group ≤ CAP < CAP+1), so ``ds`` is still the exact sorted member list.
     For over-cap buckets the slice keeps an arbitrary CAP+1 ids per salt —
@@ -208,15 +213,16 @@ def _shingle_features(docs: DataFrame) -> DataFrame:
     (ngram_jaccard / threshold_curve / calibration / band_tuning /
     containment): (doc_id, sset, mh0..mh7), persisted.
 
-    r12 (guide §2.3 "project before the exchange" / §5 caching): each of
-    these queries previously tokenized and md5-hashed the corpus TWICE —
-    once inside ``_lsh_candidates(_minhash_signatures(docs))`` and again
-    for its verify-side shingle sets — because the two subtrees were
-    built independently.  The signature columns are a narrow function of
-    the shingle array (attach_minhash), so one frame serves both: the
-    banded candidate generation reads the mh columns, the exact verify
-    join reads sset.  Persisted because it feeds 2-3 consumers per query
-    (candidates + both join sides); at 100 TB this cache IS the
+    Project before the exchange, and cache what several consumers read:
+    built separately, each of these queries would tokenize and md5-hash
+    the corpus TWICE — once inside
+    ``_lsh_candidates(_minhash_signatures(docs))`` and again for its
+    verify-side shingle sets.  The signature columns are a narrow
+    function of the shingle array (attach_minhash), so one frame serves
+    both: the banded candidate generation reads the mh columns, the
+    exact verify join (`_verified`) reads sset.  Persisted because it
+    feeds 2-3 consumers per query (candidates + both join sides); at
+    100 TB this cache IS the
     signature/shingle side-table a production near-dup pipeline
     materializes next to the corpus.
 
@@ -228,6 +234,37 @@ def _shingle_features(docs: DataFrame) -> DataFrame:
     predicate reads a materialized array's size — no recompute."""
     full = attach_minhash(_shingle_sets(docs), "sset", MINHASH_K).persist()
     return full.filter(F.size("sset") > 0)
+
+
+def _verified(cand: DataFrame, feats: DataFrame, *carry: str) -> DataFrame:
+    """The exact verify step of the candidates-then-verify family: the
+    candidate pairs (doc_a, doc_b) joined to both sides' rows of
+    ``feats`` (doc_id, sset, …), with each side's set as ``asset`` /
+    ``bsset``, each ``carry`` column as ``a<col>`` / ``b<col>``, and the
+    exact ``n_inter`` = |A∩B| and ``n_union`` = |A∪B| as BIGINT. Two
+    equi-joins onto the capped candidate set: linear in candidates, never
+    all-pairs; AQE sizes both joins (no corpus-coupled broadcast hint)."""
+
+    def side(s: str) -> DataFrame:
+        cols = [f"{c} AS {s}{c}" for c in ("sset", *carry)]
+        return feats.selectExpr(f"doc_id AS doc_{s}", *cols)
+
+    return (
+        cand.join(side("a"), "doc_a")
+        .join(side("b"), "doc_b")
+        .selectExpr(
+            "*",
+            "CAST(size(array_intersect(asset, bsset)) AS BIGINT) AS n_inter",
+            "CAST(size(array_union(asset, bsset)) AS BIGINT) AS n_union",
+        )
+    )
+
+
+#: Exact Jaccard of a `_verified` pair, as a double ratio.
+_JACCARD = "CAST(n_inter AS DOUBLE) / CAST(n_union AS DOUBLE)"
+#: Jaccard decile of a `_verified` pair: (10·|A∩B|) div |A∪B| is INTEGER
+#: division, so no float boundary can flip a pair between engines.
+_DECILE = "CAST((n_inter * 10) div n_union AS INT)"
 
 
 def minhash_dedup_decisions(docs: DataFrame) -> DataFrame:
@@ -245,15 +282,15 @@ def minhash_dedup_decisions(docs: DataFrame) -> DataFrame:
     membership comes from joining the bands stream against the over-cap
     bucket KEYS — broadcast, because pathological buckets are few by
     nature; the bands side stays narrow. The bands subtree feeds two
-    consumers (buckets + membership), so it is persisted (round 5):
+    consumers (buckets + membership), so it is persisted:
     without the cache each consumer re-scans the corpus and recomputes
     the MinHash signatures — 2× I/O + 2× hashing at 100 TB for one
     narrow (doc_id, band, bh) frame.
 
     Output: (doc_id, keep, reason) for every input document — reason ∈
     {'unique', 'pair_survivor', 'near_dup', 'overflow_survivor',
-    'overflow_cluster'}. Registered as ``minhash_dedup_decisions`` (round
-    4, full-logic DuckDB oracle); the adversarial overflow branches are
+    'overflow_cluster'}. Registered as ``minhash_dedup_decisions``
+    (full-logic DuckDB oracle); the adversarial overflow branches are
     additionally exercised by tests/test_lsh_hot_bucket.py."""
     sig = _minhash_signatures(docs)
     bands = _bands(sig).persist()
@@ -302,10 +339,10 @@ def minhash_dedup_decisions(docs: DataFrame) -> DataFrame:
 def minhash_decisions_cached(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Memoized registered form of `minhash_dedup_decisions` over the
     corpus table — shared between the registered contract and
-    `pipeline_modality_dedup_report`'s text branch (r12, VERDICT #3:
-    the decisions tree costs ~3 s of construction; the composite re-paid
-    it on every build). The narrow corpus projection is persisted INSIDE
-    the memoized build: the decisions tree consumes the corpus twice
+    `pipeline_modality_dedup_report`'s text branch (the decisions tree
+    costs ~3 s of construction, which the composite would otherwise
+    re-pay on every build). The narrow corpus projection is persisted
+    INSIDE the memoized build: the decisions tree consumes the corpus twice
     (signature subtree + the final per-doc mapping), and the composite
     single-scan discipline (test_pipeline_single_scan) requires every
     consumer to read the one cached frame, not re-scan parquet."""
@@ -413,7 +450,7 @@ def connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     its component representative (min doc_id) and the component size.
 
     Cluster sizes come from a groupBy over the #clustered-docs label frame;
-    the join back carries NO broadcast hint (VERDICT r8 #1): the sizes frame
+    the join back carries NO broadcast hint: the sizes frame
     has one row per duplicate CLUSTER, and on a heavily-duplicated web
     corpus — the exact workload this operator exists for — clusters number
     in the tens of millions, so forcing a broadcast removes AQE's size
@@ -423,7 +460,7 @@ def connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     output is a per-doc SET keyed by doc_id (consumers join it; the
     contract compare is order-insensitive): no terminal sort — at 100 TB
     that would be a global range-partitioned sort over every clustered doc
-    for presentation only (VERDICT r6)."""
+    for presentation only."""
     comp = _component_labels(spark, sf_dir)
     sizes = comp.groupBy("cluster_rep").agg(
         F.count(F.lit(1)).alias("cluster_size")
@@ -434,7 +471,7 @@ def connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-cluster size distribution (r11): the dedup audit artifact
+    """Duplicate-cluster size distribution: the dedup audit artifact
     the literature plots before committing a dedup policy — per cluster
     size: how many clusters, how many documents they hold, and how many
     documents a keep-one-per-cluster pass removes. Web corpora show a
@@ -488,7 +525,7 @@ def cluster_size_histogram(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cluster-level canonical selection (r8): `dedup_connected_components`
+    """Cluster-level canonical selection: `dedup_connected_components`
     says WHICH documents form a duplicate cluster; this op decides WHICH
     MEMBER SURVIVES. Production pipelines keep the best-QUALITY member of
     each near-dup cluster — not the arbitrary smallest id — so the corpus
@@ -499,9 +536,9 @@ def keep_best(spark: SparkSession, sf_dir: str) -> DataFrame:
     Shape: the same LSH-candidate graph and min-label propagation as
     connected components (bounded rounds, no driver-side graph); the
     winner per cluster is one max_by aggregate over the #clustered-docs
-    label frame, joined back WITHOUT a broadcast hint (VERDICT r8 #1:
-    the best frame is one row per duplicate cluster — tens of millions
-    on a 30-50%-duplicated web corpus, the operator's own target
+    label frame, joined back WITHOUT a broadcast hint (the best frame
+    is one row per duplicate cluster — tens of millions on a
+    30-50%-duplicated web corpus, the operator's own target
     workload — so an unconditional hint trades AQE's size guard for an
     OOM exactly when duplication is dense; AQE broadcasts it when it
     measures small and shuffles otherwise).  Output is a per-doc SET
@@ -554,23 +591,17 @@ def ngram_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact shingle-Jaccard verification of the LSH candidates: true
     near-dups at J ≥ 0.5. This is the canonical two-phase near-dup pipeline
     (cheap candidate generation → exact verify on candidates only)."""
-    docs = load_table(spark, sf_dir, "documents")
-    feats = _shingle_features(docs)
-    cand = _lsh_candidates(feats)
-    a = feats.select(F.col("doc_id").alias("doc_a"), F.col("sset").alias("set_a"))
-    b = feats.select(F.col("doc_id").alias("doc_b"), F.col("sset").alias("set_b"))
-    joined = cand.join(a, "doc_a").join(b, "doc_b")
-    inter = F.size(F.array_intersect("set_a", "set_b")).cast("double")
-    union = F.size(F.array_union("set_a", "set_b")).cast("double")
+    feats = _shingle_features(load_table(spark, sf_dir, "documents"))
     return (
-        joined.select("doc_a", "doc_b", (inter / union).alias("jaccard"))
-        .filter(F.col("jaccard") >= 0.5)
+        _verified(_lsh_candidates(feats), feats)
+        .selectExpr("doc_a", "doc_b", f"{_JACCARD} AS jaccard")
+        .where(f"jaccard >= {sql_double(0.5)}")
         .orderBy("doc_a", "doc_b")
     )
 
 
 def threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Jaccard-threshold operating curve (r9): the report an operator reads
+    """Jaccard-threshold operating curve: the report an operator reads
     to PICK the near-dup threshold — for each Jaccard decile, how many
     candidate pairs sit there and how many would be flagged at-or-above
     it. One pass over the LSH candidates (the same cheap-candidates →
@@ -584,19 +615,12 @@ def threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     lowering the threshold cost": the expensive verify join runs ONCE and
     every threshold's duplicate volume falls out of the bucketed counts —
     instead of re-running the pipeline per candidate threshold."""
-    docs = load_table(spark, sf_dir, "documents")
-    feats = _shingle_features(docs)
-    cand = _lsh_candidates(feats)
-    a = feats.select(F.col("doc_id").alias("doc_a"), F.col("sset").alias("set_a"))
-    b = feats.select(F.col("doc_id").alias("doc_b"), F.col("sset").alias("set_b"))
-    joined = cand.join(a, "doc_a").join(b, "doc_b")
-    inter = F.size(F.array_intersect("set_a", "set_b")).cast("bigint")
-    union = F.size(F.array_union("set_a", "set_b")).cast("bigint")
-    pairs = joined.select(
-        ((inter * 10).cast("bigint")).alias("i10"), union.alias("u")
-    ).select(F.expr("i10 div u").cast("int").alias("jaccard_decile"))
-    g = pairs.groupBy("jaccard_decile").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_pairs")
+    feats = _shingle_features(load_table(spark, sf_dir, "documents"))
+    g = (
+        _verified(_lsh_candidates(feats), feats)
+        .selectExpr(f"{_DECILE} AS jaccard_decile")
+        .groupBy("jaccard_decile")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
     )
     w = (
         Window.orderBy(F.col("jaccard_decile").desc())
@@ -609,8 +633,12 @@ def threshold_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+#: The signature columns `_verified` carries for the agreement reports.
+_MH_COLS = tuple(f"mh{j}" for j in range(MINHASH_K))
+
+
 def minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """MinHash estimator calibration (r10): the table an operator reads to
+    """MinHash estimator calibration: the table an operator reads to
     TRUST (or re-size) the signature before acting on it — for each
     (signature-agreement count k of MINHASH_K, exact Jaccard decile) cell,
     how many LSH candidate pairs land there. k/MINHASH_K is the unbiased
@@ -623,42 +651,19 @@ def minhash_calibration(spark: SparkSession, sf_dir: str) -> DataFrame:
     indicators, the decile is the same (10·|A∩B|) div |A∪B| integer
     division as ``dedup_threshold_curve`` — no float can flip a cell.
 
-    Scale shape: ONE corpus pass (r12) — the shared `_shingle_features`
+    Scale shape: ONE corpus pass — the shared `_shingle_features`
     frame carries the k minhashes AND the shingle set out of one narrow
     projection (no explode, no aggregate); the banded candidate
     generation and both verify-join sides read that persisted frame —
-    then two joins onto the capped candidate pairs (linear in
-    candidates, never all-pairs; AQE sizes the joins, no corpus-coupled
-    broadcast hint)."""
-    docs = load_table(spark, sf_dir, "documents")
-    feats = _shingle_features(docs)
-    cand = _lsh_candidates(feats)
-    a = feats.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"mh{j}").alias(f"amh{j}") for j in range(MINHASH_K)],
-        F.col("sset").alias("set_a"),
-    )
-    b = feats.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"mh{j}").alias(f"bmh{j}") for j in range(MINHASH_K)],
-        F.col("sset").alias("set_b"),
-    )
-    joined = cand.join(a, "doc_a").join(b, "doc_b")
-    agree = None
-    for j in range(MINHASH_K):
-        ind = (F.col(f"amh{j}") == F.col(f"bmh{j}")).cast("int")
-        agree = ind if agree is None else agree + ind
-    inter = F.size(F.array_intersect("set_a", "set_b")).cast("bigint")
-    union = F.size(F.array_union("set_a", "set_b")).cast("bigint")
-    cells = joined.select(
-        agree.cast("int").alias("sig_agree"),
-        (inter * 10).alias("i10"),
-        union.alias("u"),
-    ).select(
-        "sig_agree", F.expr("i10 div u").cast("int").alias("jaccard_decile")
-    )
-    return cells.groupBy("sig_agree", "jaccard_decile").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_pairs")
+    then the two `_verified` joins onto the capped candidate pairs
+    (linear in candidates, never all-pairs)."""
+    feats = _shingle_features(load_table(spark, sf_dir, "documents"))
+    agree = " + ".join(f"CAST(a{c} = b{c} AS INT)" for c in _MH_COLS)
+    return (
+        _verified(_lsh_candidates(feats), feats, *_MH_COLS)
+        .selectExpr(f"{agree} AS sig_agree", f"{_DECILE} AS jaccard_decile")
+        .groupBy("sig_agree", "jaccard_decile")
+        .agg(F.count(F.lit(1)).cast("bigint").alias("n_pairs"))
     )
 
 
@@ -676,7 +681,7 @@ BAND_CONFIGS = ((4, 2), (2, 4), (1, 8))
 # assuming r·b = MINHASH_K = 8): editing BAND_CONFIGS without rewriting
 # BOTH CASE expressions would silently route a new config through the
 # wrong arm and emit a wrong theoretical curve with no failure — fail at
-# import instead (ADVICE r10).
+# import instead.
 assert all(r * b == MINHASH_K for b, r in BAND_CONFIGS), BAND_CONFIGS
 assert {r for _, r in BAND_CONFIGS} == {2, 4, 8}, (
     "BAND_CONFIGS rows_per_band set changed — rewrite the S-curve CASE "
@@ -686,7 +691,7 @@ assert {r for _, r in BAND_CONFIGS} == {2, 4, 8}, (
 
 
 def minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Banding-config selection (r10 continuation): the S-curve table that
+    """Banding-config selection: the S-curve table that
     turns `dedup_minhash_calibration`'s "is the signature trustworthy"
     into "which banding should we run". For each tightening config
     (4×2 committed, 2×4, 1×8) and each exact-Jaccard decile: the observed
@@ -710,42 +715,18 @@ def minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     Scale shape: identical to `dedup_minhash_calibration` — the capped
     LSH candidate set bounds the verify join, the output is ≤
     len(BAND_CONFIGS)·11 rows (dimension-sized; final sort declared)."""
-    docs = load_table(spark, sf_dir, "documents")
-    feats = _shingle_features(docs)
-    cand = _lsh_candidates(feats)
-    a = feats.select(
-        F.col("doc_id").alias("doc_a"),
-        *[F.col(f"mh{j}").alias(f"amh{j}") for j in range(MINHASH_K)],
-        F.col("sset").alias("set_a"),
+    feats = _shingle_features(load_table(spark, sf_dir, "documents"))
+    configs = ", ".join(
+        f"struct({bands} AS bands, {rows} AS rows_per_band, "
+        f"({_config_candidate(bands, rows)}) AS is_cand)"
+        for bands, rows in BAND_CONFIGS
     )
-    b = feats.select(
-        F.col("doc_id").alias("doc_b"),
-        *[F.col(f"mh{j}").alias(f"bmh{j}") for j in range(MINHASH_K)],
-        F.col("sset").alias("set_b"),
-    )
-    joined = cand.join(a, "doc_a").join(b, "doc_b")
-    eq = [F.col(f"amh{j}") == F.col(f"bmh{j}") for j in range(MINHASH_K)]
-    configs = F.array(
-        *[
-            F.struct(
-                F.lit(bands).alias("bands"),
-                F.lit(rows).alias("rows_per_band"),
-                _config_candidate(eq, bands, rows).alias("is_cand"),
-            )
-            for bands, rows in BAND_CONFIGS
-        ]
-    )
-    inter = F.size(F.array_intersect("set_a", "set_b")).cast("bigint")
-    union = F.size(F.array_union("set_a", "set_b")).cast("bigint")
     cells = (
-        joined.select(
-            (inter * 10).alias("i10"), union.alias("u"), configs.alias("cfgs")
+        _verified(_lsh_candidates(feats), feats, *_MH_COLS)
+        .selectExpr(
+            f"{_DECILE} AS jaccard_decile", f"explode(array({configs})) AS c"
         )
-        .select(
-            F.expr("i10 div u").cast("int").alias("jaccard_decile"),
-            F.explode("cfgs").alias("c"),
-        )
-        .filter(F.col("c.is_cand"))
+        .where("c.is_cand")
         .select("c.bands", "c.rows_per_band", "jaccard_decile")
     )
     # the exact-integer S-curve at the decile lower bound j = d/10:
@@ -781,16 +762,14 @@ def minhash_band_tuning(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _config_candidate(eq: list, bands: int, rows: int):
-    """Candidacy under a (bands × rows) banding from the per-position
-    equality bits: OR over bands of AND over each band's position run."""
-    out = None
-    for i in range(bands):
-        band = None
-        for j in range(i * rows, (i + 1) * rows):
-            band = eq[j] if band is None else (band & eq[j])
-        out = band if out is None else (out | band)
-    return out
+def _config_candidate(bands: int, rows: int) -> str:
+    """SQL text: candidacy of a `_verified` pair (carrying ``_MH_COLS``)
+    under a (bands × rows) banding — OR over bands of AND over each
+    band's run of signature-position equalities."""
+    runs = (range(i * rows, (i + 1) * rows) for i in range(bands))
+    return " OR ".join(
+        "(" + " AND ".join(f"amh{j} = bmh{j}" for j in run) + ")" for run in runs
+    )
 
 
 #: Containment threshold as an exact integer ratio (7/10): the cut is an
@@ -801,34 +780,24 @@ CONTAINMENT_DEN = 10
 
 
 def shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Sub-document duplication (round 4): containment |A∩B| / min(|A|,|B|)
+    """Sub-document duplication: containment |A∩B| / min(|A|,|B|)
     over the LSH candidate pairs — the quote/inclusion detector Jaccard
     misses when sizes differ (a paragraph wholly copied into a 100× longer
     document has tiny Jaccard but containment ≈ 1). Same two-phase shape
     as ngram_jaccard: capped LSH candidates, exact verify on candidates
     only; the threshold compares integers so the cut is engine-exact."""
-    docs = load_table(spark, sf_dir, "documents")
-    feats = _shingle_features(docs)
-    cand = _lsh_candidates(feats)
-    a = feats.select(F.col("doc_id").alias("doc_a"), F.col("sset").alias("set_a"))
-    b = feats.select(F.col("doc_id").alias("doc_b"), F.col("sset").alias("set_b"))
-    joined = cand.join(a, "doc_a").join(b, "doc_b")
-    inter = F.size(F.array_intersect("set_a", "set_b")).cast("long")
-    mn = F.least(F.size("set_a"), F.size("set_b")).cast("long")
+    feats = _shingle_features(load_table(spark, sf_dir, "documents"))
+    pairs = _verified(_lsh_candidates(feats), feats).selectExpr(
+        "doc_a",
+        "doc_b",
+        "n_inter AS n_shared",
+        "CAST(least(size(asset), size(bsset)) AS BIGINT) AS min_size",
+    )
     return (
-        joined.select(
-            "doc_a",
-            "doc_b",
-            inter.alias("n_shared"),
-            mn.alias("min_size"),
-            (inter.cast("double") / mn).alias("containment"),
-        )
-        .filter(
-            (F.col("min_size") > 0)
-            & (
-                F.col("n_shared") * CONTAINMENT_DEN
-                >= F.col("min_size") * CONTAINMENT_NUM
-            )
+        pairs.selectExpr("*", "CAST(n_shared AS DOUBLE) / min_size AS containment")
+        .where(
+            f"min_size > 0 AND "
+            f"n_shared * {CONTAINMENT_DEN} >= min_size * {CONTAINMENT_NUM}"
         )
         .orderBy("doc_a", "doc_b")
     )
@@ -836,51 +805,36 @@ def shingle_containment(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def blocked_jaccard(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Word-set Jaccard within (lang, source) blocks, candidates generated
-    by MinHash-LSH INSIDE each block (round 3; the r2 form was an in-block
-    all-pairs join — quadratic in block size, and at 100 TB an (en, web)
-    block is the whole corpus). Buckets key on (lang, source, band, bh), so
+    by MinHash-LSH INSIDE each block (an in-block all-pairs join would be
+    quadratic in block size, and at 100 TB an (en, web) block is the
+    whole corpus). Buckets key on (lang, source, band, bh), so
     pair volume is O(Σ min(bucket, cap)²) regardless of block size; the
     exact-Jaccard verify runs only on candidates. At J ≥ 0.9 the 4×2 band
     scheme misses a true pair with p = (1−0.9²)⁴ ≈ 0.13% — the standard
     LSH recall trade, encoded identically in the DuckDB oracle."""
     docs = load_table(spark, sf_dir, "documents")
-    # r12: the in-block signatures are the same narrow attach_minhash map
-    # as `_minhash_signatures` (the word-set array already exists here),
-    # replacing the explode + SortAggregate groupBy; the frame feeds the
-    # banded candidates AND both verify-join sides, so it is persisted —
-    # one corpus pass instead of three. A NULL-text doc has a NULL wset
-    # (size filter drops it), reproducing the explode form's row set.
-    base = (
-        fan_out(docs)
-        .select(
-            "doc_id",
-            "lang",
-            "source",
-            F.expr(f"array_distinct({words('text')}) AS wset"),
-        )
-        .filter(F.size("wset") > 0)
-    )
-    feats = attach_minhash(base, "wset", MINHASH_K).persist()
+    # The in-block signatures are the same narrow attach_minhash map as
+    # `_minhash_signatures` (the word-set array already exists here), with
+    # no explode + SortAggregate groupBy; the frame feeds the banded
+    # candidates AND both verify-join sides, so it is persisted — one
+    # corpus pass instead of three. The word set is named sset for
+    # `_verified`; a NULL-text doc has a NULL set (size filter drops it),
+    # the explode form's row set.
+    base = fan_out(docs).selectExpr(
+        "doc_id", "lang", "source", f"array_distinct({words('text')}) AS sset"
+    ).filter(F.size("sset") > 0)
+    feats = attach_minhash(base, "sset", MINHASH_K).persist()
     pairs = _bucket_pairs(
         _banded_buckets(
             _bands(feats, extra=("lang", "source")),
             ["lang", "source", "band", "bh"],
         )
     )
-    a = feats.select(
-        F.col("doc_id").alias("doc_a"),
-        "lang",
-        F.col("wset").alias("set_a"),
+    return (
+        _verified(pairs, feats, "lang")
+        .selectExpr("doc_a", "doc_b", "alang AS lang", f"{_JACCARD} AS jaccard")
+        .where(f"jaccard >= {sql_double(0.9)}")
     )
-    b = feats.select(
-        F.col("doc_id").alias("doc_b"), F.col("wset").alias("set_b")
-    )
-    joined = pairs.join(a, "doc_a").join(b, "doc_b")
-    inter = F.size(F.array_intersect("set_a", "set_b")).cast("double")
-    union = F.size(F.array_union("set_a", "set_b")).cast("double")
-    return joined.select(
-        "doc_a", "doc_b", "lang", (inter / union).alias("jaccard")
-    ).filter(F.col("jaccard") >= 0.9)
 
 
 SIMHASH_BITS = 16

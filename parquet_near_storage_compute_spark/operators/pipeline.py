@@ -20,14 +20,16 @@ from collections.abc import Callable
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from parquet_near_storage_compute_spark.functions.sql import sql_double
+from parquet_near_storage_compute_spark.functions.text import shingles, words
 from parquet_near_storage_compute_spark.operators.dedup import (
+    _JACCARD,
     _SHINGLE_CTE,
+    LSH_BUCKET_CAP,
     _lsh_candidates,
     _minhash_signatures,
-    shingles,
+    _verified,
 )
-from parquet_near_storage_compute_spark.functions.text import words
-from parquet_near_storage_compute_spark.operators.dedup import LSH_BUCKET_CAP
 from parquet_near_storage_compute_spark.operators.textops import (
     PII_EMAIL_RE,
     PII_IP_RE,
@@ -71,14 +73,9 @@ def training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
     sets = exact_deduped.select(
         "doc_id", F.expr(f"array_distinct({shingles(words('text'), 3)}) AS sset")
     )
-    a = sets.select(F.col("doc_id").alias("doc_a"), F.col("sset").alias("set_a"))
-    b = sets.select(F.col("doc_id").alias("doc_b"), F.col("sset").alias("set_b"))
-    inter = F.size(F.array_intersect("set_a", "set_b")).cast("double")
-    union = F.size(F.array_union("set_a", "set_b")).cast("double")
     near_dups = (
-        cand.join(a, "doc_a")
-        .join(b, "doc_b")
-        .filter((inter / union) >= 0.5)
+        _verified(cand, sets)
+        .where(f"{_JACCARD} >= {sql_double(0.5)}")
         .select(F.col("doc_b").alias("doc_id"))
         .distinct()
     )
@@ -93,9 +90,9 @@ def training_data_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def curation_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-source curation dashboard (round 4): the compliance/quality
-    summary a data owner reads before a training run, composing three
-    round-4 operators over ONE pass of the corpus —
+    """Per-source curation dashboard: the compliance/quality summary a
+    data owner reads before a training run, composing three operators
+    over ONE pass of the corpus —
 
       near-dup decisions (``minhash_dedup_decisions``: keep/drop per doc)
       + PII flags (``_pii_report``: any progressive redaction hit)
@@ -249,7 +246,7 @@ def incremental_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("doc_id")
         .withColumn("is_member", F.lit(1))
     )
-    # not a forced broadcast (r6, ADVICE): the member set scales with the
+    # not a forced broadcast: the member set scales with the
     # batch's duplicate count, unlike the fixed-size bloom frame above —
     # let AQE pick broadcast vs shuffle from the measured size
     flagged = flagged.join(members, "doc_id", "left").select(
@@ -291,7 +288,7 @@ def incremental_ingest_pipeline(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def modality_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Cross-modality dedup dashboard (r7): one row per modality with its
+    """Cross-modality dedup dashboard: one row per modality with its
     asset count and keep/drop split — the capstone of the per-modality
     near-dup matrix. A curation operator reads THIS to see where the
     duplication mass lives before committing to a re-crawl or a filter
@@ -323,9 +320,10 @@ def modality_dedup_report(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     # every member pipeline comes from its registered (memoized) frame —
     # the report is the 5-way aggregate of the SAME decision trees the
-    # per-modality contracts pin, built once per session (r12, VERDICT #3;
-    # the text branch's internal bands persist covers its two corpus
-    # consumers, so no extra projection cache is needed here)
+    # per-modality contracts pin, built once per session (the text
+    # decisions tree alone costs ~3 s of construction; its internal bands
+    # persist covers its two corpus consumers, so no extra projection
+    # cache is needed here)
     parts = [
         ("text", minhash_decisions_cached(spark, sf_dir)),
         ("embedding", embedding_dedup_decisions(spark, sf_dir)),

@@ -295,14 +295,29 @@ def tfidf_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
 SEG_WORDS = 10
 
 
+def _segment_grid(ws: str) -> str:
+    """SQL text: the non-overlapping SEG_WORDS-word grid over the word
+    array ``ws`` as an array of (seg_idx BIGINT, seg STRING) structs in
+    position order — ``seg`` is the segment's words joined by single
+    spaces; a document with no words has an empty grid."""
+    n_segs = f"CAST(ceil(size({ws}) / {SEG_WORDS}) AS INT)"
+    seg = f"array_join(slice({ws}, _i * {SEG_WORDS} + 1, {SEG_WORDS}), ' ')"
+    return (
+        f"CASE WHEN size({ws}) > 0 THEN transform(sequence(0, {n_segs} - 1), "
+        f"_i -> struct(CAST(_i AS BIGINT) AS seg_idx, {seg} AS seg)) "
+        "ELSE CAST(array() AS ARRAY<STRUCT<seg_idx: BIGINT, seg: STRING>>) END"
+    )
+
+
 def dedup_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Cross-document duplicated-segment accounting (the Gopher-style
     "fraction of duplicated n-gram blocks" corpus signal, but at segment
     granularity): split every document into non-overlapping SEG_WORDS-word
-    segments, count how many documents each distinct segment appears in,
-    and report per document how many of its segments are shared with at
-    least one OTHER occurrence. Complements `text_repetition_filter`
-    (within-doc repetition) and `dedup_shingle_containment` (pairwise
+    segments (`_segment_grid`), count how many documents each distinct
+    segment appears in, and report per document how many of its segments
+    are shared with at least one OTHER occurrence. Complements
+    `text_repetition_filter` (within-doc repetition) and
+    `dedup_shingle_containment` (pairwise
     containment) with the corpus-wide boilerplate view that drives
     segment-level scrubbing in a real pipeline.
 
@@ -312,22 +327,9 @@ def dedup_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
     counts frame has one row per distinct segment, so no fan-out skew),
     one doc-keyed aggregate. Nothing quadratic; boilerplate-heavy
     corpora concentrate JOIN keys, not join outputs."""
-    ws = F.expr(words("text"))
-    n_segs = F.ceil(F.size(ws) / F.lit(SEG_WORDS)).cast("int")
-    seg_array = F.when(
-        F.size(ws) > 0,
-        F.array_distinct(
-            F.transform(
-                F.sequence(F.lit(0), n_segs - 1),
-                lambda i: F.array_join(
-                    F.slice(ws, i * SEG_WORDS + 1, SEG_WORDS), " "
-                ),
-            )
-        ),
-    ).otherwise(F.array().cast("array<string>"))
-    segs = (
-        fan_out(load_table(spark, sf_dir, "documents"))
-        .select("doc_id", F.explode(seg_array).alias("seg"))
+    grid = _segment_grid(words("text"))
+    segs = fan_out(load_table(spark, sf_dir, "documents")).selectExpr(
+        "doc_id", f"explode(array_distinct(transform({grid}, _s -> _s.seg))) AS seg"
     )
     counts = segs.groupBy("seg").agg(F.count(F.lit(1)).alias("n_docs_with"))
     return (
@@ -345,12 +347,12 @@ def dedup_segments(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def dedup_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus-wide first-occurrence segment scrub with document reassembly
-    (r12) — the ACTION half of `text_dedup_segments`' measurement and the
+    — the ACTION half of `text_dedup_segments`' measurement and the
     segment-granularity form of CCNet/RefinedWeb line-level dedup (Wenzek
     et al. 2020, arXiv:1911.00359 §3.1 dedups paragraphs by hash across
     the corpus keeping one occurrence; the synthetic docs have no
-    newlines, so the repo's established non-overlapping SEG_WORDS-word
-    grid stands in for lines): every distinct segment survives ONLY at
+    newlines, so the non-overlapping SEG_WORDS-word `_segment_grid`
+    stands in for lines): every distinct segment survives ONLY at
     its globally first occurrence (min (doc_id, seg_idx)); every other
     occurrence — including repeats later in the keeper doc itself — is
     scrubbed, and each document is re-assembled from its surviving
@@ -366,29 +368,10 @@ def dedup_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-assembly aggregate → a 1:1 doc join for the totals. Two shuffles,
     no occurrence-stream join, nothing quadratic; per-doc state is
     bounded by the doc's own kept segments."""
-    docs = fan_out(load_table(spark, sf_dir, "documents"))
-    ws = F.expr(words("text"))
-    n_segs = F.ceil(F.size(ws) / F.lit(SEG_WORDS)).cast("int")
-    seg_structs = F.when(
-        F.size(ws) > 0,
-        F.transform(
-            F.sequence(F.lit(0), n_segs - 1),
-            lambda i: F.struct(
-                i.cast("long").alias("seg_idx"),
-                F.array_join(
-                    F.slice(ws, i * SEG_WORDS + 1, SEG_WORDS), " "
-                ).alias("seg"),
-            ),
-        ),
-    ).otherwise(F.array().cast("array<struct<seg_idx:bigint,seg:string>>"))
-    occ = (
-        docs.select("doc_id", F.explode(seg_structs).alias("s"))
-        .select(
-            "doc_id",
-            F.col("s.seg_idx").alias("seg_idx"),
-            F.col("s.seg").alias("seg"),
-        )
+    docs = fan_out(load_table(spark, sf_dir, "documents")).selectExpr(
+        "doc_id", f"{_segment_grid(words('text'))} AS grid"
     )
+    occ = docs.selectExpr("doc_id", "inline(grid)")
     # (doc_id, seg_idx) pairs are unique, so the struct-min is a total
     # order with no ties — the keeper is exactly one occurrence row.
     keepers = occ.groupBy("seg").agg(
@@ -417,12 +400,7 @@ def dedup_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
             F.md5("kept_text").alias("kept_hash"),
         )
     )
-    totals = docs.select(
-        "doc_id",
-        F.when(F.size(ws) > 0, n_segs.cast("bigint"))
-        .otherwise(F.lit(0))
-        .alias("n_segments"),
-    )
+    totals = docs.selectExpr("doc_id", "CAST(size(grid) AS BIGINT) AS n_segments")
     return totals.join(per_doc, "doc_id", "left").select(
         "doc_id",
         "n_segments",
@@ -432,7 +410,7 @@ def dedup_scrub(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Hashing-trick feature space of the linear quality model (r6).
+#: Hashing-trick feature space of the linear quality model.
 QC_DIM = 4096
 #: Integer weights: w(f) = hash32('qw', f) % QC_WEIGHT_MOD − QC_WEIGHT_SHIFT
 #: ∈ [−1000, 1000].  A real model would broadcast-join learned weights
@@ -573,7 +551,7 @@ def lm_perplexity(spark: SparkSession, sf_dir: str) -> DataFrame:
         .persist()
     )
     # conditional counts re-aggregate from bg (distinct-bigram-sized work).
-    # persisted (r12 wave 2, guide §5): cb feeds the unigram re-aggregate
+    # persisted: cb feeds the unigram re-aggregate
     # AND the LM join's build side — uncached, each consumer re-shuffles
     # the distinct-bigram frame out of bg (interleaved A/B at sf0.1:
     # best 1.141 → 1.013 s with the cache, every sample in favor)
@@ -685,15 +663,74 @@ def duplicate_window_fraction(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
+def trim_spans(base: DataFrame, starts: DataFrame, w: int) -> DataFrame:
+    """Span trim, the ACTION half of a window-flagging report: keep each
+    document of ``base`` (doc_id, ws), excise every word covered by a
+    flagged ``w``-word window, and report before/after token accounting
+    with an md5 of the kept text for member-level verification (the
+    `text_pii_scrub` scrubbed-hash pattern). ``starts`` holds the flagged
+    windows' (doc_id, p) starts, 1-based; the callers differ only in what
+    flags a window (`dedup_trim`: duplicated corpus-wide;
+    `training.decontaminate_trim`: an eval-split gram).
+
+    The flagged starts are left-joined onto the per-word stream on
+    (doc_id, p), and a word is trimmed iff some flagged window starts
+    within the preceding w-1 positions — one rolling-max ROWS window over
+    the dense per-doc positions, NOT a w× explode of covered spans.
+
+    The left join RELIES on ``starts`` carrying one row per (doc_id, p):
+    a duplicated start would multiply word rows. Both callers get that by
+    construction (posexplode emits each window start once, and their
+    flag joins — onto one row per hash, or a left_semi — preserve row
+    identity), so no ``.distinct()`` is paid: on a duplicate-heavy corpus
+    the flagged frame is itself corpus-sized, and the distinct cost an
+    Exchange + two HashAggregates over it (A/B same-session isolated,
+    best-of-7 at sf0.1 / best-of-3 at the sf3 rung, 32 cores: sf0.1
+    1.434 → 1.033 s; rung 7.84 → 7.48 s). `tests/test_dedup_trim.py`
+    pins the invariant for both callers on an adversarial all-duplicate
+    corpus. The UNION-the-flags-into-the-window variant (carry kind=1
+    rows under a RANGE frame, no join at all) was A/B'd and REJECTED:
+    better at sf0.1 (−9/−22%) but 15-33% WORSE at the sf3 rung, where
+    nearly every window is flagged and the extra flag rows inflate the
+    window's sort input by more than the join they replace."""
+    wpos = base.selectExpr("doc_id", "posexplode(ws) AS (i, word)").selectExpr(
+        "doc_id", "i + 1 AS p", "word"
+    )
+    marked = wpos.join(
+        starts.selectExpr("doc_id", "p", "1 AS flag"), ["doc_id", "p"], "left"
+    ).selectExpr(
+        "doc_id",
+        "p",
+        "word",
+        "max(coalesce(flag, 0)) OVER (PARTITION BY doc_id ORDER BY p "
+        f"ROWS BETWEEN {w - 1} PRECEDING AND CURRENT ROW) AS covered",
+    )
+    counts = marked.groupBy("doc_id").agg(
+        F.expr("count(1) AS n_words"),
+        F.expr("CAST(sum(covered) AS BIGINT) AS n_trimmed_words"),
+        F.expr(
+            "md5(concat_ws(' ', transform(array_sort(collect_list(CASE WHEN "
+            "covered = 0 THEN struct(p, word) END)), _x -> _x.word))) AS kept_hash"
+        ),
+    )
+    return counts.selectExpr(
+        "doc_id",
+        "n_words",
+        "n_words - n_trimmed_words AS n_kept_words",
+        "n_trimmed_words",
+        "CAST(n_words - n_trimmed_words AS DOUBLE) / CAST(n_words AS DOUBLE) "
+        "AS kept_fraction",
+        "kept_hash",
+    )
+
+
 def dedup_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Duplicate-span trimming (VERDICT r7 #7 — the ACTION half of
-    `text_duplicate_window_fraction`'s measurement): keep the document,
+    """Duplicate-span trimming — the ACTION half of
+    `text_duplicate_window_fraction`'s measurement: keep the document,
     excise every word covered by a corpus-duplicated
     TEXT_DUP_WINDOW-word window (the exact-substring dedup of Lee et al.
     2022, arXiv:2107.06499 — production pipelines trim the duplicated
-    span rather than drop the doc), with before/after token accounting
-    and an md5 of the trimmed text for member-level verification (the
-    `text_pii_scrub` scrubbed-hash pattern).
+    span rather than drop the doc), through `trim_spans`.
 
     Shape: the corpus collapses once to per-(doc, window-hash)
     multiplicities (map-side combinable — the same shuffle as
@@ -702,33 +739,12 @@ def dedup_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     re-deriving the (doc, position, hash) stream — MEASURED faster than
     carrying collect_list(position) through the collapse (interleaved
     best-of-5 at sf0.1: 1.97 s vs 2.17 s; the array payload on every
-    collapsed row costs more than re-tokenizing); a word
-    is trimmed iff some dup window starts within the preceding W-1
-    positions — a single rolling-max window pass, NOT a W× explode of
-    covered spans.
-
-    r13: the `.distinct()` the flag frame used to carry was REDUNDANT —
-    `wins` has exactly one row per (doc_id, p) by construction (posexplode
-    emits each window start once; `occ` is one row per hash, so the inner
-    join preserves row identity) — and cost an extra Exchange + two
-    HashAggregates over the flagged frame, which on a duplicate-heavy
-    corpus (the sf≥1 rungs; any real near-dup workload) is itself
-    corpus-sized. Dropped; the left join's correctness now RELIES on that
-    uniqueness (a duplicated start would multiply word rows), so
-    tests/test_r13_opt.py pins it on an adversarial all-duplicate corpus.
-    A/B same-session isolated (best-of-7 at sf0.1 / best-of-3 at the sf3
-    rung, 32 cores): sf0.1 1.434 → 1.033 s (means 1.53 → 1.34); rung
-    7.84 → 7.48 s (means 9.69 → 8.92); oracle EQUAL at sf0.001 + sf0.01.
-    The UNION-the-flags-into-the-window variant (carry kind=1 rows under
-    a RANGE frame, no join at all) was A/B'd and REJECTED: better at
-    sf0.1 (−9/−22%) but 15-33% WORSE at the sf3 rung, where nearly every
-    window is flagged and the extra flag rows inflate the window's sort
-    input by more than the join they replace."""
-    from pyspark.sql import Window
-
+    collapsed row costs more than re-tokenizing). `occ` is one row per
+    hash, so the inner join keeps one flagged row per window start, the
+    invariant `trim_spans`' left join relies on."""
     docs = load_table(spark, sf_dir, "documents")
-    # persisted (r12, guide §5): the tokenized frame feeds the window-hash
-    # stream (wins) AND the per-word position frame (wpos) — without the
+    # persisted: the tokenized frame feeds the window-hash stream (wins)
+    # AND the per-word position stream in `trim_spans` — without the
     # cache each consumer re-scans the corpus and re-splits every
     # document (2× I/O + 2× tokenization at 100 TB for one narrow
     # (doc_id, words) projection, the _contamination_report precedent).
@@ -739,56 +755,12 @@ def dedup_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     ).select("doc_id", (F.col("i") + 1).alias("p"), F.md5("gm").alias("h"))
     per_doc_h = wins.groupBy("doc_id", "h").agg(F.count(F.lit(1)).alias("m"))
     occ = per_doc_h.groupBy("h").agg(F.sum("m").alias("occ"))
-    dup_starts = (
-        wins.join(occ.filter(F.col("occ") >= 2), "h")
-        .select("doc_id", "p")
-        .withColumn("flag", F.lit(1))
-    )
-    wpos = base.select(
-        "doc_id", F.posexplode("ws").alias("i", "word")
-    ).select("doc_id", (F.col("i") + 1).alias("p"), "word")
-    roll = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(-(TEXT_DUP_WINDOW - 1), 0)
-    )
-    marked = wpos.join(dup_starts, ["doc_id", "p"], "left").withColumn(
-        "trim", F.max(F.coalesce("flag", F.lit(0))).over(roll)
-    )
-    agg = marked.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_words"),
-        F.sum("trim").cast("bigint").alias("n_trimmed_words"),
-        F.md5(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(F.col("trim") == 0, F.struct("p", "word"))
-                        )
-                    ),
-                    lambda x: x.getField("word"),
-                ),
-            )
-        ).alias("kept_hash"),
-    )
-    return agg.select(
-        "doc_id",
-        "n_words",
-        (F.col("n_words") - F.col("n_trimmed_words"))
-        .cast("bigint")
-        .alias("n_kept_words"),
-        "n_trimmed_words",
-        (
-            (F.col("n_words") - F.col("n_trimmed_words")).cast("double")
-            / F.col("n_words").cast("double")
-        ).alias("kept_fraction"),
-        "kept_hash",
-    )
+    dup_starts = wins.join(occ.filter(F.col("occ") >= 2), "h").select("doc_id", "p")
+    return trim_spans(base, dup_starts, TEXT_DUP_WINDOW)
 
 
 def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document n-gram novelty (r10): what fraction of a doc's distinct
+    """Per-document n-gram novelty: what fraction of a doc's distinct
     trigrams appear in NO other document — the informativeness /
     memorization-risk signal the dedup literature reads next to duplicate
     fraction (a doc whose grams all recur elsewhere adds nothing the
@@ -805,7 +777,7 @@ def ngram_novelty(spark: SparkSession, sf_dir: str) -> DataFrame:
     collect, nothing quadratic; docs with <3 words have no trigrams and
     drop out of the report on both engines."""
     docs = load_table(spark, sf_dir, "documents")
-    # persisted (r12, guide §5): the distinct-(doc, gram) stream feeds the
+    # persisted: the distinct-(doc, gram) stream feeds the
     # global gram-frequency aggregate AND the join's probe side — without
     # the cache each consumer re-scans the corpus and re-tokenizes every
     # document (the lm_perplexity / duplicate_window_fraction discipline).
@@ -849,7 +821,7 @@ ENTROPY_LOW_FP = 3 << 19  # = 1.5 * ENTROPY_SCALE, exact
 
 
 def char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Character-entropy quality signal (r10 continuation): per-document
+    """Character-entropy quality signal: per-document
     Shannon entropy of the character distribution, in nats — the cheap
     detector for repeated-run boilerplate, gibberish, and
     compression-bomb text that length/stopword heuristics
@@ -874,7 +846,7 @@ def char_entropy(spark: SparkSession, sf_dir: str) -> DataFrame:
     Two combinable exchanges, no window, no join. Empty documents have
     no characters and drop out on both engines.
 
-    Char iteration is ONE ``split(text, '')`` pass (VERDICT r10 #2): the
+    Char iteration is ONE ``split(text, '')`` pass: the
     original ``explode(sequence(1, length)) + substr(text, i, 1)`` form
     re-scanned the UTF8String from byte 0 on every call — O(len²) per
     doc, 24× slower at 80k chars and melting exactly on the megabyte
@@ -989,7 +961,7 @@ _QC_GRAMS_CTE = f"""
   )"""
 
 ORACLE_SQL: dict[str, str] = {
-    # deliberately a DIFFERENT char iterator than the Spark side (r11):
+    # deliberately a DIFFERENT char iterator than the Spark side:
     # the oracle keeps the per-position substr explode (fine at oracle
     # scale; independently pins the code-point semantics the Spark side
     # now gets from split(text, '')), then the same (doc, char) counts,

@@ -30,6 +30,11 @@ from pyspark.sql import functions as F
 
 from parquet_near_storage_compute_spark.functions.sql import sql_string
 from parquet_near_storage_compute_spark.functions.text import hash32, shingles, words
+from parquet_near_storage_compute_spark.operators.textops import (
+    QC_BUCKET_CLAMP as _QC_CLAMP,
+    _QC_GRAMS_CTE,
+    trim_spans,
+)
 from parquet_near_storage_compute_spark.plans.memo import PlanMemo
 from parquet_near_storage_compute_spark.tables import (
     fan_out,
@@ -66,8 +71,8 @@ def _pack_bins(docs: DataFrame) -> DataFrame:
     token definition supplied by the caller (`train_pack_sequences`:
     whitespace counts; `train_pack_bpe`: the trained tokenizer's)."""
     # integer `div`, not double division: exact past 2^53 and well-defined
-    # at any id magnitude (ADVICE r2; same device as the epoch-nanos
-    # rebuild in tables.py)
+    # at any id magnitude (the same device as the epoch-nanos rebuild in
+    # tables.py)
     docs = docs.withColumn("shard", F.expr(f"doc_id div {SHARD_SIZE}"))
 
     in_shard = Window.partitionBy("shard").orderBy("doc_id")
@@ -257,14 +262,15 @@ def contamination_check(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def decontaminate_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Span-level eval-set decontamination (r8) — the ACTION half of
+    """Span-level eval-set decontamination — the ACTION half of
     `train_contamination_check`: the report says WHICH train documents
     overlap the held-out set; this op EXCISES the overlapping spans (the
     industry decontamination recipe: drop the span, keep the document —
-    the same trim algebra as `text_dedup_trim`, with the duplicated-
-    window predicate swapped for eval-gram membership). A train-doc word
-    is trimmed iff some CONTAM_NGRAM-word window covering it matches a
-    gram that occurs ANYWHERE in the eval split (doc_id % EVAL_MOD == 0).
+    `textops.trim_spans`, the trim `text_dedup_trim` runs, with the
+    duplicated-window predicate swapped for eval-gram membership). A
+    train-doc word is trimmed iff some CONTAM_NGRAM-word window covering
+    it matches a gram that occurs ANYWHERE in the eval split
+    (doc_id % EVAL_MOD == 0).
 
     No rare-gram cap here, by design: the check's CONTAM_MAX_DF bounds
     the per-key fan-out of reporting WHICH eval docs matched; trimming
@@ -273,20 +279,18 @@ def decontaminate_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     no matter how common the gram is on the eval side (boilerplate grams
     trim aggressively, which is the conservative direction for
     decontamination). Scale shape is `text_dedup_trim`'s: md5 window
-    hashes as shuffle keys, flagged window starts left-joined onto the
-    per-word stream on (doc_id, p), coverage one rolling-max ROWS window
-    over the dense per-doc positions. r13 dropped only the redundant
-    ``distinct`` on the flagged starts; the equi-join and the ROWS frame
-    remain (the flag-union RANGE variant was measured and rejected).
-    Output: train docs only, with before/after token accounting and the
-    member-level kept-text md5."""
+    hashes as shuffle keys, then `trim_spans`' left join and rolling-max
+    ROWS window. The left_semi keeps one row per window start, the
+    invariant that join relies on (`tests/test_dedup_trim.py` pins it
+    for this contract too). Output: train docs only, with before/after
+    token accounting and the member-level kept-text md5."""
     from parquet_near_storage_compute_spark.tables import fan_out
 
     docs = load_table(spark, sf_dir, "documents")
-    # persisted (r12, guide §5): three consumers (eval grams, train window
-    # hashes, train word positions) otherwise each re-scan the corpus and
-    # re-split every document — 3× I/O + 3× tokenization at 100 TB for
-    # one narrow projection (the _contamination_report precedent).
+    # persisted: three consumers (eval grams, train window hashes, train
+    # word positions) otherwise each re-scan the corpus and re-split
+    # every document — 3× I/O + 3× tokenization at 100 TB for one narrow
+    # projection (the _contamination_report precedent).
     base = fan_out(docs).select(
         "doc_id",
         (F.col("doc_id") % EVAL_MOD == 0).alias("is_eval"),
@@ -303,66 +307,14 @@ def decontaminate_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
         "doc_id",
         F.expr(f"posexplode({shingles('ws', CONTAM_NGRAM)}) AS (i, gm)"),
     ).select("doc_id", (F.col("i") + 1).alias("p"), F.md5("gm").alias("h"))
-    # No broadcast hint (VERDICT r8 #1): under this operator's own eval
-    # definition (doc_id % EVAL_MOD == 0, i.e. 5% of the corpus) the
-    # distinct eval-gram frame grows LINEARLY with the corpus — forcing a
+    # No broadcast hint: under this operator's own eval definition
+    # (doc_id % EVAL_MOD == 0, i.e. 5% of the corpus) the distinct
+    # eval-gram frame grows LINEARLY with the corpus — forcing a
     # broadcast would OOM at scale exactly when the eval split is large.
     # AQE sizes the semi join at runtime: broadcast while the frame is
     # small (every tested SF), shuffled hash join when it is not.
-    # r13 (the text_dedup_trim finding): the `.distinct()` on hit starts
-    # was redundant — wins has one row per (doc_id, p) by construction
-    # and left_semi preserves that — and cost an Exchange + two
-    # HashAggregates over a frame that is corpus-sized whenever
-    # contamination is heavy. Dropped; the left join now RELIES on the
-    # uniqueness (pinned by tests/test_r13_opt.py on an adversarial
-    # corpus). The union-the-flags window variant was A/B'd and rejected
-    # (worse at the sf3 rung — see text_dedup_trim's docstring).
-    hit_starts = (
-        wins.join(ev_grams, "h", "left_semi")
-        .select("doc_id", "p")
-        .withColumn("flag", F.lit(1))
-    )
-    wpos = train.select(
-        "doc_id", F.posexplode("ws").alias("i", "word")
-    ).select("doc_id", (F.col("i") + 1).alias("p"), "word")
-    roll = (
-        Window.partitionBy("doc_id")
-        .orderBy("p")
-        .rowsBetween(-(CONTAM_NGRAM - 1), 0)
-    )
-    marked = wpos.join(hit_starts, ["doc_id", "p"], "left").withColumn(
-        "trim", F.max(F.coalesce("flag", F.lit(0))).over(roll)
-    )
-    agg = marked.groupBy("doc_id").agg(
-        F.count(F.lit(1)).cast("bigint").alias("n_words"),
-        F.sum("trim").cast("bigint").alias("n_trimmed_words"),
-        F.md5(
-            F.concat_ws(
-                " ",
-                F.transform(
-                    F.array_sort(
-                        F.collect_list(
-                            F.when(F.col("trim") == 0, F.struct("p", "word"))
-                        )
-                    ),
-                    lambda x: x.getField("word"),
-                ),
-            )
-        ).alias("kept_hash"),
-    )
-    return agg.select(
-        "doc_id",
-        "n_words",
-        (F.col("n_words") - F.col("n_trimmed_words"))
-        .cast("bigint")
-        .alias("n_kept_words"),
-        "n_trimmed_words",
-        (
-            (F.col("n_words") - F.col("n_trimmed_words")).cast("double")
-            / F.col("n_words").cast("double")
-        ).alias("kept_fraction"),
-        "kept_hash",
-    )
+    hit_starts = wins.join(ev_grams, "h", "left_semi").select("doc_id", "p")
+    return trim_spans(train, hit_starts, CONTAM_NGRAM)
 
 
 def _contamination_report(docs: DataFrame) -> DataFrame:
@@ -548,7 +500,7 @@ BPE_TOP_K = 20
 
 
 def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer induction, first merge round (round 4): the most frequent
+    """Tokenizer induction, first merge round: the most frequent
     adjacent character pairs across the corpus, weighted by word frequency
     — exactly the statistic a BPE trainer maximizes at each merge step.
 
@@ -636,12 +588,11 @@ def _bpe_loop(toks: DataFrame) -> tuple[list[tuple], DataFrame]:
     ``localCheckpoint`` pins the trained vocabulary for the encode
     consumers exactly as before.
 
-    r13: the per-round bests come back as plain TUPLES, not 1-row
+    The per-round bests come back as plain TUPLES, not 1-row
     DataFrames — `bpe_merges` (their only consumer) renders all rounds as
-    ONE literal frame, replacing the 6-branch range(1) union whose every
-    branch planned with 32 splits (192 near-empty tasks per timed run —
-    the r12/r13 raw-bar breach; isolated best-of-7 0.125 s vs the
-    0.0546 s bar on a fast epoch)."""
+    ONE literal frame, not a 6-branch range(1) union whose every branch
+    plans with 32 splits (192 near-empty tasks per run; isolated
+    best-of-7 0.125 s for the union form against 0.0546 s)."""
     rounds: list[tuple] = []
     for rnd in range(1, BPE_MERGE_ROUNDS + 1):
         # token list: strip the outer brackets, split on the '><' joints
@@ -735,7 +686,7 @@ def _bpe_trained(
 
 
 def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer induction, full merge loop (round 4 extension): run
+    """Tokenizer induction, full merge loop: run
     BPE_MERGE_ROUNDS rounds of the byte-pair-encoding trainer and emit the
     merge table — per round the argmax adjacent token pair (weighted by
     word frequency, ties to the lexicographically smallest pair), the
@@ -757,12 +708,12 @@ def bpe_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     for the job-count measurement) and is applied as a literal replace
     projection; the trained vocabulary is checkpointed once after the
     loop. At 100 TB: one corpus shuffle + R vocab-sized aggregations,
-    the textbook distributed BPE recipe. Since r12 the loop itself is
-    the memoized `_bpe_trained` pass shared with encode/fertility/pack
-    (trajectory-equivalence note there). r13: the merge table is ONE
-    literal frame over the collected rounds (single 1-partition task)
-    instead of a per-round range(1) union that planned 32 splits per
-    branch — 192 tasks → 1 for the same 6 rows; exhausted rounds carry
+    the textbook distributed BPE recipe. The loop itself is the
+    memoized `_bpe_trained` pass shared with encode/fertility/pack
+    (trajectory-equivalence note there). The merge table is ONE literal
+    frame over the collected rounds (single 1-partition task), not a
+    per-round range(1) union that plans 32 splits per branch — 192
+    tasks → 1 for the same 6 rows; exhausted rounds carry
     NULL pairs (the loop's total-function guard) and are dropped
     driver-side, the same "no merge happened" semantics the old
     in-plan filter applied."""
@@ -845,7 +796,7 @@ def bpe_encode(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 def token_fertility(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Tokenizer fertility report (r11): per (lang, source) corpus bucket,
+    """Tokenizer fertility report: per (lang, source) corpus bucket,
     what the trained BPE DOES to that slice — docs, words, tokens, UTF-8
     bytes, tokens-per-word (fertility) and bytes-per-token (compression),
     both as exact integer per-mille. THE table a pipeline reads before
@@ -904,7 +855,7 @@ CONTEXT_LENGTHS = (128, 256, 512, 1024)
 
 
 def context_length_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Context-length planning table (r11): for each candidate sequence
+    """Context-length planning table: for each candidate sequence
     length L, the exact cost of the two standard layouts —
     one-doc-per-sequence (truncate over-long docs, pad short ones) vs
     concat-and-chunk (no padding, but document boundaries get split).
@@ -924,9 +875,9 @@ def context_length_fit(spark: SparkSession, sf_dir: str) -> DataFrame:
     ONE narrow projection aggregated in a single pass — per candidate L
     a bank of conditional sums (len(CONTEXT_LENGTHS)·5 integer
     aggregates, map-side combinable into ONE partial row per task),
-    exploded to the 4 report rows AFTER the aggregate. r12 wave 2: the
-    previous form exploded the corpus ×4 BEFORE a groupBy(context_len)
-    — 4× the partial-aggregate input rows for the same 20 integers;
+    exploded to the 4 report rows AFTER the aggregate. Exploding the
+    corpus ×4 BEFORE a groupBy(context_len) instead costs 4× the
+    partial-aggregate input rows for the same 20 integers;
     interleaved fresh-plan A/B at sf0.1 measured best 0.33 → 0.22 s
     (every pair in favor), rows identical."""
     docs = load_table(spark, sf_dir, "documents").select(
@@ -1087,8 +1038,8 @@ def _bpe_pack_oracle_sql(rounds: int = BPE_MERGE_ROUNDS) -> str:
 
     bin_id uses DuckDB integer division ``//`` (not double FLOOR) so the
     oracle shares the Spark side's exact-integer bin algebra past 2^53
-    (ADVICE r7: double division could round differently at extreme
-    cumulative token counts)."""
+    (double division could round differently at extreme cumulative
+    token counts)."""
     return (
         _bpe_encode_ctes(rounds)
         + f""",
@@ -1242,7 +1193,7 @@ def global_shuffle(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-#: Per-source document cap (r9) — "domain capping", the web-curation rule
+#: Per-source document cap — "domain capping", the web-curation rule
 #: that bounds any one domain's contribution to the training mix (a few
 #: boilerplate-heavy domains otherwise dominate a crawl). 15 binds at
 #: every tested SF (sources are uniform 25–2500 docs), so the contract
@@ -1426,10 +1377,10 @@ def dsir_resample(spark: SparkSession, sf_dir: str) -> DataFrame:
         (F.sum("r") + DSIR_DIM).cast("long").alias("rt"),
         (F.sum("t") + DSIR_DIM).cast("long").alias("tt"),
     )
-    # r12 (guide §2.4 / §7.3 plan-size): the lg chain previously ran over
-    # a 4-way UNION of (b, kind, val) rows, re-assembled with a
-    # groupBy(b) + a filter-aggregate — two exchanges and a 4-branch plan
-    # for arithmetic over DSIR_DIM+2 rows. lg(x) is a pure per-row
+    # Plan size: running the lg chain over a 4-way UNION of (b, kind,
+    # val) rows, re-assembled with a groupBy(b) + a filter-aggregate,
+    # costs two exchanges and a 4-branch plan for arithmetic over
+    # DSIR_DIM+2 rows. lg(x) is a pure per-row
     # integer function, so the two per-bucket chains run directly ON the
     # checkpointed counts frame and the two totals chains on the 1-row
     # totals frame: identical integers, zero new exchanges.
@@ -1506,8 +1457,8 @@ def drift_psi(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     # The 4-way UNION + groupBy(b) λ-assembly below LOOKS wasteful (a
-    # 4-branch plan and 16 Exchanges for ≤ 2·B+2 rows) and r12 tried the
-    # "obvious" fix — run the lg chains directly on the counts/totals
+    # 4-branch plan and 16 Exchanges for ≤ 2·B+2 rows), and the
+    # "obvious" fix was tried — run the lg chains directly on the counts/totals
     # frames (6 Exchanges). The interleaved A/B at sf0.1 measured the
     # direct-chain form consistently SLOWER (old best 1.32 s vs new
     # 1.69 s over 5 alternating fresh-plan noop runs): this query's timed
@@ -1739,11 +1690,6 @@ QUERIES: dict[str, Callable[[SparkSession, str], DataFrame]] = {
     "train_dsir_resample": dsir_resample,
     "train_drift_psi": drift_psi,
 }
-
-from parquet_near_storage_compute_spark.operators.textops import (  # noqa: E402
-    _QC_GRAMS_CTE,
-    QC_BUCKET_CLAMP as _QC_CLAMP,
-)
 
 ORACLE_SQL: dict[str, str] = {
     # mirrored op-for-op (see interleave_datasets): per-source md5-shuffled

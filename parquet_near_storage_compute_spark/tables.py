@@ -15,6 +15,7 @@ import hashlib
 import os
 import re
 import shutil
+import socket
 import tempfile
 import threading
 import uuid
@@ -165,13 +166,17 @@ def derived_copy(
     replaced by an identical one.
 
     A publish supersedes the copies of the same tag and sources built
-    from an older listing: they are removed. Temporary siblings are left
-    alone, since a build in flight cannot be told from a dead one."""
+    from an older listing: they are removed. A temporary is named
+    ``{copy}.{host}.{pid}.{uuid}.tmp`` after the process that builds it;
+    a publish also removes the tag's temporaries whose owner ran on this
+    host and is no longer alive (a killed build). A live owner's
+    temporary, another host's, or one without an owner is left alone."""
     path = derived_copy_path(tag, sources)
     if os.path.exists(path):
         return path
     os.makedirs(os.path.dirname(path), exist_ok=True)
-    tmp = f"{path}.{uuid.uuid4().hex[:12]}.tmp"
+    host = socket.gethostname()
+    tmp = f"{path}.{host}.{os.getpid()}.{uuid.uuid4().hex[:12]}.tmp"
     try:
         build(tmp)
         try:
@@ -183,10 +188,28 @@ def derived_copy(
         _remove(tmp)
     root, name = os.path.split(path)
     older = re.compile(re.escape(name.rsplit("_", 1)[0]) + "_[0-9a-f]{16}")
+    owned = re.compile(
+        re.escape(tag)
+        + r"_[0-9a-f]{16}_[0-9a-f]{16}\.(.+)\.([1-9][0-9]*)\.[0-9a-f]{12}\.tmp"
+    )
     for sibling in os.listdir(root):
-        if sibling != name and older.fullmatch(sibling):
+        tmp_owner = owned.fullmatch(sibling)
+        if (sibling != name and older.fullmatch(sibling)) or (
+            tmp_owner and tmp_owner[1] == host and not _alive(int(tmp_owner[2]))
+        ):
             _remove(os.path.join(root, sibling))
     return path
+
+
+def _alive(pid: int) -> bool:
+    """Whether a process ``pid`` exists on this host."""
+    try:
+        os.kill(pid, 0)
+    except ProcessLookupError:
+        return False
+    except PermissionError:  # exists, owned by another user
+        return True
+    return True
 
 
 def _remove(path: str) -> None:

@@ -9,8 +9,10 @@ from __future__ import annotations
 import hashlib
 
 import duckdb
+import pytest
 
 from parquet_near_storage_compute_spark.operators import textops as T
+from parquet_near_storage_compute_spark.operators import training
 from tests.oracle import compare, duckdb_con
 
 W = T.TEXT_DUP_WINDOW
@@ -105,3 +107,46 @@ def test_accounting_is_consistent(spark, sf_dir):
     for r in rows:
         assert r.n_kept_words + r.n_trimmed_words == r.n_words
         assert 0.0 <= r.kept_fraction <= 1.0
+
+
+@pytest.mark.parametrize("contract", ["text_dedup_trim", "train_decontaminate_trim"])
+def test_trim_flag_starts_are_unique_per_position(spark, tmp_path, contract):
+    """Both trim contracts end in `textops.trim_spans`, whose left join
+    on (doc_id, p) RELIES on the flagged-start frame carrying one row per
+    position (no `.distinct()` is paid: posexplode emits each window
+    start once, and the flag joins — onto one row per hash, or a
+    left_semi — preserve row identity). Pin the invariant on an
+    adversarial all-duplicate corpus — every window flagged — where a
+    uniqueness bug would multiply word rows and corrupt the trim
+    accounting. Doc 0 is an eval doc (doc_id % EVAL_MOD == 0) carrying
+    the same text, so every train window also matches an eval gram;
+    `train_decontaminate_trim` reports train docs only."""
+    op, w = {
+        "text_dedup_trim": (T.dedup_trim, T.TEXT_DUP_WINDOW),
+        "train_decontaminate_trim": (
+            training.decontaminate_trim,
+            training.CONTAM_NGRAM,
+        ),
+    }[contract]
+    dup_text = " ".join(f"w{i % 3}" for i in range(12))  # internal repeats too
+    uniq_text = " ".join(f"unique{i}" for i in range(10))
+    rows = [(i, dup_text, "en", "web", len(dup_text)) for i in range(6)]
+    rows.append((99, uniq_text, "en", "web", len(uniq_text)))
+    out = str(tmp_path / "docs")
+    spark.createDataFrame(
+        rows, "doc_id long, text string, lang string, source string, n_chars int"
+    ).coalesce(1).write.mode("overwrite").parquet(out + "/documents.parquet")
+
+    got = {r.doc_id: r for r in op(spark, out).collect()}
+    dup_ids = [i for i in range(6) if op is T.dedup_trim or i % training.EVAL_MOD]
+    assert sorted(got) == dup_ids + [99]
+    for i in dup_ids:  # fully duplicated docs: every word trimmed exactly once
+        assert got[i].n_words == 12
+        assert got[i].n_trimmed_words == 12
+        assert got[i].n_kept_words == 0
+        assert got[i].kept_hash == _md5("")
+    # the unique doc has 10 - w + 1 windows, none flagged -> nothing
+    # trimmed, kept text is the original word stream
+    assert len(uniq_text.split(" ")) >= w
+    assert got[99].n_trimmed_words == 0
+    assert got[99].kept_hash == _md5(uniq_text)

@@ -7,6 +7,9 @@ from __future__ import annotations
 
 import os
 import shutil
+import socket
+import subprocess
+import sys
 import tempfile
 
 import pyarrow.compute as pc
@@ -166,6 +169,33 @@ def test_rewritten_source_supersedes_its_copy(tmp_path, root):
     assert second != first
     assert sorted(os.listdir(root)) == sorted(
         os.path.basename(p) for p in (kept, second, building)
+    )
+
+
+def test_publish_reclaims_dead_builds_temporaries(tmp_path, root):
+    """A build killed mid-write leaves its temporary behind. The next
+    publish of the tag removes it when its owner ran on this host and is
+    gone; a live owner's temporary and another host's stay."""
+    src = tmp_path / "src.parquet"
+    src.write_bytes(b"a")
+    dead_pid = int(
+        subprocess.run(
+            [sys.executable, "-c", "import os; print(os.getpid())"],
+            capture_output=True,
+            text=True,
+            check=True,
+        ).stdout
+    )
+    path = derived_copy_path("t", (str(src),))
+    host = socket.gethostname()
+    dead = f"{path}.{host}.{dead_pid}.0123456789ab.tmp"
+    live = f"{path}.{host}.{os.getpid()}.ba9876543210.tmp"
+    elsewhere = f"{path}.not-{host}.{dead_pid}.0123456789ab.tmp"
+    for tmp in (dead, live, elsewhere):
+        os.makedirs(tmp)
+    published = derived_copy("t", (str(src),), os.makedirs)
+    assert sorted(os.listdir(root)) == sorted(
+        os.path.basename(p) for p in (published, live, elsewhere)
     )
 
 

@@ -37,7 +37,7 @@ import math
 import os
 import sys
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from parquet_near_storage_compute_spark import registry  # noqa: E402
 from parquet_near_storage_compute_spark.session import get_spark  # noqa: E402

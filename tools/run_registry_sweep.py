@@ -17,14 +17,15 @@ the few non-SQL-expressible ones) and exits nonzero on any DIFF/error.
 
 from __future__ import annotations
 
+import os
 import sys
 import traceback
 
-sys.path.insert(0, ".")
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
 from pyspark.sql import SparkSession  # noqa: E402
 
-from parquet_near_storage_compute_spark import registry  # noqa: E402
+from parquet_near_storage_compute_spark import registry, workers  # noqa: E402
 
 
 def main() -> int:
@@ -39,6 +40,9 @@ def main() -> int:
         .appName("registry-sweep")
         .getOrCreate()
     )
+    # the Python-UDF contracts' workers import the engine from wherever
+    # the sweep is started
+    workers.ship_package_path(spark)
     con = duckdb_con(sf)
     queries = registry.all_queries()
     oracles = registry.all_oracles()
